@@ -93,13 +93,19 @@ def word_ngrams(tokens: Column | str, n: int) -> Column:
 
 def with_word_ngrams(df, tokens, n: int, out_col: str):
     """``word_ngrams`` as a DataFrame step via ``pyspark.ml.feature.NGram``
-    — exact row parity with the Column form (space-joined grams in
-    position order, empty array below n tokens, null arrays normalized to
-    empty), but the sliding window runs as one compiled Scala UDF instead
-    of an interpreted transform/slice/array_join lambda per position
-    (guide §1.2 per-task work; measured 6x on the sf0.1 corpus, parity
-    diff 0 rows). ``tokens`` may be a column name or Column expression;
-    the result appends ``out_col``.
+    — exact row parity with the Column form on null-free token arrays
+    (space-joined grams in position order, empty array below n tokens,
+    null arrays normalized to empty), but the sliding window runs as one
+    compiled Scala UDF instead of an interpreted transform/slice/array_join
+    lambda per position (guide §1.2 per-task work; measured 6x on the
+    sf0.1 corpus, parity diff 0 rows). ``tokens`` may be a column name or
+    Column expression; the result appends ``out_col``.
+
+    Null ELEMENTS are outside that parity: NGram renders them as
+    ``'null'`` (``[a, null, b]``, n=2 -> ``['a null', 'null b']``) while
+    ``array_join`` skips them (-> ``['a', 'b']``); dropping them first
+    would not match either (-> ``['a b']``). ``tokenize`` never yields
+    null elements; a caller's own token arrays get the NGram rendering.
     """
     from pyspark.ml.feature import NGram
 

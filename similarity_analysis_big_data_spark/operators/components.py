@@ -24,6 +24,8 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.readers import local_relation
+
 # Once the contracted supernode graph fits under this many edges, finish
 # with a driver-side union-find instead of burning ~0.5 s of fixed job
 # latency per distributed round on a relation of a few hundred rows
@@ -178,8 +180,8 @@ def _connected_components_loop(
             id_type = dict(
                 (f.name, f.dataType.simpleString()) for f in quotient.schema.fields
             )["a"]
-            map_df = spark.createDataFrame(
-                list(remap.items()), f"sid {id_type}, newc {id_type}"
+            map_df = local_relation(
+                spark, remap.items(), f"sid {id_type}, newc {id_type}"
             )
             labels = labels.join(
                 F.broadcast(map_df), labels.component == map_df.sid, "left"

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..sources.readers import local_relation
+
 
 def sparse_cosine_join(
     left: DataFrame,
@@ -379,8 +381,10 @@ def dense_topk_neighbors(
         # empty query set: the (0 x d) matrix has no well-defined d for the
         # BLAS block — return the empty top-k relation directly (callers
         # without the adaptive |Q| probe hit this on empty tables)
-        return corpus.sparkSession.createDataFrame(
-            [], f"{query_id} long, neighbor_id long, cosine double, rnk long"
+        return local_relation(
+            corpus.sparkSession,
+            [],
+            f"{query_id} long, neighbor_id long, cosine double, rnk long",
         )
     q_ids = np.asarray([r[query_id] for r in q_rows], dtype=np.int64)
     Q = np.asarray([r[query_vec] for r in q_rows], dtype=np.float64)

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, cosine_sql, dot, dot_sql, l2_norm
 from ..operators.similarity import DENSE_MAX_BROADCAST_CELLS, dense_topk_neighbors
-from ..sources.readers import load_table
+from ..sources.readers import load_table, local_relation
 from .registry import register
 
 QUERY_MOD = 50  # 1-in-50 vectors are search queries
@@ -1065,7 +1065,7 @@ def ann_pq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         for s in range(PQ_M)
         for j in range(PQ_KS)
     ]
-    cb = spark.createDataFrame(cb_rows, "s int, code long, cw array<double>")
+    cb = local_relation(spark, cb_rows, "s int, code long, cw array<double>")
     w_assign = W.partitionBy("vec_id", "s").orderBy(
         F.round(_sq_dist("sub", "cw"), 9).asc(), F.asc("code")
     )
@@ -1736,7 +1736,7 @@ def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("nprobe", "query_id", F.col("neighbor_id").alias("a_neighbor_id"))
     )
     exact = ann_bruteforce_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    np_df = spark.createDataFrame([(p,) for p in CURVE_PROBES], "nprobe int")
+    np_df = local_relation(spark, [(p,) for p in CURVE_PROBES], "nprobe int")
     grid = exact.crossJoin(F.broadcast(np_df))
     perq = (
         grid.join(

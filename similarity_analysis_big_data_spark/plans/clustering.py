@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_sql
-from ..sources.readers import load_table
+from ..sources.readers import load_table, local_relation
 from .registry import register
 
 K_CLUSTERS = 8
@@ -148,7 +148,7 @@ def kmeans_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = [
                 (cid, [m for _, m in sorted(vals)]) for cid, vals in byc.items()
             ]
-            cent = spark.createDataFrame(rows, "cid: long, cv: array<double>")
+            cent = local_relation(spark, rows, "cid: long, cv: array<double>")
     return assigned.select(
         "vec_id", F.col("cid").alias("cluster"), F.col("d2").alias("dist2")
     )
@@ -202,7 +202,7 @@ def kcenter_coreset_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     first = emb.orderBy("vec_id").limit(1).collect()
     if not first:
-        return spark.createDataFrame([], "rnk int, vec_id bigint")
+        return local_relation(spark, [], "rnk int, vec_id bigint")
     centers = [(1, first[0]["vec_id"], list(first[0]["embedding"]))]
     for rnk in range(2, KCENTER_K + 1):
         picked_ids = [c[1] for c in centers]
@@ -227,8 +227,8 @@ def kcenter_coreset_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not nxt:
             break
         centers.append((rnk, nxt[0]["vec_id"], list(nxt[0]["embedding"])))
-    return spark.createDataFrame(
-        [(r, i) for r, i, _ in centers], "rnk int, vec_id bigint"
+    return local_relation(
+        spark, [(r, i) for r, i, _ in centers], "rnk int, vec_id bigint"
     )
 
 

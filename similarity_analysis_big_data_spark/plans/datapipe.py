@@ -20,7 +20,7 @@ from ..operators.linalg import (
     pca_components,
     project_embeddings,
 )
-from ..sources.readers import load_table
+from ..sources.readers import load_table, local_relation
 from .registry import register
 
 # ---- source mixture resampling -------------------------------------------
@@ -306,14 +306,14 @@ def embedding_covariance_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     n, s, S = embedding_sufficient_stats(emb, "embedding", EMB_DIM)
     if n < 2:  # sample covariance undefined below 2 rows
-        return spark.createDataFrame([], "i int, j int, cov double")
+        return local_relation(spark, [], "i int, j int, cov double")
     cov, _mu = covariance_from_stats(n, s, S)
     rows = [
         (i, j, round(float(cov[i, j]), 6))
         for i in range(COV_PROBE_DIMS)
         for j in range(COV_PROBE_DIMS)
     ]
-    return spark.createDataFrame(rows, "i int, j int, cov double")
+    return local_relation(spark, rows, "i int, j int, cov double")
 
 
 @register(
@@ -347,7 +347,7 @@ def pca_project_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     n, s, S = embedding_sufficient_stats(emb, "embedding", EMB_DIM)
     if n < 2:  # covariance (hence axes) undefined below 2 rows
-        return spark.createDataFrame([], "vec_id long, pc long, value double")
+        return local_relation(spark, [], "vec_id long, pc long, value double")
     cov, mu = covariance_from_stats(n, s, S)
     _vals, comp = pca_components(cov, PCA_K)
     proj = project_embeddings(emb, "vec_id", "embedding", mu, comp)

@@ -31,7 +31,7 @@ from ..functions.text import tokenize, with_word_ngrams
 from ..functions.vectors import cosine_similarity, cosine_sql
 from ..operators.rank import bucketed_row_number, ntile_from_rank
 from ..operators.topk import global_top_n
-from ..sources.readers import load_table
+from ..sources.readers import load_table, local_relation
 from .registry import register
 
 # Shared oracle CTE: identical tokenization to functions/text.py (ASCII
@@ -678,8 +678,8 @@ def tokenize_corpus_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts, [F.desc("cf"), F.asc("term")], VOCAB_SIZE, rank_name=None
     ).collect()  # <= VOCAB_SIZE rows: the trained vocabulary
     top.sort(key=lambda r: (-r["cf"], r["term"]))
-    vocab = spark.createDataFrame(
-        [(r["term"], i) for i, r in enumerate(top)], "term string, tid long"
+    vocab = local_relation(
+        spark, [(r["term"], i) for i, r in enumerate(top)], "term string, tid long"
     )
     return (
         terms.join(F.broadcast(vocab), "term", "left")
@@ -1442,7 +1442,8 @@ def bpe_train_apply_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("w") * F.size(F.split(F.trim(F.col("s")), " ")))
         ).collect()[0][0]
         out_rows.append((r, pair, int(cnt), int(n_after)))
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         out_rows,
         "round int, merge_pair string, pair_count long, n_symbols_after long",
     )

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.timeutil import epoch_micros, micros_between
 from ..operators.rank import bucket_of, percentile_bounds
-from ..sources.readers import load_table
+from ..sources.readers import load_table, local_relation
 from .registry import register
 
 # Cutoff used by the pricing-summary query; fixture shipdates span
@@ -835,9 +835,10 @@ def range_join_price_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     # brackets split the fixture's 900-1000 price range three ways so the
     # range predicate actually discriminates
-    brackets = spark.createDataFrame(
+    brackets = local_relation(
+        spark,
         [("budget", 0.0, 930.0), ("mid", 930.0, 970.0), ("premium", 970.0, 100000.0)],
-        ["bracket", "lo", "hi"],
+        "bracket string, lo double, hi double",
     )
     return (
         part.join(
@@ -2243,7 +2244,7 @@ def skyline_price_size_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     for bkt, bm in bm_rows:
         carry_rows.append((bkt, best))
         best = bm if best is None else max(best, bm)
-    carry = spark.createDataFrame(carry_rows, "bkt int, carry_max long")
+    carry = local_relation(spark, carry_rows, "bkt int, carry_max long")
     w_lower = W.partitionBy("bkt").orderBy("cents").rangeBetween(
         W.unboundedPreceding, -1
     )

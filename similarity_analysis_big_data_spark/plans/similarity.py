@@ -319,9 +319,9 @@ def title_best_abstract(
                 # collect inside dense_best_match; the memoized path now
                 # runs 2 actions total including the caller's). A stale
                 # count discards the collected rows and re-decides from
-                # scratch — same hazard cost as the old separate count()
-                # (one wasted cheap job), on a path only a mid-session
-                # data rewrite can reach.
+                # scratch — the wasted work is one collect the size of
+                # the title matrix (not a cheap count), on a path only a
+                # mid-session data rewrite can reach.
                 memo_dense = cached
                 n_lit = cached[1]
             # else: vocab bound drifted across code changes — leave

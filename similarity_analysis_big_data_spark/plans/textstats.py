@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
 from ..functions.timeutil import micros_between
-from ..sources.readers import load_table
+from ..sources.readers import load_table, local_relation
 from .registry import register
 
 # Marker words per language for the n-gram/stopword language-ID heuristic.
@@ -860,7 +860,7 @@ def session_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     for day, d in day_rows:
         carry_rows.append((day, acc))
         acc += d
-    carry = spark.createDataFrame(carry_rows, "day string, carry_in long")
+    carry = local_relation(spark, carry_rows, "day string, carry_in long")
     w_day = W.partitionBy("day").orderBy("ts", "delta", "user_id").rowsBetween(
         W.unboundedPreceding, W.currentRow
     )

@@ -139,6 +139,65 @@ def test_connected_components_distributed_path_matches_driver_finish(spark, monk
     assert distributed == expected
 
 
+def _union_find_components(edges) -> dict:
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@pytest.mark.parametrize(
+    "id_type,node",
+    [("bigint", lambda i: i), ("string", lambda i: f"n{i:03d}")],
+    ids=["bigint", "string"],
+)
+def test_connected_components_driver_remap_path(spark, monkeypatch, id_type, node):
+    """Fast path with a NON-EMPTY hook-round quotient: chains and a
+    two-hop star leave supernode edges after the first min-label round,
+    so _driver_union_find returns a remap that is joined back as a
+    driver-built relation typed from the id column. Labels must equal a
+    union-find reference, and no RDD under the returned relation's plan
+    may hold a PythonRDD (the remap is built without a Python worker)."""
+    import similarity_analysis_big_data_spark.operators.components as C
+    from similarity_analysis_big_data_spark.sources.readers import local_relation
+
+    raw = (
+        [(i, i + 1) for i in range(10)]  # chain 0..10
+        + [(20, 21), (21, 22), (22, 23), (23, 20)]  # 4-cycle
+        + [(30, 35), (35, 31), (35, 32), (32, 33)]  # star with a tail
+        + [(40, 41)]  # lone edge: no quotient edge
+    )
+    edges = [(node(a), node(b)) for a, b in raw]
+    pairs = local_relation(spark, edges, f"id_l {id_type}, id_r {id_type}")
+
+    remaps = []
+    real = C._driver_union_find
+    monkeypatch.setattr(
+        C, "_driver_union_find", lambda rows: remaps.append(real(rows)) or remaps[-1]
+    )
+    labels = C.connected_components(pairs)
+    got = {r["id"]: r["component"] for r in labels.collect()}
+    assert got == _union_find_components(edges)
+    assert len(remaps) == 1 and remaps[0], "the remap branch is the one under test"
+    # walk every leaf of the plan: the remap enters through a broadcast,
+    # whose RDD is not in the lineage of the main plan's toRdd()
+    leaves = labels._jdf.queryExecution().analyzed().collectLeaves()
+    lineages = [
+        leaf.rdd().toDebugString()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.nodeName() == "LogicalRDD"
+    ]
+    assert not any("PythonRDD" in s for s in lineages)
+
+
 def test_connected_components_string_ids_propagation_path(spark, monkeypatch):
     """String-id graphs through the PROPAGATION loop (driver finish
     disabled): the label-sum fixpoint witness must use the overflow-safe

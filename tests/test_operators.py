@@ -117,6 +117,97 @@ def test_with_word_ngrams_matches_column_form(spark):
         assert got == want, (n, got, want)
 
 
+def _has_python_rdd(df) -> bool:
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+# (rows, schema) for every driver-side relation shape the engine builds,
+# plus the edge cases: empty list, null values, array<double>, and both
+# DDL spellings ("a type" and "a: type")
+_LOCAL_RELATION_CASES = [
+    ([(3, 1), (7, 1)], "sid bigint, newc bigint"),
+    ([("n002", "n000")], "sid string, newc string"),
+    ([(5, 2)], "sid int, newc int"),
+    ([], "qid long, neighbor_id long, cosine double, rnk long"),
+    ([("2024-01-01", 0), ("2024-01-02", -3)], "day string, carry_in long"),
+    (
+        [("budget", 0.0, 930.0), ("mid", 930.0, 970.0), ("premium", 970.0, 100000.0)],
+        "bracket string, lo double, hi double",
+    ),
+    ([(0, None), (1, 40), (2, 50)], "bkt int, carry_max long"),
+    ([(0, [0.5, -1.25]), (1, [])], "cid: long, cv: array<double>"),
+    ([], "rnk int, vec_id bigint"),
+    ([(1, 4), (2, 17)], "rnk int, vec_id bigint"),
+    ([(0, 3, [1.0, 2.0, None])], "s int, code long, cw array<double>"),
+    ([(1,), (2,), (4,)], "nprobe int"),
+    ([("the", 0), (None, 1)], "term string, tid long"),
+    (
+        [(1, "a b", 12, 340)],
+        "round int, merge_pair string, pair_count long, n_symbols_after long",
+    ),
+    ([(0, 1, 0.123456)], "i int, j int, cov double"),
+    ([], "i int, j int, cov double"),
+    ([], "vec_id long, pc long, value double"),
+]
+
+
+@pytest.mark.parametrize("rows,schema", _LOCAL_RELATION_CASES)
+def test_local_relation_matches_create_dataframe(spark, rows, schema):
+    """local_relation is createDataFrame(list, schema) minus the Python
+    worker: same schema, same rows — and its lineage has no PythonRDD
+    while the pickled path's does (so the check can tell them apart)."""
+    from similarity_analysis_big_data_spark.sources.readers import local_relation
+
+    got = local_relation(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+    assert not _has_python_rdd(got)
+    assert _has_python_rdd(want)
+
+
+@pytest.mark.parametrize("rows", [[(1, 2, 3)], [(1, 2), (3,)], [(1,)]])
+def test_local_relation_rejects_wrong_arity(spark, rows):
+    """A row that does not match the schema's field count raises (as
+    createDataFrame's length check does) instead of being truncated."""
+    from similarity_analysis_big_data_spark.sources.readers import local_relation
+
+    with pytest.raises(ValueError):
+        local_relation(spark, rows, "a long, b long")
+
+
+def test_only_local_relation_calls_create_dataframe():
+    """Guard: every driver-built relation in the engine goes through
+    sources.readers.local_relation. A bare ``.createDataFrame(`` call
+    anywhere else in the package brings back the pickled PythonRDD path."""
+    import ast
+    import pathlib
+
+    import similarity_analysis_big_data_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = {
+            id(node)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            and fn.name == "local_relation"
+            and path == root / "sources" / "readers.py"
+            for node in ast.walk(fn)
+        }
+        offenders += [
+            f"{path.relative_to(root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+            and id(node) not in allowed
+        ]
+    assert offenders == [], f"use sources.readers.local_relation: {offenders}"
+
+
 def test_rolling_fingerprint_deterministic(spark):
     df = spark.createDataFrame([("abc",), ("abc",), ("abd",)], ["t"])
     vals = [r["fp"] for r in df.select(rolling_fingerprint("t").alias("fp")).collect()]
