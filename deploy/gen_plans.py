@@ -60,7 +60,9 @@ NOTES = {
         "persists. Floor table in SCALE.md."
     ),
     "near_dup_survivors": (
-        "actions = LSH pair materialization + CC (edge checkpoint, label "
+        "actions = token-set checkpoint inside near_dup_pairs (the sets feed "
+        "signatures and verify; A/B in its docstring) + LSH pair "
+        "materialization + CC (edge checkpoint, label "
         "init, quotient count/collect) + final anti-join — the CC quotient "
         "shortcut's fixed budget; per-stage floor table in SCALE.md."
     ),

@@ -26,12 +26,14 @@ from ..functions.hashing import (
 )
 from ..functions.text import tokenize, with_word_ngrams
 from ..operators.dedup import (
+    NEAR_DUP_T,
     canonical_fingerprint,
     exact_dedup_groups,
     jaccard_pairs,
     jaccard_verify_candidates,
     lsh_candidate_pairs,
     minhash_signatures,
+    near_dup_pairs,
     ppjoin_pairs,
     simhash_banded_pairs,
     simhash_signatures,
@@ -87,6 +89,63 @@ _SQL_BANDS += "\n    UNION ALL\n".join(
 )
 _SQL_BANDS += "\n)"
 
+# LSH candidates over the sample: the oracle twin of lsh_candidate_pairs
+_SQL_LSH_CAND = (
+    _SQL_SAMPLE_SHINGLES
+    + _SQL_MH
+    + _SQL_BANDS
+    + """
+    , cand AS (
+        SELECT DISTINCT a.doc_id AS id_l, b.doc_id AS id_r
+        FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
+        WHERE a.doc_id < b.doc_id
+    )"""
+)
+
+# The oracle twin of operators.dedup.near_dup_pairs: ends in the CTE
+# ``verified (id_l, id_r, jaccard)``, exact all-pairs shingle Jaccard
+# restricted to the LSH candidates, >= 0.5, unrounded.
+_SQL_NEAR_DUP_PAIRS = (
+    _SQL_LSH_CAND
+    + """,
+    sizes AS (SELECT doc_id, count(*) AS set_size FROM shingles GROUP BY doc_id),
+    inter AS (
+        SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS n_common
+        FROM shingles a JOIN shingles b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    ),
+    verified AS (
+        SELECT i.id_l, i.id_r,
+               CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common)
+                   AS jaccard
+        FROM inter i
+        JOIN cand c ON c.id_l = i.id_l AND c.id_r = i.id_r
+        JOIN sizes sl ON sl.doc_id = i.id_l
+        JOIN sizes sr ON sr.doc_id = i.id_r
+        WHERE CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common) >= 0.5
+    )"""
+)
+
+# Connected components of the verified pairs as a transitive closure:
+# ends in the CTE ``comp (id, component)``, component = min member id.
+# The recursive CTE needs the RECURSIVE keyword on the WITH chain.
+_SQL_NEAR_DUP_COMPONENTS = (
+    _SQL_NEAR_DUP_PAIRS
+    + """,
+    edges AS (
+        SELECT id_l AS a, id_r AS b FROM verified
+        UNION SELECT id_r, id_l FROM verified
+    ),
+    reach AS (
+        SELECT a, b FROM edges
+        UNION
+        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
+    ),
+    comp AS (
+        SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
+    )"""
+).replace("WITH toks", "WITH RECURSIVE toks", 1)
+
 
 @register(
     "dedup_exact_groups",
@@ -126,14 +185,7 @@ def dedup_canonical_tokenset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "minhash_lsh_candidates",
-    oracle=_SQL_SAMPLE_SHINGLES
-    + _SQL_MH
-    + _SQL_BANDS
-    + """
-    SELECT DISTINCT a.doc_id AS id_l, b.doc_id AS id_r
-    FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-    WHERE a.doc_id < b.doc_id
-    """,
+    oracle=_SQL_LSH_CAND + "\n    SELECT id_l, id_r FROM cand\n",
     headline=True,
     doc="[ext] MinHash-LSH near-dup candidates: 12 universal-hash mins, 4 bands × 3 "
     "rows, bucket self-join — the O(n²)-free dedup scale path.",
@@ -152,29 +204,9 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "minhash_dedup_verified",
-    oracle=_SQL_SAMPLE_SHINGLES
-    + _SQL_MH
-    + _SQL_BANDS
+    oracle=_SQL_NEAR_DUP_PAIRS
     + """
-    , cand AS (
-        SELECT DISTINCT a.doc_id AS id_l, b.doc_id AS id_r
-        FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS set_size FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS n_common
-        FROM shingles a JOIN shingles b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT i.id_l, i.id_r,
-           round(CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common), 6)
-               AS jaccard
-    FROM inter i
-    JOIN cand c ON c.id_l = i.id_l AND c.id_r = i.id_r
-    JOIN sizes sl ON sl.doc_id = i.id_l
-    JOIN sizes sr ON sr.doc_id = i.id_r
-    WHERE CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common) >= 0.5
+    SELECT id_l, id_r, round(jaccard, 6) AS jaccard FROM verified
     """,
     doc="[ext] LSH-then-verify dedup: exact token-set Jaccard >= 0.5 on the LSH "
     "candidates only — the production near-dup pipeline shape.",
@@ -186,53 +218,17 @@ def minhash_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the unfiltered shingle self-join). Measured 3x faster at sf0.1
     than the array-intersect verify, which ships both full token arrays
     to every pair; the array form remains for callers that need
-    zero-overlap candidates scored (minhash_estimate_accuracy).
-
-    The token-set relation feeds both the signature and the verify
-    branch; it is localCheckpoint-materialized rather than persisted so
-    the blocks are reclaimed once the returned plan is released — a
-    persist here outlives the query inside registry-wide sweeps
-    (the plans/lm.py CacheManager lesson, ADVICE r5)."""
+    zero-overlap candidates scored (minhash_estimate_accuracy)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % SAMPLE_MOD == 0)
-    toksets = docs.select(
-        "doc_id", F.array_distinct(tokenize(F.lower("text"))).alias("toks")
-    ).localCheckpoint(eager=True)
-    shingles = toksets.select("doc_id", F.explode("toks").alias("shingle"))
-    sigs = minhash_signatures(shingles, "doc_id")
-    cand = lsh_candidate_pairs(sigs, "doc_id")
-    pairs = jaccard_pairs(shingles, "doc_id", candidates=cand, assume_distinct=True, threshold=(1, 2))
-    return pairs.filter(F.col("jaccard") >= 0.5).select(
+    return near_dup_pairs(docs).select(
         "id_l", "id_r", F.round("jaccard", 6).alias("jaccard")
     )
 
 
 @register(
     "cross_source_dup_matrix",
-    oracle=_SQL_SAMPLE_SHINGLES
-    + _SQL_MH
-    + _SQL_BANDS
-    + """
-    , cand AS (
-        SELECT DISTINCT a.doc_id AS id_l, b.doc_id AS id_r
-        FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS set_size FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS n_common
-        FROM shingles a JOIN shingles b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    verified AS (
-        SELECT i.id_l, i.id_r,
-               CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common)
-                   AS jaccard
-        FROM inter i
-        JOIN cand c ON c.id_l = i.id_l AND c.id_r = i.id_r
-        JOIN sizes sl ON sl.doc_id = i.id_l
-        JOIN sizes sr ON sr.doc_id = i.id_r
-        WHERE CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common) >= 0.5
-    ),
+    oracle=_SQL_NEAR_DUP_PAIRS
+    + """,
     srcpairs AS (
         SELECT least(dl.source, dr.source) AS source_a,
                greatest(dl.source, dr.source) AS source_b,
@@ -259,18 +255,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, source) projection — pairs drive the cost, never corpus x
     corpus — and the final matrix is |sources|^2-bounded."""
     docs = load_table(spark, sf_dir, "documents")
-    sampled = docs.filter(F.col("doc_id") % SAMPLE_MOD == 0)
-    # localCheckpoint, not persist: blocks self-release with the plan
-    # (the plans/lm.py CacheManager lesson, ADVICE r5).
-    toksets = sampled.select(
-        "doc_id", F.array_distinct(tokenize(F.lower("text"))).alias("toks")
-    ).localCheckpoint(eager=True)
-    shingles = toksets.select("doc_id", F.explode("toks").alias("shingle"))
-    sigs = minhash_signatures(shingles, "doc_id")
-    cand = lsh_candidate_pairs(sigs, "doc_id")
-    verified = jaccard_pairs(
-        shingles, "doc_id", candidates=cand, assume_distinct=True, threshold=(1, 2)
-    ).filter(F.col("jaccard") >= 0.5)
+    verified = near_dup_pairs(docs.filter(F.col("doc_id") % SAMPLE_MOD == 0))
     src = docs.select("doc_id", "source")
     return (
         verified.join(
@@ -292,31 +277,10 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared CTE tail for the leakage family: LSH-candidate exact-verified
-# near-dup pairs plus the deterministic 80/10/10 split assignment (the
-# SAME md5 rule as plans/sampling.py train_val_test_split).
-_SQL_VERIFIED_AND_SPLIT = f"""
-    , cand AS (
-        SELECT DISTINCT a.doc_id AS id_l, b.doc_id AS id_r
-        FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS set_size FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS n_common
-        FROM shingles a JOIN shingles b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    verified AS (
-        SELECT i.id_l, i.id_r,
-               CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common)
-                   AS jaccard
-        FROM inter i
-        JOIN cand c ON c.id_l = i.id_l AND c.id_r = i.id_r
-        JOIN sizes sl ON sl.doc_id = i.id_l
-        JOIN sizes sr ON sr.doc_id = i.id_r
-        WHERE CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common) >= 0.5
-    ),
+# Shared CTE tail for the leakage family: the near-dup pairs, the
+# deterministic 80/10/10 split assignment (the SAME md5 rule as
+# plans/sampling.py train_val_test_split) and the pairs straddling it.
+_SQL_STRADDLING_PAIRS = _SQL_NEAR_DUP_PAIRS + f""",
     split AS (
         SELECT doc_id,
                CASE WHEN {md5_long_sql("CAST(doc_id AS VARCHAR)")} % 100 < 80
@@ -324,23 +288,56 @@ _SQL_VERIFIED_AND_SPLIT = f"""
                     WHEN {md5_long_sql("CAST(doc_id AS VARCHAR)")} % 100 < 90
                     THEN 'val' ELSE 'test' END AS split
         FROM documents
+    ),
+    straddle AS (
+        SELECT v.id_l, v.id_r, v.jaccard, sl.split AS split_l, sr.split AS split_r
+        FROM verified v
+        JOIN split sl ON sl.doc_id = v.id_l
+        JOIN split sr ON sr.doc_id = v.id_r
+        WHERE sl.split <> sr.split
     )
 """
 
 
+def _doc_split(docs: DataFrame) -> DataFrame:
+    """(doc_id, split) by the md5 rule of train_val_test_split: a narrow
+    map over the corpus, no shuffle of its own."""
+    from ..functions.hashing import md5_long
+    from .sampling import TRAIN_PCT, VAL_PCT
+
+    bucket = md5_long(F.col("doc_id").cast("string")) % 100
+    return docs.select(
+        "doc_id",
+        F.when(bucket < TRAIN_PCT, "train")
+        .when(bucket < TRAIN_PCT + VAL_PCT, "val")
+        .otherwise("test")
+        .alias("split"),
+    )
+
+
+def _straddling_pairs(docs: DataFrame, split: DataFrame) -> DataFrame:
+    """Near-dup pairs of the sample whose ends sit in different splits:
+    (id_l, id_r, jaccard, split_l, split_r). Two key-grained joins of the
+    PAIR relation against ``split`` — pairs drive the cost, never corpus x
+    corpus."""
+    verified = near_dup_pairs(docs.filter(F.col("doc_id") % SAMPLE_MOD == 0))
+    return (
+        verified.join(
+            split.withColumnsRenamed({"doc_id": "id_l", "split": "split_l"}), "id_l"
+        )
+        .join(
+            split.withColumnsRenamed({"doc_id": "id_r", "split": "split_r"}), "id_r"
+        )
+        .filter(F.col("split_l") != F.col("split_r"))
+    )
+
+
 @register(
     "split_leakage_pairs",
-    oracle=_SQL_SAMPLE_SHINGLES
-    + _SQL_MH
-    + _SQL_BANDS
-    + _SQL_VERIFIED_AND_SPLIT
+    oracle=_SQL_STRADDLING_PAIRS
     + """
-    SELECT v.id_l, v.id_r, round(v.jaccard, 6) AS jaccard,
-           sl.split AS split_l, sr.split AS split_r
-    FROM verified v
-    JOIN split sl ON sl.doc_id = v.id_l
-    JOIN split sr ON sr.doc_id = v.id_r
-    WHERE sl.split <> sr.split
+    SELECT id_l, id_r, round(jaccard, 6) AS jaccard, split_l, split_r
+    FROM straddle
     """,
     doc="[ext] train/test LEAKAGE audit: verified near-duplicate pairs "
     "(banded LSH candidates -> exact Jaccard >= 0.5) that STRADDLE the "
@@ -355,60 +352,22 @@ def split_leakage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: the pair relation is the bounded near-dup pipeline (banded
     candidates, candidate-driven verify); the split attachment is two
     key-grained joins of the PAIR relation against the hash-derived
-    (doc_id, split) projection — a narrow map over the corpus, no
-    shuffle of its own. Pairs drive the cost, never corpus x corpus."""
-    from ..functions.hashing import md5_long
-    from .sampling import TRAIN_PCT, VAL_PCT
-
+    (doc_id, split) projection."""
     docs = load_table(spark, sf_dir, "documents")
-    sampled = docs.filter(F.col("doc_id") % SAMPLE_MOD == 0)
-    toksets = sampled.select(
-        "doc_id", F.array_distinct(tokenize(F.lower("text"))).alias("toks")
-    ).localCheckpoint(eager=True)
-    shingles = toksets.select("doc_id", F.explode("toks").alias("shingle"))
-    sigs = minhash_signatures(shingles, "doc_id")
-    cand = lsh_candidate_pairs(sigs, "doc_id")
-    verified = jaccard_pairs(
-        shingles, "doc_id", candidates=cand, assume_distinct=True, threshold=(1, 2)
-    ).filter(F.col("jaccard") >= 0.5)
-    bucket = md5_long(F.col("doc_id").cast("string")) % 100
-    split = docs.select(
-        "doc_id",
-        F.when(bucket < TRAIN_PCT, "train")
-        .when(bucket < TRAIN_PCT + VAL_PCT, "val")
-        .otherwise("test")
-        .alias("split"),
-    )
-    return (
-        verified.join(
-            split.withColumnsRenamed({"doc_id": "id_l", "split": "split_l"}), "id_l"
-        )
-        .join(
-            split.withColumnsRenamed({"doc_id": "id_r", "split": "split_r"}), "id_r"
-        )
-        .filter(F.col("split_l") != F.col("split_r"))
-        .select(
-            "id_l", "id_r", F.round("jaccard", 6).alias("jaccard"),
-            "split_l", "split_r",
-        )
+    return _straddling_pairs(docs, _doc_split(docs)).select(
+        "id_l", "id_r", F.round("jaccard", 6).alias("jaccard"), "split_l", "split_r"
     )
 
 
 @register(
     "train_corpus_leakage_purged",
-    oracle=_SQL_SAMPLE_SHINGLES
-    + _SQL_MH
-    + _SQL_BANDS
-    + _SQL_VERIFIED_AND_SPLIT
+    oracle=_SQL_STRADDLING_PAIRS
     + """
     , leak_train AS (
-        SELECT DISTINCT CASE WHEN sl.split = 'train' THEN v.id_l
-                             ELSE v.id_r END AS doc_id
-        FROM verified v
-        JOIN split sl ON sl.doc_id = v.id_l
-        JOIN split sr ON sr.doc_id = v.id_r
-        WHERE sl.split <> sr.split
-          AND (sl.split = 'train' OR sr.split = 'train')
+        SELECT DISTINCT CASE WHEN split_l = 'train' THEN id_l
+                             ELSE id_r END AS doc_id
+        FROM straddle
+        WHERE split_l = 'train' OR split_r = 'train'
     )
     SELECT d.doc_id, d.lang, d.source
     FROM documents d
@@ -426,37 +385,10 @@ def train_corpus_leakage_purged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: the leak set is pair-relation-sized (far below corpus) and
     finishes as ONE broadcast anti-join against the split-filtered
     corpus scan — the same shape as the near-dup survivor queries."""
-    from ..functions.hashing import md5_long
-    from .sampling import TRAIN_PCT, VAL_PCT
-
     docs = load_table(spark, sf_dir, "documents")
-    sampled = docs.filter(F.col("doc_id") % SAMPLE_MOD == 0)
-    toksets = sampled.select(
-        "doc_id", F.array_distinct(tokenize(F.lower("text"))).alias("toks")
-    ).localCheckpoint(eager=True)
-    shingles = toksets.select("doc_id", F.explode("toks").alias("shingle"))
-    sigs = minhash_signatures(shingles, "doc_id")
-    cand = lsh_candidate_pairs(sigs, "doc_id")
-    verified = jaccard_pairs(
-        shingles, "doc_id", candidates=cand, assume_distinct=True, threshold=(1, 2)
-    ).filter(F.col("jaccard") >= 0.5)
-    bucket = md5_long(F.col("doc_id").cast("string")) % 100
-    split = docs.select(
-        "doc_id",
-        F.when(bucket < TRAIN_PCT, "train")
-        .when(bucket < TRAIN_PCT + VAL_PCT, "val")
-        .otherwise("test")
-        .alias("split"),
-    )
-    pairs = (
-        verified.join(
-            split.withColumnsRenamed({"doc_id": "id_l", "split": "split_l"}), "id_l"
-        )
-        .join(
-            split.withColumnsRenamed({"doc_id": "id_r", "split": "split_r"}), "id_r"
-        )
-        .filter(F.col("split_l") != F.col("split_r"))
-        .filter((F.col("split_l") == "train") | (F.col("split_r") == "train"))
+    split = _doc_split(docs)
+    pairs = _straddling_pairs(docs, split).filter(
+        (F.col("split_l") == "train") | (F.col("split_r") == "train")
     )
     leak_train = pairs.select(
         F.when(F.col("split_l") == "train", F.col("id_l"))
@@ -1036,48 +968,14 @@ def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "near_dup_survivors",
-    # the transitive-closure CTE needs the RECURSIVE keyword on the chain
-    oracle=(_SQL_SAMPLE_SHINGLES
-    + _SQL_MH
-    + _SQL_BANDS
-    + """
-    , cand AS (
-        SELECT DISTINCT a.doc_id AS id_l, b.doc_id AS id_r
-        FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS set_size FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS n_common
-        FROM shingles a JOIN shingles b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    dup_pairs AS (
-        SELECT i.id_l, i.id_r
-        FROM inter i
-        JOIN cand c ON c.id_l = i.id_l AND c.id_r = i.id_r
-        JOIN sizes sl ON sl.doc_id = i.id_l
-        JOIN sizes sr ON sr.doc_id = i.id_r
-        WHERE CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common) >= 0.5
-    ),
-    edges AS (
-        SELECT id_l AS a, id_r AS b FROM dup_pairs
-        UNION SELECT id_r, id_l FROM dup_pairs
-    ),
-    reach AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    comp AS (
-        SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
-    ),
+    oracle=_SQL_NEAR_DUP_COMPONENTS
+    + f""",
     losers AS (SELECT id FROM comp WHERE id <> component)
     SELECT d.doc_id, d.lang, d.source, d.n_chars
     FROM documents d
-    WHERE d.doc_id % {mod} = 0
+    WHERE d.doc_id % {SAMPLE_MOD} = 0
       AND d.doc_id NOT IN (SELECT id FROM losers)
-    """.replace("{mod}", str(SAMPLE_MOD))).replace("WITH toks", "WITH RECURSIVE toks", 1),
+    """,
     headline=True,
     doc="[ext] SURVEY §7 step 6 end to end: MinHash-LSH candidates -> exact-Jaccard "
     "verify -> connected components -> anti-join survivors. Oracle uses a WITH "
@@ -1090,26 +988,7 @@ def near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import dedup_survivors
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % SAMPLE_MOD == 0)
-    # toksets feeds two branches (signatures; candidate verify) but is NOT
-    # persisted: recomputing it is one pruned parquet scan + tokenize per
-    # branch, while caching the exploded-adjacent token relation is larger
-    # than the source and spills. Measured at sf0.1 (idle host, min of 3,
-    # persist monkeypatched off): 8.49 s without vs 9.49 s with — the
-    # persist never paid for itself. Re-checked r7 at the 8x replica with
-    # localCheckpoint(eager) on the shingle relation: 20.9-23.4 s plain vs
-    # 21.7-24.4 s checkpointed — still no win; the tokenize recompute stays
-    # cheaper than materializing 186k exploded rows at every scale tried. The iteration state inside
-    # connected_components stays localCheckpoint-truncated (that one IS
-    # load-bearing: it prevents exponential lineage re-execution).
-    toksets = docs.select(
-        "doc_id", F.array_distinct(tokenize(F.lower("text"))).alias("toks")
-    )
-    shingles = toksets.select("doc_id", F.explode("toks").alias("shingle"))
-    sigs = minhash_signatures(shingles, "doc_id")
-    cand = lsh_candidate_pairs(sigs, "doc_id")
-    dup_pairs = jaccard_pairs(shingles, "doc_id", candidates=cand, assume_distinct=True, threshold=(1, 2)).filter(
-        F.col("jaccard") >= 0.5
-    )
+    dup_pairs = near_dup_pairs(docs)
     # the CC iteration state is label-sized, not corpus-sized: 8
     # partitions cover it at any bench scale (production sizes this to
     # the candidate-pair node count; see operators/components.py)
@@ -1424,15 +1303,8 @@ def dedup_intradoc_repeats_rewrite(spark: SparkSession, sf_dir: str) -> DataFram
 _N_PERMS = len(MINHASH_PARAMS)
 
 _SQL_EST_ACC = (
-    _SQL_SAMPLE_SHINGLES
-    + _SQL_MH
-    + _SQL_BANDS
-    + """
-    , cand AS (
-        SELECT DISTINCT a.doc_id AS id_l, b.doc_id AS id_r
-        FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id
-    ),
+    _SQL_LSH_CAND
+    + """,
     est AS (
         SELECT c.id_l, c.id_r,
                ("""
@@ -1731,43 +1603,8 @@ def entity_name_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "near_dup_cluster_stats",
-    oracle=(_SQL_SAMPLE_SHINGLES
-    + _SQL_MH
-    + _SQL_BANDS
-    + """
-    , cand AS (
-        SELECT DISTINCT a.doc_id AS id_l, b.doc_id AS id_r
-        FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS set_size FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS n_common
-        FROM shingles a JOIN shingles b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    dup_pairs AS (
-        SELECT i.id_l, i.id_r,
-               CAST(i.n_common AS DOUBLE)
-                   / (sl.set_size + sr.set_size - i.n_common) AS jaccard
-        FROM inter i
-        JOIN cand c ON c.id_l = i.id_l AND c.id_r = i.id_r
-        JOIN sizes sl ON sl.doc_id = i.id_l
-        JOIN sizes sr ON sr.doc_id = i.id_r
-        WHERE CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common) >= 0.5
-    ),
-    edges AS (
-        SELECT id_l AS a, id_r AS b FROM dup_pairs
-        UNION SELECT id_r, id_l FROM dup_pairs
-    ),
-    reach AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    comp AS (
-        SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
-    ),
+    oracle=_SQL_NEAR_DUP_COMPONENTS
+    + """,
     mc AS (
         SELECT component, CAST(count(DISTINCT id) AS BIGINT) AS cluster_size
         FROM comp GROUP BY 1
@@ -1778,14 +1615,14 @@ def entity_name_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS n_verified_pairs,
                round(avg(p.jaccard), 6) AS avg_jaccard,
                round(min(p.jaccard), 6) AS min_jaccard
-        FROM dup_pairs p
+        FROM verified p
         JOIN comp c ON c.id = p.id_l  -- id_l's component == pair's cluster
         GROUP BY 1
     )
     SELECT mc.component AS cluster_id, mc.cluster_size,
            ps.n_verified_pairs, ps.avg_jaccard, ps.min_jaccard
     FROM mc JOIN ps USING (component)
-    """).replace("WITH toks", "WITH RECURSIVE toks", 1),
+    """,
     doc="[ext] dedup observability: per near-dup cluster — member count, "
     "verified-pair count, mean and minimum intra-cluster Jaccard — the "
     "diagnostics a curation team reads before trusting a dedup run "
@@ -1798,20 +1635,18 @@ def near_dup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, candidate-driven verify, O(log diameter) components);
     the stats are one pair-relation aggregate keyed by the left
     endpoint's cluster label (every verified pair is intra-cluster by
-    construction, so id_l's label IS the pair's cluster)."""
+    construction, so id_l's label IS the pair's cluster).
+
+    The pair relation feeds both the components and the pair-stats join,
+    so it is materialized once (the contrastive_pair_mining rule for a
+    relation read twice): unmaterialized, the whole LSH -> verify chain
+    ran twice (sf0.1: 29 jobs / 56 stages, against 26 / 51 with it)."""
     from ..operators.components import connected_components
 
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % SAMPLE_MOD == 0
     )
-    toksets = docs.select(
-        "doc_id", F.array_distinct(tokenize(F.lower("text"))).alias("toks")
-    )
-    shingles = toksets.select("doc_id", F.explode("toks").alias("shingle"))
-    cand = lsh_candidate_pairs(minhash_signatures(shingles, "doc_id"), "doc_id")
-    dup = jaccard_pairs(shingles, "doc_id", candidates=cand, assume_distinct=True, threshold=(1, 2)).filter(
-        F.col("jaccard") >= 0.5
-    )
+    dup = near_dup_pairs(docs).localCheckpoint(eager=True)
     comp = connected_components(dup.select("id_l", "id_r"), "id_l", "id_r")
     labels = comp.select(F.col("id").alias("id_l"), F.col("component"))
     member_counts = comp.groupBy("component").agg(
@@ -1842,41 +1677,8 @@ def near_dup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "near_dup_best_quality_survivors",
-    oracle=(_SQL_SAMPLE_SHINGLES
-    + _SQL_MH
-    + _SQL_BANDS
-    + """
-    , cand AS (
-        SELECT DISTINCT a.doc_id AS id_l, b.doc_id AS id_r
-        FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS set_size FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS n_common
-        FROM shingles a JOIN shingles b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    dup_pairs AS (
-        SELECT i.id_l, i.id_r
-        FROM inter i
-        JOIN cand c ON c.id_l = i.id_l AND c.id_r = i.id_r
-        JOIN sizes sl ON sl.doc_id = i.id_l
-        JOIN sizes sr ON sr.doc_id = i.id_r
-        WHERE CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common) >= 0.5
-    ),
-    edges AS (
-        SELECT id_l AS a, id_r AS b FROM dup_pairs
-        UNION SELECT id_r, id_l FROM dup_pairs
-    ),
-    reach AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    comp AS (
-        SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
-    ),
+    oracle=_SQL_NEAR_DUP_COMPONENTS
+    + f""",
     best AS (
         SELECT c.component,
                arg_max(c.id, d.n_chars * 1000000000 - c.id) AS keep_id
@@ -1888,9 +1690,9 @@ def near_dup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT d.doc_id, d.lang, d.source, d.n_chars
     FROM documents d
-    WHERE d.doc_id % {mod} = 0
+    WHERE d.doc_id % {SAMPLE_MOD} = 0
       AND d.doc_id NOT IN (SELECT id FROM losers)
-    """.replace("{mod}", str(SAMPLE_MOD))).replace("WITH toks", "WITH RECURSIVE toks", 1),
+    """,
     doc="[ext] dedup survivor POLICY: per near-dup cluster keep the "
     "highest-quality member (longest doc; ties to the smaller id via a "
     "collision-free n_chars*1e9 - doc_id ordering key) instead of the "
@@ -1904,22 +1706,12 @@ def near_dup_best_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFra
     sized, far below corpus-sized) and the same single anti-join over the
     corpus."""
     from ..operators.components import connected_components
-    from ..operators.dedup import lsh_candidate_pairs, minhash_signatures
 
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % SAMPLE_MOD == 0
     )
-    toksets = docs.select(
-        "doc_id", F.array_distinct(tokenize(F.lower("text"))).alias("toks")
-    )
-    shingles = toksets.select("doc_id", F.explode("toks").alias("shingle"))
-    sigs = minhash_signatures(shingles, "doc_id")
-    cand = lsh_candidate_pairs(sigs, "doc_id")
-    dup_pairs = jaccard_pairs(shingles, "doc_id", candidates=cand, assume_distinct=True, threshold=(1, 2)).filter(
-        F.col("jaccard") >= 0.5
-    )
     comp = connected_components(
-        dup_pairs, "id_l", "id_r", iteration_shuffle_partitions=8
+        near_dup_pairs(docs), "id_l", "id_r", iteration_shuffle_partitions=8
     )
     quality = docs.select(
         F.col("doc_id").alias("id"),
@@ -1993,11 +1785,7 @@ def incremental_near_dup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     work — signatures, probe, verify — is delta-sized plus the bounded
     collision fan-in. Derived in-query here so the oracle is
     self-contained."""
-    from ..operators.dedup import (
-        jaccard_pairs,
-        lsh_band_entries,
-        minhash_signatures,
-    )
+    from ..operators.dedup import lsh_band_entries
 
     docs = load_table(spark, sf_dir, "documents")
     sampled = docs.filter(F.col("doc_id") % SAMPLE_MOD == 0)
@@ -2013,9 +1801,12 @@ def incremental_near_dup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "id_r"
     )
     cand = base.join(delta, ["band", "key"]).select("id_l", "id_r").distinct()
+    num, den = NEAR_DUP_T
     dup_delta = (
-        jaccard_pairs(shingles, "doc_id", candidates=cand, assume_distinct=True, threshold=(1, 2))
-        .filter(F.col("jaccard") >= 0.5)
+        jaccard_pairs(
+            shingles, "doc_id", candidates=cand, assume_distinct=True, threshold=NEAR_DUP_T
+        )
+        .filter(F.col("jaccard") >= num / den)
         .select(F.col("id_r").alias("doc_id"))
         .distinct()
     )
@@ -2077,15 +1868,8 @@ def dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lsh_recall_by_jaccard_band",
-    oracle=(_SQL_SAMPLE_SHINGLES
-    + _SQL_MH
-    + _SQL_BANDS
-    + """
-    , cand AS (
-        SELECT DISTINCT a.doc_id AS id_l, b.doc_id AS id_r
-        FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id
-    ),
+    oracle=(_SQL_LSH_CAND
+    + """,
     sizes AS (SELECT doc_id, count(*) AS set_size FROM shingles GROUP BY doc_id),
     truth AS (
         SELECT a.doc_id AS id_l, b.doc_id AS id_r,
@@ -2122,12 +1906,6 @@ def lsh_recall_by_jaccard_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production pipeline never runs it on the full corpus); candidates
     come from the same banding operator the pipeline uses, and the
     recall aggregate is decile-keyed."""
-    from ..operators.dedup import (
-        jaccard_pairs,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % SAMPLE_MOD == 0
     )

@@ -496,33 +496,11 @@ def video_near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _consensus_oracle() -> str:
-    from .dedup import _SQL_BANDS, _SQL_MH, _SQL_SAMPLE_SHINGLES, SAMPLE_MOD
+    from .dedup import _SQL_NEAR_DUP_PAIRS, SAMPLE_MOD
 
     return (
-        _SQL_SAMPLE_SHINGLES
-        + _SQL_MH
-        + _SQL_BANDS
-        + """
-    , cand AS (
-        SELECT DISTINCT a.doc_id AS id_l, b.doc_id AS id_r
-        FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS set_size FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS n_common
-        FROM shingles a JOIN shingles b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    tx AS (
-        SELECT i.id_l, i.id_r
-        FROM inter i
-        JOIN cand c ON c.id_l = i.id_l AND c.id_r = i.id_r
-        JOIN sizes sl ON sl.doc_id = i.id_l
-        JOIN sizes sr ON sr.doc_id = i.id_r
-        WHERE CAST(i.n_common AS DOUBLE) / (sl.set_size + sr.set_size - i.n_common) >= 0.5
-    ),
-    """
+        _SQL_NEAR_DUP_PAIRS
+        + ",\n    "
         + _img_ph_ctes(where=f"WHERE doc_id % {SAMPLE_MOD} = 0")
         + """,
     img AS (
@@ -536,7 +514,7 @@ def _consensus_oracle() -> str:
                 ELSE 'image_only' END AS dup_basis,
            CAST(count(*) AS BIGINT) AS n_pairs,
            CAST(count(DISTINCT coalesce(t.id_r, i.id_r)) AS BIGINT) AS n_docs_dropped
-    FROM tx t FULL OUTER JOIN img i ON t.id_l = i.id_l AND t.id_r = i.id_r
+    FROM verified t FULL OUTER JOIN img i ON t.id_l = i.id_l AND t.id_r = i.id_r
     GROUP BY 1
     """
     )

@@ -16,6 +16,7 @@ from similarity_analysis_big_data_spark.operators.dedup import (
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
+    near_dup_pairs,
     simhash_pairs,
     simhash_signatures,
 )
@@ -712,6 +713,48 @@ def test_jaccard_threshold_prefilter_equals_postfilter(docs):
         # anything the prefilter kept below t must carry the exact value
         for k, v in thresholded.items():
             assert v == pytest.approx(plain[k])
+
+
+def test_near_dup_pairs_equals_reference(docs):
+    """near_dup_pairs is the all-pairs exact Jaccard >= 1/2 restricted to
+    the LSH candidates of the same token sets — pairs and values."""
+    shingles = docs.select(
+        "doc_id",
+        F.explode(F.array_distinct(tokenize(F.lower("text")))).alias("shingle"),
+    )
+    cands = {
+        (r["id_l"], r["id_r"])
+        for r in lsh_candidate_pairs(
+            minhash_signatures(shingles, "doc_id"), "doc_id"
+        ).collect()
+    }
+    expected = {
+        (r["id_l"], r["id_r"]): r["jaccard"]
+        for r in jaccard_pairs(shingles, "doc_id").filter(F.col("jaccard") >= 0.5).collect()
+        if (r["id_l"], r["id_r"]) in cands
+    }
+    pairs = near_dup_pairs(docs)
+    assert pairs.columns == ["id_l", "id_r", "jaccard"]
+    got = {(r["id_l"], r["id_r"]): r["jaccard"] for r in pairs.collect()}
+    assert (1, 2) in expected and (1, 3) in expected
+    assert got == pytest.approx(expected)
+
+
+@pytest.mark.parametrize("case", ["empty", "single", "all_duplicate"])
+def test_near_dup_pairs_degenerate_inputs(spark, case):
+    """Degenerate corpora return the declared edge result: no pairs for an
+    empty table or one document; every pair at 1.0 and ONE component (a
+    single survivor) for an all-duplicate corpus."""
+    from similarity_analysis_big_data_spark.operators.components import dedup_survivors
+
+    text = "the quick brown fox jumps over the lazy dog"
+    ids = {"empty": [], "single": [1], "all_duplicate": list(range(1, 7))}[case]
+    docs = spark.createDataFrame([(i, text) for i in ids], "doc_id long, text string")
+    pairs = near_dup_pairs(docs)
+    got = {(r["id_l"], r["id_r"]): r["jaccard"] for r in pairs.collect()}
+    assert got == {(a, b): 1.0 for a in ids for b in ids if a < b}
+    survivors = {r["doc_id"] for r in dedup_survivors(docs, pairs, "doc_id").collect()}
+    assert survivors == set(ids[:1])
 
 
 # ---- operators/rank.py: direct equivalence properties -----------------------
