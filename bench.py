@@ -185,7 +185,7 @@ def main() -> None:
         ) + float(cpus):
             stall_reasons.append("load_midloop")
         if (rest.get("loadavg_after_rest") or 0.0) > float(
-            os.environ.get("SPARK_GRAFT_BENCH_PREJVM_LOAD_SEC", "2.0")
+            os.environ.get("SPARK_GRAFT_BENCH_PREJVM_LOAD", "2.0")
         ):
             stall_reasons.append("load_prejvm")
         # Idle-boot reference for THIS query set at sf0.1 (committed

@@ -241,18 +241,18 @@ def dense_best_match(
 
     if t_rows is None:
         # bounded by the caller's strategy check; callers that already
-        # collected the matrix inside their probe action pass t_rows
+        # collected the matrix inside their own action pass t_rows
         t_rows = title_vec.collect()
     terms = sorted({r["term"] for r in t_rows})
-    # Guard on the ACTUAL collected matrix, not the caller's (possibly
-    # memoized) verdict: a memo revalidated on row count alone cannot see
-    # a same-count rewrite with a wider vocabulary (ADVICE r11), and a
-    # caller forcing strategy="dense" may never have probed at all. The
-    # fallback is exact — both formulations share the round-before-argmax
-    # / ascending-id contract and the shared-term candidate set — so an
-    # over-bound matrix degrades to the sparse join instead of silently
-    # over-broadcasting (the collect already happened; the broadcast is
-    # the part being protected).
+    # Guard on the ACTUAL collected matrix, not the caller's verdict: a
+    # memoized verdict may be stale (the data under the same dir was
+    # rewritten with a wider vocabulary, or the bounds changed across code
+    # versions), and a caller forcing strategy="dense" may never have
+    # probed at all. The fallback is exact — both formulations share the
+    # round-before-argmax / ascending-id contract and the shared-term
+    # candidate set — so an over-bound matrix degrades to the sparse join
+    # instead of silently over-broadcasting (the collect already happened;
+    # the broadcast is the part being protected).
     n_queries = len({r[query_id] for r in t_rows})
     if len(terms) > DENSE_MAX_VOCAB or n_queries * len(terms) > DENSE_MAX_BROADCAST_CELLS:
         pairs = sparse_cosine_join(

@@ -57,6 +57,21 @@ def _queries_and_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
     return queries, emb
 
 
+def _dense_query_rows(queries: DataFrame, vec_col: str) -> list | None:
+    """The dense-or-hof probe of the brute-force top-k family: ONE bounded
+    action collects up to the broadcast cap + 1 query rows. Returns the
+    rows — they ARE the dense strategy's broadcast payload, so no second
+    collect — or None when the set is empty or outgrows
+    ``DENSE_MAX_BROADCAST_CELLS`` (the caller falls back to the fold)."""
+    d_guess = 64
+    cap = max(1, DENSE_MAX_BROADCAST_CELLS // d_guess)
+    rows = queries.limit(cap + 1).collect()
+    d = len(rows[0][vec_col]) if rows else 0
+    if rows and len(rows) <= cap and len(rows) * d <= DENSE_MAX_BROADCAST_CELLS:
+        return rows
+    return None
+
+
 def _ivf_assign(emb: DataFrame, mod: int | None = None) -> DataFrame:
     """Shared sqrt-scaled IVF cell assignment: (vec_id, embedding, cell_id).
 
@@ -155,17 +170,8 @@ def ann_bruteforce_topk(
     queries, emb = _queries_and_corpus(spark, sf_dir)
     prefetched = None
     if strategy == "auto":
-        # ONE bounded probe action: collect up to the broadcast cap + 1 rows;
-        # overflow (or an empty set) falls back to hof, otherwise the rows
-        # ARE the broadcast payload — no second collect
-        d_guess = 64
-        cap = max(1, DENSE_MAX_BROADCAST_CELLS // d_guess)
-        rows = queries.limit(cap + 1).collect()
-        d = len(rows[0]["query_vec"]) if rows else 0
-        if rows and len(rows) <= cap and len(rows) * d <= DENSE_MAX_BROADCAST_CELLS:
-            strategy, prefetched = "dense", rows
-        else:
-            strategy = "hof"
+        prefetched = _dense_query_rows(queries, "query_vec")
+        strategy = "hof" if prefetched is None else "dense"
     if strategy == "dense":
         return dense_topk_neighbors(
             queries,
@@ -2101,11 +2107,8 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the BLAS pool took the 8× point to ~linear. Both strategies share
     # the round-before-rank / ascending-id contract, so the oracle and
     # the greedy rounds below are strategy-blind.
-    d_guess = 64
-    cap = max(1, DENSE_MAX_BROADCAST_CELLS // d_guess)
-    q_rows = q.limit(cap + 1).collect()
-    d = len(q_rows[0]["qv"]) if q_rows else 0
-    if q_rows and len(q_rows) <= cap and len(q_rows) * d <= DENSE_MAX_BROADCAST_CELLS:
+    q_rows = _dense_query_rows(q, "qv")
+    if q_rows is not None:
         cand = dense_topk_neighbors(
             q,
             emb,

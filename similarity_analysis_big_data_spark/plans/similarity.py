@@ -36,20 +36,21 @@ TITLE_SAMPLE_MOD = 5  # sample 1-in-5 docs as retrieval queries
 LANGS = ["de", "en", "es", "fr", "zh"]  # stable across all fixture SFs
 
 # Auto-strategy memo for title_best_abstract, keyed (applicationId,
-# sf_dir): "sparse" = proven sparse (skip every probe action), and
-# "full-probe" = the sample could not decide, run the full probe. Plan
-# statistics, not data — staleness can only change WHICH physical
-# strategy runs, never the result (extensional equality of the two paths
-# is property-tested). Bounded (ADVICE r10): inserts evict entries from
+# sf_dir): the verdict "sparse" (skip every probe action) or "dense" (skip
+# the pre-probe, take the strategy="dense" path) — nothing else. Plan
+# statistics, not data: the memo carries no corpus size (each call
+# measures its own), so staleness can only change WHICH physical strategy
+# runs, never the result (extensional equality of the two paths is
+# property-tested). Bounded (ADVICE r10): inserts evict entries from
 # other applicationIds (dead sessions can never read theirs back) and
 # the per-app population is capped FIFO, so a long-lived driver sweeping
 # many replica dirs cannot grow it without bound. Concurrent first calls
-# race benignly — both run the same deterministic pre-probe, last write
+# race benignly — both run the same deterministic probes, last write
 # wins with the identical verdict.
-_AUTO_STRATEGY_CACHE: dict[tuple[str, str], str | tuple] = {}
+_AUTO_STRATEGY_CACHE: dict[tuple[str, str], str] = {}
 _AUTO_STRATEGY_CACHE_MAX = 64  # dirs per app; far above any real sweep
 
-# Memo-dense persist rule: ALWAYS persist. Calibration history, because
+# Probe/dense persist rule: ALWAYS persist. Calibration history, because
 # this rule flipped twice as host artifacts were root-caused out of the
 # measurements: (r7-r11) "persist only above 16k docs" — calibrated while
 # THP huge-page compaction taxed the cache's serialized block writes;
@@ -66,7 +67,7 @@ _AUTO_STRATEGY_CACHE_MAX = 64  # dirs per app; far above any real sweep
 # always costs more than the cache barrier once allocation is healthy.
 
 
-def _auto_strategy_memo_put(key: tuple[str, str], verdict: str | tuple) -> None:
+def _auto_strategy_memo_put(key: tuple[str, str], verdict: str) -> None:
     app_id = key[0]
     for k in [k for k in _AUTO_STRATEGY_CACHE if k[0] != app_id]:
         del _AUTO_STRATEGY_CACHE[k]
@@ -213,7 +214,7 @@ def doc_tfidf_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine collapses to vocabulary size before its shuffle,
     while the cache barrier pays full TF-relation serialization.
     RE-CONFIRMED post-allocator-fix (r12 — this path is all-JVM, so the
-    THP tax that reversed the memo-dense persist rule never applied
+    THP tax that reversed the probe/dense persist rule never applied
     here): 1.59 vs 1.09 at sf0.1, 4.43 vs 3.45 at 8x, interleaved A/B +
     fresh-process confirm."""
     docs = load_table(spark, sf_dir, "documents")
@@ -266,234 +267,137 @@ def title_best_abstract(
       never materializes pairs wins by a wide margin;
     - ``"auto"`` — a cheap sample pre-probe first (a 512-doc distinct-term
       count is a vocabulary LOWER bound, so exceeding the dense ceiling
-      proves sparse from one tiny job; verdict memoized per (session,
-      dir)), then, only if undecided, the full probe over the DF relation.
-      Both paths share the identical round-before-argmax / ascending-id
-      tiebreak contract, so the result — and the oracle — is the same.
+      proves sparse from one tiny job), then, only if undecided, the full
+      probe over the DF relation. The verdict, ``"sparse"`` or ``"dense"``,
+      is memoized per (session, dir); a repeat call takes that strategy's
+      path directly. Both paths share the identical round-before-argmax /
+      ascending-id tiebreak contract, so the result — and the oracle — is
+      the same whichever runs.
+
+    Every non-sparse path makes ONE collect: a 1-row stats aggregate plus
+    the title matrix, and the final action's IDF takes the corpus size from
+    that row as a literal. No corpus size outlives the call, so a memoized
+    verdict can pick a slower plan but never a stale result.
     """
     docs = load_table(spark, sf_dir, "documents")
     key = (spark.sparkContext.applicationId, sf_dir)
-    n_lit: int | None = None  # driver-known corpus size (memo-dense path)
-    memo_dense: tuple | None = None  # provisionally accepted dense memo
-
+    if strategy == "auto":
+        # A memoized "dense" takes the strategy="dense" path: one collect,
+        # no probe aggregates. Measured negative (do not retry): re-running
+        # the full auto probe on every "dense"-memo call took the memoized
+        # call from 14 to 24 scheduler jobs (sf0.01, local[8]) and its
+        # min-of-8 from 0.92-1.00 s to 1.16-1.23 s (sf0.1, 4 vCPU, 3
+        # fresh-process pairs). A stale "dense" is caught by
+        # dense_best_match's bound check on the collected matrix; a stale
+        # "sparse" is exact by construction.
+        strategy = _AUTO_STRATEGY_CACHE.get(key, "auto")
     if strategy == "auto":
         # Cheap pre-probe (r10): the distinct-term count of ANY document
         # subset is a LOWER BOUND on the vocabulary, so if a fixed-size
         # sample already exceeds DENSE_MAX_VOCAB the dense precondition is
         # provably broken and the decision is sparse — from one tiny job
-        # (512 docs tokenized), without materializing the full TF/DF
-        # persists the full probe needs. Real corpora blow past 256
-        # distinct terms within a handful of documents, so the expensive
-        # full probe below only ever runs for genuinely narrow-vocabulary
-        # inputs, where it is cheap anyway.
+        # (512 docs tokenized), without materializing the TF/DF persists
+        # the full probe needs. Real corpora blow past 256 distinct terms
+        # within a handful of documents, so the full probe below only ever
+        # runs for genuinely narrow-vocabulary inputs, where it is cheap.
         #
-        # The verdict is MEMOIZED per (session, sf_dir), like the planner
-        # statistics it is: repeat calls skip the sample job (and, once
-        # resolved, every probe action). Staleness is correctness-neutral
-        # by construction — both strategies share the identical
-        # round-before-argmax / tiebreak contract, so even a wrong
-        # strategy choice cannot change the RESULT. A memoized DENSE
-        # verdict (r11) carries the corpus size the full probe measured
-        # and is re-validated on reuse by a count FOLDED into the title
-        # collect (r13 — one driver action for both): an unchanged row
-        # count accepts the verdict and takes the direct dense path (no
-        # probe aggregates, the corpus size as a plan literal instead of
-        # a cross-joined 1-row aggregate); a changed count re-decides
-        # from scratch and re-memoizes. The residual same-count-rewrite
-        # hazard (a mid-session rewrite of the SAME dir to the SAME row
-        # count with a radically wider vocabulary — ADVICE r11) is closed
-        # one layer down: dense_best_match measures the ACTUAL collected
-        # matrix against the broadcast bounds and degrades to the exact
-        # sparse formulation if they are violated, so a stale memo can
-        # cost a wasted collect but never an over-broadcast. The memo
-        # also carries the probe-time vocab, cross-checked here against
-        # the current bound (guards constant drift across code changes).
-        cached = _AUTO_STRATEGY_CACHE.get(key)
-        if cached == "sparse":
+        # Deterministic sample (ADVICE r10): a bare limit(512) takes
+        # whichever partitions finish first, so near the vocab boundary
+        # the decision flipped run to run (result-invariant, but plan and
+        # timing varied). A doc_id predicate is stable across runs AND
+        # pushdown-friendly (parquet row-group min/max stats skip the rest
+        # of the table). If a corpus's ids don't start low the filter just
+        # yields fewer rows, which only weakens the lower bound — the full
+        # probe remains the decider. A lower bound can never prove dense,
+        # so only "sparse" is memoized here.
+        v_lb = (
+            docs.filter(F.col("doc_id") < 512)
+            .select(F.explode(tokenize(F.lower("text"))).alias("term"))
+            .agg(F.count_distinct("term").alias("v_lb"))
+            .collect()[0]["v_lb"]
+        )
+        if v_lb > DENSE_MAX_VOCAB:
             strategy = "sparse"
-        elif isinstance(cached, tuple) and cached[0] == "dense":
-            if cached[2] <= DENSE_MAX_VOCAB:
-                # Accept the memo PROVISIONALLY: the row-count revalidation
-                # is folded into the title-matrix collect below (r13 — one
-                # driver action instead of a separate count() job + the
-                # collect inside dense_best_match; the memoized path now
-                # runs 2 actions total including the caller's). A stale
-                # count discards the collected rows and re-decides from
-                # scratch — the wasted work is one collect the size of
-                # the title matrix (not a cheap count), on a path only a
-                # mid-session data rewrite can reach.
-                memo_dense = cached
-                n_lit = cached[1]
-            # else: vocab bound drifted across code changes — leave
-            # strategy "auto"; the full probe below re-decides from the
-            # data and overwrites the memo
-        elif cached is None:
-            # Deterministic sample (ADVICE r10): a bare limit(512) takes
-            # whichever partitions finish first, so near the vocab
-            # boundary the sparse-vs-full-probe decision flipped run to
-            # run (result-invariant, but plan and timing varied). A
-            # doc_id predicate is stable across runs AND pushdown-
-            # friendly (parquet row-group min/max stats skip the rest of
-            # the table — no full scan, unlike orderBy().limit()). If a
-            # corpus's ids don't start low the filter just yields fewer
-            # rows, which only weakens the lower bound — the full probe
-            # below remains the decider, so correctness is unaffected.
-            v_lb = (
-                docs.filter(F.col("doc_id") < 512)
-                .select(F.explode(tokenize(F.lower("text"))).alias("term"))
-                .agg(F.count_distinct("term").alias("v_lb"))
-                .collect()[0]["v_lb"]
-            )
-            if v_lb > DENSE_MAX_VOCAB:
-                strategy = "sparse"
-                _auto_strategy_memo_put(key, "sparse")
-            else:
-                # a lower bound can never prove dense; remember only that
-                # the full probe is the decider for this corpus
-                _auto_strategy_memo_put(key, "full-probe")
+            _auto_strategy_memo_put(key, "sparse")
 
-    # Corpus size for the IDF: a driver literal when the memo-dense path
-    # already knows (and re-validated) it — that removes the cross-joined
-    # 1-row broadcast aggregate subtree from every weighting plan — else
-    # ONE 1-row aggregate serving both the IDF and the decision row, so
-    # every cross-join site shares the same canonical subplan.
+    # ONE 1-row aggregate serves the IDF and the stats row, so every
+    # cross-join site shares the same canonical subplan.
     sizes_agg = docs.agg(
         F.count("*").alias("_n_docs"),
         F.count_if(F.col("doc_id") % TITLE_SAMPLE_MOD == 0).alias("nt"),
     )
-    corpus_n: int | DataFrame = n_lit if n_lit is not None else sizes_agg
-
-    # The TF/DF persists only pay when a materialization is REREAD by a
-    # later pass over the same relation: the full auto probe's collect
-    # (reread by the final action), or the memo-dense path's title collect
-    # + final action. A resolved-sparse decision skips them so the pair
-    # join's build chain pipelines uncached (the r7 16x finding: 22.0 s
-    # fused vs 40.7 s through the cache barrier). The memo-dense path
-    # ALWAYS persists: the r12 post-heap-fix A/B (see the calibration
-    # history at the top of this module) shows the cache barrier beating
-    # the double fused scan at every measured corpus size once both host
-    # allocation artifacts were fixed; the two earlier size-conditional
-    # rules were calibrated on stall-taxed persist arms.
-    if strategy in ("auto", "dense"):
-        persist = True  # probe and dense paths: materializations are reread
-    else:
-        persist = False
     abstract_tf = term_frequency(
         _doc_terms(spark, sf_dir).withColumnRenamed("doc_id", "abstract_id"),
         ["abstract_id"],
     )
-    if persist:
+    # The TF/DF persists pay only when a materialization is REREAD by a
+    # later pass: the stats+title collect, reread by the final action. The
+    # sparse path skips them so the pair join's build chain pipelines
+    # uncached (the r7 16x finding: 22.0 s fused vs 40.7 s through the
+    # cache barrier). DF is vocabulary-sized and feeds the probe's vocab
+    # count and both weightings.
+    if strategy != "sparse":
         abstract_tf = abstract_tf.persist(StorageLevel.MEMORY_AND_DISK)
-    # DF is vocabulary-sized and feeds three consumers (the auto probe's
-    # count, the abstract weighting, the title weighting) — persisting it
-    # makes the probe's materialization pay for the weighting joins
-    # instead of being thrown away
     df_ = doc_frequency(abstract_tf)
-    if persist:
+    if strategy != "sparse":
         df_ = df_.persist(StorageLevel.MEMORY_AND_DISK)
+    title_tf = term_frequency(_title_terms(spark, sf_dir), ["title_id"])
+
+    def title_vec(corpus_n: int | DataFrame) -> DataFrame:
+        return l2_normalize(
+            tfidf(title_tf, df_, corpus_n, ["title_id"], left=True), ["title_id"]
+        )
+
+    corpus_n: int | DataFrame = sizes_agg
+    t_rows = None
+    if strategy != "sparse":
+        # ONE driver action yields the stats row AND the full title matrix
+        # (tagged union). On auto the stats row also carries the vocab
+        # count (vocabulary-sized agg over the persisted TF — this is also
+        # what materializes both persists) and the dense verdict, and the
+        # title rows are gated plan-side on that verdict — a sparse
+        # decision makes that branch empty, so it never pays for a title
+        # collect. Off auto the stats row is the count alone: pruned to the
+        # column the title IDF reads, the two uses share one exchange
+        # (memoized call at sf0.01/local[8]: 15 scheduler jobs, 16 with
+        # the unpruned aggregate).
+        stats, t_vec = sizes_agg.select("_n_docs"), title_vec(sizes_agg)
+        if strategy == "auto":
+            stats = (
+                df_.agg(F.count("*").alias("vocab"))
+                .crossJoin(sizes_agg)
+                .withColumn(
+                    "dense_ok",
+                    (F.col("vocab") <= DENSE_MAX_VOCAB)
+                    & (F.col("nt") * F.col("vocab") <= DENSE_MAX_BROADCAST_CELLS),
+                )
+            )
+            t_vec = t_vec.crossJoin(
+                F.broadcast(stats.filter("dense_ok").select(F.lit(1).alias("_g")))
+            ).drop("_g")
+        rows = (
+            stats.withColumn("tag", F.lit("stats"))
+            .unionByName(t_vec.withColumn("tag", F.lit("vec")), allowMissingColumns=True)
+            .collect()
+        )
+        stat_row = next(r for r in rows if r["tag"] == "stats")
+        if strategy == "auto":
+            strategy = "dense" if stat_row["dense_ok"] else "sparse"
+            _auto_strategy_memo_put(key, strategy)
+        # the driver literal removes the cross-joined aggregate subtree
+        # from the final action's weighting plans
+        corpus_n = stat_row["_n_docs"]
+        t_rows = [r for r in rows if r["tag"] == "vec"]
 
     abstract_vec = l2_normalize(
         tfidf(abstract_tf, df_, corpus_n, ["abstract_id"]), ["abstract_id"]
     )
-    title_tf = term_frequency(_title_terms(spark, sf_dir), ["title_id"])
-    title_vec = l2_normalize(
-        tfidf(title_tf, df_, corpus_n, ["title_id"], left=True), ["title_id"]
-    )
     all_titles = docs.filter(F.col("doc_id") % TITLE_SAMPLE_MOD == 0).select(
         F.col("doc_id").alias("title_id")
     )
-
-    t_rows = None
-    if memo_dense is not None:
-        # Folded revalidation (r13): ONE driver action yields the current
-        # corpus count AND the full title matrix. The matrix rows were
-        # weighted with the memoized count as the IDF literal, so they are
-        # valid exactly when the count still matches; on a mismatch the
-        # rows are discarded, the stale memo dropped, the attempt's
-        # persists released, and the call re-decides from scratch (the
-        # recursion re-enters with no memo: cheap pre-probe, then the full
-        # probe — which rebuilds the identical TF/DF plans).
-        tagged_cnt = docs.agg(F.count("*").alias("n_docs")).select(
-            F.lit("cnt").alias("tag"),
-            F.lit(None).cast("long").alias("title_id"),
-            F.lit(None).cast("string").alias("term"),
-            F.lit(None).cast("double").alias("weight"),
-            "n_docs",
-        )
-        tagged_vec = title_vec.select(
-            F.lit("vec").alias("tag"),
-            "title_id",
-            "term",
-            "weight",
-            F.lit(None).cast("long").alias("n_docs"),
-        )
-        rows = tagged_cnt.unionByName(tagged_vec).collect()
-        n_now = next(r for r in rows if r["tag"] == "cnt")["n_docs"]
-        if n_now == memo_dense[1]:
-            strategy = "dense"
-            t_rows = [r for r in rows if r["tag"] == "vec"]
-        else:
-            _AUTO_STRATEGY_CACHE.pop(key, None)
-            abstract_tf.unpersist()
-            df_.unpersist()
-            return title_best_abstract(spark, sf_dir, strategy="auto")
-    if strategy == "auto":
-        # ONE driver action yields the strategy decision AND (when the
-        # decision is dense) the full title matrix (r6 fold of the former
-        # separate dense_best_match collect): the decision row is the
-        # vocab count (vocabulary-sized agg over the persisted TF — this
-        # is also what materializes both persists) cross-joined with the
-        # 1-row corpus sizes aggregate, and the title-matrix rows are
-        # gated plan-side by cross-joining title_vec against the FILTERED
-        # decision row — a sparse decision makes that branch empty, so
-        # the sparse path never pays for a title collect.
-        dec = (
-            df_.agg(F.count("*").alias("vocab"))
-            .crossJoin(sizes_agg)
-            .withColumn(
-                "dense_ok",
-                (F.col("vocab") <= DENSE_MAX_VOCAB)
-                & (F.col("nt") * F.col("vocab") <= DENSE_MAX_BROADCAST_CELLS),
-            )
-        )
-        tagged_dec = dec.select(
-            F.lit("dec").alias("tag"),
-            F.lit(None).cast("long").alias("title_id"),
-            F.lit(None).cast("string").alias("term"),
-            F.lit(None).cast("double").alias("weight"),
-            "dense_ok",
-            "_n_docs",
-            "vocab",
-        )
-        tagged_vec = title_vec.crossJoin(
-            F.broadcast(dec.filter("dense_ok").select(F.lit(1).alias("_g")))
-        ).select(
-            F.lit("vec").alias("tag"),
-            "title_id",
-            "term",
-            "weight",
-            F.lit(None).cast("boolean").alias("dense_ok"),
-            F.lit(None).cast("long").alias("_n_docs"),
-            F.lit(None).cast("long").alias("vocab"),
-        )
-        rows = tagged_dec.unionByName(tagged_vec).collect()
-        dec_row = next(r for r in rows if r["tag"] == "dec")
-        strategy = "dense" if dec_row["dense_ok"] else "sparse"
-        if strategy == "dense":
-            # memoize the verdict WITH the measured corpus size and vocab:
-            # later calls re-validate with one cheap count() (plus a
-            # driver-side vocab-bound cross-check) and take the direct
-            # dense path (no probe aggregates, no tagged collect)
-            _auto_strategy_memo_put(key, ("dense", dec_row["_n_docs"], dec_row["vocab"]))
-        if strategy == "sparse":
-            # upgrade the memo: later calls skip straight to sparse
-            _auto_strategy_memo_put(key, "sparse")
-        if strategy == "dense":
-            t_rows = [r for r in rows if r["tag"] == "vec"]
-
     if strategy == "dense":
         top = dense_best_match(
-            title_vec, abstract_vec, "title_id", "abstract_id", t_rows=t_rows
+            title_vec(corpus_n), abstract_vec, "title_id", "abstract_id", t_rows=t_rows
         )
         # dense mode's precondition (n_titles * vocab <= broadcast cells)
         # bounds the match relation, so the null-fill join broadcasts
@@ -521,7 +425,7 @@ def title_best_abstract(
         abstract_tf.unpersist()
         df_.unpersist()
         pairs = sparse_cosine_join(
-            title_vec,
+            title_vec(corpus_n),
             abstract_vec,
             "title_id",
             "abstract_id",

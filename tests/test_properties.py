@@ -238,6 +238,57 @@ def test_flagship_dense_equals_sparse(spark):
     assert dense == sparse and dense
 
 
+# Degenerate corpora cut from the smoke fixture's documents table, with the
+# flagship's expected row count: no documents, a single (title-sampled)
+# document, and a corpus in which no document is title-sampled.
+_FLAGSHIP_DEGENERATE = {
+    "empty": ("SELECT * FROM docs LIMIT 0", 0),
+    "one_title_doc": (
+        "SELECT * FROM docs WHERE doc_id = "
+        "(SELECT min(doc_id) FROM docs WHERE doc_id % {mod} = 0)",
+        1,
+    ),
+    "no_titles": ("SELECT * FROM docs WHERE doc_id % {mod} <> 0", 0),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FLAGSHIP_DEGENERATE))
+def test_flagship_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case):
+    """Degenerate input returns the oracle's edge result under every
+    strategy — auto on its first (probing) and its memoized call, forced
+    dense, forced sparse — and does not crash."""
+    import duckdb
+
+    from similarity_analysis_big_data_spark.plans import similarity as S
+    from similarity_analysis_big_data_spark.plans.registry import QUERIES
+
+    from .oracle import compare
+
+    select, n_rows = _FLAGSHIP_DEGENERATE[case]
+    sf = str(tmp_path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW docs AS SELECT * FROM '{sf_smoke}/documents.parquet'")
+    con.execute(
+        f"COPY ({select.format(mod=S.TITLE_SAMPLE_MOD)}) "
+        f"TO '{sf}/documents.parquet' (FORMAT PARQUET)"
+    )
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
+    want = con.execute(QUERIES["title_best_abstract"].oracle).fetchdf()
+    con.close()
+    assert len(want) == n_rows
+
+    key = (spark.sparkContext.applicationId, sf)
+    try:
+        for strategy in ("auto", "auto", "dense", "sparse"):
+            ok, msg = compare(S.title_best_abstract(spark, sf, strategy=strategy), want)
+            assert ok, f"{case}/{strategy}: {msg}"
+        # the first auto call left a verdict, so the second one used it
+        assert S._AUTO_STRATEGY_CACHE[key] in ("sparse", "dense")
+    finally:
+        S._AUTO_STRATEGY_CACHE.pop(key, None)
+        spark.catalog.clearCache()
+
+
 def test_ann_dense_equals_hof(spark):
     """dense_topk_neighbors (BLAS blocked matmul) is extensionally equal to
     the column-expression fold formulation, ranks included."""
