@@ -2,13 +2,14 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
+
+SPARK_GRAFT_BENCH_ORACLE=1 adds "oracle_ratio": {name: spark_sec / duckdb_sec}.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -17,49 +18,45 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from similarity_analysis_big_data_spark.plans import registry
 from similarity_analysis_big_data_spark.session import get_session
 
-# Committed idle-boot reference for the sf0.1 headline loop (min-of-3,
-# rested host, clean GC, single pass, loadavg 0.24 at gate — see
-# BENCH_r13_oracle.json). Cross-boot variance on the same code is ~±15%;
-# a measured total >25% above this reference is therefore evidence of
-# external contention even when GC is clean (the r12 graded artifact's
-# exact failure mode: 34.17 s on a loadavg-14 host, same commit ~15.5 s
-# idle, measured-loop GC 1.33 s). Used as a one-sided escalation trigger
-# only — it can cause a fresh-process re-run whose per-query minima are
-# published, never raise a number. A slow-but-honest boot that lands in
-# the 13.9×1.25..+ band just pays one defensive re-run and publishes the
-# min of both passes.
-IDLE_REFERENCE_SF01_SEC = 13.88
+# Rest gate: wait in REST_STEP_SEC steps, at most REST_CAP_SEC, until the
+# 1-minute load average is at most LOAD_THRESHOLD. Threshold 4 on a 32-cpu
+# host is the level below which the committed idle-vs-busy pairs show no
+# inflation; the cap keeps the whole bench bounded.
+LOAD_THRESHOLD = 4.0
+REST_CAP_SEC = 180.0
+REST_STEP_SEC = 15.0
+
+# single-run timings swing ~25%; min-of-RUNS is the published statistic
+RUNS = 3
 
 
-def _rest_until_quiet(threshold: float, cap_sec: float, step_sec: float) -> dict:
-    """Active gate defense: refuse to start the measured loop on a loaded host.
+def rest_until_quiet() -> dict:
+    """Refuse to start the measured loop on a loaded host.
 
     The r8/r9 graded artifacts read 16.66 s / 23.50 s against a 15.5-15.8 s
     idle floor of the SAME code; both recorded loadavg 5-7 at gate time and
-    the r9 closing evidence showed a ~4-minute rest fully recovers the
-    floor. So instead of merely recording the load (passive forensics), the
-    bench now waits — in bounded steps, capped — for the 1-minute load
-    average to drop below a threshold before the first measured query runs.
-    The wait itself is recorded in the artifact so a still-noisy reading is
-    self-explaining: either the host settled (``settled: true``) or it never
-    did within the cap and the numbers carry that caveat explicitly.
+    a ~4-minute rest fully recovered the floor. So the bench waits, in
+    bounded steps, for the load to drop before the JVM starts, and records
+    the wait: either the host settled (``settled: true``) or it did not
+    within the cap and the numbers carry that caveat.
     """
     waited = 0.0
     initial = os.getloadavg()[0]
     load = initial
-    while load > threshold and waited < cap_sec:
-        time.sleep(step_sec)
-        waited += step_sec
+    while load > LOAD_THRESHOLD and waited < REST_CAP_SEC:
+        time.sleep(REST_STEP_SEC)
+        waited += REST_STEP_SEC
         load = os.getloadavg()[0]
     return {
         "loadavg_initial": round(initial, 2),
         "loadavg_after_rest": round(load, 2),
         "rest_wait_sec": round(waited, 1),
-        "settled": load <= threshold,
+        "settled": load <= LOAD_THRESHOLD,
     }
 
 
-def _jvm_gc_sec(spark) -> float:
+def jvm_gc_sec(spark) -> float:
+    """Cumulative GC time of the session's JVM, in seconds."""
     return (
         sum(
             b.getCollectionTime()
@@ -79,21 +76,8 @@ def main() -> None:
         # non-standard dir name (e.g. a scale replica) — report the raw tag
         pass
 
-    # Gate defense BEFORE the JVM starts, so the load reading reflects
-    # external pressure only. Threshold 4 on this 32-cpu host ≈ the level
-    # below which the committed idle-vs-busy pairs show no inflation; cap
-    # 180 s keeps the whole bench bounded. Overridable for CI/debug. Like
-    # every other forensics block, the gate must never fail the bench: a
-    # platform without os.getloadavg or a malformed env override degrades
-    # to "no rest, settled unknown" instead of crashing pre-measurement.
-    try:
-        rest = _rest_until_quiet(
-            threshold=float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_THRESHOLD", "4.0")),
-            cap_sec=float(os.environ.get("SPARK_GRAFT_BENCH_REST_CAP", "180")),
-            step_sec=float(os.environ.get("SPARK_GRAFT_BENCH_REST_STEP", "15")),
-        )
-    except Exception:
-        rest = {"settled": None}
+    # before the JVM starts, so the load reading is external pressure only
+    rest = rest_until_quiet()
 
     spark = get_session(app_name="sabds-bench", master=f"local[{cpus}]")
 
@@ -102,202 +86,48 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
-    headliners = registry.headline_queries()
-    # single-run timings on this host swing ~25%; min-of-n is the stable
-    # statistic (n=3 default, SPARK_GRAFT_BENCH_RUNS to override)
-    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-
-    def measured_loop() -> dict[str, float]:
-        timings: dict[str, float] = {}
-        for name, fn in sorted(headliners.items()):
-            best = float("inf")
-            for _ in range(runs):
-                # drop any DataFrames persisted by the previous run: repeat
-                # runs must pay their own cache build (honest timing), and
-                # re-persisting an identical plan is what produced the
-                # CacheManager "already cached" warnings in the r4 tail
-                spark.catalog.clearCache()
-                start = time.perf_counter()
-                df = fn(spark, sf_dir)
-                # force full materialization without collecting to the driver
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - start)
-            timings[name] = best
-        return timings
-
-    gc_before = 0.0
-    try:
-        gc_before = _jvm_gc_sec(spark)
-    except Exception:
-        pass
-    timings = measured_loop()
-    reran = False
-    rerun_mode = None
-    passes = [dict(timings)]  # every pass's per-query timings, for the artifact
-    pass_gc: list[float | None] = []  # per-pass measured-loop GC, for the reader
-    gc_loop = 0.0
-    try:
-        gc_loop = _jvm_gc_sec(spark) - gc_before
-        pass_gc.append(round(gc_loop, 2))
-    except Exception:
-        pass_gc.append(None)
-    is_child = os.environ.get("SPARK_GRAFT_BENCH_CHILD") == "1"
-    stall_reasons: list[str] = []
-    try:
-        # Second line of defense: if GC during the measured loop exceeded
-        # ~2x the committed idle reference (~0.9 s total) or the host got
-        # busy mid-loop, the reading is suspect — re-run the whole loop
-        # ONCE and keep the per-query min across both passes. The r11
-        # graded artifact (28.76 s vs a reproducible 14.9 s) proved the
-        # r10 in-process re-run insufficient: a degraded JVM's second pass
-        # inherits the churned heap and confirms its own artifact (memory
-        # ledger: pass 1 title 21.1 s, pass 2 9.6 s, fresh process 2.0 s).
-        # So the re-run now happens in a FRESH subprocess JVM — this very
-        # script, re-invoked with SPARK_GRAFT_BENCH_CHILD=1 — after the
-        # degraded parent session is stopped so its heap and threads are
-        # gone before the child's rest gate runs. The rule stays one-sided
-        # (a re-run can only lower the published min), so the artifact
-        # publishes BOTH passes' timings plus per-pass GC (`passes` /
-        # `pass_gc_sec` below): a reader can check that the published
-        # minimum came from a clean-GC pass, not argue it after the fact.
-        #
-        # r13 (verdict item 1): the r12 graded run fell into a blind spot —
-        # external CPU contention with CLEAN GC triggers neither of the two
-        # conditions above (the GC trigger stopped firing precisely because
-        # r12 fixed the GC stalls, and the mid-loop load trigger of
-        # 4.0 + cpus sits far above real contention). The r12 artifact read
-        # 34.17 s on a loadavg-14 host that runs the same commit in ~15.5 s
-        # idle. Two new one-sided escalation triggers close it:
-        #   (a) pre-JVM contention — the rest gate never settled the host
-        #       below ~2.0 before the JVM started (external busy cores were
-        #       provably present through the whole loop);
-        #   (b) drift from the committed idle-boot reference — the measured
-        #       total exceeds it by >25% (cross-boot variance on this host
-        #       is ~±15%, so 25% is outside honest wobble).
-        # Both can only trigger a fresh-process re-run whose minima are
-        # kept per query — a clean host is never penalized.
-        load_now = os.getloadavg()[0]
-        if gc_loop > float(os.environ.get("SPARK_GRAFT_BENCH_GC_RERUN_SEC", "2.0")):
-            stall_reasons.append("gc")
-        # load_now includes this JVM's own 32 busy threads, hence +cpus
-        if load_now > float(
-            os.environ.get("SPARK_GRAFT_BENCH_LOAD_THRESHOLD", "4.0")
-        ) + float(cpus):
-            stall_reasons.append("load_midloop")
-        if (rest.get("loadavg_after_rest") or 0.0) > float(
-            os.environ.get("SPARK_GRAFT_BENCH_PREJVM_LOAD", "2.0")
-        ):
-            stall_reasons.append("load_prejvm")
-        # Idle-boot reference for THIS query set at sf0.1 (committed
-        # artifact BENCH_r13_oracle.json); other SF dirs / replica dirs
-        # have no committed reference, so the drift trigger only applies
-        # at the graded scale factor unless the env provides a reference.
-        ref_env = os.environ.get("SPARK_GRAFT_BENCH_IDLE_REF_SEC")
-        ref = float(ref_env) if ref_env else (IDLE_REFERENCE_SF01_SEC if sf == 0.1 else None)
-        if ref and sum(timings.values()) > ref * float(
-            os.environ.get("SPARK_GRAFT_BENCH_IDLE_REF_FACTOR", "1.25")
-        ):
-            stall_reasons.append("idle_ref_drift")
-        stall = bool(stall_reasons)
-        if stall and not is_child:
-            try:
-                spark.stop()
-            except Exception:
-                pass
-            time.sleep(float(os.environ.get("SPARK_GRAFT_BENCH_RERUN_REST", "30")))
-            child_env = dict(os.environ)
-            child_env["SPARK_GRAFT_BENCH_CHILD"] = "1"
-            # the child times Spark only; the parent owns any oracle pass
-            child_env.pop("SPARK_GRAFT_BENCH_ORACLE", None)
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__)],
-                env=child_env,
-                capture_output=True,
-                text=True,
-                timeout=float(os.environ.get("SPARK_GRAFT_BENCH_CHILD_TIMEOUT", "1800")),
-            )
-            child_lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
-            child = json.loads(child_lines[-1])
-            second = {n: float(t) for n, t in child["queries"].items()}
-            passes.append(dict(second))
-            child_host = child.get("host", {})
-            # the child's measured-loop GC delta, not its total (which
-            # includes JVM warmup) — this is the number the "published
-            # minimum came from a clean pass" check reads
-            child_gc = (child_host.get("pass_gc_sec") or [None])[0]
-            pass_gc.append(
-                child_gc if child_gc is not None else child_host.get("gc_time_sec")
-            )
-            timings = {n: min(timings[n], second[n]) for n in timings}
-            reran = True
-            rerun_mode = "fresh_process"
-        elif stall and is_child:
-            # the child never recurses: publish its single pass as-is and
-            # let the parent's artifact carry the spread
-            rerun_mode = "child_stall_disclosed"
-    except Exception:
-        # the defense must never fail the artifact; a child that crashed
-        # or printed garbage leaves pass 1 published with the failure noted
-        if not is_child:
-            rerun_mode = "fresh_process_failed"
-
-    timings = {n: round(t, 3) for n, t in timings.items()}
-    total = sum(timings.values())
+    # One pass, min-of-RUNS per query, no re-runs. The escalation triggers
+    # that used to re-run this loop in a fresh process earned nothing in the
+    # committed artifacts (BENCH_r09..r13): measured-loop GC has been
+    # 0.28-1.33 s since the -Xms == -Xmx fix, under the 2.0 s trigger; the
+    # mid-loop load and idle-reference triggers never fired; the pre-JVM
+    # load trigger fired once (BENCH_r13.json) and its fresh-process re-run
+    # moved the published total from 12.88 s to 12.85 s.
+    gc_before = jvm_gc_sec(spark)
+    timings: dict[str, float] = {}
+    for name, fn in sorted(registry.headline_queries().items()):
+        best = float("inf")
+        for _ in range(RUNS):
+            # drop any DataFrames persisted by the previous run: repeat runs
+            # must pay their own cache build, and re-persisting an identical
+            # plan logs CacheManager "already cached" warnings
+            spark.catalog.clearCache()
+            start = time.perf_counter()
+            df = fn(spark, sf_dir)
+            # force full materialization without collecting to the driver
+            df.write.format("noop").mode("overwrite").save()
+            best = min(best, time.perf_counter() - start)
+        timings[name] = round(best, 3)
+    gc_loop = jvm_gc_sec(spark) - gc_before
 
     payload = {
         "metric": "headline_query_wall_time",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-    }
-
-    # Host-state forensics (extra keys; the one-line contract is unchanged):
-    # the r8 driver artifact read +12% vs an idle-host run of the SAME code
-    # (the documented ±20-30% busy-host signature — the bench ran minutes
-    # after big replica-sweep JVMs exited). Recording load average and the
-    # JVM's own GC accounting inside the artifact makes that diagnosis
-    # readable from the artifact instead of argued after the fact.
-    try:
-        host: dict = {
+        # host state, so a contended reading explains itself from the artifact
+        "host": {
             "loadavg_1m": round(os.getloadavg()[0], 2),
             "rest": rest,
-            "reran": reran,
-        }
-        try:
-            # the parent session is already stopped on the fresh-process
-            # path; pass_gc_sec below carries the measured-loop GC instead
-            host["gc_time_sec"] = round(_jvm_gc_sec(spark), 2)
-        except Exception:
-            host["gc_time_sec"] = None
-        if rerun_mode:
-            host["rerun_mode"] = rerun_mode
-        if stall_reasons:
-            host["stall_reasons"] = stall_reasons
-        host["pass_gc_sec"] = pass_gc
-        if reran:
-            # disclose the spread behind the published min (ADVICE r10) and
-            # WHICH pass each published number came from, so "the minimum
-            # came from a clean-GC pass" is checkable from the artifact
-            host["passes"] = [
-                {n: round(t, 3) for n, t in p.items()} for p in passes
-            ]
-            host["published_pass"] = {
-                n: min(range(len(passes)), key=lambda i: passes[i][n])
-                for n in timings
-            }
-        payload["host"] = host
-    except Exception:
-        pass  # forensics must never fail the bench artifact
+            "gc_loop_sec": round(gc_loop, 2),
+        },
+    }
 
-    # Optional self-assessment: SPARK_GRAFT_BENCH_ORACLE=1 also times each
-    # headliner's DuckDB oracle on the same parquet and reports the
-    # spark/duckdb ratio per query — the locally computable version of the
-    # judge's BASELINE comparison. Extra keys only; the one-line contract
-    # and the timing keys above are unchanged.
+    # Optional self-assessment: time each headliner's DuckDB oracle on the
+    # same parquet and report the spark/duckdb ratio per query — the locally
+    # computable version of the BASELINE comparison.
     if os.environ.get("SPARK_GRAFT_BENCH_ORACLE") == "1":
-        import duckdb
-
         from similarity_analysis_big_data_spark.plans.registry import QUERIES
         from tests.oracle import duckdb_conn
 
@@ -308,7 +138,7 @@ def main() -> None:
             if not oracle:
                 continue
             best = float("inf")
-            for _ in range(runs):
+            for _ in range(RUNS):
                 start = time.perf_counter()
                 con.execute(oracle).fetchall()
                 best = min(best, time.perf_counter() - start)
@@ -317,10 +147,7 @@ def main() -> None:
         payload["oracle_ratio"] = ratios
 
     print(json.dumps(payload))
-    try:
-        spark.stop()
-    except Exception:
-        pass  # already stopped on the fresh-process re-run path
+    spark.stop()
 
 
 if __name__ == "__main__":

@@ -72,6 +72,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import jvm_gc_sec, rest_until_quiet  # noqa: E402
 from similarity_analysis_big_data_spark.plans import registry  # noqa: E402
 from similarity_analysis_big_data_spark.session import get_session  # noqa: E402
 
@@ -146,33 +147,6 @@ DEDUP_TEXT_FAMILY: frozenset[str] = frozenset(
         "weighted_jaccard_pairs",
     }
 )
-
-
-def _rest_until_quiet(threshold: float, cap_sec: float, step_sec: float) -> dict:
-    """Pre-JVM load gate, same contract as bench.py's (which see)."""
-    waited = 0.0
-    initial = os.getloadavg()[0]
-    load = initial
-    while load > threshold and waited < cap_sec:
-        time.sleep(step_sec)
-        waited += step_sec
-        load = os.getloadavg()[0]
-    return {
-        "loadavg_initial": round(initial, 2),
-        "loadavg_after_rest": round(load, 2),
-        "rest_wait_sec": round(waited, 1),
-        "settled": load <= threshold,
-    }
-
-
-def _jvm_gc_sec(spark) -> float:
-    return (
-        sum(
-            b.getCollectionTime()
-            for b in spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
-        )
-        / 1000.0
-    )
 
 
 def _time_query(spark, fn, sf_dir: str) -> float:
@@ -252,7 +226,7 @@ def main() -> None:
         fn = registry.QUERIES[args.child_query].fn
         gc0 = None
         try:
-            gc0 = _jvm_gc_sec(spark)
+            gc0 = jvm_gc_sec(spark)
         except Exception:
             pass
         base_runs, scaled_runs = [], []
@@ -265,7 +239,7 @@ def main() -> None:
         }
         try:
             if gc0 is not None:
-                out["gc_s"] = round(_jvm_gc_sec(spark) - gc0, 2)
+                out["gc_s"] = round(jvm_gc_sec(spark) - gc0, 2)
             out["loadavg_1m"] = round(os.getloadavg()[0], 2)
         except Exception:
             pass
@@ -326,16 +300,8 @@ def main() -> None:
             return disjoint_dir, "disjoint"
         return shared_dir, "shared"
 
-    # Rest gate BEFORE the JVM starts (bench.py's defense, same env knobs;
-    # like there, the gate must never fail the sweep).
-    try:
-        rest = _rest_until_quiet(
-            threshold=float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_THRESHOLD", "4.0")),
-            cap_sec=float(os.environ.get("SPARK_GRAFT_BENCH_REST_CAP", "180")),
-            step_sec=float(os.environ.get("SPARK_GRAFT_BENCH_REST_STEP", "15")),
-        )
-    except Exception:
-        rest = {"settled": None}
+    # Rest gate BEFORE the JVM starts (bench.py's, same constants).
+    rest = rest_until_quiet()
 
     def fresh_session():
         s = get_session(app_name="sabds-sweep", master=f"local[{cpus}]")
@@ -366,7 +332,7 @@ def main() -> None:
         try:
             gc0 = None
             try:
-                gc0 = _jvm_gc_sec(spark)
+                gc0 = jvm_gc_sec(spark)
             except Exception:
                 pass
             t_base = _time_query(spark, fn, args.base)
@@ -374,7 +340,7 @@ def main() -> None:
             gc_row = None
             if gc0 is not None:
                 try:
-                    gc_row = round(_jvm_gc_sec(spark) - gc0, 2)
+                    gc_row = round(jvm_gc_sec(spark) - gc0, 2)
                 except Exception:
                     pass
         except Exception as exc:  # keep sweeping; a crash is its own flag
@@ -426,7 +392,7 @@ def main() -> None:
         if ratio > args.confirm_ratio and t_scaled >= args.min_seconds:
             inline_gc0 = None
             try:
-                inline_gc0 = _jvm_gc_sec(spark)
+                inline_gc0 = jvm_gc_sec(spark)
             except Exception:
                 pass
             for _ in range(max(0, args.confirm_runs - 1)):
@@ -440,7 +406,7 @@ def main() -> None:
             confirmed = True
             if inline_gc0 is not None:
                 try:
-                    row["confirm_inline_gc_s"] = round(_jvm_gc_sec(spark) - inline_gc0, 2)
+                    row["confirm_inline_gc_s"] = round(jvm_gc_sec(spark) - inline_gc0, 2)
                 except Exception:
                     pass
             # Fresh-process confirm (r11 verdict item 3): the in-line
@@ -545,7 +511,7 @@ def main() -> None:
         payload["host"] = {
             "rest": rest,
             "loadavg_end": round(os.getloadavg()[0], 2),
-            "gc_total_sec": round(_jvm_gc_sec(spark), 2),
+            "gc_total_sec": round(jvm_gc_sec(spark), 2),
         }
     except Exception:
         pass  # forensics must never fail the sweep artifact

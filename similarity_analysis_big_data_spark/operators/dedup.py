@@ -432,12 +432,12 @@ def jaccard_verify_candidates(
     LSH-then-verify): join the candidate relation with each side's distinct
     token array and intersect per row.
 
-    ``jaccard_pairs`` materializes EVERY shingle-sharing pair before the
-    candidate semi-join prunes; under a narrow vocabulary (where every doc
-    shares shingles with every doc) that degenerates to the all-pairs
-    blowup LSH exists to avoid. This formulation's work is
-    O(|candidates| x avg set size): each doc's token array is shuffled once
-    per join side and never pairwise-exploded. Output matches
+    ``jaccard_pairs(candidates=...)`` also starts from the candidates, but
+    fans each pair out into one row per probed shingle and closes on
+    (id, shingle), so it needs an exploded shingle relation. This
+    formulation takes the un-exploded token arrays: each doc's array is
+    shuffled once per join side and intersected per row, so its work is
+    O(|candidates| x avg set size) with no per-shingle rows. Output matches
     ``jaccard_pairs(candidates=...)`` for every pair with >= 1 shared
     token; zero-overlap candidates additionally appear with jaccard 0.0
     (callers threshold above it).

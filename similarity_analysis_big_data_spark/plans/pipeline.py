@@ -4,11 +4,10 @@ These are the reference's Task 1 and Task 2 (``lab2.py:150-303``)
 re-expressed as one parameterized flow (the reference copy-pastes the
 title/abstract TF-IDF chains; SURVEY §2.7 notes union-parameterization).
 
-Used two ways:
-- over a papers-shaped corpus (id/title/abstract/categories) for
-  reference parity tests;
-- over the ``documents`` fixture (title := leading tokens of text) for the
-  registered oracle queries in plans/similarity.py.
+Used by the ``python -m similarity_analysis_big_data_spark`` CLI
+(``__main__.py``) and by the reference-parity tests in
+``tests/test_pipeline.py``, over a papers-shaped corpus
+(id/title/abstract/categories).
 """
 
 from __future__ import annotations

@@ -289,6 +289,56 @@ def test_flagship_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case
         spark.catalog.clearCache()
 
 
+# Degenerate corpora for the near-dup chain, with near_dup_survivors'
+# expected row count: no documents, a single sampled document, and a corpus
+# whose sampled documents all share one text (one component, one survivor).
+_NEAR_DUP_DEGENERATE = {
+    "empty": ("SELECT * FROM docs LIMIT 0", 0),
+    "one_doc": (
+        "SELECT * FROM docs WHERE doc_id = "
+        "(SELECT min(doc_id) FROM docs WHERE doc_id % {mod} = 0)",
+        1,
+    ),
+    "all_duplicate": (
+        "SELECT * REPLACE (CASE WHEN doc_id % {mod} = 0 THEN "
+        "(SELECT text FROM docs WHERE doc_id % {mod} = 0 ORDER BY doc_id LIMIT 1) "
+        "ELSE text END AS text) FROM docs",
+        1,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_NEAR_DUP_DEGENERATE))
+def test_near_dup_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case):
+    """Degenerate input runs the whole MinHash -> LSH -> verify ->
+    components -> anti-join chain to the oracle's edge result."""
+    import duckdb
+
+    from similarity_analysis_big_data_spark.plans import dedup as D
+    from similarity_analysis_big_data_spark.plans.registry import QUERIES
+
+    from .oracle import compare
+
+    select, n_rows = _NEAR_DUP_DEGENERATE[case]
+    sf = str(tmp_path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW docs AS SELECT * FROM '{sf_smoke}/documents.parquet'")
+    con.execute(
+        f"COPY ({select.format(mod=D.SAMPLE_MOD)}) "
+        f"TO '{sf}/documents.parquet' (FORMAT PARQUET)"
+    )
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
+    want = con.execute(QUERIES["near_dup_survivors"].oracle).fetchdf()
+    con.close()
+    assert len(want) == n_rows
+
+    try:
+        ok, msg = compare(D.near_dup_survivors(spark, sf), want)
+        assert ok, f"{case}: {msg}"
+    finally:
+        spark.catalog.clearCache()
+
+
 def test_ann_dense_equals_hof(spark):
     """dense_topk_neighbors (BLAS blocked matmul) is extensionally equal to
     the column-expression fold formulation, ranks included."""
