@@ -1,6 +1,6 @@
 """Deduplication operators (north-star [ext]: LLM-training-data pipeline).
 
-Five dedup modes over a document relation, all long-format DataFrame
+Six dedup modes over a document relation, all long-format DataFrame
 compositions (no driver loops, no UDFs):
 
 - exact: hash-groupBy on content digest
@@ -8,8 +8,15 @@ compositions (no driver loops, no UDFs):
 - MinHash + LSH: shingle -> K permutation mins -> band -> bucket self-join
   (``near_dup_pairs`` is the whole LSH-then-verify chain as one operator)
 - SimHash: weighted bit-majority signature + hamming-distance pairing
-- n-gram Jaccard: exact set overlap via shingle join (also the verifier
-  behind the LSH candidates)
+- n-gram Jaccard: exact set overlap via shingle join
+- PPJoin: exact Jaccard-threshold self-join via prefix filtering
+
+Candidate pairs — LSH buckets, PPJoin prefixes, any caller's list — are
+verified by ONE exact-overlap kernel, ``_overlap_counts``: each pair fans
+out by its smaller set and counts |set_l ∩ set_r|.
+``jaccard_pairs(candidates=...)`` (with or without a size-ratio
+``threshold``) and ``ppjoin_pairs`` both call it; the all-pairs
+``jaccard_pairs`` self-join is the candidate-free form.
 
 Scale notes: the LSH band join is the O(n²)-killer — candidate pairs come
 only from shared buckets. Hot buckets (boilerplate shingles) are the skew
@@ -137,6 +144,37 @@ def lsh_candidate_pairs(
     )
 
 
+def _overlap_counts(
+    cand: DataFrame, sets: DataFrame, id_col: str, token_col: str
+) -> DataFrame:
+    """The exact-overlap verify shared by every candidate-driven join:
+    ``(id_l, id_r, size_l, size_r)`` candidates against a distinct
+    ``(id, token)`` relation -> the same columns plus ``n_common`` =
+    |set_l ∩ set_r|, for pairs that share at least one token.
+
+    Each pair fans out by its SMALLER side and closes on (other id,
+    token): intersection is symmetric, so the fan-out volume is
+    Σ min(size_l, size_r) over candidates — bounded by the candidate
+    relation, never Σ df² over tokens. The sizes ride the fan-out and the
+    aggregate (they are functionally dependent on the ids), so no caller
+    re-joins them afterwards."""
+    small_l = F.col("size_l") <= F.col("size_r")
+    probed = cand.select(
+        "id_l",
+        "id_r",
+        "size_l",
+        "size_r",
+        F.when(small_l, F.col("id_l")).otherwise(F.col("id_r")).alias("_probe"),
+        F.when(small_l, F.col("id_r")).otherwise(F.col("id_l")).alias("_other"),
+    )
+    return (
+        probed.join(sets.select(F.col(id_col).alias("_probe"), token_col), "_probe")
+        .join(sets.select(F.col(id_col).alias("_other"), token_col), [token_col, "_other"])
+        .groupBy("id_l", "id_r", "size_l", "size_r")
+        .agg(F.count("*").alias("n_common"))
+    )
+
+
 def jaccard_pairs(
     shingles: DataFrame,
     id_col: str,
@@ -148,8 +186,13 @@ def jaccard_pairs(
     """Exact Jaccard over distinct shingle sets: (id_l, id_r, jaccard).
 
     Sparse-join formulation (same shape as the cosine join): only pairs
-    sharing a shingle materialize. With ``candidates`` (e.g. LSH output)
-    the join is pre-filtered — the LSH-then-verify pattern.
+    sharing a shingle materialize. Without ``candidates`` it is the
+    all-pairs self-join on shingle (id_l < id_r). With ``candidates``
+    (e.g. LSH output) only those pairs are verified — the LSH-then-verify
+    pattern: the candidates are made distinct (a duplicate row would
+    multiply n_common), the set sizes are joined in, and
+    ``_overlap_counts`` counts the intersection. Pairs keep the
+    candidates' orientation; pairs sharing no shingle are absent.
     ``assume_distinct`` skips the defensive (id, shingle) distinct — set
     it ONLY when rows are distinct by construction (the dedup plans
     explode ``array_distinct`` token sets); duplicate rows would inflate
@@ -164,77 +207,23 @@ def jaccard_pairs(
     was the heaviest increment of the near-dup profile). Pairs that
     survive the ratio but land under the cutoff are still emitted with
     their exact jaccard, so callers keep their own ``>= t`` filter; only
-    pairs PROVABLY below the cutoff disappear. The sizes join moves ahead
-    of the fan-out and rides it (two post-agg joins removed), and each
-    pair fans out by its SMALLER side — intersection is symmetric, so
-    probing with the smaller set cuts the fan-out volume from
-    Σ|set_l| to Σ min(|set_l|, |set_r|) over candidates.
+    pairs PROVABLY below the cutoff disappear.
+
+    Measured negative (r12, do not retry): verifying candidates as
+    doc-grain ``array_intersect`` joins of the un-exploded token arrays
+    (one row per pair instead of the exploded shingle join) read 4.88 s
+    vs 2.3–3.2 s min-of-3 on near_dup at sf0.1, with row-identical
+    output (277,695 pairs): the token-array payload shipped twice per
+    pair outweighs the exploded shuffle (SCALE.md, r12 negative A/Bs).
     """
     sets = shingles.select(F.col(id_col), F.col(shingle_col))
     if not assume_distinct:
         sets = sets.distinct()
     sizes = sets.groupBy(id_col).agg(F.count("*").alias("set_size"))
+    sz_l = sizes.select(F.col(id_col).alias("id_l"), F.col("set_size").alias("size_l"))
+    sz_r = sizes.select(F.col(id_col).alias("id_r"), F.col("set_size").alias("size_r"))
 
-    if candidates is not None and threshold is not None:
-        num, den = threshold
-        sz_l = sizes.select(F.col(id_col).alias("id_l"), F.col("set_size").alias("size_l"))
-        sz_r = sizes.select(F.col(id_col).alias("id_r"), F.col("set_size").alias("size_r"))
-        small_l = F.col("size_l") <= F.col("size_r")
-        probed = (
-            candidates.select("id_l", "id_r")
-            .distinct()  # same precondition as the un-thresholded path below
-            .join(sz_l, "id_l")
-            .join(sz_r, "id_r")
-            .filter(
-                den * F.least("size_l", "size_r") >= num * F.greatest("size_l", "size_r")
-            )
-            .select(
-                "id_l",
-                "id_r",
-                "size_l",
-                "size_r",
-                F.when(small_l, F.col("id_l")).otherwise(F.col("id_r")).alias("_probe"),
-                F.when(small_l, F.col("id_r")).otherwise(F.col("id_l")).alias("_other"),
-            )
-        )
-        inter = (
-            probed.join(sets.select(F.col(id_col).alias("_probe"), shingle_col), "_probe")
-            .join(sets.select(F.col(id_col).alias("_other"), shingle_col), [shingle_col, "_other"])
-            .groupBy("id_l", "id_r", "size_l", "size_r")
-            .agg(F.count("*").alias("n_common"))
-        )
-        return inter.select(
-            "id_l",
-            "id_r",
-            (
-                F.col("n_common")
-                / (F.col("size_l") + F.col("size_r") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-
-    if candidates is not None:
-        # CANDIDATE-DRIVEN intersection: fan each candidate pair out by the
-        # left doc's shingles, close on (id_r, shingle). Cost is
-        # sum(|set_l|) over candidate pairs — bounded by the LSH output —
-        # NOT sum(df^2) over shingles, which is the quadratic blowup LSH
-        # exists to avoid (the previous formulation aggregated ALL
-        # shingle-sharing pairs and only then semi-joined the candidates;
-        # property-tested ≡ below).
-        lhs = sets.select(F.col(id_col).alias("id_l"), shingle_col)
-        rhs = sets.select(F.col(id_col).alias("id_r"), shingle_col)
-        # .distinct() guards against duplicate candidate rows, which would
-        # multiply n_common (jaccard > 1). lsh_candidate_pairs already ends
-        # in .distinct(), so for that caller this folds into the existing
-        # agg; for arbitrary callers it is the correctness precondition.
-        inter = (
-            candidates.select("id_l", "id_r")
-            .distinct()
-            .join(lhs, "id_l")
-            .join(rhs, [shingle_col, "id_r"])
-            .groupBy("id_l", "id_r")
-            .agg(F.count("*").alias("n_common"))
-        )
-    else:
+    if candidates is None:
         lhs = sets.withColumnRenamed(id_col, "id_l")
         rhs = sets.withColumnRenamed(id_col, "id_r")
         inter = (
@@ -242,20 +231,29 @@ def jaccard_pairs(
             .filter(F.col("id_l") < F.col("id_r"))
             .groupBy("id_l", "id_r")
             .agg(F.count("*").alias("n_common"))
+            .join(sz_l, "id_l")
+            .join(sz_r, "id_r")
         )
-    sz_l = sizes.select(F.col(id_col).alias("id_l"), F.col("set_size").alias("size_l"))
-    sz_r = sizes.select(F.col(id_col).alias("id_r"), F.col("set_size").alias("size_r"))
-    return (
-        inter.join(sz_l, "id_l")
-        .join(sz_r, "id_r")
-        .select(
-            "id_l",
-            "id_r",
-            (
-                F.col("n_common")
-                / (F.col("size_l") + F.col("size_r") - F.col("n_common"))
-            ).alias("jaccard"),
+    else:
+        cand = (
+            candidates.select("id_l", "id_r")
+            .distinct()
+            .join(sz_l, "id_l")
+            .join(sz_r, "id_r")
         )
+        if threshold is not None:
+            num, den = threshold
+            cand = cand.filter(
+                den * F.least("size_l", "size_r") >= num * F.greatest("size_l", "size_r")
+            )
+        inter = _overlap_counts(cand, sets, id_col, shingle_col)
+    return inter.select(
+        "id_l",
+        "id_r",
+        (
+            F.col("n_common")
+            / (F.col("size_l") + F.col("size_r") - F.col("n_common"))
+        ).alias("jaccard"),
     )
 
 
@@ -419,47 +417,6 @@ def simhash_banded_pairs(
         .select("id_l", "id_r", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()  # collapse multi-band collisions of the same pair
-    )
-
-
-def jaccard_verify_candidates(
-    token_sets: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    candidates: DataFrame,
-) -> DataFrame:
-    """Exact Jaccard computed ONLY for candidate pairs (the verify stage of
-    LSH-then-verify): join the candidate relation with each side's distinct
-    token array and intersect per row.
-
-    ``jaccard_pairs(candidates=...)`` also starts from the candidates, but
-    fans each pair out into one row per probed shingle and closes on
-    (id, shingle), so it needs an exploded shingle relation. This
-    formulation takes the un-exploded token arrays: each doc's array is
-    shuffled once per join side and intersected per row, so its work is
-    O(|candidates| x avg set size) with no per-shingle rows. Output matches
-    ``jaccard_pairs(candidates=...)`` for every pair with >= 1 shared
-    token; zero-overlap candidates additionally appear with jaccard 0.0
-    (callers threshold above it).
-    """
-    l = token_sets.select(
-        F.col(id_col).alias("id_l"), F.col(tokens_col).alias("_t_l")
-    )
-    r = token_sets.select(
-        F.col(id_col).alias("id_r"), F.col(tokens_col).alias("_t_r")
-    )
-    n_common = F.size(F.array_intersect("_t_l", "_t_r"))
-    return (
-        candidates.join(l, "id_l")
-        .join(r, "id_r")
-        .select(
-            "id_l",
-            "id_r",
-            (
-                n_common
-                / (F.size("_t_l") + F.size("_t_r") - n_common)
-            ).alias("jaccard"),
-        )
     )
 
 
@@ -730,8 +687,8 @@ def ppjoin_pairs(
     Scale: one shuffle keys the df join on token, one window pass per
     doc ranks the set (partitioned by id — never a global window), the
     prefix self-join touches only prefix tokens, and the verify is
-    candidate-driven (cost ∝ Σ|set_l| over surviving candidates, the
-    same shape as jaccard_pairs(candidates=...)). The skew lever is the
+    ``_overlap_counts``, the kernel behind jaccard_pairs(candidates=...)
+    (cost ∝ Σ min(|set_l|, |set_r|) over surviving candidates). The skew lever is the
     same as LSH banding: a token with huge df lands at the END of every
     ordering, so it only enters a prefix when a set is nearly all
     boilerplate — prefix buckets stay df-bounded by construction.
@@ -754,56 +711,32 @@ def ppjoin_pairs(
         <= F.col("_sz") - F.expr(f"({num} * _sz + {den - 1}) div {den}") + F.lit(1)
     ).select("_id", "_tok", "_sz")
     lhs = prefix.select(
-        F.col("_id").alias("id_l"), "_tok", F.col("_sz").alias("_szl")
+        F.col("_id").alias("id_l"), "_tok", F.col("_sz").alias("size_l")
     )
     rhs = prefix.select(
-        F.col("_id").alias("id_r"), "_tok", F.col("_sz").alias("_szr")
+        F.col("_id").alias("id_r"), "_tok", F.col("_sz").alias("size_r")
     )
-    # Carry the set sizes THROUGH the verify instead of re-aggregating and
-    # re-joining them after the intersection (r13): the prefix relation
-    # already owns _sz (the per-doc window count == |set| under the
-    # distinct-input precondition), so the post-agg sizes groupBy + two
-    # joins are pure recompute. distinct over the extra size columns keeps
-    # the same pair set (sizes are functionally dependent on the ids).
-    # Each surviving candidate then fans out by its SMALLER side —
-    # intersection is symmetric, so probing with the smaller set cuts the
-    # verify volume from Σ|set_l| to Σ min(|set_l|, |set_r|).
-    small_l = F.col("_szl") <= F.col("_szr")
+    # The prefix relation already owns _sz (the per-doc window count ==
+    # |set| under the distinct-input precondition), so the candidates
+    # carry their sizes into the verify and no sizes aggregate is needed.
+    # distinct over the size columns keeps the same pair set (sizes are
+    # functionally dependent on the ids).
     cand = (
         lhs.join(rhs, "_tok")
         .filter(
             (F.col("id_l") < F.col("id_r"))
             # length filter: den·min(sz) >= num·max(sz), two-sided form
-            & (num * F.col("_szl") <= den * F.col("_szr"))
-            & (num * F.col("_szr") <= den * F.col("_szl"))
+            & (num * F.col("size_l") <= den * F.col("size_r"))
+            & (num * F.col("size_r") <= den * F.col("size_l"))
         )
-        .select("id_l", "id_r", "_szl", "_szr")
+        .select("id_l", "id_r", "size_l", "size_r")
         .distinct()
-        .select(
-            "id_l",
-            "id_r",
-            "_szl",
-            "_szr",
-            F.when(small_l, F.col("id_l")).otherwise(F.col("id_r")).alias("_probe"),
-            F.when(small_l, F.col("id_r")).otherwise(F.col("id_l")).alias("_other"),
-        )
-    )
-    inter = (
-        cand.join(sets.select(F.col("_id").alias("_probe"), "_tok"), "_probe")
-        .join(sets.select(F.col("_id").alias("_other"), "_tok"), ["_tok", "_other"])
-        .groupBy("id_l", "id_r", "_szl", "_szr")
-        .agg(F.count("*").alias("n_common"))
     )
     return (
-        inter.filter(
+        _overlap_counts(cand, sets, "_id", "_tok")
+        .filter(
             den * F.col("n_common")
-            >= num * (F.col("_szl") + F.col("_szr") - F.col("n_common"))
+            >= num * (F.col("size_l") + F.col("size_r") - F.col("n_common"))
         )
-        .select(
-            "id_l",
-            "id_r",
-            "n_common",
-            F.col("_szl").alias("size_l"),
-            F.col("_szr").alias("size_r"),
-        )
+        .select("id_l", "id_r", "n_common", "size_l", "size_r")
     )

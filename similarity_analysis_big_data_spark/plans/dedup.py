@@ -30,7 +30,6 @@ from ..operators.dedup import (
     canonical_fingerprint,
     exact_dedup_groups,
     jaccard_pairs,
-    jaccard_verify_candidates,
     lsh_candidate_pairs,
     minhash_signatures,
     near_dup_pairs,
@@ -1357,9 +1356,16 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % SAMPLE_MOD == 0
     )
+    # The token sets feed the signatures and the verify's three shingle
+    # reads (sizes, probe side, other side); unmaterialized, each one
+    # re-scans and re-tokenizes the sample. sf0.1, local[4] on a 4-vCPU
+    # VM, 6 fresh-process rounds: warm CPU-s per call, median, 9.29
+    # plain vs 8.23 checkpointed (8.10 with the array_intersect verify
+    # this replaced); first call 13.3 vs 12.8 s wall. The blocks
+    # self-release with the plan, as in near_dup_pairs.
     toksets = docs.select(
         "doc_id", F.array_distinct(tokenize(F.lower("text"))).alias("toks")
-    )
+    ).localCheckpoint(eager=True)
     shingles = toksets.select("doc_id", F.explode("toks").alias("shingle"))
     sigs = minhash_signatures(shingles, "doc_id")
     cand = lsh_candidate_pairs(sigs, "doc_id")
@@ -1380,10 +1386,12 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(r, "id_r")
         .select("id_l", "id_r", (agree / float(_N_PERMS)).alias("est_j"))
     )
-    exact = jaccard_verify_candidates(toksets, "doc_id", "toks", cand).select(
-        "id_l", "id_r", F.col("jaccard").alias("exact_j")
-    )
-    return est.join(exact, ["id_l", "id_r"]).select(
+    # a candidate sharing no shingle is absent from the verify: exact 0.0,
+    # the oracle's LEFT JOIN ... coalesce(n_common, 0)
+    exact = jaccard_pairs(shingles, "doc_id", candidates=cand, assume_distinct=True)
+    return est.join(exact, ["id_l", "id_r"], "left").withColumn(
+        "exact_j", F.coalesce("jaccard", F.lit(0.0))
+    ).select(
         "id_l",
         "id_r",
         F.round("est_j", 6).alias("est_jaccard"),

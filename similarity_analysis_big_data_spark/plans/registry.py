@@ -53,72 +53,69 @@ def register(
 
 # Names surfaced FIRST in query_map()/oracle_sql_map(). The round driver
 # samples ~50 registry entries per round in presentation order; the
-# r1∪…∪r12 union has driver-checked ALL 287 registered queries at least
-# once with zero hash failures ever, so round-13 ordering is pure
-# freshness rotation (continuing the r11/r12 policy, per the r12
-# verdict's item 7): (1) all 44 queries whose latest driver row dates
-# from r7 — the oldest rows anywhere after the r12 window retired the
-# r5/r6 cohorts; (2) the two rows-only queries (`pca_project_embeddings`,
-# `ann_pq_trained_recall_at_k` — `err: no_oracle` by design) kept
-# adjacent to their hash-checked twins (`pca_fixed_basis_projection`,
-# `embedding_covariance_cells`) so the rows-only pairing stays visibly
-# current; (3) the alphabetically first r8-latest rows to fill the
-# ~50-row window. After r13 no latest row predates r8. (Pure
-# presentation order — every query is in the map either way.)
+# r1∪…∪r13 correctness ledger has checked ALL 287 registered queries at least
+# once with zero hash failures ever, so the ordering is pure freshness
+# rotation (the r11-r13 policy): (1) every query whose latest ledger row
+# (latest CORRECTNESS_r*.json that names it) is the oldest round in the
+# ledger — r8, all 46 of them, alphabetical; (2) the two rows-only
+# queries (`pca_project_embeddings`, `ann_pq_trained_recall_at_k` —
+# `err: no_oracle` by design) kept adjacent to their hash-checked twins
+# (`pca_fixed_basis_projection`, `embedding_covariance_cells`) so the
+# rows-only pairing stays visibly current. 50 names, the sampled window.
+# (Pure presentation order — every query is in the map either way.)
 PRIORITY: tuple[str, ...] = (
-    # -- latest driver row r7: the oldest of the ledger --
-    "approx_distinct_parts",
-    "attribution_decay_revenue",
-    "bpe_train_apply_unrolled",
-    "countmin_heavy_ngrams",
-    "dsir_importance_weights",
-    "dup_rate_by_source",
-    "event_lateness_watermark_profile",
-    "facility_location_selection",
-    "feature_hashed_tf",
-    "gdpr_erasure_cascade",
-    "geometric_mean_by_type",
-    "gopher_repetition_metrics",
-    "hll_sketch_merge_users",
-    "incremental_near_dup_delta",
-    "kcenter_coreset_sample",
-    "langid_confidence_margin",
-    "langid_confusion_matrix",
-    "lsh_recall_by_jaccard_band",
-    "mmr_diverse_topk",
-    "near_dup_best_quality_survivors",
-    "pii_detection_stats",
-    "pii_multitype_risk",
-    "pii_redacted_rewrite",
-    "price_drift_psi",
-    "q11_important_parts",
-    "q12_late_lines_by_status",
-    "q15_top_revenue_supplier",
-    "q16_supplier_variety",
-    "q19_disjunctive_join_revenue",
-    "q20_dominant_part_suppliers",
-    "q9_product_profit",
-    "readability_scores",
-    "split_leakage_pairs",
-    "stream_twin_interval_join",
-    "stream_twin_session_windows",
-    "stream_twin_sliding_counts",
-    "stream_twin_stateful_totals",
-    "target_encode_priority_loo",
-    "top_trigrams_per_lang",
-    "train_corpus_leakage_purged",
-    "trigram_backoff_scores",
-    "user_event_chisq_anomaly",
-    "vocab_richness_by_source",
-    "zscore_doclen_by_lang",
+    # -- latest ledger row r8: the oldest of the ledger --
+    "ann_ivf_multiprobe_topk",
+    "ann_ivf_recall_at_k",
+    "ann_ivf_topk",
+    "anti_join_dormant_customers",
+    "approx_percentile_order_value",
+    "bigram_surprisal_scores",
+    "bloom_runtime_filter_join",
+    "chunk_documents_stride",
+    "conditional_accuracy",
+    "corpus_curation_pipeline",
+    "cube_status_priority",
+    "decontaminate_against_eval",
+    "dedup_canonical_tokenset",
+    "dedup_exact_groups",
+    "distinct_parts_per_supplier",
+    "doc_rolling_fingerprint",
+    "embedding_int8_quantization",
+    "embedding_near_dup_pairs",
+    "fuzzy_levenshtein_pairs",
+    "global_count",
+    "global_sorted_orders",
+    "global_topn_orders",
+    "grouping_sets_revenue",
+    "image_near_dup_survivors",
+    "kmeans_embedding_clusters",
+    "minhash_dedup_verified",
+    "minhash_lsh_candidates",
+    "monthly_order_stats",
+    "multimodal_binary_metadata",
+    "multimodal_fake_features",
+    "multimodal_frame_sample",
+    "percentile_order_value",
+    "point_lookup",
+    "projection_filter_scan",
+    "range_join_price_bracket",
+    "semdedup_cell_survivors",
+    "setop_except",
+    "setop_intersect",
+    "setop_union_all",
+    "setop_union_distinct",
+    "stream_twin_hourly_dedup",
+    "string_functions_cleanup",
+    "top1_order_per_customer",
+    "topk_lineitems_per_order",
+    "unpivot_order_measures",
+    "window_rank_frame",
     # -- rows-only queries + their hash-checked twins (r11 verdict item 6) --
     "pca_project_embeddings",
     "ann_pq_trained_recall_at_k",
     "pca_fixed_basis_projection",
     "embedding_covariance_cells",
-    # -- latest driver row r8, alphabetical: fill the window --
-    "ann_bruteforce_topk",
-    "ann_hyperplane_lsh_buckets",
 )
 
 

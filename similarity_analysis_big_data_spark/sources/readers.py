@@ -34,11 +34,11 @@ def _read_parquet_portable(spark: SparkSession, path: str) -> DataFrame:
     DuckDB oracle applies), so the plain read succeeds on any session.
     Older Sparks reject it outright (PARQUET_TYPE_ILLEGAL) unless
     ``spark.sql.legacy.parquet.nanosAsLong`` makes the column arrive as
-    epoch-nanos longs — so on that error, retry with the conf set at
-    runtime (a per-query SQL conf, safe to flip mid-session), and as a
-    last resort read driver-side through pyarrow with a ns→µs cast. The
-    pyarrow path is for small fixtures only; at scale the native/conf
-    paths always win.
+    epoch-nanos longs — so on that error, retry once with the conf set at
+    runtime (a per-query SQL conf, safe to flip mid-session). Any other
+    error, from either read, propagates: the engine needs Spark >= 3.5
+    (``F.count_if``), where the conf always exists, so a failing retry is
+    a real error, not a missing feature.
     """
     try:
         return spark.read.parquet(path)
@@ -46,36 +46,17 @@ def _read_parquet_portable(spark: SparkSession, path: str) -> DataFrame:
         msg = str(exc)
         if "PARQUET_TYPE_ILLEGAL" not in msg and "TIMESTAMP(NANOS" not in msg:
             raise
-    try:
-        spark.conf.set(_NANOS_CONF, "true")
-        return spark.read.parquet(path)
-    except Exception:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        tbl = pq.read_table(path)
-        fields = [
-            f.with_type(pa.timestamp("us"))
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-            else f
-            for f in tbl.schema
-        ]
-        tbl = tbl.cast(pa.schema(fields))
-        # the ns->us columns are zone-less (isAdjustedToUTC=false): NTZ, as
-        # the native Spark 4.1+ read types them
-        return local_relation(
-            spark, tbl, from_arrow_schema(tbl.schema, prefer_timestamp_ntz=True)
-        )
+    spark.conf.set(_NANOS_CONF, "true")
+    return spark.read.parquet(path)
 
 
 def local_relation(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
     """A driver-built relation (carry tables, remaps, codebooks, literal
     dimensions) handed to the JVM as Arrow — no Python worker anywhere.
 
-    ``rows`` is an iterable of tuples in ``schema`` field order (or an
-    already-built ``pyarrow.Table``); ``schema`` is a ``StructType`` or a
-    DDL string in either ``a int, b double`` or ``a: int, b: double`` form.
+    ``rows`` is an iterable of tuples in ``schema`` field order;
+    ``schema`` is a ``StructType`` or a DDL string in either
+    ``a int, b double`` or ``a: int, b: double`` form.
     Every driver-side relation in the engine goes through here
     (tests/test_operators.py guards that no other ``createDataFrame`` call
     appears).
@@ -104,20 +85,14 @@ def local_relation(spark: SparkSession, rows, schema: str | T.StructType) -> Dat
     from pyspark.sql.pandas.types import to_arrow_schema
 
     struct = spark._parse_ddl(schema) if isinstance(schema, str) else schema
-    if isinstance(rows, pa.Table):
-        table = rows
-    else:
-        arrow_schema = to_arrow_schema(struct)
-        # strict zips: a row of the wrong arity raises instead of being
-        # silently truncated (createDataFrame's own length check)
-        columns = list(zip(*rows, strict=True)) or [[] for _ in arrow_schema]
-        table = pa.Table.from_arrays(
-            [
-                pa.array(c, type=f.type)
-                for c, f in zip(columns, arrow_schema, strict=True)
-            ],
-            schema=arrow_schema,
-        )
+    arrow_schema = to_arrow_schema(struct)
+    # strict zips: a row of the wrong arity raises instead of being
+    # silently truncated (createDataFrame's own length check)
+    columns = list(zip(*rows, strict=True)) or [[] for _ in arrow_schema]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema, strict=True)],
+        schema=arrow_schema,
+    )
     return spark.createDataFrame(table, struct)
 
 

@@ -652,38 +652,19 @@ def test_hll_sketch_estimates_and_merge(spark):
     assert all(in_bound.values()), in_bound
 
 
-def test_jaccard_candidate_driven_equals_postfilter(docs):
-    """The candidate-driven verify (fan candidates out by shingles) must
-    return exactly the pairs/values of the naive form filtered to the
-    candidate set — LSH-then-verify correctness at the operator level."""
-    shingles = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(tokenize(F.lower("text")))).alias("shingle"),
-    )
-    spark = docs.sparkSession
-    cands = spark.createDataFrame(
-        [(1, 3), (4, 5), (1, 2), (2, 4)], "id_l long, id_r long"
-    )
-    driven = {
-        (r["id_l"], r["id_r"]): r["jaccard"]
-        for r in jaccard_pairs(shingles, "doc_id", candidates=cands).collect()
-    }
-    full = {
-        (r["id_l"], r["id_r"]): r["jaccard"]
-        for r in jaccard_pairs(shingles, "doc_id").collect()
-    }
-    expected = {
-        k: v for k, v in full.items() if k in {(1, 3), (4, 5), (1, 2), (2, 4)}
-    }
-    assert driven == pytest.approx(expected)
-
-
-def test_jaccard_threshold_prefilter_equals_postfilter(docs):
-    """The thresholded verify (r13: exact size-ratio prefilter + smaller-
-    side probe) must agree with the un-thresholded candidate path after the
-    caller's >= t filter — for every pair AT or ABOVE the threshold, the
-    pair and its exact jaccard value are identical; pairs below may only
-    ever be dropped, never altered or invented."""
+@pytest.mark.parametrize(
+    "threshold",
+    [None, (1, 2), (1, 3), (4, 5)],
+    ids=lambda t: "none" if t is None else f"{t[0]}_{t[1]}",
+)
+def test_jaccard_threshold_prefilter_equals_postfilter(docs, threshold):
+    """The candidate-driven verify (one overlap kernel, fanned out by each
+    pair's smaller side, behind the optional exact size-ratio prefilter)
+    against the independent all-pairs self-join restricted to the
+    candidates — LSH-then-verify correctness at the operator level. At or
+    above the threshold every pair and its exact jaccard value are
+    identical; pairs below it may only ever be dropped, never altered or
+    invented. Without a threshold nothing is dropped."""
     shingles = docs.select(
         "doc_id",
         F.explode(F.array_distinct(tokenize(F.lower("text")))).alias("shingle"),
@@ -691,28 +672,32 @@ def test_jaccard_threshold_prefilter_equals_postfilter(docs):
     spark = docs.sparkSession
     ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
     # every ordered pair — includes size-ratio violators and zero-overlap
-    # pairs, both directions of the (smaller, larger) probe swap
-    cands = spark.createDataFrame(
-        [(a, b) for a in ids for b in ids if a != b], "id_l long, id_r long"
-    )
-    for num, den in [(1, 2), (1, 3), (4, 5)]:
-        t = num / den
-        thresholded = {
-            (r["id_l"], r["id_r"]): r["jaccard"]
-            for r in jaccard_pairs(
-                shingles, "doc_id", candidates=cands, threshold=(num, den)
-            ).collect()
-        }
-        plain = {
-            (r["id_l"], r["id_r"]): r["jaccard"]
-            for r in jaccard_pairs(shingles, "doc_id", candidates=cands).collect()
-        }
-        above = {k: v for k, v in plain.items() if v >= t}
-        kept_above = {k: v for k, v in thresholded.items() if v >= t}
-        assert kept_above == pytest.approx(above)
-        # anything the prefilter kept below t must carry the exact value
-        for k, v in thresholded.items():
-            assert v == pytest.approx(plain[k])
+    # pairs, both directions of the (smaller, larger) probe swap — plus
+    # duplicate candidate rows, which must not multiply n_common
+    pairs = [(a, b) for a in ids for b in ids if a != b]
+    cands = spark.createDataFrame(pairs + pairs[:5], "id_l long, id_r long")
+    full = {
+        (r["id_l"], r["id_r"]): r["jaccard"]
+        for r in jaccard_pairs(shingles, "doc_id").collect()
+    }
+    reference = {
+        (a, b): full[(min(a, b), max(a, b))]
+        for a, b in pairs
+        if (min(a, b), max(a, b)) in full
+    }
+    got = {}
+    for r in jaccard_pairs(
+        shingles, "doc_id", candidates=cands, threshold=threshold
+    ).collect():
+        assert (r["id_l"], r["id_r"]) not in got  # one row per candidate
+        got[(r["id_l"], r["id_r"])] = r["jaccard"]
+    t = 0.0 if threshold is None else threshold[0] / threshold[1]
+    above = {k: v for k, v in reference.items() if v >= t}
+    kept_above = {k: v for k, v in got.items() if v >= t}
+    assert kept_above == pytest.approx(above)
+    # anything the prefilter kept below t must carry the exact value
+    for k, v in got.items():
+        assert v == pytest.approx(reference[k])
 
 
 def test_near_dup_pairs_equals_reference(docs):

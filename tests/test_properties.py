@@ -311,7 +311,9 @@ _NEAR_DUP_DEGENERATE = {
 @pytest.mark.parametrize("case", sorted(_NEAR_DUP_DEGENERATE))
 def test_near_dup_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case):
     """Degenerate input runs the whole MinHash -> LSH -> verify ->
-    components -> anti-join chain to the oracle's edge result."""
+    components -> anti-join chain to the oracle's edge result; the
+    sketch self-evaluation and the PPJoin exact join, which share the
+    candidate verify, match their oracles on the same corpus."""
     import duckdb
 
     from similarity_analysis_big_data_spark.plans import dedup as D
@@ -328,13 +330,15 @@ def test_near_dup_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case
         f"TO '{sf}/documents.parquet' (FORMAT PARQUET)"
     )
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
-    want = con.execute(QUERIES["near_dup_survivors"].oracle).fetchdf()
+    names = ("near_dup_survivors", "minhash_estimate_accuracy", "ppjoin_exact_pairs")
+    wants = {n: con.execute(QUERIES[n].oracle).fetchdf() for n in names}
     con.close()
-    assert len(want) == n_rows
+    assert len(wants["near_dup_survivors"]) == n_rows
 
     try:
-        ok, msg = compare(D.near_dup_survivors(spark, sf), want)
-        assert ok, f"{case}: {msg}"
+        for name in names:
+            ok, msg = compare(QUERIES[name].fn(spark, sf), wants[name])
+            assert ok, f"{case}/{name}: {msg}"
     finally:
         spark.catalog.clearCache()
 
