@@ -62,10 +62,11 @@ NOTES = {
     ),
     "near_dup_survivors": (
         "actions = token-set checkpoint inside near_dup_pairs (the sets feed "
-        "signatures and verify; A/B in its docstring) + LSH pair "
-        "materialization + CC (edge checkpoint, label "
-        "init, quotient count/collect) + final anti-join — the CC quotient "
-        "shortcut's fixed budget; per-stage floor table in SCALE.md."
+        "signatures and verify; A/B in its docstring) + CC (edge checkpoint, "
+        "bounded edge collect: the 2,701 verified edges fit the driver bound, "
+        "so a union-find labels them with no hook round or quotient) + final "
+        "anti-join against the broadcast local loser ids; per-stage floor "
+        "table in SCALE.md."
     ),
     "doc_tfidf_normalized": (
         "1 action (r6): the corpus size enters the IDF as a cross-joined "

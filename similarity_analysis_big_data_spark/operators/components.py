@@ -1,15 +1,24 @@
 """Connected components over candidate pairs + dedup survivor selection
 (SURVEY §7 step 6: "LSH self-join + connected components + anti-join").
 
-Two-tier min-label connected components: a one-shot hook contraction
-first (every node adopts min(self, neighbors); edges rewritten through
-those labels give the exact quotient graph) — for near-dup graphs the
-dense clusters collapse there, the quotient fits on the driver, and a
-union-find plus one broadcast compose finishes in O(1) jobs. Quotients
-too big for that fall through to min-label propagation with pointer
-jumping over the full edge set (O(log diameter) rounds, each one
-distributed join+agg; the driver only orchestrates and checks the
-label-sum fixpoint — no data moves through it).
+Min-label connected components with three finishes, cheapest first:
+
+1. **Edge finish.** When the edge set itself fits on the driver (at most
+   _DRIVER_FINISH_MAX_EDGES rows), one bounded collect brings it over and
+   a union-find labels every node: no distributed round at all. Verified
+   near-dup edges usually land here.
+2. **Quotient finish.** Otherwise a one-shot hook contraction (every node
+   adopts min(self, neighbors); edges rewritten through those labels give
+   the exact quotient graph). Dense clusters collapse there; a quotient
+   that fits is finished by the same union-find plus one broadcast
+   compose, in O(1) jobs.
+3. **Propagation.** Quotients too big for that fall through to min-label
+   propagation with pointer jumping over the full edge set (O(log
+   diameter) rounds, each one distributed join+agg; the driver only
+   orchestrates and checks the label-sum fixpoint — no data moves
+   through it).
+
+One constant bounds both driver finishes.
 
 Reference parity note: the reference has no dedup at all — this implements
 the north-star extension; the algorithm follows the well-known
@@ -26,34 +35,38 @@ from pyspark.sql import functions as F
 
 from ..sources.readers import local_relation
 
-# Once the contracted supernode graph fits under this many edges, finish
-# with a driver-side union-find instead of burning ~0.5 s of fixed job
-# latency per distributed round on a relation of a few hundred rows
-# (measured sf0.1: rounds past the first contraction chased a 272→10→2→1
-# edge tail for ~1.5 s). Bounded driver state by construction — the same
+# Once the edge set, or failing that the contracted supernode graph, fits
+# under this many edges, finish with a driver-side union-find instead of
+# burning ~0.5 s of fixed job latency per distributed round on a relation
+# of a few thousand rows (measured sf0.1: rounds past the first
+# contraction chased a 272→10→2→1 edge tail for ~1.5 s; perfbench
+# near_dup: the hook round and quotient on 6,761 verified edges took 10
+# of the pass's 21 jobs). Bounded driver state by construction — the same
 # posture as operators/rank.py's offset relation.
 _DRIVER_FINISH_MAX_EDGES = 10_000
 
 
-def _driver_union_find(rows) -> dict:
-    """Min-root union-find over collected (a, b) supernode edges; returns
-    only the non-identity mappings {supernode: component_min}."""
+def _driver_union_find(pairs) -> dict:
+    """Min-root union-find over collected (a, b) edges; returns
+    {node: component_min} for every node of an edge."""
     parent: dict = {}
 
     def find(x):
         r = x
-        while parent.get(r, r) != r:
+        while parent[r] != r:
             r = parent[r]
-        while parent.get(x, x) != x:
+        while parent[x] != r:
             parent[x], x = r, parent[x]
         return r
 
-    for row in rows:
-        ra, rb = find(row["a"]), find(row["b"])
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    return {x: find(x) for x in list(parent) if find(x) != x}
+    return {x: find(x) for x in parent}
 
 
 def connected_components(
@@ -66,11 +79,12 @@ def connected_components(
     """(id_l, id_r) undirected edges -> (id, component) with component =
     min node id reachable.
 
-    Fast path: one hook round (label = min(self, neighbors)) plus the
-    exact quotient graph under those labels; a driver union-find finishes
-    quotients up to _DRIVER_FINISH_MAX_EDGES in one broadcast compose.
-    Slow path (big quotients): label(v) <- min(label(v), neighbor labels)
-    with pointer jumping, label-sum fixpoint, O(log diameter) rounds.
+    Three finishes, tried in order (module docstring): a driver union-find
+    over the whole edge set when it has at most _DRIVER_FINISH_MAX_EDGES
+    rows; else one hook round plus the exact quotient graph under those
+    labels, finished by the same union-find when the quotient fits; else
+    label(v) <- min(label(v), neighbor labels) with pointer jumping,
+    label-sum fixpoint, O(log diameter) rounds.
     ``localCheckpoint(eager=True)`` truncates the lineage every round —
     without it the logical plan doubles per iteration and planning itself
     OOMs. Isolated nodes never appear in pairs — union the full node set
@@ -86,6 +100,22 @@ def connected_components(
     pairs_mat = pairs.select(
         F.col(id_l).alias("src"), F.col(id_r).alias("dst")
     ).localCheckpoint(eager=True)
+    # EDGE FINISH: ask for threshold+1 rows — getting <= threshold back
+    # PROVES that is the whole edge set, and the union-find labels it with
+    # no hook round, quotient or lazy checkpoint (perfbench near_dup: 21
+    # jobs a pass -> 11). Above the bound this costs one job that stops
+    # reading at threshold+1 rows (sf0.1: 20 -> 21 jobs, warm time a wash).
+    # An edge with a null end merges nothing in the distributed tiers
+    # either; it is dropped here (None does not order against ids).
+    e_rows = pairs_mat.limit(_DRIVER_FINISH_MAX_EDGES + 1).collect()
+    if len(e_rows) <= _DRIVER_FINISH_MAX_EDGES:
+        id_type = pairs_mat.schema["src"].dataType.simpleString()
+        labels = _driver_union_find(
+            (a, b) for a, b in e_rows if a is not None and b is not None
+        )
+        return local_relation(
+            spark, labels.items(), f"id {id_type}, component {id_type}"
+        )
     conf_key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(conf_key)
     if iteration_shuffle_partitions is not None:
@@ -174,21 +204,17 @@ def _connected_components_loop(
     if len(q_rows) == 0:
         return labels.select("id", "component")
     if len(q_rows) <= _DRIVER_FINISH_MAX_EDGES:
-        remap = _driver_union_find(q_rows)
-        if remap:
-            spark = quotient.sparkSession
-            id_type = dict(
-                (f.name, f.dataType.simpleString()) for f in quotient.schema.fields
-            )["a"]
-            map_df = local_relation(
-                spark, remap.items(), f"sid {id_type}, newc {id_type}"
-            )
-            labels = labels.join(
-                F.broadcast(map_df), labels.component == map_df.sid, "left"
-            ).select(
-                "id", F.coalesce("newc", F.col("component")).alias("component")
-            )
-        return labels.select("id", "component")
+        # a non-empty quotient always moves some supernode, so the compose
+        # join is never a no-op; supernodes that keep their label map to
+        # themselves
+        remap = _driver_union_find((r["a"], r["b"]) for r in q_rows)
+        id_type = quotient.schema["a"].dataType.simpleString()
+        map_df = local_relation(
+            quotient.sparkSession, remap.items(), f"sid {id_type}, newc {id_type}"
+        )
+        return labels.join(
+            F.broadcast(map_df), labels.component == map_df.sid, "left"
+        ).select("id", F.coalesce("newc", F.col("component")).alias("component"))
 
     # big quotient: min-label propagation with pointer jumping over the
     # original edge set, label-sum fixpoint (labels strictly decrease

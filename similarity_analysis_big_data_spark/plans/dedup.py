@@ -978,12 +978,17 @@ def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
     doc="[ext] SURVEY §7 step 6 end to end: MinHash-LSH candidates -> exact-Jaccard "
     "verify -> connected components -> anti-join survivors. Oracle uses a WITH "
-    "RECURSIVE transitive closure; the engine runs distributed min-label propagation.",
+    "RECURSIVE transitive closure; the engine finishes components on the driver "
+    "(edge finish at sf0.01, hook-round quotient finish at sf0.1).",
 )
 def near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production near-dup dedup pipeline as one query: each stage is
-    the already-oracle-checked operator; components iterate distributed
-    joins (O(cluster diameter) rounds, tiny for dup clusters)."""
+    the already-oracle-checked operator. Components take the edge finish
+    at sf0.01 (2,701 verified edges, under the 10,000-edge driver bound:
+    one bounded collect and a driver union-find, so the anti-join reads a
+    broadcast local relation) and the quotient finish at sf0.1 (the hook
+    round contracts the edges to a 272-edge quotient, finished on the
+    driver); neither iterates (operators/components.py)."""
     from ..operators.components import dedup_survivors
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % SAMPLE_MOD == 0)
@@ -1584,15 +1589,20 @@ def part_name_trigram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "components -> stable entity ids (min member key) with cluster "
     "sizes — the record-linkage pipeline that collapses name variants "
     "into one entity. Oracle states the transitive closure as a "
-    "recursive CTE; the engine runs distributed min-label propagation "
-    "with pointer jumping.",
+    "recursive CTE; the engine's components finish at one distributed "
+    "hook round (min-label propagation with pointer jumping when a "
+    "graph needs more).",
 )
 def entity_name_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: the pair stage is the blocked sparse trigram join (pairs
-    sharing no (block, trigram) never materialize); components iterate
-    label-sized joins in O(log diameter) rounds (pointer jumping); sizes
-    are one |entities|-keyed agg joined back broadcast. Second consumer
-    of operators/components.py after near-dup dedup — same operator,
+    sharing no (block, trigram) never materialize); components finish at
+    the hook round at sf0.01 and sf0.1 (33,737 and 36,637 edges, over the
+    driver bound, but in every name cluster the min key neighbors all other
+    members, so one min(self, neighbors) round leaves an empty quotient);
+    longer-chained graphs fall through to the quotient finish or to
+    O(log diameter) pointer-jumping rounds. Sizes are one
+    |entities|-keyed agg joined back broadcast. Second consumer of
+    operators/components.py after near-dup dedup — same operator,
     different edge relation."""
     from ..operators.components import connected_components
 
@@ -1636,11 +1646,13 @@ def entity_name_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "diagnostics a curation team reads before trusting a dedup run "
     "(a low min_jaccard flags chain-merged clusters whose ends are not "
     "actually similar; transitive closure via recursive CTE in the "
-    "oracle, pointer-jumped label propagation in the engine).",
+    "oracle; in the engine the same driver finishes of components as "
+    "near_dup_survivors).",
 )
 def near_dup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: same stage postures as near_dup_survivors (LSH-bounded
-    candidates, candidate-driven verify, O(log diameter) components);
+    candidates, candidate-driven verify, components on the edge finish at
+    sf0.01 and the quotient finish at sf0.1);
     the stats are one pair-relation aggregate keyed by the left
     endpoint's cluster label (every verified pair is intra-cluster by
     construction, so id_l's label IS the pair's cluster).

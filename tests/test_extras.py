@@ -154,18 +154,27 @@ def _union_find_components(edges) -> dict:
     return {x: find(x) for x in parent}
 
 
+_ID_TYPES = [("bigint", lambda i: i), ("string", lambda i: f"n{i:03d}")]
+
+
 @pytest.mark.parametrize(
-    "id_type,node",
-    [("bigint", lambda i: i), ("string", lambda i: f"n{i:03d}")],
-    ids=["bigint", "string"],
+    "id_type,node,max_edges,n_received",
+    # the 19-edge graph below contracts to 12 quotient edges: a bound of 15
+    # sends it past the edge finish to the quotient finish
+    [(t, f, 15, 12) for t, f in _ID_TYPES] + [(t, f, None, 19) for t, f in _ID_TYPES],
+    ids=["bigint", "string", "bigint-edges", "string-edges"],
 )
-def test_connected_components_driver_remap_path(spark, monkeypatch, id_type, node):
-    """Fast path with a NON-EMPTY hook-round quotient: chains and a
-    two-hop star leave supernode edges after the first min-label round,
-    so _driver_union_find returns a remap that is joined back as a
-    driver-built relation typed from the id column. Labels must equal a
-    union-find reference, and no RDD under the returned relation's plan
-    may hold a PythonRDD (the remap is built without a Python worker)."""
+def test_connected_components_driver_remap_path(
+    spark, monkeypatch, id_type, node, max_edges, n_received
+):
+    """Both driver finishes on a graph whose hook round leaves supernode
+    edges (chains and a two-hop star). At the default bound its 19 edges
+    fit and _driver_union_find labels them directly; at a bound of 15 they
+    do not, and it receives the 12-edge hook-round quotient, whose remap
+    is joined back as a driver-built relation typed from the id column.
+    Labels must equal a union-find reference, and no RDD under the
+    returned relation's plan may hold a PythonRDD (both finishes are built
+    without a Python worker)."""
     import similarity_analysis_big_data_spark.operators.components as C
     from similarity_analysis_big_data_spark.sources.readers import local_relation
 
@@ -178,15 +187,21 @@ def test_connected_components_driver_remap_path(spark, monkeypatch, id_type, nod
     edges = [(node(a), node(b)) for a, b in raw]
     pairs = local_relation(spark, edges, f"id_l {id_type}, id_r {id_type}")
 
-    remaps = []
+    if max_edges is not None:
+        monkeypatch.setattr(C, "_DRIVER_FINISH_MAX_EDGES", max_edges)
+    received = []
     real = C._driver_union_find
-    monkeypatch.setattr(
-        C, "_driver_union_find", lambda rows: remaps.append(real(rows)) or remaps[-1]
-    )
+
+    def counting(pairs):
+        pairs = list(pairs)
+        received.append(len(pairs))
+        return real(pairs)
+
+    monkeypatch.setattr(C, "_driver_union_find", counting)
     labels = C.connected_components(pairs)
     got = {r["id"]: r["component"] for r in labels.collect()}
     assert got == _union_find_components(edges)
-    assert len(remaps) == 1 and remaps[0], "the remap branch is the one under test"
+    assert received == [n_received]
     # walk every leaf of the plan: the remap enters through a broadcast,
     # whose RDD is not in the lineage of the main plan's toRdd()
     leaves = labels._jdf.queryExecution().analyzed().collectLeaves()

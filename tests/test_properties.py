@@ -111,11 +111,15 @@ def test_sparse_join_symmetry(docs):
         assert pairs[(j, i)] == pytest.approx(v, abs=1e-12)
 
 
-edges_strategy = st.lists(
-    st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(lambda e: e[0] != e[1]),
-    min_size=1,
-    max_size=15,
-)
+@st.composite
+def edges_strategy(draw):
+    """Random graphs of up to 15 edges: self-loops allowed, and up to five
+    repeats of drawn edges, each either duplicated or reversed."""
+    edges = draw(
+        st.lists(st.tuples(st.integers(0, 12), st.integers(0, 12)), min_size=1, max_size=10)
+    )
+    again = draw(st.lists(st.tuples(st.sampled_from(edges), st.booleans()), max_size=5))
+    return edges + [(b, a) if flip else (a, b) for (a, b), flip in again]
 
 
 def _union_find_components(edges):
@@ -137,16 +141,19 @@ def _union_find_components(edges):
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(edges=edges_strategy)
+@given(edges=edges_strategy())
 def test_connected_components_match_union_find(edges):
-    """Distributed min-label propagation ≡ driver-side union-find on random
-    graphs (chains, stars, cycles, merging components — shapes a hand-built
-    case can miss). Root labels must both be the component MINIMUM."""
-    from similarity_analysis_big_data_spark.operators.components import connected_components
+    """Connected components ≡ a driver-side union-find on random graphs
+    (chains, stars, cycles, merging components, self-loops, reversed and
+    duplicate edges — shapes a hand-built case can miss). Root labels must
+    both be the component MINIMUM. Every example runs twice: at the
+    default bound, where it fits the edge finish, and with the bound at 0,
+    which sends it through the hook round to the propagation loop (or
+    ends at the hook round when that leaves no quotient edge)."""
+    import similarity_analysis_big_data_spark.operators.components as C
 
     spark = _SPARK["s"]
     pairs = spark.createDataFrame(edges, ["id_l", "id_r"])
-    got = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
     want_root = _union_find_components(edges)
     # union-find roots are component minima only after normalizing: map each
     # root to the min member of its component
@@ -154,7 +161,54 @@ def test_connected_components_match_union_find(edges):
     for node, root in want_root.items():
         comp_min[root] = min(comp_min.get(root, node), node)
     want = {node: comp_min[root] for node, root in want_root.items()}
-    assert got == want
+    saved = C._DRIVER_FINISH_MAX_EDGES
+    try:
+        for max_edges in (saved, 0):
+            C._DRIVER_FINISH_MAX_EDGES = max_edges
+            got = {r["id"]: r["component"] for r in C.connected_components(pairs).collect()}
+            assert got == want, f"_DRIVER_FINISH_MAX_EDGES={max_edges}"
+    finally:
+        C._DRIVER_FINISH_MAX_EDGES = saved
+
+
+@pytest.mark.parametrize("max_edges", [None, -1], ids=["edges", "hook"])
+def test_connected_components_empty_pairs(spark, monkeypatch, max_edges):
+    """No pairs: the edge finish (default bound) and the hook round (a
+    bound of -1 skips both driver finishes; an empty graph leaves no
+    quotient, so the propagation loop is never reached) each return an
+    empty (id, component) relation typed from the id column, and
+    dedup_survivors keeps every doc."""
+    import similarity_analysis_big_data_spark.operators.components as C
+    from similarity_analysis_big_data_spark.sources.readers import local_relation
+
+    if max_edges is not None:
+        monkeypatch.setattr(C, "_DRIVER_FINISH_MAX_EDGES", max_edges)
+    pairs = local_relation(spark, [], "id_l bigint, id_r bigint")
+    comp = C.connected_components(pairs)
+    assert [(f.name, f.dataType.simpleString()) for f in comp.schema.fields] == [
+        ("id", "bigint"),
+        ("component", "bigint"),
+    ]
+    assert comp.collect() == []
+    docs = local_relation(spark, [(i, f"doc{i}") for i in range(4)], "doc_id bigint, text string")
+    kept = sorted(r["doc_id"] for r in C.dedup_survivors(docs, pairs, "doc_id").collect())
+    assert kept == [0, 1, 2, 3]
+
+
+@pytest.mark.parametrize("max_edges", [None, -1], ids=["edges", "hook"])
+def test_dedup_survivors_null_edge_ends(spark, monkeypatch, max_edges):
+    """An edge with a null end merges nothing on either finish: the edge
+    finish drops it before its union-find, the hook round joins nothing
+    on it. Survivors are the same either way, and nothing raises."""
+    import similarity_analysis_big_data_spark.operators.components as C
+    from similarity_analysis_big_data_spark.sources.readers import local_relation
+
+    if max_edges is not None:
+        monkeypatch.setattr(C, "_DRIVER_FINISH_MAX_EDGES", max_edges)
+    pairs = local_relation(spark, [(1, 2), (3, None), (None, 4)], "id_l bigint, id_r bigint")
+    docs = local_relation(spark, [(i, f"doc{i}") for i in range(1, 6)], "doc_id bigint, text string")
+    kept = sorted(r["doc_id"] for r in C.dedup_survivors(docs, pairs, "doc_id").collect())
+    assert kept == [1, 3, 4, 5]
 
 
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
