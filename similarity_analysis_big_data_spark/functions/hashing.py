@@ -58,25 +58,11 @@ def md5_long_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
-def term_bucket(col: Column | str, modulus: int = MERSENNE_P) -> Column:
-    """md5_long reduced into the permutation field."""
-    return md5_long(col) % modulus
-
-
 def minhash_expr(hash_col: Column | str, i: int) -> Column:
     """Permutation i applied to a pre-bucketed term hash."""
     a, b = MINHASH_PARAMS[i]
     h = F.col(hash_col) if isinstance(hash_col, str) else hash_col
     return (F.lit(a) * h + F.lit(b)) % MERSENNE_P
-
-
-def minhash_expr_sql(hash_expr: str, i: int) -> str:
-    a, b = MINHASH_PARAMS[i]
-    return f"(({a} * {hash_expr} + {b}) % {MERSENNE_P})"
-
-
-def simhash_bits() -> int:
-    return 32
 
 
 def rolling_fingerprint(text: Column | str) -> Column:

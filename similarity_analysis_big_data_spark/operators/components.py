@@ -127,10 +127,10 @@ def connected_components(
 
 
 def _label_sum(labels: DataFrame):
-    # decimal(38,0)-compatible sum: overflow-safe fixpoint witness at any
-    # graph size (falls back to a plain sum for non-numeric ids, where the
-    # hash of the sorted label multiset would be needed — numeric ids are
-    # the only callers today)
+    # Fixpoint witness of a propagation round: the sum of the labels,
+    # widened to decimal(38,0) so it cannot overflow at any graph size.
+    # Integer labels are summed directly; any other label type (string
+    # ids) sums the labels' xxhash64 values instead.
     col = F.col("component")
     dtype = dict(
         (f.name, f.dataType.simpleString()) for f in labels.schema.fields

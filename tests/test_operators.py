@@ -302,27 +302,6 @@ def test_grouped_zscore_degenerate_groups(spark):
     assert math.isclose(abs(rows[("ok", 1.0)]), 0.7071067811865475, rel_tol=1e-12)
 
 
-def test_observe_metrics_ride_the_action(spark, sf_smoke):
-    """observe(): corpus-health metrics computed by the SAME job as the
-    query action — values must match an independent aggregation."""
-    from similarity_analysis_big_data_spark.operators.monitoring import (
-        observe_corpus_health,
-    )
-    from similarity_analysis_big_data_spark.sources.readers import load_table
-
-    docs = load_table(spark, sf_smoke, "documents")
-    observed, obs = observe_corpus_health(docs, "text")
-    kept = observed.filter(F.length("text") > 0).count()  # the action
-
-    m = obs.get
-    expected = docs.agg(
-        F.count("*").alias("n"), F.sum(F.length("text")).alias("chars")
-    ).first()
-    assert m["rows_seen"] == expected["n"]
-    assert m["null_content"] == expected["n"] - kept
-    assert m["total_chars"] == expected["chars"]
-
-
 def test_map_in_arrow_features_match_pandas_path(spark, sf_smoke):
     """mapInArrow twin of extract_features returns IDENTICAL values to the
     mapInPandas path (zero-copy Arrow batches, same fake decoder)."""
