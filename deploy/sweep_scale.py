@@ -16,12 +16,15 @@ Spark's fixed ~0.3-0.5 s/job latency) cannot fire it.
 
 Noise defense (ported from bench.py): (a) the sweep REFUSES to start on a
 loaded host, resting in bounded steps until the 1-minute load average
-settles; (b) any pair whose single-run ratio crosses CONFIRM_RATIO is
-re-measured min-of-CONFIRM_RUNS in-line before anything is published, and
-the row carries every run; (c) each row carries the JVM GC time of its
-runs, so a stall-shaped reading is self-diagnosing. The r10 evidence was
-decisive: single-run readings flagged two queries (x3.01; a 74.5 s base)
-that min-of-3 cleared (x1.45; 3.82 s).
+settles; (b) each query first runs WARMUP_RUNS untimed times on the base
+side, so its one-time costs (planning, codegen, first reads) cannot land
+on the timed base run and deflate the ratio; (c) any pair whose
+single-run ratio crosses CONFIRM_RATIO is re-measured min-of-CONFIRM_RUNS
+in-line before anything is published, and the row carries every run;
+(d) each row carries the JVM GC time of its runs, so a stall-shaped
+reading is self-diagnosing. The r10 evidence was decisive: single-run
+readings flagged two queries (x3.01; a 74.5 s base) that min-of-3
+cleared (x1.45; 3.82 s).
 
 Replica routing (r11): the honest corpus-growth shape is FAMILY-SPECIFIC.
 Weighting/retrieval workloads need a SATURATING vocabulary (the shared
@@ -46,7 +49,7 @@ every flag must end the round either fixed or explained in SCALE.md.
 Usage:
     python deploy/sweep_scale.py [--base DIR] [--scaled DIR]
                                  [--scaled-disjoint DIR] [--k K]
-                                 [--out SWEEP.json] [--only SUBSTR,...]
+                                 [--out SWEEP.json] [--only NAME,...]
 
 Both replicas are generated on demand if their directories do not exist.
 """
@@ -74,6 +77,10 @@ MIN_SECONDS = 0.8
 # single-run ratio above which the pair is re-measured min-of-CONFIRM_RUNS
 CONFIRM_RATIO = 2.5
 CONFIRM_RUNS = 3
+# untimed base-side runs per query before its timed pair (noise defense
+# (b)); SWEEP_r13, measured without one, read the 2x run under 0.8x the
+# base time in 80 of its 287 rows
+WARMUP_RUNS = 1
 
 # Queries whose >threshold ratio is EXPLAINED in SCALE.md's sweep ledger
 # (not growth): they still appear in the artifact with their numbers, but
@@ -215,9 +222,16 @@ def main() -> None:
     ap.add_argument(
         "--only",
         default=None,
-        help="substring filter on query names (comma-separated = any-of)",
+        help="comma-separated registered query names to sweep (default: all)",
     )
     args = ap.parse_args()
+
+    all_names = sorted(registry.query_map())
+    only = {s.strip() for s in (args.only or "").split(",") if s.strip()}
+    unknown = sorted(only - set(all_names))
+    if unknown:
+        raise SystemExit(f"--only names no registered query: {', '.join(unknown)}")
+    names = [n for n in all_names if not only or n in only]
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     shared_dir = args.scaled
@@ -237,10 +251,6 @@ def main() -> None:
 
     spark = fresh_session()
 
-    only = [s.strip() for s in (args.only or "").split(",") if s.strip()]
-    all_names = sorted(registry.query_map())
-    names = [n for n in all_names if not only or any(s in n for s in only)]
-
     results: dict[str, dict] = {}
     flagged: list[str] = []
     explained: list[str] = []
@@ -258,6 +268,8 @@ def main() -> None:
         # r11 x5.94 degraded session it guarded against was heap expansion
         # under AlwaysPreTouch plus THP compaction, both fixed in session.py.
         try:
+            for _ in range(WARMUP_RUNS):
+                _time_query(spark, fn, args.base)
             gc0 = jvm_gc_sec(spark)
             base_runs = [_time_query(spark, fn, args.base)]
             scaled_runs = [_time_query(spark, fn, scaled_dir)]
@@ -316,6 +328,7 @@ def main() -> None:
         "min_seconds": MIN_SECONDS,
         "confirm_ratio": CONFIRM_RATIO,
         "confirm_runs": CONFIRM_RUNS,
+        "warmup_runs": WARMUP_RUNS,
         "n_queries": len(names),
         "n_registry": len(all_names),
         "flagged": flagged,

@@ -11,7 +11,7 @@ general analytics + training-data-pipeline engine:
 - dedup family (exact, MinHash-LSH, SimHash, n-gram Jaccard, embedding)
 - similarity search over embeddings (brute-force + LSH-bucketed ANN)
 - text analysis (language-ID, quality scores, token counts, fingerprints)
-- multimodal binary-column plumbing (decode stubs, real Spark plumbing)
+- multimodal binary-column plumbing (fake decode, real Spark plumbing)
 - structured streaming over the events table
 
 Design stance (SURVEY.md §7): one DataFrame/SQL engine; the RDD API is not

@@ -52,18 +52,6 @@ def exact_dedup_groups(docs: DataFrame, id_col: str, content_col: str) -> DataFr
     )
 
 
-def exact_dedup_survivors(docs: DataFrame, id_col: str, content_col: str) -> DataFrame:
-    """The deduplicated relation: rows whose id is their group's survivor.
-
-    Window-on-digest formulation — one shuffle, no join back."""
-    w = W.partitionBy(F.md5(F.col(content_col)))
-    return (
-        docs.withColumn("_keep", F.min(id_col).over(w))
-        .filter(F.col(id_col) == F.col("_keep"))
-        .drop("_keep")
-    )
-
-
 def canonical_fingerprint(tokens_col) -> "F.Column":
     """Order/multiplicity-insensitive content key: sorted distinct tokens."""
     return F.md5(F.array_join(F.array_sort(F.array_distinct(tokens_col)), " "))

@@ -1,10 +1,10 @@
 """Multimodal column plumbing (north-star [ext]).
 
 Images/audio/video are opaque ``binary`` payload columns plus typed
-metadata. The decode step itself needs codec libraries that are not in
-this container, so it is STUBBED (``decode_image`` raises
-``NotImplementedError`` unless the deterministic fake decoder is chosen) —
-but every piece of Spark plumbing around it is real and tested:
+metadata. A real decode step needs codec libraries (PIL/opencv) that the
+engine does not ship, so the feature and resize paths use a deterministic
+md5-keyed fake decode inside their workers — but every piece of Spark
+plumbing around it is real and tested:
 
 - payload schema (``binary`` + metadata struct)
 - Arrow-batched ``mapInPandas`` with an explicit output schema
@@ -15,11 +15,9 @@ but every piece of Spark plumbing around it is real and tested:
 
 from __future__ import annotations
 
-import hashlib
 import math
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,21 +39,6 @@ def attach_binary_payload(docs: DataFrame, id_col: str, text_col: str) -> DataFr
         F.encode(F.col(text_col), "UTF-8").alias("payload"),
         F.lit("application/octet-stream").alias("media_type"),
     )
-
-
-def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
-    """STUB: real image decode requires PIL/libjpeg — not in this container.
-
-    ``fake=True`` returns a deterministic pseudo-"pixel" array derived from
-    the payload's md5 digest, so the downstream feature path is testable.
-    """
-    if not fake:
-        raise NotImplementedError(
-            "image decode needs a codec library (PIL/opencv) — provision on the "
-            "cluster and replace this stub; the Spark plumbing is codec-agnostic"
-        )
-    digest = hashlib.md5(payload).digest()
-    return np.frombuffer(digest, dtype=np.uint8).astype(np.float32)
 
 
 def extract_features(payloads: DataFrame) -> DataFrame:
@@ -87,8 +70,7 @@ def extract_features(payloads: DataFrame) -> DataFrame:
             feats = []
             for payload in batch["payload"]:
                 raw = bytes(payload)
-                # deterministic fake decode (md5-digest "pixels"), the
-                # same math as decode_image(fake=True)
+                # deterministic fake decode: the md5 digest as "pixels"
                 pixels = _np.frombuffer(
                     _hashlib.md5(raw).digest(), dtype=_np.uint8
                 ).astype(_np.float32)
@@ -155,34 +137,15 @@ RESIZED_SCHEMA = "doc_id long, payload binary, width int, height int"
 FRAMES_SCHEMA = "doc_id long, frame_idx int, frame binary, n_frames int"
 
 
-def resize_image(payload: bytes, width: int, height: int, fake: bool = False) -> bytes:
-    """STUB: real resize needs PIL/opencv — not in this container.
-
-    ``fake=True`` returns a deterministic byte string of exactly
-    ``width*height`` bytes (md5-keyed stream), so sizing/schema plumbing is
-    testable without a codec.
-    """
-    if not fake:
-        raise NotImplementedError(
-            "image resize needs a codec library (PIL/opencv) — provision on the "
-            "cluster and replace this stub; the Spark plumbing is codec-agnostic"
-        )
-    out = bytearray()
-    counter = 0
-    while len(out) < width * height:
-        out += hashlib.md5(payload + counter.to_bytes(4, "big")).digest()
-        counter += 1
-    return bytes(out[: width * height])
-
-
 def resize_images(payloads: DataFrame, width: int, height: int) -> DataFrame:
     """Arrow-batched resize: 1 row in -> 1 row out, payload replaced by the
     resized bytes + declared dimensions (typed metadata travels with the
     binary column — readers never guess)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained (same fake-resize math as resize_image(fake=True));
-        # see extract_features for the worker-import rationale
+        # self-contained fake resize (md5-keyed byte stream of exactly
+        # width*height bytes); see extract_features for the worker-import
+        # rationale
         import hashlib as _hashlib
 
         import pandas as _pd
@@ -265,10 +228,9 @@ def perceptual_dhash(payloads: DataFrame) -> DataFrame:
 
     The decode here is REAL (a raw byte-per-pixel bitmap needs no codec
     library — ``np.frombuffer`` is the decoder); payloads in a compressed
-    codec would swap in PIL/opencv behind the same mapInPandas crossing,
-    per the ``decode_image`` gate. Arrow-batched, one worker call per
-    batch; self-contained closure for the worker-import reason documented
-    on :func:`extract_features`.
+    codec would swap in PIL/opencv behind the same mapInPandas crossing.
+    Arrow-batched, one worker call per batch; self-contained closure for
+    the worker-import reason documented on :func:`extract_features`.
 
     Scale: map-only — one pass over the payload column, no shuffle; the
     emitted (doc_id, phash) relation is 16 bytes/row no matter how large

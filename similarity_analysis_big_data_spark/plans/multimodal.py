@@ -135,9 +135,9 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The synthetic corpus has no real images, so — exactly like plans/pii.py
 # derives contact blobs — the queries run over SYNTHETIC 8x8 GRAY8 bitmaps
 # built deterministically from md5 (the same digest-as-pixels construction
-# as operators.multimodal.decode_image(fake=True)): docs in the same
-# group of 8 share a base image, and each non-canonical variant perturbs
-# exactly ONE pixel, so variant->canonical Hamming distance over the
+# as the fake decode in operators.multimodal.extract_features): docs in
+# the same group of 8 share a base image, and each non-canonical variant
+# perturbs exactly ONE pixel, so variant->canonical Hamming distance over the
 # 56-bit dHash is <= 2 BY CONSTRUCTION (one pixel touches two horizontal
 # comparisons). That gives the pairing stage genuine near-duplicates (not
 # just hamming-0 exact copies) while keeping every byte oracle-expressible.

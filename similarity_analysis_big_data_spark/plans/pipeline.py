@@ -21,7 +21,6 @@ from ..functions.tfidf import doc_frequency, l2_normalize, term_frequency, tfidf
 from ..operators.similarity import (
     all_pairs_cosine_exact,
     best_match,
-    retrieval_accuracy,
     sparse_cosine_join,
 )
 
@@ -108,13 +107,6 @@ def task1_best_abstract(prep: DataFrame, n_docs: int | None = None) -> DataFrame
     )
     all_titles = prep.select(F.col("id").alias("title_id"))
     return best_match(pairs, "title_id", "abstract_id", all_queries=all_titles)
-
-
-def task1_accuracy(prep: DataFrame) -> DataFrame:
-    """lab2.py:253-260: single-row (accuracy) DataFrame."""
-    n_docs = prep.count()
-    matches = task1_best_abstract(prep, n_docs=n_docs)
-    return retrieval_accuracy(matches, "title_id", "abstract_id", n_queries=n_docs)
 
 
 def task2_category_matrix(prep: DataFrame, round_to: int = COSINE_DECIMALS) -> DataFrame:

@@ -91,44 +91,6 @@ def write_text(df: DataFrame, path: str, mode: str = "overwrite", single_file: b
     _maybe_coalesce(df, single_file).write.mode(mode).text(path)
 
 
-def compact_parquet(spark, path: str, target_files: int) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ``target_files`` part files and return the file count before rewrite.
-
-    Scale: small files are the silent killer of 100 TB scans (one task +
-    one footer fetch per file); periodic compaction to ~128-512 MB targets
-    restores scan locality. ``coalesce`` (no shuffle) merges partitions
-    for the write; the atomic swap is write-new + move, so a failed
-    rewrite never harms the live data.
-    """
-    import glob
-    import os
-    import shutil
-
-    before = len(glob.glob(os.path.join(path, "*.parquet")))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    bak = path.rstrip("/") + "._compact_bak"
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
-    return before
-
-
-def read_with_schema_evolution(spark, *paths: str):
-    """Union parquet directories written under EVOLVED schemas (columns
-    added over time) into one DataFrame: ``mergeSchema`` unifies the
-    footer schemas and fills missing columns with NULL.
-
-    Scale: schema merging reads every file footer up front — fine per
-    ingest batch, pathological across a million historical files; at
-    100 TB pin the merged schema in a catalog and pass it explicitly
-    (``.schema(...)``), keeping this reader for schema DISCOVERY jobs.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
-
-
 def write_xml(
     df: DataFrame,
     path: str,

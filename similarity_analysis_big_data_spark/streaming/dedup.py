@@ -1,25 +1,22 @@
 """Streaming deduplication (north-star dedup, streaming flavor).
 
-``dropDuplicates`` on a watermarked stream is Spark's built-in stateful
-exact dedup: state holds one digest per seen document inside the watermark
-horizon, late duplicates beyond it age out of state. The batch twin is
-operators/dedup.exact_dedup_survivors.
+Two eviction contracts over a watermarked stream, both Spark's built-in
+stateful exact dedup:
+
+- ``dedup_hourly_key_stream``: ``dropDuplicates`` on an idempotency key
+  whose event-time bucket is the watermarked column, so each key's state
+  is evicted once the watermark passes its hour (``stream_twin_dedup``
+  and ``stream_twin_hourly_dedup`` run it);
+- ``dedup_event_stream_within_watermark``: ``dropDuplicatesWithinWatermark``
+  on a value digest, deduplicating only copies that arrive within the
+  watermark delay of each other, with state evicted as the watermark
+  advances even though no event-time column is in the key.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def dedup_event_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Drop duplicate events by (user_id, event_type, value-digest) within
-    the watermark horizon — the streaming exact-dedup shape: digest the
-    dedup key, watermark bounds the state store."""
-    keyed = events.withColumn(
-        "digest", F.md5(F.concat_ws("|", "user_id", "event_type", F.col("value").cast("string")))
-    )
-    return keyed.withWatermark("ts", watermark).dropDuplicates(["digest"])
 
 
 def dedup_event_stream_within_watermark(

@@ -4,7 +4,10 @@
 ``running_user_totals``: per-user running event count + value total,
 emitting one updated row per user per micro-batch — the minimal shape of a
 production feature-store updater (state = one row per key, bounded by a
-processing-time timeout).
+processing-time timeout). The stream-twin query
+``stream_twin_stateful_totals`` runs it. The transformWithStateInPandas
+successor API is not used: its state-server protocol needs
+``google.protobuf``, which the engine does not depend on.
 """
 
 from __future__ import annotations
@@ -41,9 +44,6 @@ def _make_update_user():
     return update_user
 
 
-_update_user = _make_update_user()  # kept for test/back-compat imports
-
-
 def running_user_totals(events: DataFrame) -> DataFrame:
     """Stateful per-user totals over the event stream.
 
@@ -61,73 +61,5 @@ def running_user_totals(events: DataFrame) -> DataFrame:
             stateStructType=STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# --- Spark 4.x transformWithStateInPandas twin -----------------------------
-# The successor API to applyInPandasWithState: typed state handles
-# (ValueState/ListState/MapState), optional TTL, and timers — the operator
-# contract Spark standardizes on going forward. Same semantics as
-# running_user_totals above; tests assert the two agree with the batch agg.
-
-try:  # pragma: no cover - import surface depends on pyspark build
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    # the state-server protocol is protobuf-framed; without google.protobuf
-    # the driver-side pre-init worker dies before init() runs
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    HAS_TWS = True
-except ImportError:  # older pyspark / no protobuf: applyInPandasWithState path
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = None  # type: ignore[assignment]
-    HAS_TWS = False
-
-
-class RunningTotalsProcessor(StatefulProcessor):
-    """Per-user (count, sum) with a typed ValueState handle.
-
-    State is one fixed-width row per key — identical memory posture to the
-    applyInPandasWithState form; the handle API adds TTL/timers when a
-    production deploy needs idle-key expiry.
-    """
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        n, total = self._state.get() if self._state.exists() else (0, 0.0)
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """``running_user_totals`` on the transformWithStateInPandas API."""
-    if not HAS_TWS:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires pyspark >= 4.0 plus "
-            "google.protobuf; use running_user_totals "
-            "(applyInPandasWithState) instead"
-        )
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotalsProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )

@@ -19,6 +19,18 @@ def test_queries_and_oracles_align(spark):
     assert set(o) <= set(q)
 
 
+def test_priority_names_registered_queries_once():
+    """``registry.PRIORITY`` is hand-edited, and ``_ordered()`` drops an
+    unknown name without a word, so a typo would shrink the sampled
+    window silently: every name must be registered, none twice."""
+    from similarity_analysis_big_data_spark.plans import registry
+
+    names = registry.query_map()
+    assert [n for n in registry.PRIORITY if n not in names] == []
+    assert len(set(registry.PRIORITY)) == len(registry.PRIORITY)
+    assert list(names)[: len(registry.PRIORITY)] == list(registry.PRIORITY)
+
+
 def test_all_queries_execute_at_smoke_scale(spark, sf_smoke):
     for name, fn in e.queries().items():
         df = fn(spark, sf_smoke)

@@ -236,21 +236,3 @@ def test_connected_components_string_ids_propagation_path(spark, monkeypatch):
         f"z{i}": "z0" for i in range(5)
     }
     assert got == expected
-
-
-def test_streaming_dedup_drops_duplicates(spark, sf_smoke):
-    from similarity_analysis_big_data_spark.streaming.dedup import dedup_event_stream
-
-    stream = read_event_stream(spark, sf_smoke)
-    q = (
-        dedup_event_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT count(*) AS n, count(DISTINCT digest) AS d FROM dedup_stream").collect()[0]
-    assert got["n"] == got["d"]  # no duplicate digests survive
-    assert 0 < got["n"] <= 1000

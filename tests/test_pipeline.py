@@ -14,10 +14,10 @@ import re
 
 import pytest
 
+from similarity_analysis_big_data_spark.operators.similarity import retrieval_accuracy
 from similarity_analysis_big_data_spark.plans.pipeline import (
     preprocess_papers,
     task1_best_abstract,
-    task1_accuracy,
     task2_category_matrix,
 )
 
@@ -127,7 +127,10 @@ def test_task1_zero_overlap_title_emits_null_match(prep):
 
 
 def test_task1_accuracy_range(prep):
-    acc = task1_accuracy(prep).collect()[0]["accuracy"]
+    # the CLI's Task 1 accuracy: one count, reused for the arg-max and the ratio
+    n_docs = prep.count()
+    matches = task1_best_abstract(prep, n_docs=n_docs)
+    acc = retrieval_accuracy(matches, "title_id", "abstract_id", n_queries=n_docs).collect()[0]["accuracy"]
     assert 0.0 <= acc <= 1.0
     # p1/p6 overlap and p4/p5 are designed misses -> strictly below 1
     assert acc < 1.0

@@ -236,44 +236,6 @@ def test_zordered_write_clusters_both_dimensions(spark, sf_smoke, tmp_path_facto
     assert spark.read.parquet(out).count() == ev.count()
 
 
-def test_compact_parquet_reduces_files(spark, tmp_path_factory):
-    from similarity_analysis_big_data_spark.sources.writers import compact_parquet
-    import glob
-    import os
-
-    base = str(tmp_path_factory.mktemp("compact") / "t")
-    spark.range(10_000).repartition(24).write.parquet(base)
-    before_rows = spark.read.parquet(base).count()
-    n_before = compact_parquet(spark, base, 3)
-    assert n_before >= 24
-    files = glob.glob(os.path.join(base, "*.parquet"))
-    assert len(files) <= 3
-    after = spark.read.parquet(base)
-    assert after.count() == before_rows
-    assert {r["id"] for r in after.collect()} == set(range(10_000))
-
-
-def test_schema_evolution_merge(spark, tmp_path_factory):
-    from similarity_analysis_big_data_spark.sources.writers import (
-        read_with_schema_evolution,
-    )
-    from pyspark.sql import functions as F
-
-    base = tmp_path_factory.mktemp("evolve")
-    v1 = str(base / "v1")
-    v2 = str(base / "v2")
-    spark.range(5).select("id", F.lit("a").alias("source")).write.parquet(v1)
-    spark.range(5, 10).select(
-        "id", F.lit("b").alias("source"), (F.col("id") * 2).alias("score")
-    ).write.parquet(v2)
-    df = read_with_schema_evolution(spark, v1, v2)
-    assert set(df.columns) == {"id", "source", "score"}
-    rows = {r["id"]: (r["source"], r["score"]) for r in df.collect()}
-    assert rows[0] == ("a", None)  # evolved column null-filled for old files
-    assert rows[7] == ("b", 14)
-    assert len(rows) == 10
-
-
 def test_xml_roundtrip_with_explicit_schema(spark, sf_smoke, tmp_path_factory):
     """[ext] XML sink/scan roundtrip (Spark 4 built-in StAX source):
     explicit schema preserves types; values survive bit-for-bit."""

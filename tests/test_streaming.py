@@ -111,56 +111,6 @@ def test_streaming_sliding_windows_match_batch(spark, sf_smoke):
     assert stream_rows == batch_rows
 
 
-def test_transform_with_state_matches_batch(spark, sf_smoke):
-    """Spark 4.x transformWithStateInPandas: final per-user totals equal the
-    batch groupBy aggregate (and therefore the applyInPandasWithState twin)."""
-    import pytest
-
-    from similarity_analysis_big_data_spark.streaming.stateful import (
-        HAS_TWS,
-        running_user_totals_tws,
-    )
-
-    if not HAS_TWS:
-        # Environmental gate: transformWithStateInPandas needs google.protobuf
-        # (not provisioned here; pip install is disallowed). Prove the skip is
-        # the dependency, not a code regression — the applyInPandasWithState
-        # twin above covers the semantics either way.
-        with pytest.raises(ImportError):
-            import google.protobuf  # noqa: F401
-        pytest.skip("transformWithStateInPandas unavailable (no protobuf)")
-    # transformWithState is RocksDB-only; flip the provider for this query
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_event_stream(spark, sf_smoke)
-        got = run_to_memory(running_user_totals_tws(stream), "stream_tws_totals")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    # update-mode emits one row per user per batch; the LAST row per user is
-    # the final state (single-file fixture → one batch, but stay robust)
-    rows = {}
-    for r in got.collect():
-        rows[r["user_id"]] = (r["n_events"], round(r["total_value"], 6))
-    from similarity_analysis_big_data_spark.sources.readers import load_table
-
-    batch = {
-        r["user_id"]: (r["n"], round(r["total"], 6))
-        for r in load_table(spark, sf_smoke, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert rows == batch
-
-
 def test_dedup_within_watermark_drops_redelivery(spark, sf_smoke):
     """dropDuplicatesWithinWatermark keeps one row per digest for
     duplicates inside the watermark horizon."""

@@ -1,5 +1,6 @@
 """deploy/sweep_scale.py end to end: two queries at sf0.001 against 2x
-replicas built on demand, with the in-line min-of-3 re-measure forced on.
+replicas built on demand, with the in-line min-of-3 re-measure forced on,
+and its refusal of an ``--only`` name that no query is registered under.
 
 The sweep runs in its own process (it starts and stops its own session).
 The child never rests (``bench.REST_CAP_SEC = 0``), so a loaded host cannot
@@ -61,9 +62,32 @@ def test_sweep_routes_remeasures_and_writes_the_artifact(tmp_path, sf_smoke):
         assert {"base_s", "scaled_s", "ratio", "gc_s"} <= row.keys(), name
         assert row["min_of"] == 3 and len(row["scaled_runs"]) == 3, name
         assert "confirm" not in row, name
+    # --only matches exact names: near_dup_survivors selects neither the
+    # image nor the video variant
+    assert payload["n_queries"] == 2
+    assert set(rows) == {"near_dup_survivors", "global_count"}
     assert payload["n_disjoint_routed"] == 1
     assert payload["confirm_runs"] == 3
+    assert payload["warmup_runs"] == 1
 
     for path, mode in ((shared, "shared"), (disjoint, "disjoint")):
         meta = json.loads((path / "replica_meta.json").read_text())
         assert (meta["k"], meta["src"], meta["mode"]) == (2, sf_smoke, mode)
+
+
+def test_sweep_refuses_an_unregistered_only_name(tmp_path):
+    """The name check runs before any replica is built or JVM started."""
+    proc = subprocess.run(
+        [
+            sys.executable, "deploy/sweep_scale.py",
+            "--scaled", str(tmp_path / "rep2x"),
+            "--only", "global_count,near_dup_survivor",
+        ],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode != 0
+    assert "near_dup_survivor" in proc.stderr and "global_count" not in proc.stderr
+    assert not (tmp_path / "rep2x").exists()
