@@ -93,7 +93,9 @@ NOTES = {
     ),
 }
 
-spark = get_session(app_name="plans-doc", master="local[8]")
+# partitions pinned with the master: every hashpartitioning(..., N) line in
+# PLANS.md then reads the same on any host, whatever its core count
+spark = get_session(app_name="plans-doc", master="local[8]", shuffle_partitions=8)
 sf = "/root/testdata/sf0.01"
 sc = spark.sparkContext
 

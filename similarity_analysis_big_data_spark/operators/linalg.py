@@ -13,7 +13,6 @@ scales embarrassingly.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def embedding_sufficient_stats(df: DataFrame, vec_col: str, d: int):

@@ -7,7 +7,8 @@ md5-keyed fake decode inside their workers — but every piece of Spark
 plumbing around it is real and tested:
 
 - payload schema (``binary`` + metadata struct)
-- Arrow-batched ``mapInPandas`` with an explicit output schema
+- Arrow-batched ``mapInArrow`` (features) and ``mapInPandas`` (resize,
+  frames) with an explicit output schema
 - batch-shape independence (results identical across partitionings)
 - deterministic fake features so downstream operators (ANN over extracted
   features) are exercised end to end.
@@ -44,10 +45,13 @@ def attach_binary_payload(docs: DataFrame, id_col: str, text_col: str) -> DataFr
 def extract_features(payloads: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the opaque payload column.
 
-    ``mapInPandas`` so one Python worker call sees a whole Arrow batch of
-    payloads (the decode-heavy path batches GPU/codec work naturally); the
-    output schema is declared, columnar, and join-ready for the ANN
-    operators.
+    ``mapInArrow``: one Python worker call sees a whole
+    ``pyarrow.RecordBatch`` of payloads (the decode-heavy path batches
+    GPU/codec work naturally) with no pandas conversion at all. For BINARY
+    payload columns that conversion is a real cost (pandas boxes every
+    payload into a Python ``bytes`` object; Arrow keeps one contiguous
+    buffer). The output schema is declared, columnar, and join-ready for
+    the ANN operators.
 
     The worker fn is a SELF-CONTAINED closure (imports + fake decode
     inline): cloudpickle serializes module-level helpers by REFERENCE, so
@@ -56,47 +60,6 @@ def extract_features(payloads: DataFrame) -> DataFrame:
     insert travels with the driver, not the workers). Same by-value rule
     as the streaming stateful update fn.
     """
-    dim = FEATURE_DIM
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        import numpy as _np
-        import pandas as _pd
-
-        for batch in batches:
-            if not len(batch):
-                continue
-            feats = []
-            for payload in batch["payload"]:
-                raw = bytes(payload)
-                # deterministic fake decode: the md5 digest as "pixels"
-                pixels = _np.frombuffer(
-                    _hashlib.md5(raw).digest(), dtype=_np.uint8
-                ).astype(_np.float32)
-                feats.append((pixels[:dim] / 255.0).astype(_np.float32).tolist())
-            yield _pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"],
-                    "n_bytes": batch["payload"].map(len).astype("int64"),
-                    "header": batch["payload"].map(lambda b: bytes(b)[:4].hex()),
-                    "feature": feats,
-                }
-            )
-
-    return payloads.mapInPandas(gen, schema=FEATURES_SCHEMA)
-
-
-def extract_features_arrow(payloads: DataFrame) -> DataFrame:
-    """``mapInArrow`` twin of :func:`extract_features`: the batch arrives as
-    a ``pyarrow.RecordBatch`` — no pandas conversion at all. For BINARY
-    payload columns that conversion is a real cost (pandas boxes every
-    payload into a Python ``bytes`` object; Arrow keeps one contiguous
-    buffer), so this is the preferred crossing for decode-heavy multimodal
-    work. Output values are IDENTICAL to the pandas path (tested).
-
-    Self-contained closure for the same worker-import reason as
-    :func:`extract_features`."""
     dim = FEATURE_DIM
 
     def gen(batches):

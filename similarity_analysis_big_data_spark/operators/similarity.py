@@ -12,7 +12,7 @@ re-plan, salt, or broadcast.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..sources.readers import local_relation
@@ -361,8 +361,10 @@ def dense_topk_neighbors(
     its score block with one BLAS matmul, keeps its local top-k per query
     (rounded scores, ascending-id tiebreak), and a tiny window merges the
     per-partition winners — global top-k is always a subset of the union of
-    partition top-ks. Self-pairs and zero-norm vectors are excluded exactly
-    as the column-expression formulation excludes them.
+    partition top-ks. Self-pairs are excluded. A pair with a zero-norm side
+    scores NULL and ranks after every finite score, ties by ascending id —
+    the column-expression formulation's NULL cosine under its (desc nulls
+    last, asc id) window, so both strategies return the same rows.
 
     Scale: corpus never shuffles (mapInPandas over the scan partitioning);
     candidate rows to the merge are n_partitions x |Q| x k. The caller
@@ -419,11 +421,13 @@ def dense_topk_neighbors(
             denom = cn_b[:, None] * qn[None, :]
             with np.errstate(divide="ignore", invalid="ignore"):
                 S = np.round((C_b @ Q.T) / denom, round_to)
-            S[denom == 0.0] = -np.inf  # zero-norm: never a top-k candidate
-            S[ids_b[:, None] == q_ids[None, :]] = -np.inf  # exclude self
-            kk = min(k, S.shape[0])
+            null = denom == 0.0
+            S[null] = -np.inf  # zero-norm: NULL cosine, ranked after every score
+            not_self = ids_b[:, None] != q_ids[None, :]
             for j in range(S.shape[1]):
-                col = S[:, j]
+                rows = np.flatnonzero(not_self[:, j])
+                col = S[rows, j]
+                kk = min(k, len(col))
                 # argpartition finds the k-th score, but keeps an ARBITRARY
                 # subset among candidates tied at that boundary — expand the
                 # cut to every candidate scoring >= the k-th value so the
@@ -434,11 +438,10 @@ def dense_topk_neighbors(
                     cand = np.flatnonzero(col >= kth)
                 else:
                     cand = np.arange(len(col))
-                cand = cand[np.argsort(-col[cand], kind="stable")][:kk]
-                keep = cand[np.isfinite(col[cand])]
+                keep = rows[cand[np.argsort(-col[cand], kind="stable")][:kk]]
                 out_q.extend([q_ids[j]] * len(keep))
                 out_n.extend(ids_b[keep])
-                out_s.extend(col[keep])
+                out_s.extend(np.where(null[keep, j], np.nan, S[keep, j]))
         yield pd.DataFrame({query_id: out_q, "neighbor_id": out_n, "cosine": out_s})
 
     # project to (id, vec) BEFORE the Python boundary: mapInPandas input is

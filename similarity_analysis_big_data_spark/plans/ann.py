@@ -10,12 +10,22 @@ Three tiers:
 The dot/cosine math is double-cast element-wise fold — identical on both
 engines (functions/vectors.py), and cosine is rounded BEFORE ranking so
 top-k tie-breaks are engine-independent.
+
+The family contract — a norm-gated cosine rounded to 6 dp, NULL for a
+zero norm, self pairs excluded, ranked by (score desc, id asc) to k — is
+stated once, by the helpers every query body is built from:
+``_gated_cosine`` (the cosine expression), ``_scored`` (broadcast queries
+x corpus, self pair dropped), ``_topk`` (the rank window and cut),
+``_exact_topk`` (the dense-or-fold strategy choice), ``_recall``
+(per-query recall@k), ``_ivf_assign``/``_ivf_probes`` (the sqrt-scaled
+and fixed IVF grids) and ``_pq_encode``/``_adc_topk`` (PQ encode and ADC
+rank).
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, cosine_sql, dot, dot_sql, l2_norm
@@ -49,27 +59,122 @@ def _md5_pool(df: DataFrame, id_col: str, tag: str, cap: int) -> DataFrame:
     ).limit(cap)
 
 
-def _queries_and_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+def _gated_cosine(a: str, na: str, b: str, nb: str) -> Column:
+    """cos(a, b) from precomputed norm columns ``na``/``nb``: NULL when
+    either norm is zero. Norms precomputed per side leave one interpreted
+    fold per pair instead of three."""
+    return F.when(
+        (F.col(na) > 0) & (F.col(nb) > 0), dot(a, b) / (F.col(na) * F.col(nb))
     )
-    return queries, emb
 
 
-def _dense_query_rows(queries: DataFrame, vec_col: str) -> list | None:
-    """The dense-or-hof probe of the brute-force top-k family: ONE bounded
-    action collects up to the broadcast cap + 1 query rows. Returns the
-    rows — they ARE the dense strategy's broadcast payload, so no second
-    collect — or None when the set is empty or outgrows
-    ``DENSE_MAX_BROADCAST_CELLS`` (the caller falls back to the fold)."""
-    d_guess = 64
-    cap = max(1, DENSE_MAX_BROADCAST_CELLS // d_guess)
-    rows = queries.limit(cap + 1).collect()
-    d = len(rows[0][vec_col]) if rows else 0
-    if rows and len(rows) <= cap and len(rows) * d <= DENSE_MAX_BROADCAST_CELLS:
-        return rows
-    return None
+def _scored(
+    queries: DataFrame,
+    corpus: DataFrame,
+    on: str | Column | None = None,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """Broadcast ``(query_id, query_vec, ...)`` against ``(vec_id,
+    embedding, ...)`` and drop the self pair: ``(query_id, neighbor_id,
+    *keep, cosine)``, cosine rounded to 6 dp. ``on`` is a using-column
+    (the IVF cell) or a join condition (the label pre-filter); None
+    scores every pair. The corpus never shuffles."""
+    q = queries.withColumn("q_norm", l2_norm("query_vec"))
+    c = corpus.withColumn("n_norm", l2_norm("embedding"))
+    cos = _gated_cosine("query_vec", "q_norm", "embedding", "n_norm")
+    return (
+        c.join(F.broadcast(q), on)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            *keep,
+            F.round(cos, 6).alias("cosine"),
+        )
+    )
+
+
+def _topk(
+    df: DataFrame,
+    k: int,
+    by: tuple[str, ...] = ("query_id",),
+    score: str = "cosine",
+    nb: str = "neighbor_id",
+    desc: bool = True,
+) -> DataFrame:
+    """The first ``k`` rows per ``by`` group ranked by ``score`` (desc
+    nulls last, or asc) then ascending ``nb``, with their long ``rnk``.
+    The rank filter compiles to WindowGroupLimit, so each task prunes to
+    k rows per group before the exchange."""
+    order = F.desc(score) if desc else F.asc(score)
+    w = W.partitionBy(*by).orderBy(order, F.asc(nb))
+    return df.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
+        F.col("rnk") <= k
+    )
+
+
+def _exact_topk(
+    queries: DataFrame, corpus: DataFrame, k: int, strategy: str = "auto"
+) -> DataFrame:
+    """Exact cosine top-k of ``(query_id, query_vec)`` over ``(vec_id,
+    embedding)``: ``(query_id, neighbor_id, cosine, rnk)``.
+
+    - ``"hof"`` — ``_topk(_scored(...))``, the column-expression fold.
+      Works at any |Q|.
+    - ``"dense"`` — operators.similarity.dense_topk_neighbors: broadcast
+      (|Q| x d) matrix, one BLAS matmul per corpus partition, partition-
+      local top-k, tiny merge. Wins while |Q|·d stays broadcastable.
+    - ``"auto"`` — ONE bounded action collects up to the broadcast cap + 1
+      query rows; they ARE the dense strategy's broadcast payload (no
+      second collect), and a set that outgrows
+      ``DENSE_MAX_BROADCAST_CELLS`` falls back to the fold.
+
+    Both strategies keep the same contract, so results are strategy-blind.
+    """
+    prefetched = None
+    if strategy == "auto":
+        cap = max(1, DENSE_MAX_BROADCAST_CELLS // 64)  # rows at d = 64
+        rows = queries.limit(cap + 1).collect()
+        d = len(rows[0]["query_vec"]) if rows else 0
+        if rows and len(rows) <= cap and len(rows) * d <= DENSE_MAX_BROADCAST_CELLS:
+            prefetched = rows
+        strategy = "hof" if prefetched is None else "dense"
+    if strategy == "dense":
+        return dense_topk_neighbors(
+            queries,
+            corpus,
+            "query_id",
+            "query_vec",
+            "vec_id",
+            "embedding",
+            k,
+            round_to=6,
+            prefetched_queries=prefetched,
+        )
+    return _topk(_scored(queries, corpus), k)
+
+
+def _recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per-query ``n_hits`` and ``recall_at_k``: how many of the exact
+    top-k ``(query_id, neighbor_id)`` rows the approximate top-k holds.
+    The join is |Q|·k rows."""
+    exact = exact.select("query_id", "neighbor_id")
+    approx = approx.select("query_id", F.col("neighbor_id").alias("a_neighbor_id"))
+    hits = (
+        exact.join(
+            approx,
+            (exact.query_id == approx.query_id)
+            & (F.col("neighbor_id") == F.col("a_neighbor_id")),
+            "left",
+        )
+        .groupBy(exact.query_id)
+        .agg(F.count("a_neighbor_id").alias("n_hits"))
+    )
+    return hits.select(
+        "query_id",
+        "n_hits",
+        F.round(F.col("n_hits").cast("double") / TOP_K, 6).alias("recall_at_k"),
+    )
 
 
 def _ivf_assign(emb: DataFrame, mod: int | None = None) -> DataFrame:
@@ -105,10 +210,7 @@ def _ivf_assign(emb: DataFrame, mod: int | None = None) -> DataFrame:
             l2_norm("embedding").alias("_cn"),
         )
     )
-    cos = F.when(
-        (F.col("_vn") > 0) & (F.col("_cn") > 0),
-        dot("embedding", "cell_vec") / (F.col("_vn") * F.col("_cn")),
-    )
+    cos = _gated_cosine("embedding", "_vn", "cell_vec", "_cn")
     scored = (
         part.withColumn("_vn", l2_norm("embedding"))
         .crossJoin(F.broadcast(cent))
@@ -153,56 +255,14 @@ def ann_bruteforce_topk(
 ) -> DataFrame:
     """Scale: the small query set broadcasts; the corpus never shuffles —
     each partition scores its vectors locally and window pruning keeps k
-    rows per query. O(|Q|·n·d) compute, zero O(n²).
-
-    Two physical strategies for the scoring stage (same adaptive pattern
-    as title_best_abstract):
-
-    - ``"hof"`` — column-expression fold per pair (norms precomputed per
-      side: HOF folds are interpreted, so one fold per pair instead of
-      three is a direct 3× on the dominant term). Works at any |Q|.
-    - ``"dense"`` — operators.similarity.dense_topk_neighbors: broadcast
-      (|Q| x d) matrix, one BLAS matmul per corpus partition, partition-
-      local top-k, tiny merge. Wins while |Q|·d stays broadcastable.
-    - ``"auto"`` — measure |Q|·d and choose; falls back to hof when the
-      query set outgrows the broadcast bound.
-    """
-    queries, emb = _queries_and_corpus(spark, sf_dir)
-    prefetched = None
-    if strategy == "auto":
-        prefetched = _dense_query_rows(queries, "query_vec")
-        strategy = "hof" if prefetched is None else "dense"
-    if strategy == "dense":
-        return dense_topk_neighbors(
-            queries,
-            emb,
-            "query_id",
-            "query_vec",
-            "vec_id",
-            "embedding",
-            TOP_K,
-            round_to=6,
-            prefetched_queries=prefetched,
-        )
-    queries = queries.withColumn("q_norm", l2_norm("query_vec"))
-    corpus = emb.withColumn("n_norm", l2_norm("embedding"))
-    cosine = F.when(
-        (F.col("q_norm") > 0) & (F.col("n_norm") > 0),
-        dot("query_vec", "embedding") / (F.col("q_norm") * F.col("n_norm")),
+    rows per query. O(|Q|·n·d) compute, zero O(n²). ``strategy`` picks
+    the scorer (``_exact_topk``: "hof", "dense" or "auto"), the same
+    adaptive pattern as title_best_abstract."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine, 6).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-    )
+    return _exact_topk(queries, emb, TOP_K, strategy)
 
 
 @register(
@@ -260,23 +320,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
         "cell_id",
-    ).withColumn("q_norm", l2_norm("query_vec"))
-    corpus = assigned.withColumn("n_norm", l2_norm("embedding"))
-    cosine = F.when(
-        (F.col("q_norm") > 0) & (F.col("n_norm") > 0),
-        dot("query_vec", "embedding") / (F.col("q_norm") * F.col("n_norm")),
     )
-    scored = (
-        corpus.join(F.broadcast(queries), "cell_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine, 6).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(F.col("rnk") <= TOP_K)
+    return _topk(_scored(queries, assigned, "cell_id"), TOP_K)
 
 
 @register(
@@ -313,12 +358,8 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rhs = emb.select(
         F.col("vec_id").alias("id_r"), F.col("embedding").alias("emb_r")
     ).withColumn("norm_r", l2_norm("emb_r"))
-    # norms precomputed per side; one interpreted fold per pair, and the
-    # cosine lands in a single projection so filter/select share it
-    cos = F.when(
-        (F.col("norm_l") > 0) & (F.col("norm_r") > 0),
-        dot("emb_l", "emb_r") / (F.col("norm_l") * F.col("norm_r")),
-    )
+    # the cosine lands in a single projection so filter/select share it
+    cos = _gated_cosine("emb_l", "norm_l", "emb_r", "norm_r")
     return (
         lhs.join(rhs, F.col("id_l") < F.col("id_r"))
         .select("id_l", "id_r", cos.alias("cosine"))
@@ -376,6 +417,37 @@ def ann_hyperplane_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 N_PROBE = 2  # multi-probe IVF: search the query's 2 nearest cells
+
+
+def _ivf_probes(emb: DataFrame, n_probe: int) -> tuple[DataFrame, DataFrame]:
+    """Fixed-grid IVF (seed centroids vec_id < N_CELLS): ``assigned``
+    ``(vec_id, embedding, cell_id)`` puts each vector in its nearest cell,
+    and ``probes`` ``(query_id, query_vec, cell_id, probe_rn)`` lists each
+    query's ``n_probe`` nearest cells, ``probe_rn`` their rank. Both come
+    from ONE ranked broadcast cross join (rounded cosine desc, cell_id
+    asc)."""
+    cent = emb.filter(F.col("vec_id") < N_CELLS).select(
+        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
+    )
+    w_assign = W.partitionBy("vec_id").orderBy(
+        F.desc(F.round(cosine_similarity("embedding", "cell_vec"), 6)),
+        F.asc("cell_id"),
+    )
+    ranked = emb.crossJoin(F.broadcast(cent)).withColumn(
+        "rn", F.row_number().over(w_assign)
+    )
+    assigned = ranked.filter(F.col("rn") == 1).select(
+        "vec_id", "embedding", "cell_id"
+    )
+    probes = ranked.filter(
+        (F.col("vec_id") % QUERY_MOD == 0) & (F.col("rn") <= n_probe)
+    ).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+        "cell_id",
+        F.col("rn").alias("probe_rn"),
+    )
+    return assigned, probes
 
 _SUM_FOLD_SQL = (
     "list_reduce(list_prepend(CAST(0 AS DOUBLE), "
@@ -460,42 +532,8 @@ def ann_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query broadcast, the corpus stays put, and each query scores
     ~N_PROBE·n/cells vectors. Recall rises without touching the corpus side."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
-    )
-    w_assign = W.partitionBy("vec_id").orderBy(
-        F.desc(F.round(cosine_similarity("embedding", "cell_vec"), 6)), F.asc("cell_id")
-    )
-    ranked = (
-        emb.crossJoin(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(w_assign))
-    )
-    assigned = ranked.filter(F.col("rn") == 1).select("vec_id", "embedding", "cell_id")
-    probes = (
-        ranked.filter((F.col("vec_id") % QUERY_MOD == 0) & (F.col("rn") <= N_PROBE))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-            "cell_id",
-        )
-        .withColumn("q_norm", l2_norm("query_vec"))
-    )
-    corpus = assigned.withColumn("n_norm", l2_norm("embedding"))
-    cosine = F.when(
-        (F.col("q_norm") > 0) & (F.col("n_norm") > 0),
-        dot("query_vec", "embedding") / (F.col("q_norm") * F.col("n_norm")),
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), "cell_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine, 6).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(F.col("rnk") <= TOP_K)
+    assigned, probes = _ivf_probes(emb, N_PROBE)
+    return _topk(_scored(probes, assigned, "cell_id"), TOP_K)
 
 
 SEMDEDUP_TAU = 0.3  # within-cell cosine threshold (fixture vectors are near-orthogonal)
@@ -556,10 +594,7 @@ def semdedup_cell_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     rhs = assigned.select(
         "cell_id", F.col("vec_id").alias("id_r"), F.col("embedding").alias("emb_r")
     ).withColumn("norm_r", l2_norm("emb_r"))
-    cos = F.when(
-        (F.col("norm_l") > 0) & (F.col("norm_r") > 0),
-        dot("emb_l", "emb_r") / (F.col("norm_l") * F.col("norm_r")),
-    )
+    cos = _gated_cosine("emb_l", "norm_l", "emb_r", "norm_r")
     dups = (
         lhs.join(rhs, "cell_id")
         .filter(F.col("id_l") < F.col("id_r"))
@@ -671,25 +706,7 @@ _RECALL_ORACLE = f"""
 def ann_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: both component plans keep the corpus unshuffled (broadcast
     queries / cell-keyed join); the recall join itself is |Q|·k rows."""
-    exact = ann_bruteforce_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = ann_ivf_topk(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("a_neighbor_id")
-    )
-    hits = (
-        exact.join(
-            approx,
-            (exact.query_id == approx.query_id)
-            & (F.col("neighbor_id") == F.col("a_neighbor_id")),
-            "left",
-        )
-        .groupBy(exact.query_id)
-        .agg(F.count("a_neighbor_id").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        "n_hits",
-        F.round(F.col("n_hits").cast("double") / TOP_K, 6).alias("recall_at_k"),
-    )
+    return _recall(ann_bruteforce_topk(spark, sf_dir), ann_ivf_topk(spark, sf_dir))
 
 
 # ---- Product Quantization + ADC (the memory-bound scale path) --------------
@@ -776,7 +793,8 @@ _PQ_ORACLE = f"""
 
 def _pq_parts(spark: SparkSession, sf_dir: str):
     """Shared PQ building blocks: (normalized embeddings, subvectors,
-    codebook, per-vector codes, per-query ADC lookup table)."""
+    per-vector codes, per-query ADC lookup table) under the seed codebook
+    (the subvectors of vec_id < PQ_KS)."""
     emb = load_table(spark, sf_dir, "embeddings")
     # normalize FIRST so ADC's L2 ordering matches the cosine ordering the
     # exact baseline ranks by (||a-b||² = 2 - 2·cos on unit vectors);
@@ -805,9 +823,18 @@ def _pq_parts(spark: SparkSession, sf_dir: str):
     cb = subs.filter(F.col("vec_id") < PQ_KS).select(
         "s", F.col("vec_id").alias("code"), F.col("sub").alias("cw")
     )
-    w_assign = W.partitionBy("vec_id", "s").orderBy(
-        _sq_dist("sub", "cw").asc(), F.asc("code")
-    )
+    return (emb, subs, *_pq_encode(subs, cb))
+
+
+def _pq_encode(subs: DataFrame, cb: DataFrame, key_digits: int | None = None):
+    """Encode against codebook ``cb`` ``(s, code, cw)``: ``assigned``
+    ``(vec_id, s, code)``, each subvector's nearest codeword (ties to the
+    lower code; the distance key is rounded to ``key_digits`` when given),
+    and the per-query ADC lookup table ``lut`` ``(query_id, s, code, pd)``
+    with partial distances rounded to 9 dp as DECIMAL."""
+    d2 = _sq_dist("sub", "cw")
+    key = d2 if key_digits is None else F.round(d2, key_digits)
+    w_assign = W.partitionBy("vec_id", "s").orderBy(key.asc(), F.asc("code"))
     assigned = (
         subs.join(F.broadcast(cb), "s")
         .withColumn("rn", F.row_number().over(w_assign))
@@ -822,10 +849,24 @@ def _pq_parts(spark: SparkSession, sf_dir: str):
             "query_id",
             "s",
             "code",
-            F.round(_sq_dist("sub", "cw"), 9).cast("decimal(18,9)").alias("pd"),
+            F.round(d2, 9).cast("decimal(18,9)").alias("pd"),
         )
     )
-    return emb, subs, cb, assigned, lut
+    return assigned, lut
+
+
+def _adc_topk(assigned: DataFrame, lut: DataFrame) -> DataFrame:
+    """ADC top-k: codes join the broadcast lookup table, the self pair is
+    dropped, the partial distances sum per (query, vector), and the rank
+    is (adc asc, neighbor_id asc): ``(query_id, neighbor_id, adc, rnk)``.
+    Raw vectors are never read."""
+    scored = (
+        assigned.join(F.broadcast(lut), ["s", "code"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("pd").alias("adc"))
+    )
+    return _topk(scored, TOP_K, score="adc", desc=False)
 
 
 @register(
@@ -845,23 +886,12 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass); the ADC scan joins codes against the broadcast |Q|x{m}x{ks}
     lookup table and never touches raw vectors. Composes with IVF
     (IVF-PQ): cells prune the scan, codes compress what remains."""
-    _emb, _subs, _cb, assigned, lut = _pq_parts(spark, sf_dir)
-    scored = (
-        assigned.join(F.broadcast(lut), ["s", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pd").alias("adc"))
-    )
-    w_rank = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("adc").cast("double"), 6).alias("adc_dist"),
-            "rnk",
-        )
+    _emb, _subs, assigned, lut = _pq_parts(spark, sf_dir)
+    return _adc_topk(assigned, lut).select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("adc").cast("double"), 6).alias("adc_dist"),
+        "rnk",
     )
 
 
@@ -895,25 +925,7 @@ _PQ_RECALL_ORACLE = f"""
 def ann_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: both components keep the corpus unshuffled; the recall join
     is |Q|·k rows."""
-    exact = ann_bruteforce_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = ann_pq_adc_topk(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("a_neighbor_id")
-    )
-    hits = (
-        exact.join(
-            approx,
-            (exact.query_id == approx.query_id)
-            & (F.col("neighbor_id") == F.col("a_neighbor_id")),
-            "left",
-        )
-        .groupBy(exact.query_id)
-        .agg(F.count("a_neighbor_id").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        "n_hits",
-        F.round(F.col("n_hits").cast("double") / TOP_K, 6).alias("recall_at_k"),
-    )
+    return _recall(ann_bruteforce_topk(spark, sf_dir), ann_pq_adc_topk(spark, sf_dir))
 
 
 _IVFPQ_ORACLE = f"""
@@ -969,7 +981,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     it — the index fits where the raw corpus could not. Assignment and
     encoding are one broadcast pass each; the search never reads raw
     vectors."""
-    emb, _subs, _cb, assigned, lut = _pq_parts(spark, sf_dir)
+    emb, _subs, assigned, lut = _pq_parts(spark, sf_dir)
     cells = emb.filter(F.col("vec_id") < N_CELLS).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
     )
@@ -996,16 +1008,11 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("pd").alias("adc"))
     )
-    w_rank = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("adc").cast("double"), 6).alias("adc_dist"),
-            "rnk",
-        )
+    return _topk(scored, TOP_K, score="adc", desc=False).select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("adc").cast("double"), 6).alias("adc_dist"),
+        "rnk",
     )
 
 
@@ -1064,7 +1071,7 @@ def ann_pq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: training state is bounded (KS x d doubles per subspace);
     encode/ADC are the same broadcast passes as the seed-codebook index —
     the corpus never shuffles and raw vectors are read, not moved."""
-    emb, subs, _cb, _assigned, _lut = _pq_parts(spark, sf_dir)
+    emb, subs, _assigned, _lut = _pq_parts(spark, sf_dir)
     books = _train_pq_codebooks(emb)
     cb_rows = [
         (s, j, [float(x) for x in books[s][j]])
@@ -1072,54 +1079,10 @@ def ann_pq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j in range(PQ_KS)
     ]
     cb = local_relation(spark, cb_rows, "s int, code long, cw array<double>")
-    w_assign = W.partitionBy("vec_id", "s").orderBy(
-        F.round(_sq_dist("sub", "cw"), 9).asc(), F.asc("code")
-    )
-    assigned = (
-        subs.join(F.broadcast(cb), "s")
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "s", "code")
-    )
-    lut = (
-        subs.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .withColumnRenamed("vec_id", "query_id")
-        .join(F.broadcast(cb), "s")
-        .select(
-            "query_id",
-            "s",
-            "code",
-            F.round(_sq_dist("sub", "cw"), 9).cast("decimal(18,9)").alias("pd"),
-        )
-    )
-    approx = (
-        assigned.join(F.broadcast(lut), ["s", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pd").alias("adc"))
-    )
-    w_rank = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    approx_k = (
-        approx.withColumn("rnk", F.row_number().over(w_rank))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("neighbor_id").alias("a_neighbor_id"))
-    )
-    exact = ann_bruteforce_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        exact.join(
-            approx_k,
-            (exact.query_id == approx_k.query_id)
-            & (F.col("neighbor_id") == F.col("a_neighbor_id")),
-            "left",
-        )
-        .groupBy(exact.query_id)
-        .agg(F.count("a_neighbor_id").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        "n_hits",
-        F.round(F.col("n_hits").cast("double") / TOP_K, 6).alias("recall_at_k"),
-    )
+    # the trained path ranks codewords by the 9-dp ROUNDED distance (the
+    # training loop's argmin key); the seed path's oracle orders unrounded
+    approx = _adc_topk(*_pq_encode(subs, cb, key_digits=9))
+    return _recall(ann_bruteforce_topk(spark, sf_dir), approx)
 
 
 # ---- kNN graph construction -------------------------------------------------
@@ -1192,20 +1155,13 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("dst_norm"),
         "cell_id",
     )
-    cos = F.when(
-        (F.col("src_norm") > 0) & (F.col("dst_norm") > 0),
-        dot("src_vec", "dst_vec") / (F.col("src_norm") * F.col("dst_norm")),
-    )
+    cos = _gated_cosine("src_vec", "src_norm", "dst_vec", "dst_norm")
     scored = (
         lhs.join(rhs, "cell_id")
         .filter(F.col("src_id") != F.col("dst_id"))
         .select("src_id", "dst_id", F.round(cos, 6).alias("cosine"))
     )
-    w = W.partitionBy("src_id").orderBy(F.desc("cosine"), F.asc("dst_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= KNN_GRAPH_K)
-    )
+    return _topk(scored, KNN_GRAPH_K, by=("src_id",), nb="dst_id")
 
 
 @register(
@@ -1429,14 +1385,9 @@ def ann_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "vec_id",
     )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.desc(F.round(cosine_similarity("qv", "cv"), 6)), F.asc("vec_id")
-    )
-    return (
-        cand.withColumn("cosine", F.round(cosine_similarity("qv", "cv"), 6))
-        .withColumn("rnk", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rnk")
+    cand = cand.withColumn("cosine", F.round(cosine_similarity("qv", "cv"), 6))
+    return _topk(cand, TOP_K, nb="vec_id").select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rnk"
     )
 
 
@@ -1691,55 +1642,12 @@ def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_rn; low-nprobe top-k sets are exact subsets of the scored
     relation, identical to rescanning at that nprobe."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
-    )
-    w_assign = W.partitionBy("vec_id").orderBy(
-        F.desc(F.round(cosine_similarity("embedding", "cell_vec"), 6)),
-        F.asc("cell_id"),
-    )
-    ranked = emb.crossJoin(F.broadcast(cent)).withColumn(
-        "rn", F.row_number().over(w_assign)
-    )
-    assigned = ranked.filter(F.col("rn") == 1).select(
-        "vec_id", "embedding", "cell_id"
-    )
-    probes = (
-        ranked.filter(
-            (F.col("vec_id") % QUERY_MOD == 0) & (F.col("rn") <= max(CURVE_PROBES))
-        )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-            "cell_id",
-            F.col("rn").alias("probe_rn"),
-        )
-        .withColumn("q_norm", l2_norm("query_vec"))
-    )
-    corpus = assigned.withColumn("n_norm", l2_norm("embedding"))
-    cosine = F.when(
-        (F.col("q_norm") > 0) & (F.col("n_norm") > 0),
-        dot("query_vec", "embedding") / (F.col("q_norm") * F.col("n_norm")),
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), "cell_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "probe_rn",
-            F.round(cosine, 6).alias("cosine"),
-        )
-    )
+    assigned, probes = _ivf_probes(emb, max(CURVE_PROBES))
+    scored = _scored(probes, assigned, "cell_id", keep=("probe_rn",))
     nps = F.explode(F.array(*[F.lit(p) for p in CURVE_PROBES])).alias("nprobe")
     fanned = scored.select("*", nps).filter(F.col("probe_rn") <= F.col("nprobe"))
-    w_rank = W.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    topk = (
-        fanned.withColumn("rnk", F.row_number().over(w_rank))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("nprobe", "query_id", F.col("neighbor_id").alias("a_neighbor_id"))
+    topk = _topk(fanned, TOP_K, by=("nprobe", "query_id")).select(
+        "nprobe", "query_id", F.col("neighbor_id").alias("a_neighbor_id")
     )
     exact = ann_bruteforce_topk(spark, sf_dir).select("query_id", "neighbor_id")
     np_df = local_relation(spark, [(p,) for p in CURVE_PROBES], "nprobe int")
@@ -1849,31 +1757,10 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
-        "label",
+        F.col("label").alias("q_label"),
     )
-    queries = queries.withColumn("q_norm", l2_norm("query_vec"))
-    corpus = emb.withColumn("n_norm", l2_norm("embedding"))
-    cosine = F.when(
-        (F.col("q_norm") > 0) & (F.col("n_norm") > 0),
-        dot("query_vec", "embedding") / (F.col("q_norm") * F.col("n_norm")),
-    )
-    scored = (
-        corpus.join(
-            F.broadcast(queries),
-            (corpus.label == queries.label)
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine, 6).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-    )
+    on = F.col("label") == F.col("q_label")
+    return _topk(_scored(queries, emb, on), TOP_K)
 
 
 @register(
@@ -1972,36 +1859,15 @@ def ann_binary_sign_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("hamming"),
         )
     )
-    w_h = W.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    hamk = (
-        ham.withColumn("rnk", F.row_number().over(w_h))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id")
+    hamk = _topk(ham, TOP_K, score="hamming", desc=False).select(
+        "query_id", "neighbor_id"
     )
-
+    # the exact baseline stays on the fold form (not _exact_topk's dense
+    # path), keeping both rank filters WindowGroupLimits in one plan
     queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    queries = queries.withColumn("q_norm", l2_norm("qv"))
-    corpus = emb.withColumn("n_norm", l2_norm("embedding"))
-    cosine = F.when(
-        (F.col("q_norm") > 0) & (F.col("n_norm") > 0),
-        dot("qv", "embedding") / (F.col("q_norm") * F.col("n_norm")),
-    )
-    w_e = W.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    exactk = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine, 6).alias("cosine"),
-        )
-        .withColumn("rnk", F.row_number().over(w_e))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    exactk = _topk(_scored(queries, emb), TOP_K).select("query_id", "neighbor_id")
     hit = hamk.withColumn("_hit", F.lit(1))
     return (
         exactk.join(hit, ["query_id", "neighbor_id"], "left")
@@ -2097,49 +1963,25 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN family."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = emb.filter(F.col("vec_id") % MMR_QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    # Pool stage = the brute-force top-k problem, so it uses the SAME
-    # adaptive physical strategy as ann_bruteforce_topk: broadcast-BLAS
+    # Pool stage = the brute-force top-k problem, so it is the SAME
+    # adaptive scorer as ann_bruteforce_topk (_exact_topk): broadcast-BLAS
     # matmul while |Q|·d fits, interpreted-fold fallback beyond. The HOF
     # form alone measured 18× at the 8× replica (queries AND corpus grow
     # with data → quadratic scoring work, the r6 fixed-grid lesson again);
     # the BLAS pool took the 8× point to ~linear. Both strategies share
     # the round-before-rank / ascending-id contract, so the oracle and
     # the greedy rounds below are strategy-blind.
-    q_rows = _dense_query_rows(q, "qv")
-    if q_rows is not None:
-        cand = dense_topk_neighbors(
-            q,
-            emb,
-            "query_id",
-            "qv",
-            "vec_id",
-            "embedding",
-            MMR_POOL,
-            round_to=6,
-            prefetched_queries=q_rows,
-        ).select(
+    cand = (
+        _exact_topk(q, emb, MMR_POOL)
+        .select(
             "query_id",
             F.col("neighbor_id").alias("vec_id"),
             F.col("cosine").alias("rel"),
         )
-    else:
-        scored = (
-            emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "vec_id",
-                F.round(cosine_similarity("qv", "embedding"), 6).alias("rel"),
-            )
-        )
-        w_rel = W.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("vec_id"))
-        cand = (
-            scored.withColumn("_rn", F.row_number().over(w_rel))
-            .filter(F.col("_rn") <= MMR_POOL)
-            .select("query_id", "vec_id", "rel")
-        )
-    cand = cand.localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)
+    )
     cv = cand.join(emb, "vec_id")
     a = cv.select(
         "query_id", F.col("vec_id").alias("a_id"), F.col("embedding").alias("_va")

@@ -2,8 +2,8 @@
 
 ``multimodal_binary_metadata`` is pure column math on the payload bytes, so
 it gets a full DuckDB oracle. ``multimodal_fake_features`` crosses into the
-Arrow/pandas worker (mapInPandas) — rows-only check here, with the value
-semantics pinned by unit tests (tests/test_multimodal.py).
+Arrow worker (mapInArrow); its oracle re-derives the fake decode from md5
+in SQL, and the array form is pinned by unit tests (tests/test_operators.py).
 """
 
 from __future__ import annotations
@@ -67,10 +67,10 @@ _FAKE_FEATURES_ORACLE = (
     "multimodal_fake_features",
     # The fake decoder's feature i is float32(md5_byte_i / 255); multiplying
     # back by 255 and rounding recovers the exact byte (float32 error « 0.5),
-    # so the mapInPandas output is checkable against a pure-SQL md5 decode.
+    # so the mapInArrow output is checkable against a pure-SQL md5 decode.
     oracle=_FAKE_FEATURES_ORACLE,
     doc="[ext] Arrow-batched feature extraction over binary payloads "
-    "(mapInPandas; decode stubbed behind a deterministic fake — the Spark "
+    "(mapInArrow; decode stubbed behind a deterministic fake — the Spark "
     "plumbing, schema and batching are real). Registered surface emits the "
     "features as exact integer bytes f0..f7 so the output is scalar-sortable "
     "AND fully oracle-checked; the raw array<float> form stays available via "

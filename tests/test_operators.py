@@ -205,6 +205,52 @@ def test_only_local_relation_calls_create_dataframe():
     assert offenders == [], f"use sources.readers.local_relation: {offenders}"
 
 
+def _unused_imports(path: pathlib.Path) -> list[tuple[int, str]]:
+    """``(line, name)`` for every name ``path`` imports and never uses.
+    ``__future__`` imports and ``# noqa: F401`` lines are exempt; a name
+    inside a string annotation (``"F.Column"``) or listed in ``__all__``
+    (a re-export) counts as used."""
+    src = path.read_text()
+    tree, lines = ast.parse(src), src.splitlines()
+    used, imported = set(), []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        elif isinstance(node, ast.Assign) and any(getattr(t, "id", "") == "__all__" for t in node.targets):
+            used |= {c.value for c in ast.walk(node.value) if isinstance(c, ast.Constant)}
+        elif isinstance(node, (ast.arg, ast.AnnAssign, ast.FunctionDef, ast.AsyncFunctionDef)):
+            ann = node.returns if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) else node.annotation
+            for c in ast.walk(ann) if ann else ():
+                if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                    used |= {n.id for n in ast.walk(ast.parse(c.value, mode="eval")) if isinstance(n, ast.Name)}
+        elif isinstance(node, (ast.Import, ast.ImportFrom)) and getattr(node, "module", "") != "__future__":
+            imported += [
+                (a.lineno, a.asname or a.name.split(".")[0])
+                for a in node.names
+                if a.name != "*" and "# noqa: F401" not in lines[a.lineno - 1] + lines[node.lineno - 1]
+            ]
+    return [(line, name) for line, name in imported if name not in used]
+
+
+def test_no_unused_imports():
+    """Guard: no file in the package, ``tests/``, ``deploy/``, ``bench.py``
+    or ``__spark_entry__.py`` imports a name it never uses (the repo runs
+    no linter, so a refactor's dead imports would otherwise stay)."""
+    root = pathlib.Path(pkg.__file__).parent
+    repo = root.parent
+    paths = [
+        *sorted(root.rglob("*.py")),
+        *sorted((repo / "tests").glob("*.py")),
+        *sorted((repo / "deploy").glob("*.py")),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    unused = [
+        f"{path.relative_to(repo)}:{line} {name}" for path in paths for line, name in _unused_imports(path)
+    ]
+    assert unused == [], "unused imports:\n" + "\n".join(unused)
+
+
 # Package defs that nothing in the reachability guard's roots reaches, kept
 # on purpose. Keyed ``module.def`` (package-relative); each reason is the
 # COVERAGE.md row that lists the capability, or the reached function the
@@ -213,7 +259,6 @@ UNREACHED_ALLOWED = {
     "operators.mllib_scale.tfidf_vectors_mllib": "COVERAGE: §2.9 M3 [ext] MLlib scale path",
     "operators.mllib_scale.minhash_approx_join": "COVERAGE: §2.9 M4 cosine similarity (approx)",
     "operators.mllib_scale.random_projection_neighbors": "COVERAGE: §2.9 M4 cosine similarity (approx)",
-    "operators.multimodal.extract_features_arrow": "COVERAGE: §2.10 UDF surface (mapInArrow twin)",
     "operators.multimodal.resize_images": "COVERAGE: Multimodal",
     "sources.pydatasource.register_synthetic_docs": "COVERAGE: [ext] custom Python DataSource",
     "sources.pydatasource.register_synthetic_events": "COVERAGE: [ext] custom Python STREAM DataSource",
@@ -444,25 +489,6 @@ def test_grouped_zscore_degenerate_groups(spark):
     import math
 
     assert math.isclose(abs(rows[("ok", 1.0)]), 0.7071067811865475, rel_tol=1e-12)
-
-
-def test_map_in_arrow_features_match_pandas_path(spark, sf_smoke):
-    """mapInArrow twin of extract_features returns IDENTICAL values to the
-    mapInPandas path (zero-copy Arrow batches, same fake decoder)."""
-    from similarity_analysis_big_data_spark.operators.multimodal import (
-        attach_binary_payload,
-        extract_features,
-        extract_features_arrow,
-    )
-    from similarity_analysis_big_data_spark.sources.readers import load_table
-
-    docs = load_table(spark, sf_smoke, "documents")
-    payloads = attach_binary_payload(docs, "doc_id", "text")
-    a = {r["doc_id"]: (r["n_bytes"], r["header"], r["feature"])
-         for r in extract_features(payloads).collect()}
-    b = {r["doc_id"]: (r["n_bytes"], r["header"], r["feature"])
-         for r in extract_features_arrow(payloads).collect()}
-    assert a == b
 
 
 def test_udtf_sentence_segments_matches_explode_form(spark):

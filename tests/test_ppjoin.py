@@ -11,7 +11,6 @@ from __future__ import annotations
 import random
 from itertools import combinations
 
-from pyspark.sql import functions as F
 
 from similarity_analysis_big_data_spark.operators.dedup import ppjoin_pairs
 

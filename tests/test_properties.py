@@ -408,6 +408,45 @@ def test_ann_dense_equals_hof(spark):
     assert dense == hof and dense
 
 
+def test_ann_zero_norm_vectors_match_oracle_under_both_strategies(
+    spark, sf_smoke, tmp_path
+):
+    """A zero-norm query (vec_id 0) and a zero-norm corpus vector (vec_id
+    7): every pair touching them scores NULL and ranks after every finite
+    score, ties by ascending id, so the zero-norm query still gets k rows.
+    The dense and fold strategies return the same rows as the oracle."""
+    import duckdb
+
+    from similarity_analysis_big_data_spark.plans.ann import ann_bruteforce_topk
+    from similarity_analysis_big_data_spark.plans.registry import QUERIES
+
+    from .oracle import compare
+
+    sf = str(tmp_path)
+    con = duckdb.connect()
+    con.execute(
+        "COPY (SELECT * REPLACE (CASE WHEN vec_id IN (0, 7) THEN "
+        "list_transform(embedding, x -> CAST(0 AS FLOAT)) ELSE embedding END "
+        f"AS embedding) FROM '{sf_smoke}/embeddings.parquet' WHERE vec_id < 120) "
+        f"TO '{sf}/embeddings.parquet' (FORMAT PARQUET)"
+    )
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'")
+    want = con.execute(QUERIES["ann_bruteforce_topk"].oracle).fetchdf()
+    con.close()
+    zero_q = want[want["query_id"] == 0]
+    assert list(zero_q.sort_values("rnk")["neighbor_id"]) == [1, 2, 3, 4, 5]
+    assert zero_q["cosine"].isna().all()
+
+    dense = ann_bruteforce_topk(spark, sf, strategy="dense")
+    hof = ann_bruteforce_topk(spark, sf, strategy="hof")
+    assert sorted(map(tuple, dense.collect()), key=repr) == sorted(
+        map(tuple, hof.collect()), key=repr
+    )
+    for strategy, df in (("dense", dense), ("hof", hof)):
+        ok, msg = compare(df, want)
+        assert ok, f"{strategy}: {msg}"
+
+
 def test_asof_cogroup_equals_window_form(spark):
     """The cogroup/merge_asof surface is extensionally equal to the
     union+window formulation (full-output consumption — no pruning)."""
