@@ -68,9 +68,7 @@ def minhash_expr(hash_col: Column | str, i: int) -> Column:
 def rolling_fingerprint(text: Column | str) -> Column:
     """Polynomial rolling hash of a string's characters mod MERSENNE_P.
 
-    DuckDB twin:
-    ``list_reduce(list_prepend(0, list_transform(string_split(x, ''),
-    c -> ascii(c))), (a, b) -> (a * 31 + b) % 1000000007)``.
+    DuckDB twin: ``ROLLING_FP_SQL`` (NULL text -> NULL on both).
     Character-level, JVM-side (no UDF): ``aggregate`` folds the split array
     inside whole-stage codegen.
     """
@@ -82,7 +80,9 @@ def rolling_fingerprint(text: Column | str) -> Column:
     )
 
 
+# NULL text has no fingerprint: list_prepend(0, NULL) would fold to 0.
 ROLLING_FP_SQL = (
+    "CASE WHEN {expr} IS NOT NULL THEN "
     "list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split({expr}, ''), "
-    "c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007)"
+    "c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) END"
 )

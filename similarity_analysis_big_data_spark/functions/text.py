@@ -18,16 +18,9 @@ from pyspark.sql import functions as F
 # the (?U) UNICODE_CHARACTER_CLASS flag for parity (FIXTURES.md §C).
 CLEANUP_PATTERN = r"(?U)(\d|\W)+"
 # The reference's tokenizer split pattern (lab2.py:159): non-word runs.
-#
-# ORACLE-PARITY PRECONDITION (ADVICE r1): the DuckDB oracle SQL fragments
-# tokenize with RE2 ``[^\w]+`` whose \w is ASCII-only, while (?U)\w here is
-# Unicode-aware. The two agree exactly on ASCII corpora — which the
-# ``documents`` fixture is (verified: 0 non-ASCII rows) — but an accented/
-# CJK corpus would tokenize differently on the two engines. The (?U) side is
-# the REFERENCE-faithful one (Python re is Unicode); if you need oracle
-# parity on non-ASCII data, pass an explicit ASCII pattern
-# ``[^0-9A-Za-z_]+`` to both engines instead.
 TOKEN_SPLIT_PATTERN = r"(?U)[^\w]+"
+# Sentence boundaries: runs of terminal punctuation (both engines).
+SENTENCE_SPLIT_PATTERN = r"[.!?]+"
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -53,6 +46,35 @@ def tokenize(col: Column | str, count_empty_tokens: bool = False) -> Column:
     if count_empty_tokens:
         return tokens
     return F.filter(tokens, lambda t: F.length(t) > 0)
+
+
+def words(col: Column | str) -> Column:
+    """The engine's word tokens: the lowercased text split on non-word
+    runs, empty strings dropped (NULL text -> NULL array). Every text
+    family (TF-IDF, MinHash/LSH dedup, text and LM statistics) builds on
+    this one rule; ``words_sql`` is its DuckDB rendering.
+
+    ORACLE-PARITY PRECONDITION: (?U)\\w here is Unicode-aware while the
+    DuckDB side's RE2 ``[^\\w]+`` is ASCII-only. The two agree exactly on
+    ASCII text, which the ``documents`` fixture is (0 non-ASCII rows at
+    every size, asserted in tests/test_properties.py); an accented or CJK
+    corpus would tokenize differently on the two engines. The (?U) side is
+    the reference-faithful one (Python re is Unicode).
+    """
+    return tokenize(F.lower(col))
+
+
+def words_sql(expr: str = "text") -> str:
+    """The DuckDB rendering of ``words`` for oracle construction (same
+    ASCII precondition)."""
+    return rf"list_filter(regexp_split_to_array(lower({expr}), '[^\w]+'), x -> x <> '')"
+
+
+def array_join_sql(list_expr: str, sep: str) -> str:
+    """The DuckDB rendering of ``F.array_join``: DuckDB 1.0's
+    ``array_to_string`` gives NULL for an empty list where Spark gives
+    ``''``; a NULL list stays NULL on both."""
+    return f"CASE WHEN len({list_expr}) = 0 THEN '' ELSE array_to_string({list_expr}, '{sep}') END"
 
 
 def remove_stopwords(tokens: Column | str, stopwords: list[str]) -> Column:

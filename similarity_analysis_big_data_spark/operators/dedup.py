@@ -36,7 +36,7 @@ from ..functions.hashing import (
     md5_long,
     minhash_expr,
 )
-from ..functions.text import tokenize
+from ..functions.text import array_join_sql, words
 
 
 def exact_dedup_groups(docs: DataFrame, id_col: str, content_col: str) -> DataFrame:
@@ -55,6 +55,12 @@ def exact_dedup_groups(docs: DataFrame, id_col: str, content_col: str) -> DataFr
 def canonical_fingerprint(tokens_col) -> "F.Column":
     """Order/multiplicity-insensitive content key: sorted distinct tokens."""
     return F.md5(F.array_join(F.array_sort(F.array_distinct(tokens_col)), " "))
+
+
+def canonical_fingerprint_sql(expr: str) -> str:
+    """The DuckDB rendering of ``canonical_fingerprint``: the empty token
+    set has a fingerprint (md5 of ''); a NULL token array has none."""
+    return f"md5({array_join_sql(f'list_sort(list_distinct({expr}))', ' ')})"
 
 
 def minhash_signatures(
@@ -284,7 +290,7 @@ def near_dup_pairs(
     Callers that read the returned pairs more than once materialize
     them themselves (near_dup_cluster_stats)."""
     toksets = docs.select(
-        id_col, F.array_distinct(tokenize(F.lower(text_col))).alias("toks")
+        id_col, F.array_distinct(words(text_col)).alias("toks")
     ).localCheckpoint(eager=True)
     shingles = toksets.select(id_col, F.explode("toks").alias("shingle"))
     cand = lsh_candidate_pairs(minhash_signatures(shingles, id_col), id_col)

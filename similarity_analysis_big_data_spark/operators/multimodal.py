@@ -76,6 +76,11 @@ def extract_features(payloads: DataFrame) -> DataFrame:
             n_bytes, headers, feats = [], [], []
             for buf in payloads_col:
                 raw = buf.as_py()
+                if raw is None:  # NULL payload -> all-NULL feature row
+                    n_bytes.append(None)
+                    headers.append(None)
+                    feats.append(None)
+                    continue
                 n_bytes.append(len(raw))
                 headers.append(raw[:4].hex())
                 pixels = _np.frombuffer(
@@ -127,7 +132,7 @@ def resize_images(payloads: DataFrame, width: int, height: int) -> DataFrame:
                     {
                         "doc_id": batch["doc_id"],
                         "payload": batch["payload"].map(
-                            lambda b: _fake_resize(bytes(b))
+                            lambda b: None if b is None else _fake_resize(bytes(b))
                         ),
                         "width": width,
                         "height": height,
@@ -151,6 +156,8 @@ def sample_frames(payloads: DataFrame, frame_bytes: int = 16, every_n: int = 4) 
         for batch in batches:
             rows = []
             for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
+                if payload is None:  # NULL payload -> no frames
+                    continue
                 raw = bytes(payload)
                 chunks = [
                     raw[i : i + frame_bytes] for i in range(0, len(raw), frame_bytes)
@@ -213,7 +220,9 @@ def perceptual_dhash(payloads: DataFrame) -> DataFrame:
         for batch in batches:
             if not len(batch):
                 continue
-            raws = [bytes(p) for p in batch["payload"]]
+            # NULL payload -> NULL phash
+            present = batch["payload"].notna().to_numpy()
+            raws = [bytes(p) for p in batch["payload"][present]]
             for raw in raws:
                 if len(raw) != rows * cols:
                     raise ValueError(
@@ -223,11 +232,10 @@ def perceptual_dhash(payloads: DataFrame) -> DataFrame:
             px = _np.frombuffer(b"".join(raws), dtype=_np.uint8).reshape(
                 len(raws), rows, cols
             )
-            bits = (px[:, :, :-1] > px[:, :, 1:]).reshape(len(raws), -1)
-            hashes = bits.astype(_np.int64) @ weights
-            yield _pd.DataFrame(
-                {"doc_id": batch["doc_id"], "phash": _pd.Series(hashes, dtype="int64")}
-            )
+            bits = (px[:, :, :-1] > px[:, :, 1:]).reshape(len(raws), rows * (cols - 1))
+            phash = _pd.Series(_pd.NA, index=batch.index, dtype="Int64")
+            phash[present] = bits.astype(_np.int64) @ weights
+            yield _pd.DataFrame({"doc_id": batch["doc_id"], "phash": phash})
 
     return payloads.mapInPandas(gen, schema=PHASH_SCHEMA)
 

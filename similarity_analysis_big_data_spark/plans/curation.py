@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long_sql
-from ..functions.text import tokenize, with_word_ngrams
+from ..functions.text import with_word_ngrams, words, words_sql
 from ..sources.readers import load_table
 from .dedup import SQL_PPJOIN_QUALIFIED
 from .registry import register
@@ -30,10 +30,10 @@ PACK_BUDGET = 512  # tokens per training batch
 EVAL_MOD = 97  # doc_id % EVAL_MOD == 0 -> held-out eval set
 CONTAM_NGRAM = 8  # verbatim window length for contamination
 
-_SQL_TOKS = r"""
+_SQL_TOKS = rf"""
 WITH toks AS (
     SELECT doc_id, lang,
-           list_filter(regexp_split_to_array(lower(text), '[^\w]+'), x -> x <> '') AS tokens
+           {words_sql()} AS tokens
     FROM documents
 )
 """
@@ -63,7 +63,7 @@ def chunk_documents_stride(spark: SparkSession, sf_dir: str) -> DataFrame:
     inline) — no shuffle at all; output partitioning inherits the scan.
     The overlap means ~1.33x row amplification, all map-side."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokenize(F.lower("text")).alias("tokens")).filter(
+    toks = docs.select("doc_id", words("text").alias("tokens")).filter(
         F.size("tokens") > 0
     )
     return toks.select(
@@ -116,7 +116,7 @@ def pack_docs_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = docs.select(
         "doc_id",
         "lang",
-        F.size(tokenize(F.lower("text"))).cast("long").alias("n_tokens"),
+        F.size(words("text")).cast("long").alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("shuffle_key"),
     )
     w = (
@@ -168,7 +168,7 @@ def decontaminate_against_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     follows. At 100 TB the eval set is a fixed artifact: build its window
     index once and reuse it across corpus versions."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokenize(F.lower("text")).alias("tokens"))
+    toks = docs.select("doc_id", words("text").alias("tokens"))
     win = (
         with_word_ngrams(
             toks.filter(F.size("tokens") >= CONTAM_NGRAM), "tokens", CONTAM_NGRAM, "_g"
@@ -301,7 +301,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = (
-        docs.select("doc_id", "lang", tokenize(F.lower("text")).alias("tokens"))
+        docs.select("doc_id", "lang", words("text").alias("tokens"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # Materialize the cache BEFORE the three branches consume it: inside a

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long, md5_long_sql
-from ..functions.text import tokenize
+from ..functions.text import array_join_sql, words, words_sql
 from ..operators.linalg import (
     covariance_from_stats,
     embedding_sufficient_stats,
@@ -160,8 +160,7 @@ CONTAIN_MOD = 5  # pairwise stage: 1-in-5 docs, as in plans/dedup.py
     oracle=rf"""
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '[^\w]+'),
-                               x -> x <> '') AS tokens
+                   {words_sql()} AS tokens
             FROM documents
         ),
         shingles AS (
@@ -197,7 +196,7 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % CONTAIN_MOD == 0
     )
     sh = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokenize(F.lower("text")))).alias("shingle")
+        "doc_id", F.explode(F.array_distinct(words("text"))).alias("shingle")
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.select(F.col("doc_id").alias("id_l"), "shingle")
@@ -479,39 +478,39 @@ def incremental_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "array_function_battery",
-    oracle=r"""
+    oracle=rf"""
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '[^\w]+'),
-                               x -> x <> '') AS tokens
+                   {words_sql()} AS tokens
             FROM documents
         )
         SELECT doc_id,
                CAST(len(tokens) AS BIGINT) AS n_tokens,
                CAST(len(list_distinct(tokens)) AS BIGINT) AS n_distinct,
-               array_to_string(list_sort(list_distinct(tokens))[1:3], ' ')
+               {array_join_sql("list_sort(list_distinct(tokens))[1:3]", " ")}
                    AS first3_sorted,
-               CAST(coalesce(list_position(tokens, 'the'), 0) AS BIGINT)
+               CAST(CASE WHEN tokens IS NOT NULL
+                         THEN coalesce(list_position(tokens, 'the'), 0) END AS BIGINT)
                    AS pos_the,
                CAST(list_contains(tokens, 'data') AS BIGINT) AS has_data,
                CAST(len(list_filter(tokens, x -> x <> 'the')) AS BIGINT)
                    AS n_without_the,
                CAST(list_aggregate(list_transform(tokens, x -> len(x)),
                                    'max') AS BIGINT) AS max_token_len,
-               array_to_string(list_reverse(tokens[1:3]), '|') AS rev_head
+               {array_join_sql("list_reverse(tokens[1:3])", "|")} AS rev_head
         FROM toks
     """,
     doc="[ext] §2.8 array-function battery: size / distinct / sort+slice / "
     "position (Spark's 0-on-missing vs DuckDB's NULL reconciled with "
-    "coalesce) / contains / filter / element max via transform / reverse — "
-    "one projection, bit-identical across engines.",
+    "coalesce on a non-NULL array) / contains / filter / element max via "
+    "transform / reverse — one projection, bit-identical across engines.",
 )
 def array_function_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: pure narrow projection inside whole-stage codegen — the
     whole battery is one scan, zero shuffles, no Python."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.array_distinct(tokenize(F.lower("text")))  # distinct for sort
-    raw = tokenize(F.lower("text"))
+    raw = words("text")
+    toks = F.array_distinct(raw)  # distinct for sort
     return docs.select(
         "doc_id",
         F.size(raw).cast("long").alias("n_tokens"),
@@ -775,14 +774,12 @@ def merge_upsert_customer_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "explode_variants_battery",
-    oracle=r"""
+    oracle=f"""
         WITH t AS (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '[^\w]+'),
-                               x -> len(x) > 12) AS long_toks
+            SELECT doc_id, list_filter({words_sql()}, x -> len(x) > 12) AS long_toks
             FROM documents
         ),
-        -- explode_outer: empty arrays keep their row with a NULL element;
+        -- explode_outer: empty or NULL arrays keep their row with a NULL element;
         -- DuckDB's unnest drops them, so union the empties back
         exploded AS (
             SELECT doc_id,
@@ -791,7 +788,7 @@ def merge_upsert_customer_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM t WHERE len(long_toks) > 0
             UNION ALL
             SELECT doc_id, NULL AS tok, NULL AS pos
-            FROM t WHERE len(long_toks) = 0
+            FROM t WHERE coalesce(len(long_toks), 0) = 0
         )
         SELECT doc_id,
                CAST(pos AS BIGINT) AS pos,
@@ -799,8 +796,8 @@ def merge_upsert_customer_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM exploded
     """,
     doc="[ext] U3 explode-variant semantics: posexplode_outer keeps a "
-    "(NULL, NULL) row for documents whose filtered token array is empty — "
-    "the row-preserving flatten an engine must offer so downstream "
+    "(NULL, NULL) row for documents whose filtered token array is empty "
+    "or NULL — the row-preserving flatten an engine must offer so downstream "
     "left-join accounting doesn't silently lose parents (DuckDB's unnest "
     "drops empties; the oracle unions them back).",
 )
@@ -810,7 +807,7 @@ def explode_variants_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
-        F.filter(tokenize(F.lower("text")), lambda x: F.length(x) > 12).alias("long_toks"),
+        F.filter(words("text"), lambda x: F.length(x) > 12).alias("long_toks"),
     )
     return t.select(
         "doc_id",

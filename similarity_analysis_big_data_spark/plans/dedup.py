@@ -24,10 +24,11 @@ from ..functions.hashing import (
     md5_long_sql,
     rolling_fingerprint,
 )
-from ..functions.text import tokenize, with_word_ngrams
+from ..functions.text import SENTENCE_SPLIT_PATTERN, with_word_ngrams, words, words_sql
 from ..operators.dedup import (
     NEAR_DUP_T,
     canonical_fingerprint,
+    canonical_fingerprint_sql,
     exact_dedup_groups,
     jaccard_pairs,
     lsh_candidate_pairs,
@@ -47,15 +48,10 @@ from .registry import register
 SAMPLE_MOD = 5  # pairwise queries: 1-in-5 docs
 
 # ---- shared SQL fragments -------------------------------------------------
-# NOTE: DuckDB's regexp engine (RE2) treats \w as ASCII-only while the Spark
-# side tokenizes with (?U)\w (Unicode). Parity holds because the documents
-# fixture is pure ASCII — see functions/text.py TOKEN_SPLIT_PATTERN for the
-# full precondition statement.
-
-_SQL_TOKS = r"""
+_SQL_TOKS = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(lower(text), '[^\w]+'), x -> x <> '') AS tokens
+           {words_sql()} AS tokens
     FROM documents
 )
 """
@@ -163,8 +159,8 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_canonical_tokenset",
     oracle=_SQL_TOKS
-    + """
-    SELECT md5(array_to_string(list_sort(list_distinct(tokens)), ' ')) AS digest,
+    + f"""
+    SELECT {canonical_fingerprint_sql("tokens")} AS digest,
            min(doc_id) AS keep_id,
            count(*) AS n_members
     FROM toks GROUP BY 1
@@ -174,7 +170,7 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_canonical_tokenset(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    fp = canonical_fingerprint(tokenize(F.lower("text")))
+    fp = canonical_fingerprint(words("text"))
     return (
         docs.select(fp.alias("digest"), "doc_id")
         .groupBy("digest")
@@ -195,7 +191,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets (boilerplate) are split by AQE skew-join."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % SAMPLE_MOD == 0)
     shingles = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokenize(F.lower("text")))).alias("shingle")
+        "doc_id", F.explode(F.array_distinct(words("text"))).alias("shingle")
     )
     sigs = minhash_signatures(shingles, "doc_id")
     return lsh_candidate_pairs(sigs, "doc_id")
@@ -435,7 +431,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % (SAMPLE_MOD * 2) == 0
     )
-    grams = with_word_ngrams(docs, tokenize(F.lower("text")), 3, "_g").select(
+    grams = with_word_ngrams(docs, words("text"), 3, "_g").select(
         "doc_id", F.explode("_g").alias("shingle")
     )
     pairs = jaccard_pairs(grams, "doc_id")
@@ -488,7 +484,7 @@ def weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % (SAMPLE_MOD * 2) == 0
     )
     tf = (
-        docs.select("doc_id", F.explode(tokenize(F.lower("text"))).alias("term"))
+        docs.select("doc_id", F.explode(words("text")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
@@ -588,7 +584,7 @@ def ppjoin_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compiled-Scala n-grams (r13): the interpreted transform/slice HOF was
     # 3.8 s of this relation's 4.3 s at sf0.1 — see with_word_ngrams
     grams = (
-        with_word_ngrams(docs, tokenize(F.lower("text")), PPJOIN_N, "_g")
+        with_word_ngrams(docs, words("text"), PPJOIN_N, "_g")
         .select("doc_id", F.explode(F.array_distinct("_g")).alias("shingle"))
         .localCheckpoint(eager=True)
     )
@@ -676,7 +672,7 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents").select(
-        "doc_id", tokenize(F.lower("text")).alias("tokens")
+        "doc_id", words("text").alias("tokens")
     )
 
 
@@ -945,7 +941,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.dedup.simhash_pairs)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % SAMPLE_MOD == 0)
     terms = docs.select(
-        "doc_id", F.explode(tokenize(F.lower("text"))).alias("term")
+        "doc_id", F.explode(words("text")).alias("term")
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count("*").cast("double").alias("weight"))
     sigs = simhash_signatures(tf, "doc_id")
@@ -1095,11 +1091,10 @@ def fuzzy_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "passage_dup_stats",
-    oracle=r"""
+    oracle=rf"""
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '[^\w]+'),
-                               x -> x <> '') AS tokens
+                   {words_sql()} AS tokens
             FROM documents
         ),
         win AS (
@@ -1133,7 +1128,7 @@ def passage_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     would bucket the window table by ``w`` and keep it as the reusable
     passage index."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokenize(F.lower("text")).alias("tokens"))
+    toks = docs.select("doc_id", words("text").alias("tokens"))
     win = (
         with_word_ngrams(toks.filter(F.size("tokens") >= 8), "tokens", 8, "_g")
         .select("doc_id", F.explode("_g").alias("gram"))
@@ -1158,11 +1153,11 @@ def passage_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_paragraphs_reassemble",
-    oracle=r"""
+    oracle=rf"""
         WITH sent AS (
             SELECT doc_id,
-                   trim(unnest(regexp_split_to_array(text, '[.!?]+'))) AS s,
-                   unnest(range(1, len(regexp_split_to_array(text, '[.!?]+')) + 1))
+                   trim(unnest(regexp_split_to_array(text, '{SENTENCE_SPLIT_PATTERN}'))) AS s,
+                   unnest(range(1, len(regexp_split_to_array(text, '{SENTENCE_SPLIT_PATTERN}')) + 1))
                        AS pos
             FROM documents
         ),
@@ -1199,7 +1194,7 @@ def dedup_paragraphs_reassemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sent = docs.select(
         "doc_id",
-        F.posexplode(F.split("text", r"[.!?]+")).alias("pos", "s_raw"),
+        F.posexplode(F.split("text", SENTENCE_SPLIT_PATTERN)).alias("pos", "s_raw"),
     ).select("doc_id", "pos", F.trim("s_raw").alias("s")).filter(F.col("s") != "")
     shared = sent.groupBy(F.lower("s").alias("key")).agg(
         F.countDistinct("doc_id").alias("nd")
@@ -1229,11 +1224,11 @@ def dedup_paragraphs_reassemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_intradoc_repeats_rewrite",
-    oracle=r"""
+    oracle=rf"""
         WITH sent AS (
             SELECT doc_id,
-                   trim(unnest(regexp_split_to_array(text, '[.!?]+'))) AS s,
-                   unnest(range(1, len(regexp_split_to_array(text, '[.!?]+')) + 1))
+                   trim(unnest(regexp_split_to_array(text, '{SENTENCE_SPLIT_PATTERN}'))) AS s,
+                   unnest(range(1, len(regexp_split_to_array(text, '{SENTENCE_SPLIT_PATTERN}')) + 1))
                        AS pos
             FROM documents
         ),
@@ -1274,7 +1269,7 @@ def dedup_intradoc_repeats_rewrite(spark: SparkSession, sf_dir: str) -> DataFram
     sent = (
         docs.select(
             "doc_id",
-            F.posexplode(F.split("text", r"[.!?]+")).alias("pos", "s_raw"),
+            F.posexplode(F.split("text", SENTENCE_SPLIT_PATTERN)).alias("pos", "s_raw"),
         )
         .select("doc_id", "pos", F.trim("s_raw").alias("s"))
         .filter(F.col("s") != "")
@@ -1369,7 +1364,7 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this replaced); first call 13.3 vs 12.8 s wall. The blocks
     # self-release with the plan, as in near_dup_pairs.
     toksets = docs.select(
-        "doc_id", F.array_distinct(tokenize(F.lower("text"))).alias("toks")
+        "doc_id", F.array_distinct(words("text")).alias("toks")
     ).localCheckpoint(eager=True)
     shingles = toksets.select("doc_id", F.explode("toks").alias("shingle"))
     sigs = minhash_signatures(shingles, "doc_id")
@@ -1811,7 +1806,7 @@ def incremental_near_dup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled = docs.filter(F.col("doc_id") % SAMPLE_MOD == 0)
     shingles = sampled.select(
         "doc_id",
-        F.explode(F.array_distinct(tokenize(F.lower("text")))).alias("shingle"),
+        F.explode(F.array_distinct(words("text"))).alias("shingle"),
     )
     banded = lsh_band_entries(minhash_signatures(shingles, "doc_id"), "doc_id")
     base = banded.filter(F.col("doc_id") % 10 == 0).withColumnRenamed(
@@ -1840,15 +1835,15 @@ def incremental_near_dup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_rate_by_source",
     oracle=_SQL_TOKS
-    + """
+    + f"""
     SELECT d.source,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(count(DISTINCT md5(d.text)) AS BIGINT) AS n_exact_distinct,
            round(1.0 - count(DISTINCT md5(d.text)) / CAST(count(*) AS DOUBLE), 6)
                AS exact_dup_rate,
-           CAST(count(DISTINCT md5(array_to_string(list_sort(list_distinct(t.tokens)), ' ')))
+           CAST(count(DISTINCT {canonical_fingerprint_sql("t.tokens")})
                 AS BIGINT) AS n_canonical_distinct,
-           round(1.0 - count(DISTINCT md5(array_to_string(list_sort(list_distinct(t.tokens)), ' ')))
+           round(1.0 - count(DISTINCT {canonical_fingerprint_sql("t.tokens")})
                        / CAST(count(*) AS DOUBLE), 6) AS canonical_dup_rate
     FROM documents d JOIN toks t USING (doc_id)
     GROUP BY d.source
@@ -1864,14 +1859,12 @@ def dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates over derived digests — the digests are map-side column
     math (md5, sorted distinct token fingerprint), so the shuffle moves
     (source, digest) pairs; swap approx_count_distinct at 100 TB."""
-    from ..operators.dedup import canonical_fingerprint
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         "source",
         F.md5("text").alias("digest"),
-        canonical_fingerprint(tokenize(F.lower("text"))).alias("canon"),
+        canonical_fingerprint(words("text")).alias("canon"),
     )
     return toks.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -1931,7 +1924,7 @@ def lsh_recall_by_jaccard_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shingles = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(tokenize(F.lower("text")))).alias("shingle"),
+        F.explode(F.array_distinct(words("text"))).alias("shingle"),
     )
     truth = jaccard_pairs(shingles, "doc_id", assume_distinct=True).filter(
         F.col("jaccard") >= 0.1

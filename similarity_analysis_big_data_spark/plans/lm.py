@@ -27,19 +27,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long_sql
-from ..functions.text import tokenize, with_word_ngrams
+from ..functions.text import with_word_ngrams, words, words_sql
 from ..functions.vectors import cosine_similarity, cosine_sql
 from ..operators.rank import bucketed_row_number, ntile_from_rank
 from ..operators.topk import global_top_n
 from ..sources.readers import load_table, local_relation
 from .registry import register
 
-# Shared oracle CTE: identical tokenization to functions/text.py (ASCII
-# corpus precondition documented there).
-_SQL_TERMS = r"""
+# Shared oracle CTE: the corpus as words_sql tokens and long-format terms.
+_SQL_TERMS = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(lower(text), '[^\w]+'), x -> x <> '') AS tokens
+           {words_sql()} AS tokens
     FROM documents
 ),
 terms AS (
@@ -51,7 +50,7 @@ terms AS (
 def _doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select("doc_id", tokenize(F.lower("text")).alias("tokens"))
+        docs.select("doc_id", words("text").alias("tokens"))
         .select("doc_id", F.explode("tokens").alias("term"))
     )
 
@@ -105,10 +104,10 @@ def unigram_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Bigrams as 'w1 w2' strings: tokens never contain spaces (split on \W+),
 # so split_part round-trips w1 exactly on both engines.
-_SQL_BIGRAMS = r"""
+_SQL_BIGRAMS = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(lower(text), '[^\w]+'), x -> x <> '') AS tokens
+           {words_sql()} AS tokens
     FROM documents
 ),
 bigs AS (
@@ -148,7 +147,7 @@ def bigram_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-back shape as the unigram query. The model relation is
     |distinct bigrams| — still vocabulary-scaled, not corpus-scaled."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokenize(F.lower("text")).alias("tokens"))
+    toks = docs.select("doc_id", words("text").alias("tokens"))
     # tokens[i] is 0-based in Spark SQL; guard size<2 (Spark's sequence(1,0)
     # would DESCEND, not return empty). KEPT on the element-index
     # interpreted form (r13): unlike the slice-based gram builds (see
@@ -225,11 +224,10 @@ BM25_B = 0.75
 
 # BM25 scored relation (doc_id, score) as a DuckDB CTE prefix — shared by
 # the plain top-k ranking and the reciprocal-rank-fusion hybrid below.
-_SQL_BM25_SCORED = r"""
+_SQL_BM25_SCORED = rf"""
         WITH sized AS (
             SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '[^\w]+'),
-                               x -> x <> '') AS tokens
+                   {words_sql()} AS tokens
             FROM documents
         ),
         dl AS (
@@ -274,7 +272,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sized = docs.select(
         "doc_id",
-        tokenize(F.lower("text")).alias("tokens"),
+        words("text").alias("tokens"),
     ).select("doc_id", F.size("tokens").alias("dl"), "tokens")
     consts = sized.agg(
         F.count("*").alias("n_docs"), F.avg(F.col("dl").cast("double")).alias("avgdl")
@@ -469,7 +467,7 @@ def token_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     50-row heaps, no single-partition sort of the scored relation — with
     the rank window running on the 50 survivors only."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokenize(F.lower("text")).alias("tokens"))
+    toks = docs.select("doc_id", words("text").alias("tokens"))
     uni_counts = (
         toks.select(F.explode("tokens").alias("term"))
         .groupBy("term")
@@ -552,7 +550,7 @@ def bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded (|charset|^2) but the same shape stays safe for multi-char
     symbol alphabets where it is not."""
     docs = load_table(spark, sf_dir, "documents")
-    terms = docs.select(F.explode(tokenize(F.lower("text"))).alias("term"))
+    terms = docs.select(F.explode(words("text")).alias("term"))
     wf = terms.groupBy("term").agg(F.count("*").alias("w"))
     pairs = (
         wf.filter(F.length("term") >= 2)
@@ -671,7 +669,7 @@ def tokenize_corpus_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     terms = docs.select(
         "doc_id",
-        F.posexplode(tokenize(F.lower("text"))).alias("pos", "term"),
+        F.posexplode(words("text")).alias("pos", "term"),
     )
     counts = terms.groupBy("term").agg(F.count("*").alias("cf"))
     top = global_top_n(
@@ -766,7 +764,7 @@ def phrase_search_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's range()."""
     docs = load_table(spark, sf_dir, "documents")
     terms = docs.select(
-        "doc_id", F.posexplode(tokenize(F.lower("text"))).alias("pos0", "term")
+        "doc_id", F.posexplode(words("text")).alias("pos0", "term")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "term")
     a = terms.filter(F.col("term") == PHRASE[0]).select("doc_id", "pos")
     b = terms.filter(F.col("term") == PHRASE[1]).select(
@@ -787,11 +785,10 @@ LANG_TOP_TERMS = 5
 
 @register(
     "lang_distinctive_terms",
-    oracle=r"""
+    oracle=rf"""
         WITH toks AS (
             SELECT lang,
-                   list_filter(regexp_split_to_array(lower(text), '[^\w]+'),
-                               x -> x <> '') AS tokens
+                   {words_sql()} AS tokens
             FROM documents
         ),
         tf AS (
@@ -829,7 +826,7 @@ def lang_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized with a WindowGroupLimit finish."""
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select("lang", F.explode(tokenize(F.lower("text"))).alias("term"))
+        docs.select("lang", F.explode(words("text")).alias("term"))
         .groupBy("lang", "term")
         .agg(F.count("*").alias("tf"))
     )
@@ -912,7 +909,7 @@ def vocab_drift_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     terms = docs.select(
         (F.col("doc_id") % 2).alias("half"),
-        F.explode(tokenize(F.lower("text"))).alias("term"),
+        F.explode(words("text")).alias("term"),
     )
     counts = (
         terms.groupBy("term")
@@ -946,10 +943,10 @@ def vocab_drift_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
 # trigram stupid-backoff held-out scoring as a DuckDB CTE prefix ending in
 # the per-(doc, trigram) `scored` relation — shared by the per-doc score
 # query and the CCNet-style perplexity-tercile rollup below.
-_SQL_TRIGRAM_SCORED = r"""
+_SQL_TRIGRAM_SCORED = rf"""
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '[^\w]+'), x -> x <> '') AS tokens
+                   {words_sql()} AS tokens
             FROM documents
         ),
         tri AS (
@@ -1045,7 +1042,7 @@ def trigram_backoff_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior for the five join consumers and the N-total probe."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", tokenize(F.lower("text")).alias("tokens")
+        "doc_id", words("text").alias("tokens")
     )
 
     from ..functions.text import with_word_ngrams
@@ -1239,8 +1236,7 @@ DSIR_TARGET_LANG = "en"  # the target domain whose distribution we select FOR
     oracle=rf"""
         WITH toks AS (
             SELECT doc_id, lang,
-                   list_filter(regexp_split_to_array(lower(text), '[^\w]+'),
-                               x -> x <> '') AS tokens
+                   {words_sql()} AS tokens
             FROM documents
         ),
         feat AS (
@@ -1293,13 +1289,12 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hashing trick makes model width constant at 100 TB); the final
     score is one more per-doc agg. Nothing shuffles except by doc_id."""
     from ..functions.hashing import md5_long
-    from ..functions.text import tokenize
 
     docs = load_table(spark, sf_dir, "documents")
     feat = docs.select(
         "doc_id",
         "lang",
-        F.explode(tokenize(F.lower("text"))).alias("term"),
+        F.explode(words("text")).alias("term"),
     ).select(
         "doc_id", "lang", (md5_long("term") % FEATURE_HASH_DIM).alias("bucket")
     )
@@ -1395,7 +1390,7 @@ def bpe_train_apply_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     a map-only double replace re-entering as literals. K rounds = K
     vocab-sized passes — never a corpus rescan."""
     docs = load_table(spark, sf_dir, "documents")
-    terms = docs.select(F.explode(tokenize(F.lower("text"))).alias("term"))
+    terms = docs.select(F.explode(words("text")).alias("term"))
     wf = terms.groupBy("term").agg(F.count("*").alias("w"))
     seq = wf.select(
         "term",
@@ -1507,7 +1502,7 @@ def countmin_heavy_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import md5_long
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(tokenize(F.lower("text")).alias("tokens"))
+    toks = docs.select(words("text").alias("tokens"))
     # element-index bigram build kept (r13): see bigram_surprisal_scores —
     # the NGram convert measured SLOWER for this O(1)-per-element shape
     bigs = toks.select(

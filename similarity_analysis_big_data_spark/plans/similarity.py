@@ -13,11 +13,11 @@ arg-max so ranking ties break identically across engines (SURVEY §7).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..functions.text import tokenize
+from ..functions.text import words, words_sql
 from ..functions.tfidf import doc_frequency, l2_normalize, term_frequency, tfidf
 from ..operators.similarity import (
     DENSE_MAX_BROADCAST_CELLS,
@@ -76,14 +76,22 @@ def _auto_strategy_memo_put(key: tuple[str, str], verdict: str) -> None:
     _AUTO_STRATEGY_CACHE[key] = verdict
 
 
+def _title_words() -> Column:
+    """The synthetic title: a document's first TITLE_TOKENS words."""
+    return F.slice(words("text"), 1, TITLE_TOKENS)
+
+
+def _title_words_sql(expr: str = "text") -> str:
+    """The DuckDB rendering of ``_title_words``."""
+    return f"list_slice({words_sql(expr)}, 1, {TITLE_TOKENS})"
+
+
 # Shared DuckDB CTE prefix: long-format terms + TF + DF + corpus size.
-_SQL_TERMS = r"""
+_SQL_TERMS = f"""
 WITH terms AS (
     SELECT doc_id, t.term
-    FROM (SELECT doc_id, regexp_split_to_array(lower(text), '[^\w]+') AS toks
-          FROM documents),
+    FROM (SELECT doc_id, {words_sql()} AS toks FROM documents),
          unnest(toks) AS t(term)
-    WHERE t.term <> ''
 ),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY doc_id, term),
 df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
@@ -95,9 +103,7 @@ _SQL_TITLE_PIPELINE = (
     + rf""",
 title_terms AS (
     SELECT doc_id AS title_id, t.term
-    FROM (SELECT doc_id,
-                 list_slice(list_filter(regexp_split_to_array(lower(text), '[^\w]+'),
-                                        x -> x <> ''), 1, {TITLE_TOKENS}) AS toks
+    FROM (SELECT doc_id, {_title_words_sql()} AS toks
           FROM documents
           WHERE doc_id % {TITLE_SAMPLE_MOD} = 0),
          unnest(toks) AS t(term)
@@ -149,15 +155,16 @@ best AS (
 
 def _doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", F.explode(tokenize(F.lower("text"))).alias("term"))
+    return docs.select("doc_id", F.explode(words("text")).alias("term"))
 
 
 def _title_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % TITLE_SAMPLE_MOD == 0
     )
-    toks = F.slice(tokenize(F.lower("text")), 1, TITLE_TOKENS)
-    return docs.select(F.col("doc_id").alias("title_id"), F.explode(toks).alias("term"))
+    return docs.select(
+        F.col("doc_id").alias("title_id"), F.explode(_title_words()).alias("term")
+    )
 
 
 @register(
@@ -312,7 +319,7 @@ def title_best_abstract(
         # so only "sparse" is memoized here.
         v_lb = (
             docs.filter(F.col("doc_id") < 512)
-            .select(F.explode(tokenize(F.lower("text"))).alias("term"))
+            .select(F.explode(words("text")).alias("term"))
             .agg(F.count_distinct("term").alias("v_lb"))
             .collect()[0]["v_lb"]
         )
@@ -463,13 +470,11 @@ def title_retrieval_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CATEGORY = r"""
+_SQL_CATEGORY = f"""
 WITH terms AS (
     SELECT lang AS category, t.term
-    FROM (SELECT lang, regexp_split_to_array(lower(text), '[^\w]+') AS toks
-          FROM documents),
+    FROM (SELECT lang, {words_sql()} AS toks FROM documents),
          unnest(toks) AS t(term)
-    WHERE t.term <> ''
 ),
 tfc AS (SELECT category, term, CAST(count(*) AS DOUBLE) AS w FROM terms GROUP BY category, term),
 vec AS (
@@ -505,7 +510,7 @@ def category_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-normalized, dense self all-pairs via the sparse join."""
     docs = load_table(spark, sf_dir, "documents")
     cat_terms = docs.select(
-        F.col("lang").alias("category"), F.explode(tokenize(F.lower("text"))).alias("term")
+        F.col("lang").alias("category"), F.explode(words("text")).alias("term")
     )
     cat_tf = cat_terms.groupBy("category", "term").agg(
         F.count("*").cast("double").alias("weight")
@@ -547,9 +552,7 @@ def category_matrix_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY title_id LIMIT 5
     )
     SELECT m.title_id, m.best_abstract_id, m.cosine,
-           array_to_string(list_slice(list_filter(
-               regexp_split_to_array(lower(t.text), '[^\\w]+'), x -> x <> ''),
-               1, {TITLE_TOKENS}), ' ') AS title_text,
+           array_to_string({_title_words_sql("t.text")}, ' ') AS title_text,
            substr(w.text, 1, 60) AS wrong_abstract_prefix,
            substr(t.text, 1, 60) AS correct_abstract_prefix
     FROM mism m
@@ -571,9 +574,7 @@ def mismatch_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("title_id")
         .limit(5)
     )
-    title_text = F.array_join(
-        F.slice(tokenize(F.lower("text")), 1, TITLE_TOKENS), " "
-    )
+    title_text = F.array_join(_title_words(), " ")
     t = docs.select(
         F.col("doc_id").alias("title_id"),
         title_text.alias("title_text"),

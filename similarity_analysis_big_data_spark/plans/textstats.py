@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.text import tokenize
+from ..functions.text import SENTENCE_SPLIT_PATTERN, words, words_sql
 from ..functions.timeutil import micros_between
 from ..sources.readers import load_table, local_relation
 from .registry import register
@@ -71,10 +71,10 @@ def _marker_score_sql(markers: list[str]) -> str:
     )
 
 
-_SQL_TOKS = r"""
+_SQL_TOKS = rf"""
 WITH toks AS (
     SELECT doc_id, lang, source, text, n_chars,
-           list_filter(regexp_split_to_array(lower(text), '[^\w]+'), x -> x <> '') AS tokens
+           {words_sql()} AS tokens
     FROM documents
 )
 """
@@ -97,7 +97,7 @@ def lang_id_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     column expression over the token array; no shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.col("lang").alias("actual_lang"), tokenize(F.lower("text")).alias("tokens")
+        "doc_id", F.col("lang").alias("actual_lang"), words("text").alias("tokens")
     )
     cols = [
         _marker_score("tokens", markers).alias(f"score_{lang}")
@@ -143,7 +143,7 @@ _QUALITY_FEATURES_SELECT = f"""
 )
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", "text", tokenize(F.lower("text")).alias("tokens"))
+    toks = docs.select("doc_id", "text", words("text").alias("tokens"))
     n = F.size("tokens")
     stop_arr = F.array(*[F.lit(w) for w in STOPWORDS_EN])
     total_len = F.aggregate(
@@ -286,7 +286,7 @@ def salted_heavy_hitter_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import salted_aggregate
 
     docs = load_table(spark, sf_dir, "documents")
-    terms = docs.select(F.explode(tokenize(F.lower("text"))).alias("term"))
+    terms = docs.select(F.explode(words("text")).alias("term"))
     counts = salted_aggregate(
         terms,
         ["term"],
@@ -346,7 +346,7 @@ def training_corpus_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass needs anyway); the quality predicates are narrow column math
     evaluated in the same stage — no extra pass over the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.withColumn("tokens", tokenize(F.lower("text")))
+    toks = docs.withColumn("tokens", words("text"))
     w = W.partitionBy(F.md5("text"))
     n = F.size("tokens")
     uniq_ratio = F.size(F.array_distinct("tokens")).cast("double") / n
@@ -394,11 +394,10 @@ def zscore_doclen_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "top_trigrams_per_lang",
-    oracle=r"""
+    oracle=rf"""
         WITH toks AS (
             SELECT doc_id, lang,
-                   list_filter(regexp_split_to_array(lower(text), '[^\w]+'),
-                               x -> x <> '') AS tokens
+                   {words_sql()} AS tokens
             FROM documents
         ),
         pos AS (
@@ -435,7 +434,7 @@ def top_trigrams_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import with_word_ngrams
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = with_word_ngrams(docs, tokenize(F.lower(F.col("text"))), 3, "_g").select(
+    grams = with_word_ngrams(docs, words("text"), 3, "_g").select(
         "lang", F.explode("_g").alias("trigram")
     )
     counted = grams.groupBy("lang", "trigram").agg(
@@ -450,11 +449,10 @@ def top_trigrams_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "gopher_repetition_metrics",
-    oracle=r"""
+    oracle=rf"""
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '[^\w]+'),
-                               x -> x <> '') AS tokens
+                   {words_sql()} AS tokens
             FROM documents
         ),
         uni AS (
@@ -509,7 +507,7 @@ def gopher_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import with_word_ngrams
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokenize(F.lower("text")).alias("tokens"))
+    toks = docs.select("doc_id", words("text").alias("tokens"))
 
     def frac(grams, agg_expr, out):
         per_gram = grams.groupBy("doc_id", "g").agg(F.count("*").alias("c"))
@@ -721,13 +719,12 @@ def user_event_chisq_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "readability_scores",
-    oracle=r"""
+    oracle=rf"""
         WITH feats AS (
             SELECT doc_id,
-                   greatest(len(list_filter(regexp_split_to_array(text, '[.!?]+'),
+                   greatest(len(list_filter(regexp_split_to_array(text, '{SENTENCE_SPLIT_PATTERN}'),
                                             s -> trim(s) <> '')), 1) AS n_sents,
-                   greatest(len(list_filter(regexp_split_to_array(lower(text), '[^\w]+'),
-                                            x -> x <> '')), 1) AS n_words,
+                   greatest(len({words_sql()}), 1) AS n_words,
                    greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')), 1)
                        AS n_syll
             FROM documents
@@ -752,10 +749,10 @@ def readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate empty-document divisions identically on both engines."""
     docs = load_table(spark, sf_dir, "documents")
     n_sents = F.greatest(
-        F.size(F.filter(F.split("text", r"[.!?]+"), lambda s: F.trim(s) != "")),
+        F.size(F.filter(F.split("text", SENTENCE_SPLIT_PATTERN), lambda s: F.trim(s) != "")),
         F.lit(1),
     )
-    n_words = F.greatest(F.size(tokenize(F.lower("text"))), F.lit(1))
+    n_words = F.greatest(F.size(words("text")), F.lit(1))
     n_syll = F.greatest(
         F.size(F.regexp_extract_all(F.lower("text"), F.lit("[aeiouy]+"), 0)), F.lit(1)
     )
@@ -901,7 +898,7 @@ def vocab_richness_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-source vocabulary relation; the richness stats are a second
     source-keyed agg over that — corpus touched once."""
     docs = load_table(spark, sf_dir, "documents")
-    terms = docs.select("source", F.explode(tokenize(F.lower("text"))).alias("term"))
+    terms = docs.select("source", F.explode(words("text")).alias("term"))
     counts = terms.groupBy("source", "term").agg(F.count("*").alias("c"))
     return counts.groupBy("source").agg(
         F.sum("c").alias("n_tokens"),
@@ -991,7 +988,7 @@ def zipf_fit_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     built-in regr_slope/regr_r2 aggregate — no driver math, no second
     corpus pass."""
     toks = load_table(spark, sf_dir, "documents").select(
-        "source", tokenize(F.lower("text")).alias("tokens")
+        "source", words("text").alias("tokens")
     )
     counts = (
         toks.select("source", F.explode("tokens").alias("term"))
@@ -1054,7 +1051,7 @@ def ngram_novelty_vs_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id aggregate."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", tokenize(F.lower("text")).alias("tokens")
+        "doc_id", words("text").alias("tokens")
     )
     # element-index trigram build kept (r13): the compiled-NGram convert
     # measured SLOWER here (0.92-0.94 s vs 1.15-1.33 s fresh-process A/B)
@@ -1127,7 +1124,7 @@ def dataset_card_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "source",
         "n_chars",
-        F.size(tokenize(F.lower("text"))).cast("long").alias("n_toks"),
+        F.size(words("text")).cast("long").alias("n_toks"),
         F.md5("text").alias("digest"),
     )
     top = (
@@ -1281,7 +1278,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-sized rows."""
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(tokenize(F.lower("text"))).alias("term"))
+        docs.select(F.explode(words("text")).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("c"))
     )

@@ -205,6 +205,40 @@ def test_only_local_relation_calls_create_dataframe():
     assert offenders == [], f"use sources.readers.local_relation: {offenders}"
 
 
+def _callee(call: ast.Call) -> str:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+
+
+def test_word_token_rule_is_stated_once():
+    """Guard: the word-token rule (lowercase, split on non-word runs, drop
+    empty strings) is ``words`` / ``words_sql`` in functions/text.py. A
+    hand-written ``tokenize(F.lower(...))`` call or a DuckDB
+    ``regexp_split_to_array(lower(`` string anywhere else in the package
+    would let the two engines' token sets drift apart."""
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "functions" / "text.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            spark_copy = (
+                isinstance(node, ast.Call)
+                and _callee(node) == "tokenize"
+                and node.args
+                and isinstance(node.args[0], ast.Call)
+                and _callee(node.args[0]) == "lower"
+            )
+            sql_copy = (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "regexp_split_to_array(lower(" in node.value
+            )
+            if spark_copy or sql_copy:
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert offenders == [], f"use functions.text.words / words_sql: {offenders}"
+
+
 def _unused_imports(path: pathlib.Path) -> list[tuple[int, str]]:
     """``(line, name)`` for every name ``path`` imports and never uses.
     ``__future__`` imports and ``# noqa: F401`` lines are exempt; a name
@@ -1223,6 +1257,27 @@ def test_perceptual_dhash_known_bitmaps_and_partition_invariance(spark):
         for r in perceptual_dhash(df.repartition(3)).collect()
     }
     assert many == rows  # batch-shape independence
+
+
+def test_multimodal_workers_null_payload_in_null_out(spark):
+    """A NULL payload gives a NULL feature row, a NULL resized payload, a
+    NULL phash and no frames; the non-NULL row beside it is unaffected."""
+    from similarity_analysis_big_data_spark.operators.multimodal import (
+        perceptual_dhash,
+        resize_images,
+        sample_frames,
+    )
+
+    df = spark.createDataFrame(
+        [(0, None), (1, bytearray(range(64)))], "doc_id long, payload binary"
+    )
+    feats = {r["doc_id"]: r for r in extract_features(df).collect()}
+    assert (feats[0]["n_bytes"], feats[0]["header"], feats[0]["feature"]) == (None, None, None)
+    assert feats[1]["n_bytes"] == 64
+    resized = {r["doc_id"]: r["payload"] for r in resize_images(df, 8, 4).collect()}
+    assert resized[0] is None and len(resized[1]) == 32
+    assert {r["doc_id"]: r["phash"] for r in perceptual_dhash(df).collect()} == {0: None, 1: 0}
+    assert {r["doc_id"] for r in sample_frames(df).collect()} == {1}
 
 
 def test_perceptual_dhash_rejects_non_bitmap_payloads(spark):

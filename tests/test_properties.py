@@ -9,6 +9,7 @@ is a full Spark job.
 from __future__ import annotations
 
 import math
+import pathlib
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -395,6 +396,105 @@ def test_near_dup_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case
             assert ok, f"{case}/{name}: {msg}"
     finally:
         spark.catalog.clearCache()
+
+
+# Degenerate texts on every tenth sf0.001 document: a NULL text, an empty
+# text and a punctuation-only text (no word tokens).
+_DEGENERATE_TEXT_SELECT = (
+    "SELECT * REPLACE (CASE doc_id % 10 WHEN 1 THEN NULL WHEN 2 THEN '' "
+    "WHEN 3 THEN '!!! ... ???' ELSE text END AS text) FROM docs"
+)
+# Queries whose edge result on such texts needs care on one engine:
+# DuckDB's NULL for an empty array_to_string and its NULL-list folds, and
+# the multimodal workers' NULL payloads.
+_DEGENERATE_TEXT_QUERIES = (
+    "array_function_battery",
+    "dedup_canonical_tokenset",
+    "doc_rolling_fingerprint",
+    "dup_rate_by_source",
+    "explode_variants_battery",
+    "multimodal_fake_features",
+    "multimodal_frame_sample",
+)
+_FIXTURE_SIZES = ("sf0.001", "sf0.01", "sf0.1")
+
+
+@pytest.fixture(scope="module")
+def degenerate_text_dir(sf_smoke, tmp_path_factory) -> str:
+    import duckdb
+
+    sf = str(tmp_path_factory.mktemp("degenerate_text"))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW docs AS SELECT * FROM '{sf_smoke}/documents.parquet'")
+    con.execute(f"COPY ({_DEGENERATE_TEXT_SELECT}) TO '{sf}/documents.parquet' (FORMAT PARQUET)")
+    con.close()
+    return sf
+
+
+@pytest.mark.parametrize("name", _DEGENERATE_TEXT_QUERIES)
+def test_degenerate_texts_match_oracle(spark, degenerate_text_dir, name):
+    """NULL and token-less texts give each query its oracle's edge result:
+    the empty token set has a fingerprint, an outer flatten keeps its
+    parent, and a NULL payload yields a NULL feature row and no frames."""
+    import duckdb
+
+    from similarity_analysis_big_data_spark.plans.registry import oracle_sql_map, query_map
+
+    from .oracle import compare
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{degenerate_text_dir}/documents.parquet'"
+    )
+    want = con.execute(oracle_sql_map()[name]).fetchdf()
+    con.close()
+    ok, msg = compare(query_map()[name](spark, degenerate_text_dir), want)
+    assert ok, f"{name}: {msg}"
+
+
+def _fixture_docs(sf_smoke: str, sf: str) -> str:
+    return str(pathlib.Path(sf_smoke).parent / sf / "documents.parquet")
+
+
+@pytest.mark.parametrize("sf", ("degenerate", *_FIXTURE_SIZES))
+def test_words_equals_words_sql(spark, sf_smoke, degenerate_text_dir, sf):
+    """The word-token rule gives the same token array on both engines,
+    row for row (NULL text -> NULL array, token-less text -> empty)."""
+    import duckdb
+
+    from similarity_analysis_big_data_spark.functions.text import words, words_sql
+
+    path = (
+        f"{degenerate_text_dir}/documents.parquet"
+        if sf == "degenerate"
+        else _fixture_docs(sf_smoke, sf)
+    )
+    got = {
+        r.doc_id: r.tokens
+        for r in spark.read.parquet(path).select("doc_id", words("text").alias("tokens")).collect()
+    }
+    con = duckdb.connect()
+    want = dict(con.execute(f"SELECT doc_id, {words_sql()} FROM '{path}'").fetchall())
+    con.close()
+    assert got == want
+    if sf == "degenerate":
+        assert all(got[i] is None for i in got if i % 10 == 1)
+        assert all(got[i] == [] for i in got if i % 10 in (2, 3))
+
+
+@pytest.mark.parametrize("sf", _FIXTURE_SIZES)
+def test_documents_fixture_is_ascii(sf_smoke, sf):
+    """The cross-engine precondition of ``words`` / ``words_sql``: (?U)\\w
+    and RE2's ASCII \\w split alike only on ASCII text."""
+    import duckdb
+
+    con = duckdb.connect()
+    (n,) = con.execute(
+        f"SELECT count(*) FROM '{_fixture_docs(sf_smoke, sf)}' "
+        "WHERE strlen(text) <> length(text)"
+    ).fetchone()
+    con.close()
+    assert n == 0
 
 
 def test_ann_dense_equals_hof(spark):
