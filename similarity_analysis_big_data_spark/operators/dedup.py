@@ -18,10 +18,17 @@ out by its smaller set and counts |set_l ∩ set_r|.
 ``threshold``) and ``ppjoin_pairs`` both call it; the all-pairs
 ``jaccard_pairs`` self-join is the candidate-free form.
 
+Exact-substring dedup (Lee et al. 2022) is the span mode: positioned
+``SUBSTRING_K``-grams -> occurrence-capped gram buckets -> diagonal runs ->
+maximal spans of >= ``SUBSTRING_MIN_SPAN`` tokens. The three constants
+are named once here, and the DuckDB twin (``substring_spans_sql``,
+``SUBSTRING_COVERAGE_SQL``, ``SUBSTRING_REWRITE_SQL``) sits beside the
+Spark kernel, so the registered oracles render from the same names.
+
 Scale notes: the LSH band join is the O(n²)-killer — candidate pairs come
 only from shared buckets. Hot buckets (boilerplate shingles) are the skew
-risk: AQE skew-join plus an optional per-bucket cap handle it. The exact
-modes are single hash aggregates.
+risk: AQE's skew join handles it. The exact modes are single hash
+aggregates.
 """
 
 from __future__ import annotations
@@ -36,7 +43,7 @@ from ..functions.hashing import (
     md5_long,
     minhash_expr,
 )
-from ..functions.text import array_join_sql, words
+from ..functions.text import array_join_sql, with_word_ngrams, words
 
 
 def exact_dedup_groups(docs: DataFrame, id_col: str, content_col: str) -> DataFrame:
@@ -98,9 +105,7 @@ def lsh_band_entries(signatures: DataFrame, id_col: str) -> DataFrame:
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, id_col: str, max_bucket_size: int | None = None
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame, id_col: str) -> DataFrame:
     """Band the signatures and self-join per band: (id_l, id_r) candidates.
 
     A pair collides if ALL rows of some band match (classic banding).
@@ -108,26 +113,12 @@ def lsh_candidate_pairs(
     (band, key) instead of LSH_BANDS separate joins; distinct() collapses
     pairs that collide in several bands.
 
-    ``max_bucket_size`` is the hot-bucket skew lever: a bucket of b docs
-    emits b·(b-1)/2 candidate pairs, so one boilerplate bucket of 10⁵
-    members is 5·10⁹ pairs on a single reducer. Capping drops the
-    OVERSIZED buckets entirely (one count aggregate over the band
-    relation — never the pair fan-out). The documented recall trade: a
-    pair whose every colliding band is oversized is missed; near-dups of
-    genuinely distinct content collide in some non-boilerplate band and
-    survive. None (the default) keeps exact banding semantics — the
-    oracle-checked queries use None; the cap is the 100 TB deployment
-    knob."""
+    Hot buckets: a bucket of b docs emits b·(b-1)/2 candidate pairs. A
+    per-bucket size cap was measured unnecessary on the near_dup ladder
+    (candidates grow ×1.99 per doubling, the largest bucket holds 665
+    docs) and would change declared results, so there is none: AQE's
+    skew join splits a hot bucket."""
     banded = lsh_band_entries(signatures, id_col)
-    if max_bucket_size is not None:
-        sizes = banded.groupBy("band", "key").agg(F.count("*").alias("_bsz"))
-        banded = (
-            banded.join(
-                sizes.filter(F.col("_bsz") <= max_bucket_size), ["band", "key"]
-            )
-            .drop("_bsz")
-        )
-
     lhs = banded.withColumnRenamed(id_col, "id_l")
     rhs = banded.withColumnRenamed(id_col, "id_r")
     return (
@@ -253,6 +244,12 @@ def jaccard_pairs(
 
 # The near-dup cutoff as an exact rational: J >= 1/2 at every near-dup site.
 NEAR_DUP_T = (1, 2)
+
+# Exact-substring dedup: gram length in tokens, the bucket cap on a gram's
+# occurrences, and the shortest duplicated span reported, in tokens.
+SUBSTRING_K = 8
+SUBSTRING_CAP = 64
+SUBSTRING_MIN_SPAN = 12
 
 
 def near_dup_pairs(
@@ -414,62 +411,27 @@ def simhash_banded_pairs(
     )
 
 
-def substring_span_pairs(
-    toks: DataFrame,
-    id_col: str = "doc_id",
-    k: int = 8,
-    cap: int = 64,
-    min_span: int = 12,
-) -> DataFrame:
-    """Exact-substring dedup (the sixth mode — Lee et al. 2022's substring
-    dedup, re-expressed hash-gram-first): every duplicated run of
-    ``>= min_span`` consecutive tokens shared by a doc pair becomes one
-    maximal span row ``(id_l, id_r, start_l, start_r, span_tokens)``.
+def _positioned_grams(toks: DataFrame, id_col: str, k: int) -> DataFrame:
+    """``(id_col, tokens)`` -> ``(id_col, pos, gram)``: every ``k``-token
+    gram with its 0-based start position; docs shorter than ``k`` have
+    none.
 
-    ``toks`` is ``(id_col, tokens array<string>)``. Positioned ``k``-grams
-    bucket by gram value in ONE wide shuffle (the suffix-array alternative:
-    hash buckets need no global order); each bucket emits its ordered doc
-    pairs JVM-side via higher-order transform/filter; runs of consecutive
-    matching grams on the same diagonal (pos_l - pos_r) merge
-    gaps-and-islands; a run of g grams is a span of g+k-1 tokens.
+    Compiled-Scala positioned k-grams (r13): the interpreted
+    transform/slice/array_join HOF was the dominant per-task cost of this
+    relation (same finding as ppjoin's gram build); NGram output is
+    position-ordered, so posexplode yields identical (pos, gram) rows."""
+    return with_word_ngrams(
+        toks.filter(F.size("tokens") >= k), "tokens", k, "_g"
+    ).select(id_col, F.posexplode("_g").alias("pos", "gram"))
 
-    ``cap`` is the hot-bucket skew lever (same contract as
-    ``lsh_candidate_pairs``'s max_bucket_size): a gram occurring n times
-    would emit O(n²) pairs on one reducer; buckets over ``cap``
-    occurrences are dropped entirely, which only suppresses
-    stopword-like grams whose spans the per-diagonal merge would
-    fragment anyway. Every stage past the gram shuffle is priced by
-    matched-pair volume, never corpus size.
-    """
-    from ..functions.text import with_word_ngrams
 
-    # compiled-Scala positioned k-grams (r13): the interpreted
-    # transform/slice/array_join HOF was the dominant per-task cost of
-    # this relation (same finding as ppjoin's gram build); NGram output
-    # is position-ordered, so posexplode yields identical (pos, gram) rows
-    sized = toks.filter(F.size("tokens") >= k)
-    grams = with_word_ngrams(sized, "tokens", k, "_g").select(
-        id_col, F.posexplode("_g").alias("pos", "gram")
-    )
-    buckets = (
-        grams.groupBy("gram")
-        .agg(
-            F.collect_list(
-                F.struct(F.col(id_col), F.col("pos").cast("long").alias("pos"))
-            ).alias("occs")
-        )
-        .filter(F.size("occs") <= cap)
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                f"flatten(transform(occs, a -> "
-                f"transform(filter(occs, b -> b.{id_col} > a.{id_col}), "
-                f"b -> struct(a.{id_col} AS id_l, b.{id_col} AS id_r, "
-                f"a.pos AS pos_l, a.pos - b.pos AS diag))))"
-            )
-        ).alias("p")
-    ).select("p.*")
+def _maximal_spans(pairs: DataFrame, k: int, min_span: int) -> DataFrame:
+    """Matching gram pairs ``(id_l, id_r, pos_l, diag)``, diag = pos_l -
+    pos_r -> maximal spans ``(id_l, id_r, start_l, start_r, span_tokens)``.
+
+    Runs of consecutive matching grams on the same diagonal merge
+    gaps-and-islands; a run of g grams is a span of g + k - 1 tokens, and
+    spans shorter than ``min_span`` tokens are dropped."""
     w = W.partitionBy("id_l", "id_r", "diag").orderBy("pos_l")
     islands = pairs.withColumn("isl", F.col("pos_l") - F.row_number().over(w))
     return (
@@ -489,29 +451,72 @@ def substring_span_pairs(
     )
 
 
-def substring_coverage(
+def substring_span_pairs(
     toks: DataFrame,
     id_col: str = "doc_id",
-    k: int = 8,
-    cap: int = 64,
-    min_span: int = 12,
+    k: int = SUBSTRING_K,
+    cap: int = SUBSTRING_CAP,
+    min_span: int = SUBSTRING_MIN_SPAN,
 ) -> DataFrame:
-    """Per-document duplicated-token coverage over ``substring_span_pairs``:
-    union the span intervals each doc participates in (either side of
-    every pair), merge overlapping intervals gaps-and-islands, and report
-    ``(doc_id, n_tokens, dup_tokens, dup_fraction)`` for every doc with at
-    least one token — docs with no duplicated span surface with coverage
-    0 via the left join, so the output audits the whole corpus.
+    """Exact-substring dedup (Lee et al. 2022's substring dedup,
+    re-expressed hash-gram-first): every duplicated run of ``>= min_span``
+    consecutive tokens shared by a doc pair becomes one maximal span row
+    ``(id_l, id_r, start_l, start_r, span_tokens)``, id_l < id_r.
+
+    ``toks`` is ``(id_col, tokens array<string>)``. Positioned ``k``-grams
+    bucket by gram value in ONE wide shuffle (the suffix-array alternative:
+    hash buckets need no global order); each bucket emits its ordered doc
+    pairs JVM-side via higher-order transform/filter; ``_maximal_spans``
+    merges them into spans.
+
+    ``cap`` is the hot-bucket skew lever: a gram occurring n times would
+    emit O(n²) pairs on one reducer; buckets over ``cap`` occurrences are
+    dropped entirely, which only suppresses stopword-like grams whose
+    spans the per-diagonal merge would fragment anyway. Every stage past
+    the gram shuffle is priced by matched-pair volume, never corpus size.
+    """
+    buckets = (
+        _positioned_grams(toks, id_col, k)
+        .groupBy("gram")
+        .agg(
+            F.collect_list(
+                F.struct(F.col(id_col), F.col("pos").cast("long").alias("pos"))
+            ).alias("occs")
+        )
+        .filter(F.size("occs") <= cap)
+    )
+    pairs = buckets.select(
+        F.explode(
+            F.expr(
+                f"flatten(transform(occs, a -> "
+                f"transform(filter(occs, b -> b.{id_col} > a.{id_col}), "
+                f"b -> struct(a.{id_col} AS id_l, b.{id_col} AS id_r, "
+                f"a.pos AS pos_l, a.pos - b.pos AS diag))))"
+            )
+        ).alias("p")
+    ).select("p.*")
+    return _maximal_spans(pairs, k, min_span)
+
+
+def substring_coverage(
+    toks: DataFrame, spans: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """Per-document duplicated-token coverage over the ``spans`` of
+    ``substring_span_pairs(toks)``: union the span intervals each doc
+    participates in (either side of every pair), merge overlapping
+    intervals gaps-and-islands, and report ``(doc_id, n_tokens,
+    dup_tokens, dup_fraction)`` for every doc with at least one token —
+    docs with no duplicated span surface with coverage 0 via the left
+    join, so the output audits the whole corpus.
 
     Scale: the interval union windows over doc_id with spans-per-doc
     cardinality; the final join back to per-doc token counts is
     key-grained.
     """
-    spans = substring_span_pairs(toks, id_col, k=k, cap=cap, min_span=min_span)
     # distinct: identical intervals (a doc sharing the same span with
     # several partners) carry no information for a union, and tied rows
-    # in the island windows are an engine-order hazard (see the oracle's
-    # iv CTE note in plans/dedup.py)
+    # in the island windows are an engine-order hazard (see the iv CTE
+    # note in SUBSTRING_COVERAGE_SQL)
     iv = (
         spans.select(
             F.col("id_l").alias(id_col),
@@ -553,25 +558,21 @@ def substring_coverage(
 
 
 def substring_dedup_rewrite(
-    toks: DataFrame,
-    id_col: str = "doc_id",
-    k: int = 8,
-    cap: int = 64,
-    min_span: int = 12,
+    toks: DataFrame, spans: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
-    """The removal half of exact-substring dedup (Lee et al. 2022): drop
-    every token position covered by a duplicated span on the doc's RIGHT
-    side (id_r — the higher id loses; the id_l copy is the surviving
-    first occurrence) and reassemble the remaining tokens in order.
-    Returns ``(id_col, n_tokens, kept_tokens, text_dedup)`` for every doc
-    with at least one token.
+    """The removal half of exact-substring dedup (Lee et al. 2022) over
+    the ``spans`` of ``substring_span_pairs(toks)``: drop every token
+    position covered by a duplicated span on the doc's RIGHT side (id_r —
+    the higher id loses; the id_l copy is the surviving first occurrence)
+    and reassemble the remaining tokens in order. Returns ``(id_col,
+    n_tokens, kept_tokens, text_dedup)`` for every doc with at least one
+    token.
 
     Scale: the removal intervals are span-volume-sized, group to one
     array row per AFFECTED doc, and join LEFT onto the corpus — the
     position filter is a JVM-side higher-order ``filter`` over each
     token array (no explode of the corpus, no per-position join).
     """
-    spans = substring_span_pairs(toks, id_col, k=k, cap=cap, min_span=min_span)
     rem = spans.select(
         F.col("id_r").alias(id_col),
         F.col("start_r").alias("s"),
@@ -598,9 +599,9 @@ def substring_span_pairs_delta(
     base_toks: DataFrame,
     delta_toks: DataFrame,
     id_col: str = "doc_id",
-    k: int = 8,
-    cap: int = 64,
-    min_span: int = 12,
+    k: int = SUBSTRING_K,
+    cap: int = SUBSTRING_CAP,
+    min_span: int = SUBSTRING_MIN_SPAN,
 ) -> DataFrame:
     """Incremental exact-substring dedup: spans shared between a DELTA
     batch and the BASE corpus only — the daily-crawl ingest shape, where
@@ -613,41 +614,166 @@ def substring_span_pairs_delta(
     hot-bucket lever as the batch operator — a boilerplate gram would
     fan every delta occurrence out by its full base posting list).
     """
-
-    def _grams(toks: DataFrame) -> DataFrame:
-        from ..functions.text import with_word_ngrams
-
-        return with_word_ngrams(
-            toks.filter(F.size("tokens") >= k), "tokens", k, "_g"
-        ).select(id_col, F.posexplode("_g").alias("pos", "gram"))
-
-    bg = _grams(base_toks)
+    bg = _positioned_grams(base_toks, id_col, k)
     occ = bg.groupBy("gram").agg(F.count("*").alias("_occ"))
     bcap = bg.join(occ.filter(F.col("_occ") <= cap), "gram").drop("_occ")
-    dg = _grams(delta_toks)
+    dg = _positioned_grams(delta_toks, id_col, k)
     pairs = dg.alias("d").join(bcap.alias("b"), "gram").select(
-        F.col(f"d.{id_col}").alias("id_delta"),
-        F.col(f"b.{id_col}").alias("id_base"),
-        F.col("d.pos").cast("long").alias("pos_d"),
+        F.col(f"d.{id_col}").alias("id_l"),
+        F.col(f"b.{id_col}").alias("id_r"),
+        F.col("d.pos").cast("long").alias("pos_l"),
         (F.col("d.pos") - F.col("b.pos")).cast("long").alias("diag"),
     )
-    w = W.partitionBy("id_delta", "id_base", "diag").orderBy("pos_d")
-    islands = pairs.withColumn("isl", F.col("pos_d") - F.row_number().over(w))
-    return (
-        islands.groupBy("id_delta", "id_base", "diag", "isl")
-        .agg(
-            F.min("pos_d").alias("start_delta"),
-            (F.count("*") + (k - 1)).alias("span_tokens"),
-        )
-        .filter(F.col("span_tokens") >= min_span)
-        .select(
-            "id_delta",
-            "id_base",
-            "start_delta",
-            (F.col("start_delta") - F.col("diag")).alias("start_base"),
-            "span_tokens",
-        )
+    return _maximal_spans(pairs, k, min_span).select(
+        F.col("id_l").alias("id_delta"),
+        F.col("id_r").alias("id_base"),
+        F.col("start_l").alias("start_delta"),
+        F.col("start_r").alias("start_base"),
+        "span_tokens",
     )
+
+
+def substring_spans_sql(
+    k: int = SUBSTRING_K,
+    cap: int = SUBSTRING_CAP,
+    min_span: int = SUBSTRING_MIN_SPAN,
+    delta: str | None = None,
+) -> str:
+    """The DuckDB twin of ``substring_span_pairs``: CTEs that continue a
+    WITH chain defining ``toks (doc_id, tokens)`` and end in ``spans
+    (id_l, id_r, start_l, start_r, span_tokens)``.
+
+    With ``delta``, a SQL predicate on ``doc_id`` that selects the delta
+    batch (the rest is the base), it is the twin of
+    ``substring_span_pairs_delta``: the cap counts base grams only, id_l /
+    start_l are the delta side, and the chain ends in ``delta_spans
+    (id_delta, id_base, start_delta, start_base, span_tokens)``."""
+    if delta is None:
+        base, probe, ordered = "grams", "capped", " AND l.doc_id < r.doc_id"
+    else:
+        base = f"(SELECT * FROM grams WHERE NOT ({delta}))"
+        probe, ordered = f"(SELECT * FROM grams WHERE {delta})", ""
+    sql = f""",
+    grams AS (
+        SELECT doc_id, CAST(p AS BIGINT) AS pos,
+               array_to_string(list_slice(tokens, p + 1, p + {k}), ' ') AS gram
+        FROM toks, unnest(range(0, greatest(len(tokens) - {k - 1}, 0))) AS r(p)
+    ),
+    capped AS (
+        SELECT doc_id, pos, gram FROM (
+            SELECT doc_id, pos, gram, count(*) OVER (PARTITION BY gram) AS occ
+            FROM {base}
+        ) WHERE occ <= {cap}
+    ),
+    pairs AS (
+        SELECT l.doc_id AS id_l, r.doc_id AS id_r,
+               l.pos AS pos_l, l.pos - r.pos AS diag
+        FROM {probe} l JOIN capped r ON l.gram = r.gram{ordered}
+    ),
+    islands AS (
+        SELECT id_l, id_r, diag, pos_l,
+               pos_l - row_number() OVER (PARTITION BY id_l, id_r, diag
+                                          ORDER BY pos_l) AS isl
+        FROM pairs
+    ),
+    spans AS (
+        SELECT id_l, id_r,
+               min(pos_l) AS start_l,
+               min(pos_l) - diag AS start_r,
+               count(*) + {k - 1} AS span_tokens
+        FROM islands
+        GROUP BY id_l, id_r, diag, isl
+        HAVING count(*) + {k - 1} >= {min_span}
+    )
+    """
+    if delta is not None:
+        sql += """,
+    delta_spans AS (
+        SELECT id_l AS id_delta, id_r AS id_base, start_l AS start_delta,
+               start_r AS start_base, span_tokens
+        FROM spans
+    )
+    """
+    return sql
+
+
+# The DuckDB twin of ``substring_coverage``: CTEs over ``toks`` and
+# ``spans`` (``substring_spans_sql``) ending in ``coverage (doc_id,
+# n_tokens, dup_tokens, dup_fraction)``.
+SUBSTRING_COVERAGE_SQL = """,
+    iv AS (
+        -- DISTINCT is load-bearing: duplicate intervals are tie rows in
+        -- the island windows below, and DuckDB evaluates new_isl and the
+        -- running sum as two separate window passes whose tie order can
+        -- disagree (observed: one island counted twice). Identical
+        -- intervals carry no information for a union, so drop them.
+        SELECT DISTINCT doc_id, s, e FROM (
+            SELECT id_l AS doc_id, start_l AS s, start_l + span_tokens AS e FROM spans
+            UNION ALL
+            SELECT id_r, start_r, start_r + span_tokens FROM spans
+        )
+    ),
+    flagged AS (
+        SELECT doc_id, s, e,
+               CASE WHEN max(e) OVER w_prev IS NULL
+                         OR s > max(e) OVER w_prev THEN 1 ELSE 0 END AS new_isl
+        FROM iv
+        WINDOW w_prev AS (PARTITION BY doc_id ORDER BY s, e
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+    ),
+    grp AS (
+        SELECT doc_id, s, e,
+               sum(new_isl) OVER (PARTITION BY doc_id ORDER BY s, e
+                                  ROWS UNBOUNDED PRECEDING) AS g
+        FROM flagged
+    ),
+    cov AS (
+        SELECT doc_id, CAST(sum(seg) AS BIGINT) AS dup_tokens FROM (
+            SELECT doc_id, g, max(e) - min(s) AS seg FROM grp GROUP BY doc_id, g
+        ) GROUP BY doc_id
+    ),
+    coverage AS (
+        SELECT t.doc_id,
+               CAST(len(t.tokens) AS BIGINT) AS n_tokens,
+               coalesce(c.dup_tokens, 0) AS dup_tokens,
+               round(CAST(coalesce(c.dup_tokens, 0) AS DOUBLE) / len(t.tokens), 6)
+                   AS dup_fraction
+        FROM toks t LEFT JOIN cov c USING (doc_id)
+        WHERE len(t.tokens) > 0
+    )
+    """
+
+# The DuckDB twin of ``substring_dedup_rewrite``: CTEs over ``toks`` and
+# ``spans`` ending in ``rewrite (doc_id, n_tokens, kept_tokens,
+# text_dedup)``.
+SUBSTRING_REWRITE_SQL = """,
+    rem AS (
+        SELECT DISTINCT id_r AS doc_id, start_r AS s, start_r + span_tokens AS e
+        FROM spans
+    ),
+    ivs AS (
+        SELECT doc_id, list(struct_pack(s := s, e := e)) AS arr
+        FROM rem GROUP BY doc_id
+    ),
+    pruned AS (
+        SELECT t.doc_id, t.tokens,
+               list_filter(t.tokens, (tok, pi) ->
+                   v.arr IS NULL OR
+                   len(list_filter(v.arr, iv -> pi - 1 >= iv.s AND pi - 1 < iv.e)) = 0
+               ) AS kept
+        FROM toks t LEFT JOIN ivs v USING (doc_id)
+        WHERE len(t.tokens) > 0
+    ),
+    rewrite AS (
+        SELECT doc_id,
+               CAST(len(tokens) AS BIGINT) AS n_tokens,
+               CAST(len(kept) AS BIGINT) AS kept_tokens,
+               -- coalesce: DuckDB's array_to_string on a fully-emptied list
+               -- yields NULL where Spark's array_join yields ''
+               coalesce(array_to_string(kept, ' '), '') AS text_dedup
+        FROM pruned
+    )
+    """
 
 
 def ppjoin_pairs(

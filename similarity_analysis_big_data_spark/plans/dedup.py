@@ -27,6 +27,11 @@ from ..functions.hashing import (
 from ..functions.text import SENTENCE_SPLIT_PATTERN, with_word_ngrams, words, words_sql
 from ..operators.dedup import (
     NEAR_DUP_T,
+    SUBSTRING_CAP,
+    SUBSTRING_COVERAGE_SQL,
+    SUBSTRING_K,
+    SUBSTRING_MIN_SPAN,
+    SUBSTRING_REWRITE_SQL,
     canonical_fingerprint,
     canonical_fingerprint_sql,
     exact_dedup_groups,
@@ -41,6 +46,7 @@ from ..operators.dedup import (
     substring_dedup_rewrite as substring_dedup_rewrite_op,
     substring_span_pairs,
     substring_span_pairs_delta,
+    substring_spans_sql,
 )
 from ..sources.readers import load_table
 from .registry import register
@@ -603,71 +609,13 @@ def ppjoin_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared CTE chain for the exact-substring family: tokens -> positioned
-# 8-grams -> occurrence-capped gram buckets -> diagonal pairs -> island
-# merge -> maximal spans of >= 12 tokens.
-_SQL_SUBSTRING_SPANS = (
-    _SQL_TOKS
-    + """,
-    grams AS (
-        SELECT doc_id, CAST(p AS BIGINT) AS pos,
-               array_to_string(list_slice(tokens, p + 1, p + 8), ' ') AS gram
-        FROM toks, unnest(range(0, greatest(len(tokens) - 7, 0))) AS r(p)
-    ),
-    capped AS (
-        SELECT doc_id, pos, gram FROM (
-            SELECT doc_id, pos, gram, count(*) OVER (PARTITION BY gram) AS occ
-            FROM grams
-        ) WHERE occ <= 64
-    ),
-    pairs AS (
-        SELECT l.doc_id AS id_l, r.doc_id AS id_r,
-               l.pos AS pos_l, l.pos - r.pos AS diag
-        FROM capped l JOIN capped r ON l.gram = r.gram AND l.doc_id < r.doc_id
-    ),
-    islands AS (
-        SELECT id_l, id_r, diag, pos_l,
-               pos_l - row_number() OVER (PARTITION BY id_l, id_r, diag
-                                          ORDER BY pos_l) AS isl
-    FROM pairs
-    ),
-    spans AS (
-        SELECT id_l, id_r,
-               min(pos_l) AS start_l,
-               min(pos_l) - diag AS start_r,
-               count(*) + 7 AS span_tokens
-        FROM islands
-        GROUP BY id_l, id_r, diag, isl
-        HAVING count(*) + 7 >= 12
-    )
-    """
-)
+# The exact-substring family's oracles render the operators' DuckDB twin
+# at the operators' constants (operators/dedup.py).
+_SQL_SUBSTRING_SPANS = _SQL_TOKS + substring_spans_sql()
 
-
-@register(
-    "exact_substring_spans",
-    oracle=_SQL_SUBSTRING_SPANS + "SELECT * FROM spans",
-    doc="[ext] EXACT-SUBSTRING dedup (the Lee et al. 2022 'deduplicating "
-    "training data' substring mode, re-expressed hash-gram-first): every "
-    "duplicated run of >= 12 consecutive tokens shared by a doc pair is "
-    "reported as a maximal span (start offset in both docs + token "
-    "length). 8-token grams join across docs; runs of consecutive "
-    "matching grams on the same diagonal (pos_l - pos_r) merge via "
-    "gaps-and-islands; a matched run of g grams is a span of g+7 tokens.",
-)
-def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: ONE wide shuffle on the gram key does all pair generation —
-    grams group into buckets (the suffix-array alternative: hash buckets
-    need no global order), each bucket emits its ordered doc pairs
-    JVM-side via higher-order transform/filter, and the 64-occurrence
-    bucket cap is the same hot-bucket lever as LSH max_bucket_size
-    (operators/dedup.py:108): a boilerplate gram in d docs would emit
-    d^2/2 pairs on one reducer; capped buckets drop stopword-like grams
-    whose spans the per-diagonal merge would fragment anyway. The island
-    merge windows over (id_l, id_r, diag) — partition count = matched
-    pair volume, never corpus size; the final agg rides the same
-    partitioning."""
-    return substring_span_pairs(_doc_tokens(spark, sf_dir))
+# incremental_substring_delta's delta batch, on both engines: one in ten
+# docs stands in for today's crawl.
+_SUBSTRING_DELTA = "doc_id % 10 = 7"
 
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -677,137 +625,75 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "exact_substring_spans",
+    oracle=_SQL_SUBSTRING_SPANS + "SELECT * FROM spans",
+    doc="[ext] EXACT-SUBSTRING dedup (the Lee et al. 2022 'deduplicating "
+    "training data' substring mode, re-expressed hash-gram-first): every "
+    f"duplicated run of >= SUBSTRING_MIN_SPAN ({SUBSTRING_MIN_SPAN}) "
+    "consecutive tokens shared by a doc pair is reported as a maximal span "
+    "(start offset in both docs + token length). SUBSTRING_K-token grams "
+    f"({SUBSTRING_K}) join across docs, grams occurring more than "
+    f"SUBSTRING_CAP ({SUBSTRING_CAP}) times are dropped; runs of "
+    "consecutive matching grams on the same diagonal (pos_l - pos_r) merge "
+    "via gaps-and-islands; a matched run of g grams is a span of "
+    "g + SUBSTRING_K - 1 tokens.",
+)
+def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scale: ONE wide shuffle on the gram key does all pair generation;
+    every later stage is priced by matched-pair volume, never corpus size
+    (``operators.dedup.substring_span_pairs``)."""
+    return substring_span_pairs(_doc_tokens(spark, sf_dir))
+
+
+@register(
     "substring_dup_coverage",
-    oracle=_SQL_SUBSTRING_SPANS
-    + """,
-    iv AS (
-        -- DISTINCT is load-bearing: duplicate intervals are tie rows in
-        -- the island windows below, and DuckDB evaluates new_isl and the
-        -- running sum as two separate window passes whose tie order can
-        -- disagree (observed: one island counted twice). Identical
-        -- intervals carry no information for a union, so drop them.
-        SELECT DISTINCT doc_id, s, e FROM (
-            SELECT id_l AS doc_id, start_l AS s, start_l + span_tokens AS e FROM spans
-            UNION ALL
-            SELECT id_r, start_r, start_r + span_tokens FROM spans
-        )
-    ),
-    flagged AS (
-        SELECT doc_id, s, e,
-               CASE WHEN max(e) OVER w_prev IS NULL
-                         OR s > max(e) OVER w_prev THEN 1 ELSE 0 END AS new_isl
-        FROM iv
-        WINDOW w_prev AS (PARTITION BY doc_id ORDER BY s, e
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-    ),
-    grp AS (
-        SELECT doc_id, s, e,
-               sum(new_isl) OVER (PARTITION BY doc_id ORDER BY s, e
-                                  ROWS UNBOUNDED PRECEDING) AS g
-        FROM flagged
-    ),
-    cov AS (
-        SELECT doc_id, CAST(sum(seg) AS BIGINT) AS dup_tokens FROM (
-            SELECT doc_id, g, max(e) - min(s) AS seg FROM grp GROUP BY doc_id, g
-        ) GROUP BY doc_id
-    )
-    SELECT t.doc_id,
-           CAST(len(t.tokens) AS BIGINT) AS n_tokens,
-           coalesce(c.dup_tokens, 0) AS dup_tokens,
-           round(CAST(coalesce(c.dup_tokens, 0) AS DOUBLE) / len(t.tokens), 6)
-               AS dup_fraction
-    FROM toks t LEFT JOIN cov c USING (doc_id)
-    WHERE len(t.tokens) > 0
-    """,
+    oracle=_SQL_SUBSTRING_SPANS + SUBSTRING_COVERAGE_SQL + "SELECT * FROM coverage",
     doc="[ext] per-document duplicated-token coverage (the Lee et al. 2022 "
-    "headline statistic): union the >= 12-token exact-substring spans "
-    "each doc participates in (either side), merge overlapping intervals "
-    "gaps-and-islands, and report covered tokens / total tokens. The "
-    "removal policy downstream (drop one copy of each span) keys off "
-    "exactly this relation.",
+    "headline statistic): union the exact-substring spans "
+    "(exact_substring_spans) each doc participates in (either side), merge "
+    "overlapping intervals gaps-and-islands, and report covered tokens / "
+    "total tokens. The removal policy downstream (drop one copy of each "
+    "span) keys off exactly this relation.",
 )
 def substring_dup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: span volume (matched pairs), never corpus size, prices every
-    stage past the gram shuffle — the interval union windows over
-    (doc_id) with spans-per-doc cardinality, and the final left join back
-    to per-doc token counts is key-grained. Docs with no duplicated span
-    surface with coverage 0 via the left join, so the output is a full
+    """Scale: span volume, never corpus size, prices every stage past the
+    gram shuffle (``operators.dedup.substring_coverage``). Docs with no
+    duplicated span surface with coverage 0, so the output is a full
     corpus audit, not a hit list."""
-    return substring_coverage(_doc_tokens(spark, sf_dir))
+    toks = _doc_tokens(spark, sf_dir)
+    return substring_coverage(toks, substring_span_pairs(toks))
 
 
 @register(
     "substring_dedup_rewrite",
-    oracle=_SQL_SUBSTRING_SPANS
-    + """,
-    rem AS (
-        SELECT DISTINCT id_r AS doc_id, start_r AS s, start_r + span_tokens AS e
-        FROM spans
-    ),
-    ivs AS (
-        SELECT doc_id, list(struct_pack(s := s, e := e)) AS arr
-        FROM rem GROUP BY doc_id
-    )
-    SELECT q.doc_id,
-           CAST(len(q.tokens) AS BIGINT) AS n_tokens,
-           CAST(len(q.kept) AS BIGINT) AS kept_tokens,
-           -- coalesce: DuckDB's array_to_string on a fully-emptied list
-           -- yields NULL where Spark's array_join yields ''
-           coalesce(array_to_string(q.kept, ' '), '') AS text_dedup
-    FROM (
-        SELECT t.doc_id, t.tokens,
-               list_filter(t.tokens, (tok, pi) ->
-                   v.arr IS NULL OR
-                   len(list_filter(v.arr, iv -> pi - 1 >= iv.s AND pi - 1 < iv.e)) = 0
-               ) AS kept
-        FROM toks t LEFT JOIN ivs v USING (doc_id)
-        WHERE len(t.tokens) > 0
-    ) q
-    """,
+    oracle=_SQL_SUBSTRING_SPANS + SUBSTRING_REWRITE_SQL + "SELECT * FROM rewrite",
     doc="[ext] the REMOVAL half of exact-substring dedup (Lee et al. "
-    "2022): every token position covered by a duplicated >=12-token span "
-    "on the doc's id_r side is dropped (the higher id loses; the id_l "
-    "copy survives as the first occurrence) and the remaining tokens "
-    "reassemble in order — detect (exact_substring_spans), audit "
-    "(substring_dup_coverage), rewrite (this) is the full pipeline.",
+    "2022): every token position covered by a duplicated span "
+    "(exact_substring_spans) on the doc's id_r side is dropped (the higher "
+    "id loses; the id_l copy survives as the first occurrence) and the "
+    "remaining tokens reassemble in order — detect "
+    "(exact_substring_spans), audit (substring_dup_coverage), rewrite "
+    "(this) is the full pipeline.",
 )
 def substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: removal intervals are span-volume-sized, collapse to one
-    array row per AFFECTED doc, and LEFT-join onto the corpus; the
-    position filter is a JVM-side higher-order filter over each token
-    array — the corpus is never exploded per position and unaffected
-    docs pass through with arr NULL."""
-    return substring_dedup_rewrite_op(_doc_tokens(spark, sf_dir))
+    """Scale: removal intervals are span-volume-sized and the corpus is
+    never exploded per position (``operators.dedup.substring_dedup_rewrite``)."""
+    toks = _doc_tokens(spark, sf_dir)
+    return substring_dedup_rewrite_op(toks, substring_span_pairs(toks))
 
 
 @register(
     "token_budget_after_dedup",
     oracle=_SQL_SUBSTRING_SPANS
-    + """,
-    rem AS (
-        SELECT DISTINCT id_r AS doc_id, start_r AS s, start_r + span_tokens AS e
-        FROM spans
-    ),
-    ivs AS (
-        SELECT doc_id, list(struct_pack(s := s, e := e)) AS arr
-        FROM rem GROUP BY doc_id
-    ),
-    kept AS (
-        SELECT t.doc_id, len(t.tokens) AS n_tokens,
-               len(list_filter(t.tokens, (tok, pi) ->
-                   v.arr IS NULL OR
-                   len(list_filter(v.arr, iv -> pi - 1 >= iv.s AND pi - 1 < iv.e)) = 0
-               )) AS kept_tokens
-        FROM toks t LEFT JOIN ivs v USING (doc_id)
-        WHERE len(t.tokens) > 0
-    )
+    + SUBSTRING_REWRITE_SQL
+    + """
     SELECT d.source,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(k.n_tokens) AS BIGINT) AS tokens_before,
            CAST(sum(k.kept_tokens) AS BIGINT) AS tokens_after,
            round(CAST(sum(k.kept_tokens) AS DOUBLE) / sum(k.n_tokens), 6)
                AS pct_kept
-    FROM kept k JOIN documents d USING (doc_id)
+    FROM rewrite k JOIN documents d USING (doc_id)
     GROUP BY d.source
     """,
     doc="[ext] dedup ROI per source: token budget before vs after the "
@@ -819,7 +705,8 @@ def token_budget_after_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: rides the rewrite operator (span-volume-priced) and adds one
     |sources|-sized aggregate; the source attachment is a key-grained
     join of per-doc counts, and pct math happens after the rollup."""
-    kept = substring_dedup_rewrite_op(_doc_tokens(spark, sf_dir)).select(
+    toks = _doc_tokens(spark, sf_dir)
+    kept = substring_dedup_rewrite_op(toks, substring_span_pairs(toks)).select(
         "doc_id", "n_tokens", "kept_tokens"
     )
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
@@ -840,49 +727,15 @@ def token_budget_after_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "incremental_substring_delta",
     oracle=_SQL_TOKS
-    + """,
-    bgrams AS (
-        SELECT doc_id, CAST(p AS BIGINT) AS pos,
-               array_to_string(list_slice(tokens, p + 1, p + 8), ' ') AS gram
-        FROM toks, unnest(range(0, greatest(len(tokens) - 7, 0))) AS r(p)
-        WHERE doc_id % 10 <> 7
-    ),
-    dgrams AS (
-        SELECT doc_id, CAST(p AS BIGINT) AS pos,
-               array_to_string(list_slice(tokens, p + 1, p + 8), ' ') AS gram
-        FROM toks, unnest(range(0, greatest(len(tokens) - 7, 0))) AS r(p)
-        WHERE doc_id % 10 = 7
-    ),
-    bcap AS (
-        SELECT doc_id, pos, gram FROM (
-            SELECT doc_id, pos, gram, count(*) OVER (PARTITION BY gram) AS occ
-            FROM bgrams
-        ) WHERE occ <= 64
-    ),
-    pairs AS (
-        SELECT d.doc_id AS id_delta, b.doc_id AS id_base,
-               d.pos AS pos_d, d.pos - b.pos AS diag
-        FROM dgrams d JOIN bcap b ON d.gram = b.gram
-    ),
-    islands AS (
-        SELECT id_delta, id_base, diag, pos_d,
-               pos_d - row_number() OVER (PARTITION BY id_delta, id_base, diag
-                                          ORDER BY pos_d) AS isl
-        FROM pairs
-    )
-    SELECT id_delta, id_base,
-           min(pos_d) AS start_delta,
-           min(pos_d) - diag AS start_base,
-           count(*) + 7 AS span_tokens
-    FROM islands
-    GROUP BY id_delta, id_base, diag, isl
-    HAVING count(*) + 7 >= 12
-    """,
-    doc="[ext] incremental exact-substring dedup: a delta batch (doc_id "
-    "% 10 = 7 stands in for today's crawl) probes the BASE corpus's "
-    "positioned-gram index for shared >=12-token spans — base x delta "
-    "cost only, the daily-ingest twin of exact_substring_spans (and the "
-    "substring analog of incremental_near_dup_delta's LSH band probe).",
+    + substring_spans_sql(delta=_SUBSTRING_DELTA)
+    + "SELECT * FROM delta_spans",
+    doc="[ext] incremental exact-substring dedup: a delta batch "
+    f"({_SUBSTRING_DELTA} stands in for today's crawl) probes the BASE "
+    "corpus's positioned-gram index for shared exact-substring spans "
+    "(the exact_substring_spans contract, with the occurrence cap on base "
+    "grams only) — base x delta cost only, the daily-ingest twin of "
+    "exact_substring_spans (and the substring analog of "
+    "incremental_near_dup_delta's LSH band probe).",
 )
 def incremental_substring_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: the base gram relation is materialized once (production:
@@ -891,10 +744,8 @@ def incremental_substring_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe fans out. Island merge and span agg are priced by matched-pair
     volume of the DELTA only."""
     toks = _doc_tokens(spark, sf_dir)
-    return substring_span_pairs_delta(
-        toks.filter(F.col("doc_id") % 10 != 7),
-        toks.filter(F.col("doc_id") % 10 == 7),
-    )
+    delta = F.expr(_SUBSTRING_DELTA)
+    return substring_span_pairs_delta(toks.filter(~delta), toks.filter(delta))
 
 
 _SQL_SIMHASH = (

@@ -1045,8 +1045,6 @@ def trigram_backoff_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", words("text").alias("tokens")
     )
 
-    from ..functions.text import with_word_ngrams
-
     train = F.col("doc_id") % 2 == 0
     # compiled-Scala n-grams (r13): the interpreted transform/slice HOF
     # was the per-task hot spot of both gram builds (see with_word_ngrams)

@@ -1090,51 +1090,6 @@ def test_percentile_bounds_empty_input(spark):
     assert out.count() == 0
 
 
-def test_lsh_bucket_cap_drops_only_oversized_buckets(docs):
-    """max_bucket_size: capped candidates are exactly the uncapped set
-    minus pairs whose EVERY colliding band bucket is oversized; a huge
-    cap is the identity."""
-    from similarity_analysis_big_data_spark.operators.dedup import (
-        lsh_band_entries,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    shingles = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(tokenize(F.lower("text")))).alias("shingle"),
-    )
-    sigs = minhash_signatures(shingles, "doc_id")
-    uncapped = {
-        (r["id_l"], r["id_r"]) for r in lsh_candidate_pairs(sigs, "doc_id").collect()
-    }
-    as_uncapped = {
-        (r["id_l"], r["id_r"])
-        for r in lsh_candidate_pairs(sigs, "doc_id", max_bucket_size=10**6).collect()
-    }
-    assert as_uncapped == uncapped
-
-    cap = 2
-    capped = {
-        (r["id_l"], r["id_r"])
-        for r in lsh_candidate_pairs(sigs, "doc_id", max_bucket_size=cap).collect()
-    }
-    assert capped <= uncapped
-    # recompute the expected survivors from the band relation directly
-    banded = lsh_band_entries(sigs, "doc_id").collect()
-    buckets: dict = {}
-    for r in banded:
-        buckets.setdefault((r["band"], r["key"]), []).append(r["doc_id"])
-    expected = set()
-    for members in buckets.values():
-        if len(members) > cap:
-            continue
-        for i, a in enumerate(members):
-            for b in members[i + 1 :]:
-                expected.add((min(a, b), max(a, b)))
-    assert capped == expected
-
-
 def test_bucketed_running_max_equals_window_running_max(spark):
     from pyspark.sql import Window as W
 

@@ -16,7 +16,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from similarity_analysis_big_data_spark.functions.text import words_sql
 from similarity_analysis_big_data_spark.functions.tfidf import l2_normalize
+from similarity_analysis_big_data_spark.operators.dedup import SUBSTRING_CAP, SUBSTRING_K
 from similarity_analysis_big_data_spark.operators.similarity import (
     all_pairs_cosine_exact,
     sparse_cosine_join,
@@ -396,6 +398,70 @@ def test_near_dup_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case
             assert ok, f"{case}/{name}: {msg}"
     finally:
         spark.catalog.clearCache()
+
+
+# Degenerate corpora for the exact-substring family, with
+# exact_substring_spans' expected row count: no documents, one document,
+# every document cut below SUBSTRING_K tokens, and the first document's
+# text (23 tokens, no repeated gram) copied onto the first N documents, N
+# below and above SUBSTRING_CAP. Below the cap every copy pair shares one
+# span; above it every gram's bucket is dropped (on the delta's base side
+# too), so no span survives.
+def _substring_copies(n: int) -> str:
+    return (
+        "SELECT * REPLACE ((SELECT text FROM docs ORDER BY doc_id LIMIT 1) AS text) "
+        f"FROM (SELECT * FROM docs ORDER BY doc_id LIMIT {n})"
+    )
+
+
+_SUBSTRING_N_BELOW, _SUBSTRING_N_ABOVE = SUBSTRING_CAP // 2, 2 * SUBSTRING_CAP
+_SUBSTRING_DEGENERATE = {
+    "empty": ("SELECT * FROM docs LIMIT 0", 0),
+    "one_doc": ("SELECT * FROM docs WHERE doc_id = (SELECT min(doc_id) FROM docs)", 0),
+    "shorter_than_k": (
+        "SELECT * REPLACE (array_to_string("
+        f"list_slice({words_sql()}, 1, {SUBSTRING_K - 1}), ' ') AS text) FROM docs",
+        0,
+    ),
+    "copies_below_cap": (
+        _substring_copies(_SUBSTRING_N_BELOW),
+        _SUBSTRING_N_BELOW * (_SUBSTRING_N_BELOW - 1) // 2,
+    ),
+    "copies_above_cap": (_substring_copies(_SUBSTRING_N_ABOVE), 0),
+}
+_SUBSTRING_QUERIES = (
+    "exact_substring_spans",
+    "substring_dup_coverage",
+    "substring_dedup_rewrite",
+    "token_budget_after_dedup",
+    "incremental_substring_delta",
+)
+
+
+@pytest.mark.parametrize("case", sorted(_SUBSTRING_DEGENERATE))
+def test_substring_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case):
+    """Degenerate input gives each exact-substring query its oracle's edge
+    result and does not crash."""
+    import duckdb
+
+    from similarity_analysis_big_data_spark.plans.registry import oracle_sql_map, query_map
+
+    from .oracle import compare
+
+    select, n_spans = _SUBSTRING_DEGENERATE[case]
+    sf = str(tmp_path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW docs AS SELECT * FROM '{sf_smoke}/documents.parquet'")
+    con.execute(f"COPY ({select}) TO '{sf}/documents.parquet' (FORMAT PARQUET)")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
+    oracles, fns = oracle_sql_map(), query_map()
+    wants = {n: con.execute(oracles[n]).fetchdf() for n in _SUBSTRING_QUERIES}
+    con.close()
+    assert len(wants["exact_substring_spans"]) == n_spans
+
+    for name in _SUBSTRING_QUERIES:
+        ok, msg = compare(fns[name](spark, sf), wants[name])
+        assert ok, f"{case}/{name}: {msg}"
 
 
 # Degenerate texts on every tenth sf0.001 document: a NULL text, an empty

@@ -12,16 +12,24 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import duckdb
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from similarity_analysis_big_data_spark.operators.dedup import (
+    SUBSTRING_COVERAGE_SQL,
+    SUBSTRING_REWRITE_SQL,
     substring_coverage,
     substring_dedup_rewrite,
     substring_span_pairs,
     substring_span_pairs_delta,
+    substring_spans_sql,
 )
+from similarity_analysis_big_data_spark.plans.dedup import _SQL_TOKS
+
+from .oracle import compare
 
 K, CAP, MIN_SPAN = 3, 4, 4
 
@@ -46,6 +54,10 @@ def _toks_df(docs: list[list[str]]):
         [(i, toks) for i, toks in enumerate(docs)],
         "doc_id long, tokens array<string>",
     )
+
+
+def _spans(docs: list[list[str]]):
+    return substring_span_pairs(_toks_df(docs), k=K, cap=CAP, min_span=MIN_SPAN)
 
 
 def _ref_spans(docs: list[list[str]], k: int, cap: int, min_span: int):
@@ -106,9 +118,7 @@ def _ref_coverage(docs: list[list[str]], spans, k: int):
 def test_substring_spans_match_reference(docs):
     got = {
         (r["id_l"], r["id_r"], r["start_l"], r["start_r"], r["span_tokens"])
-        for r in substring_span_pairs(
-            _toks_df(docs), k=K, cap=CAP, min_span=MIN_SPAN
-        ).collect()
+        for r in _spans(docs).collect()
     }
     assert got == _ref_spans(docs, K, CAP, MIN_SPAN)
 
@@ -116,9 +126,7 @@ def test_substring_spans_match_reference(docs):
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(docs_strategy)
 def test_substring_coverage_matches_reference(docs):
-    rows = substring_coverage(
-        _toks_df(docs), k=K, cap=CAP, min_span=MIN_SPAN
-    ).collect()
+    rows = substring_coverage(_toks_df(docs), _spans(docs)).collect()
     got = {r["doc_id"]: (r["n_tokens"], r["dup_tokens"]) for r in rows}
     ref = _ref_coverage(docs, _ref_spans(docs, K, CAP, MIN_SPAN), K)
     assert got == ref
@@ -143,9 +151,7 @@ def _ref_rewrite(docs: list[list[str]], spans):
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(docs_strategy)
 def test_substring_rewrite_matches_reference(docs):
-    rows = substring_dedup_rewrite(
-        _toks_df(docs), k=K, cap=CAP, min_span=MIN_SPAN
-    ).collect()
+    rows = substring_dedup_rewrite(_toks_df(docs), _spans(docs)).collect()
     got = {r["doc_id"]: (r["n_tokens"], r["kept_tokens"], r["text_dedup"]) for r in rows}
     assert got == _ref_rewrite(docs, _ref_spans(docs, K, CAP, MIN_SPAN))
 
@@ -188,6 +194,54 @@ def test_substring_delta_consistent_with_full(docs):
         ).collect()
     }
     assert got == expected
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(docs_strategy)
+def test_sql_twin_matches_operators(docs):
+    """The DuckDB twin rendered at (K, CAP, MIN_SPAN) gives the operators'
+    rows, row for row, for spans, coverage, rewrite and delta, reading the
+    tokens back from a ``documents`` text column as the registered oracles
+    do: a constant that either side hard-codes instead of taking from its
+    parameters fails here."""
+    delta = "doc_id % 2 = 1"
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany(
+        "INSERT INTO documents VALUES (?, ?)",
+        [(i, " ".join(toks)) for i, toks in enumerate(docs)],
+    )
+    spans_sql = _SQL_TOKS + substring_spans_sql(K, CAP, MIN_SPAN)
+    toks, spans = _toks_df(docs), _spans(docs)
+    cases = {
+        "spans": (spans, spans_sql + "SELECT * FROM spans"),
+        "coverage": (
+            substring_coverage(toks, spans),
+            spans_sql + SUBSTRING_COVERAGE_SQL + "SELECT * FROM coverage",
+        ),
+        "rewrite": (
+            substring_dedup_rewrite(toks, spans),
+            spans_sql + SUBSTRING_REWRITE_SQL + "SELECT * FROM rewrite",
+        ),
+        "delta": (
+            substring_span_pairs_delta(
+                toks.filter(~F.expr(delta)),
+                toks.filter(F.expr(delta)),
+                k=K,
+                cap=CAP,
+                min_span=MIN_SPAN,
+            ),
+            _SQL_TOKS
+            + substring_spans_sql(K, CAP, MIN_SPAN, delta=delta)
+            + "SELECT * FROM delta_spans",
+        ),
+    }
+    try:
+        for name, (got, sql) in cases.items():
+            ok, msg = compare(got, con.execute(sql).fetchdf())
+            assert ok, f"{name}: {msg}"
+    finally:
+        con.close()
 
 
 def test_substring_spans_known_construction(spark):
