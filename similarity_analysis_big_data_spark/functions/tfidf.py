@@ -54,6 +54,11 @@ def tfidf_weight(
     return (1 + F.log10(tf_c)) * (F.log10((n_c + 1) / (df_c + 1)) + 1)
 
 
+def tfidf_weight_sql(tf: str = "tf", df: str = "df", n_docs: str = "n") -> str:
+    """The DuckDB rendering of ``tfidf_weight`` for oracle construction."""
+    return f"(1 + log10({tf})) * (log10(({n_docs} + 1) / ({df} + 1)) + 1)"
+
+
 def tfidf(
     tf: DataFrame,
     df_: DataFrame,
@@ -103,6 +108,12 @@ def l2_normalize(
     w = W.partitionBy(*doc_cols)
     norm = F.sqrt(F.sum(F.pow(F.col(weight_col), 2)).over(w))
     return weighted.withColumn(weight_col, F.col(weight_col) / norm)
+
+
+def l2_normalize_sql(doc_cols: list[str], weight: str = "w") -> str:
+    """The DuckDB rendering of ``l2_normalize``: the normalized weight as a
+    window expression over the raw weight column ``weight``."""
+    return f"{weight} / sqrt(sum({weight} * {weight}) OVER (PARTITION BY {', '.join(doc_cols)}))"
 
 
 def as_map_vector(

@@ -14,8 +14,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from ..functions.tfidf import doc_frequency, l2_normalize, term_frequency, tfidf
 from ..sources.readers import local_relation
+
+# Rounding applied to cosine BEFORE the arg-max so ranking (and therefore
+# tie-breaking) is reproducible across engines and runs — the reference's
+# tie behavior is partition-order-dependent (SURVEY A5).
+COSINE_DECIMALS = 9
 
 
 def sparse_cosine_join(
@@ -142,6 +149,23 @@ def all_pairs_cosine_exact(
     return dense
 
 
+def category_cosine_matrix(category_terms: DataFrame, round_to: int | None = None) -> DataFrame:
+    """Task 2 (lab2.py:263-296): category x category cosine matrix, long form.
+
+    In: (category, term) rows. Per-category term-frequency vectors (the
+    reference's two-stage reduceByKey collapses to one groupBy — summing
+    per-doc counts equals counting, SURVEY A7), L2-normalized in a
+    window, dense self all-pairs via the sparse join. Out: (category_l,
+    category_r, cosine) for every category pair, the diagonal == 1.0.
+    """
+    cat_tf = category_terms.groupBy("category", "term").agg(
+        F.count("*").cast("double").alias("weight")
+    )
+    return all_pairs_cosine_exact(
+        l2_normalize(cat_tf, ["category"]), "category", round_to=round_to
+    )
+
+
 def pivot_matrix(
     dense_pairs: DataFrame,
     row_col: str,
@@ -184,7 +208,7 @@ def dense_best_match(
     abstract_vec: DataFrame,
     query_id: str,
     match_id: str,
-    round_to: int = 9,
+    round_to: int = COSINE_DECIMALS,
     t_rows: list | None = None,
 ) -> DataFrame:
     """Exact arg-max cosine via blocked dense matmul — the small-vocabulary
@@ -271,7 +295,10 @@ def dense_best_match(
     for r in t_rows:
         T[q_pos[r[query_id]], t_idx[r["term"]]] = r["weight"]
 
-    out_schema = f"{query_id} long, {match_id} long, cosine double"
+    # ids keep their input types (the flagship's are long, the CLI's string)
+    q_type = title_vec.schema[query_id].dataType.simpleString()
+    m_type = abstract_vec.schema[match_id].dataType.simpleString()
+    out_schema = f"{query_id} {q_type}, {match_id} {m_type}, cosine double"
     # computed driver-side so the closure ships a plain int (and tests can
     # monkeypatch DENSE_BLOCK_CELLS without reaching into executor workers)
     block = max(1, DENSE_BLOCK_CELLS // max(1, len(q_ids)))
@@ -337,6 +364,223 @@ def dense_best_match(
     )
     # merge partition-local winners: tiny (<= n_partitions rows per query)
     return best_match(candidates, query_id, match_id)
+
+
+# Auto-strategy memo for best_abstract_per_title, keyed (applicationId,
+# caller's memo key — the flagship's sf_dir, the CLI's input path): the
+# verdict "sparse" (skip every probe action) or "dense" (skip the
+# pre-probe, take the strategy="dense" path) — nothing else. Plan
+# statistics, not data: the memo carries no corpus size (each call
+# measures its own), so staleness can only change WHICH physical strategy
+# runs, never the result (extensional equality of the two paths is
+# property-tested). Bounded (ADVICE r10): inserts evict entries from
+# other applicationIds (dead sessions can never read theirs back) and
+# the per-app population is capped FIFO, so a long-lived driver sweeping
+# many replica dirs cannot grow it without bound. Concurrent first calls
+# race benignly — both run the same deterministic probes, last write
+# wins with the identical verdict.
+_AUTO_STRATEGY_CACHE: dict[tuple[str, str], str] = {}
+_AUTO_STRATEGY_CACHE_MAX = 64  # memo keys per app; far above any real sweep
+
+# Probe/dense persist rule: ALWAYS persist. Calibration history, because
+# this rule flipped twice as host artifacts were root-caused out of the
+# measurements: (r7-r11) "persist only above 16k docs" — calibrated while
+# THP huge-page compaction taxed the cache's serialized block writes;
+# (r12, post-allocator-fix) "persist only below a 24k ceiling" — the 40k
+# persist arm read an unstable 13-33 s, which looked like heap-capacity
+# competition but was actually the heap-EXPANSION pre-touch stall (cache
+# block writes grow the heap; each growth step ran a multi-second G1
+# pause). With the heap pre-sized (-Xms == -Xmx, the second r12 fix) the
+# A/B is stable and persist WINS at every measured point — min-of-3,
+# fresh process per arm, two arms each: 5k: 2.59 on / 4.29 off; 10k:
+# 3.04/3.33; 20k: 4.03/4.82; 40k: 5.80-6.24 / 7.17-7.97; 80k:
+# 9.05-11.02 / 10.56-11.35. The TF relation is reread by the title
+# collect and the final action; recomputing the fused tokenize+agg chain
+# always costs more than the cache barrier once allocation is healthy.
+
+
+def _auto_strategy_memo_put(key: tuple[str, str | None], verdict: str) -> None:
+    app_id, memo_key = key
+    if memo_key is None:
+        return
+    for k in [k for k in _AUTO_STRATEGY_CACHE if k[0] != app_id]:
+        del _AUTO_STRATEGY_CACHE[k]
+    while len(_AUTO_STRATEGY_CACHE) >= _AUTO_STRATEGY_CACHE_MAX:
+        del _AUTO_STRATEGY_CACHE[next(iter(_AUTO_STRATEGY_CACHE))]
+    _AUTO_STRATEGY_CACHE[key] = verdict
+
+
+def best_abstract_per_title(
+    title_terms: DataFrame,
+    abstract_terms: DataFrame,
+    all_titles: DataFrame,
+    n_docs: int | DataFrame,
+    strategy: str = "auto",
+    memo_key: str | None = None,
+    sample_terms: DataFrame | None = None,
+) -> DataFrame:
+    """Task 1 (lab2.py:150-251): each title's best-matching abstract by
+    the cosine of sklearn-smooth TF-IDF vectors, DF over the abstracts.
+
+    In: ``title_terms`` (title_id, term) and ``abstract_terms``
+    (abstract_id, term) long rows, ``all_titles`` (title_id) — every
+    title, whether or not it has terms — and ``n_docs`` as ``tfidf``
+    takes it. Out: (title_id, abstract_id, cosine), one row per title;
+    a title sharing no term with any abstract gets (NULL, 0.0), the
+    reference cartesian's zero row. Cosine rounds to ``COSINE_DECIMALS``
+    before the arg-max, which tiebreaks on ascending abstract_id.
+
+    The abstract TF relation feeds the DF aggregate (whose broadcast the
+    title path reuses) and the abstract weighting. The probe and dense
+    paths PERSIST it and DF (rule and history above); the sparse path
+    persists nothing, as its one streaming pair-join pass beats the
+    cache barrier (SCALE.md r7).
+
+    ``strategy`` picks the pair-stage physical plan, AQE-style (measure,
+    then choose):
+
+    - ``"sparse"`` — the term-join formulation (the 100 TB default: pairs
+      sharing no term never materialize, and real vocabularies are huge);
+    - ``"dense"`` — ``dense_best_match``: when the vocabulary is narrow
+      every pair DOES share terms, the sparse join degenerates to
+      |titles|x|abstracts| shuffled rows, and a blocked BLAS matmul that
+      never materializes pairs wins by a wide margin;
+    - ``"auto"`` — the memoized verdict for ``memo_key`` if there is one;
+      else, if the caller gives ``sample_terms`` (terms of any document
+      subset, whose distinct count is a vocabulary LOWER bound), a
+      pre-probe that proves sparse from one tiny job when the sample
+      already exceeds ``DENSE_MAX_VOCAB``; else the full probe over the
+      DF relation. The verdict, ``"sparse"`` or ``"dense"``, is memoized
+      per (session, ``memo_key``); ``memo_key=None`` memoizes nothing.
+      Both paths share the round-before-argmax / ascending-id contract,
+      so the result is the same whichever runs.
+
+    Every non-sparse path makes ONE collect: a 1-row stats aggregate plus
+    the title matrix, and the final action's IDF takes the corpus size
+    from that row as a literal. No corpus size outlives the call, so a
+    memoized verdict can pick a slower plan but never a stale result.
+    """
+    spark = abstract_terms.sparkSession
+    key = (spark.sparkContext.applicationId, memo_key)
+    if strategy == "auto":
+        # A memoized "dense" takes the strategy="dense" path: one collect,
+        # no probe aggregates. Measured negative (do not retry): re-running
+        # the full auto probe on every "dense"-memo call took the memoized
+        # call from 14 to 24 scheduler jobs (sf0.01, local[8]) and its
+        # min-of-8 from 0.92-1.00 s to 1.16-1.23 s (sf0.1, 4 vCPU, 3
+        # fresh-process pairs). A stale "dense" is caught by
+        # dense_best_match's bound check on the collected matrix; a stale
+        # "sparse" is exact by construction.
+        strategy = _AUTO_STRATEGY_CACHE.get(key, "auto")
+    if strategy == "auto" and sample_terms is not None:
+        # a lower bound never proves dense, so only "sparse" is memoized here
+        v_lb = sample_terms.agg(F.count_distinct("term").alias("v_lb")).collect()[0]["v_lb"]
+        if v_lb > DENSE_MAX_VOCAB:
+            strategy = "sparse"
+            _auto_strategy_memo_put(key, "sparse")
+
+    abstract_tf = term_frequency(abstract_terms, ["abstract_id"])
+    # The TF/DF persists pay only when a materialization is REREAD by a
+    # later pass: the stats+title collect, reread by the final action. The
+    # sparse path skips them so the pair join's build chain pipelines
+    # uncached (the r7 16x finding: 22.0 s fused vs 40.7 s through the
+    # cache barrier). DF is vocabulary-sized and feeds the probe's vocab
+    # count and both weightings.
+    if strategy != "sparse":
+        abstract_tf = abstract_tf.persist(StorageLevel.MEMORY_AND_DISK)
+    df_ = doc_frequency(abstract_tf)
+    if strategy != "sparse":
+        df_ = df_.persist(StorageLevel.MEMORY_AND_DISK)
+    title_tf = term_frequency(title_terms, ["title_id"])
+
+    def title_vec(corpus_n: int | DataFrame) -> DataFrame:
+        # J2: the left join keeps title terms with df=0 (idf = log10(n+1)+1)
+        return l2_normalize(
+            tfidf(title_tf, df_, corpus_n, ["title_id"], left=True), ["title_id"]
+        )
+
+    corpus_n = n_docs
+    t_rows = None
+    if strategy != "sparse":
+        # ONE driver action yields the stats row AND the full title matrix
+        # (tagged union). On auto the stats row also carries the vocab
+        # count (vocabulary-sized agg over the persisted TF — this is also
+        # what materializes both persists) and the dense verdict, and the
+        # title rows are gated plan-side on that verdict — a sparse
+        # decision makes that branch empty, so it never pays for a title
+        # collect. Off auto the stats row is the count alone, and its two
+        # uses share one exchange.
+        if not isinstance(n_docs, DataFrame):
+            n_docs = spark.range(1).select(F.lit(n_docs).alias("_n_docs"))
+        stats, t_vec = n_docs.select("_n_docs"), title_vec(n_docs)
+        if strategy == "auto":
+            stats = (
+                df_.agg(F.count("*").alias("vocab"))
+                .crossJoin(n_docs)
+                .crossJoin(all_titles.agg(F.count("*").alias("nt")))
+                .withColumn(
+                    "dense_ok",
+                    (F.col("vocab") <= DENSE_MAX_VOCAB)
+                    & (F.col("nt") * F.col("vocab") <= DENSE_MAX_BROADCAST_CELLS),
+                )
+            )
+            t_vec = t_vec.crossJoin(
+                F.broadcast(stats.filter("dense_ok").select(F.lit(1).alias("_g")))
+            ).drop("_g")
+        rows = (
+            stats.withColumn("tag", F.lit("stats"))
+            .unionByName(t_vec.withColumn("tag", F.lit("vec")), allowMissingColumns=True)
+            .collect()
+        )
+        stat_row = next(r for r in rows if r["tag"] == "stats")
+        if strategy == "auto":
+            strategy = "dense" if stat_row["dense_ok"] else "sparse"
+            _auto_strategy_memo_put(key, strategy)
+        # the driver literal removes the cross-joined aggregate subtree
+        # from the final action's weighting plans
+        corpus_n = stat_row["_n_docs"]
+        t_rows = [r for r in rows if r["tag"] == "vec"]
+
+    abstract_vec = l2_normalize(
+        tfidf(abstract_tf, df_, corpus_n, ["abstract_id"]), ["abstract_id"]
+    )
+    if strategy == "dense":
+        top = dense_best_match(
+            title_vec(corpus_n), abstract_vec, "title_id", "abstract_id", t_rows=t_rows
+        )
+        # dense mode's precondition (n_titles * vocab <= broadcast cells)
+        # bounds the match relation, so the null-fill join broadcasts
+        return all_titles.join(F.broadcast(top), "title_id", "left").select(
+            "title_id",
+            F.col("abstract_id"),
+            F.coalesce(F.col("cosine"), F.lit(0.0)).alias("cosine"),
+        )
+    # Sparse branch: DROP the TF/DF persists before building the pair
+    # join. The cache only pays off when a LATER action rereads what
+    # the probe materialized — the dense path's collect does exactly
+    # that — but the sparse pair join is one giant streaming pass, and
+    # routing its build side through a TableCacheQueryStage barrier
+    # (serialized block write + read) instead of recomputing the
+    # corpus chain fused into the join stage measured 40.7 s vs
+    # 22.0 s at the 16x replica (SCALE.md r7 flagship sweep). After
+    # unpersist the planner stops substituting the cached relation
+    # and the whole chain pipelines into the join. UNCONDITIONAL even
+    # when the cheap pre-probe skipped creating the persists: the
+    # cache manager matches by logical plan, so a dense run earlier
+    # in the same session may have left these very relations cached,
+    # and the sparse contract is that its pair join never routes
+    # through a cache barrier.
+    abstract_tf.unpersist()
+    df_.unpersist()
+    pairs = sparse_cosine_join(
+        title_vec(corpus_n),
+        abstract_vec,
+        "title_id",
+        "abstract_id",
+        round_to=COSINE_DECIMALS,
+        spread_left=True,
+    )
+    return best_match(pairs, "title_id", "abstract_id", all_queries=all_titles)
 
 
 def dense_topk_neighbors(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long_sql
 from ..functions.text import with_word_ngrams, words, words_sql
+from ..functions.tfidf import tfidf_weight, tfidf_weight_sql
 from ..functions.vectors import cosine_similarity, cosine_sql
 from ..operators.rank import bucketed_row_number, ntile_from_rank
 from ..operators.topk import global_top_n
@@ -803,9 +804,7 @@ LANG_TOP_TERMS = 5
         nl AS (SELECT count(DISTINCT lang) AS n_langs FROM counts),
         scored AS (
             SELECT c.lang, c.term,
-                   round((1 + log10(c.tf))
-                         * (log10((nl.n_langs + 1.0) / (d.df + 1)) + 1), 6)
-                       AS score
+                   round({tfidf_weight_sql("c.tf", "d.df", "nl.n_langs")}, 6) AS score
             FROM counts c JOIN df d USING (term) CROSS JOIN nl
         )
         SELECT lang, term, score, rnk
@@ -838,11 +837,7 @@ def lang_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "lang",
             "term",
-            F.round(
-                (1 + F.log10("tf"))
-                * (F.log10((F.col("n_langs") + 1.0) / (F.col("df") + 1)) + 1),
-                6,
-            ).alias("score"),
+            F.round(tfidf_weight("tf", "df", F.col("n_langs")), 6).alias("score"),
         )
     )
     from pyspark.sql import Window as W

@@ -17,17 +17,11 @@ from pyspark.sql import functions as F
 
 from ..functions.lemmatize import lemmatize
 from ..functions.text import clean_category, normalize_text, remove_stopwords, tokenize
-from ..functions.tfidf import doc_frequency, l2_normalize, term_frequency, tfidf
 from ..operators.similarity import (
-    all_pairs_cosine_exact,
-    best_match,
-    sparse_cosine_join,
+    COSINE_DECIMALS,
+    best_abstract_per_title,
+    category_cosine_matrix,
 )
-
-# Rounding applied to cosine BEFORE the arg-max so ranking (and therefore
-# tie-breaking) is reproducible across engines and runs — the reference's
-# tie behavior is partition-order-dependent (SURVEY A5).
-COSINE_DECIMALS = 9
 
 
 def preprocess_papers(
@@ -69,59 +63,38 @@ def _long_terms(prep: DataFrame, tokens_col: str, id_alias: str) -> DataFrame:
     return prep.select(F.col("id").alias(id_alias), F.explode(tokens_col).alias("term"))
 
 
-def tfidf_vectors(
-    terms: DataFrame, df_: DataFrame, n_docs: int, id_col: str, left: bool = False
+def task1_best_abstract(
+    prep: DataFrame,
+    n_docs: int | None = None,
+    strategy: str = "auto",
+    memo_key: str | None = None,
 ) -> DataFrame:
-    """tokenized long rows -> L2-normalized sklearn-TF-IDF vectors."""
-    tf = term_frequency(terms, [id_col])
-    weighted = tfidf(tf, df_, n_docs, [id_col], left=left)
-    return l2_normalize(weighted, [id_col])
-
-
-def task1_best_abstract(prep: DataFrame, n_docs: int | None = None) -> DataFrame:
-    """Task 1 (lab2.py:150-251): per-title best-matching abstract.
-
-    One Catalyst plan: TF/DF aggregates, broadcast DF join, window
-    normalization, sparse cosine join, deterministic arg-max — versus the
-    reference's ~11 hand-scheduled RDD shuffles plus a cartesian.
+    """Task 1 (lab2.py:150-251): ``best_abstract_per_title`` with every
+    paper as a title. ``n_docs`` is the corpus count if the caller has it
+    (A1, lab2.py:155: one count, reused as a literal); ``memo_key`` (the
+    CLI passes its input path) memoizes the ``auto`` strategy's verdict.
 
     Returns (title_id, abstract_id, cosine); titles with zero vocabulary
     overlap emit (title_id, NULL, 0.0) for cartesian row-count parity.
     """
     if n_docs is None:
-        n_docs = prep.count()  # A1 (lab2.py:155) — one count, reused as a literal
-    abstract_terms = _long_terms(prep, "abstract_tokens", "abstract_id")
-    title_terms = _long_terms(prep, "title_tokens", "title_id")
-
-    abstract_tf = term_frequency(abstract_terms, ["abstract_id"])
-    df_ = doc_frequency(abstract_tf)  # DF is defined over the ABSTRACT corpus only
-
-    abstract_vec = l2_normalize(
-        tfidf(abstract_tf, df_, n_docs, ["abstract_id"]), ["abstract_id"]
+        n_docs = prep.count()
+    return best_abstract_per_title(
+        _long_terms(prep, "title_tokens", "title_id"),
+        _long_terms(prep, "abstract_tokens", "abstract_id"),
+        prep.select(F.col("id").alias("title_id")),
+        n_docs,
+        strategy,
+        memo_key,
     )
-    # J2: left join keeps title terms with df=0 (idf = log10(n+1)+1)
-    title_vec = tfidf_vectors(title_terms, df_, n_docs, "title_id", left=True)
-
-    pairs = sparse_cosine_join(
-        title_vec, abstract_vec, "title_id", "abstract_id", round_to=COSINE_DECIMALS
-    )
-    all_titles = prep.select(F.col("id").alias("title_id"))
-    return best_match(pairs, "title_id", "abstract_id", all_queries=all_titles)
 
 
 def task2_category_matrix(prep: DataFrame, round_to: int = COSINE_DECIMALS) -> DataFrame:
-    """Task 2 (lab2.py:263-296): category×category cosine matrix, long form.
-
-    Per-category term-frequency vectors (the reference's two-stage
-    reduceByKey collapses to one groupBy — summing per-doc counts equals
-    counting, SURVEY A7), L2-normalized, dense self all-pairs.
-    Returns (category_l, category_r, cosine) with the diagonal == 1.0.
-    """
-    cat_terms = prep.select(
-        F.col("categories").alias("category"), F.explode("abstract_tokens").alias("term")
+    """Task 2 (lab2.py:263-296): ``category_cosine_matrix`` over each
+    paper's (category, abstract token) rows."""
+    return category_cosine_matrix(
+        prep.select(
+            F.col("categories").alias("category"), F.explode("abstract_tokens").alias("term")
+        ),
+        round_to,
     )
-    cat_tf = cat_terms.groupBy("category", "term").agg(
-        F.count("*").cast("double").alias("weight")
-    )
-    cat_vec = l2_normalize(cat_tf, ["category"])
-    return all_pairs_cosine_exact(cat_vec, "category", round_to=round_to)

@@ -239,6 +239,57 @@ def test_word_token_rule_is_stated_once():
     assert offenders == [], f"use functions.text.words / words_sql: {offenders}"
 
 
+# the DuckDB TF-IDF weight and the per-document L2 window (a grouped
+# vector norm such as ``sqrt(sum(c * c)) AS nrm`` is neither)
+_TFIDF_SQL_COPY = re.compile(r"log10\(\(|sqrt\(sum\([^()]*\)\s*OVER", re.S)
+
+
+def test_tfidf_weight_and_l2_window_are_stated_once():
+    """Guard: the sklearn-smooth weight and the L2 window are stated for
+    DuckDB once, as ``tfidf_weight_sql`` / ``l2_normalize_sql`` beside
+    their Spark forms in functions/tfidf.py. A hand-written ``log10((``
+    or ``sqrt(sum(...) OVER`` string anywhere else in the package would
+    let an oracle drift from the query it checks."""
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "functions" / "tfidf.py"
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and _TFIDF_SQL_COPY.search(node.value)
+    ]
+    assert offenders == [], f"use functions.tfidf.tfidf_weight_sql / l2_normalize_sql: {offenders}"
+
+
+def test_perfbench_engine_imports_resolve():
+    """Guard: every engine name a ``perfbench/*.py`` file imports, at module
+    level or inside a function, still exists. The benchmark cannot be
+    edited alongside an engine refactor, so a renamed operator or constant
+    would otherwise break every benchmark run with no tier-1 test failing.
+    Reads ``perfbench/`` only."""
+    import importlib
+
+    bench = pathlib.Path(pkg.__file__).parent.parent / "perfbench"
+    missing, seen = [], 0
+    for path in sorted(bench.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(pkg.__name__):
+                mod = importlib.import_module(node.module)
+                for alias in node.names:
+                    seen += 1
+                    if not hasattr(mod, alias.name):
+                        missing.append(f"{path.name}:{node.lineno} {node.module}.{alias.name}")
+            elif isinstance(node, ast.Import):
+                for alias in node.names:
+                    if alias.name.startswith(pkg.__name__):
+                        seen += 1
+                        importlib.import_module(alias.name)
+    assert seen, "no engine import found under perfbench/"
+    assert missing == [], f"perfbench imports names the engine no longer has: {missing}"
+
+
 def _unused_imports(path: pathlib.Path) -> list[tuple[int, str]]:
     """``(line, name)`` for every name ``path`` imports and never uses.
     ``__future__`` imports and ``# noqa: F401`` lines are exempt; a name

@@ -148,3 +148,28 @@ def test_task2_matrix_properties(prep):
     for (a, b), v in sym.items():
         assert v == pytest.approx(sym[(b, a)], abs=1e-9)
         assert -1e-9 <= v <= 1 + 1e-9
+
+
+def test_task1_strategies_agree_on_string_ids(spark, prep):
+    """The CLI's Task 1 runs the flagship's operator: forced dense (the
+    blocked matmul, its string ids typed from the input schema), forced
+    sparse and auto — first call and memoized — give the same rows."""
+    from similarity_analysis_big_data_spark.operators import similarity as ops
+
+    def rows(df):
+        return {r["title_id"]: (r["abstract_id"], r["cosine"]) for r in df.collect()}
+
+    dense = task1_best_abstract(prep, strategy="dense")
+    plan = dense._jdf.queryExecution().optimizedPlan().toString()
+    assert "MapInPandas" in plan  # the matmul ran, not the over-bound fallback
+    want = rows(dense)
+    assert want == rows(task1_best_abstract(prep, strategy="sparse"))
+    key = (spark.sparkContext.applicationId, "papers.json")
+    try:
+        assert want == rows(task1_best_abstract(prep, memo_key="papers.json"))
+        assert ops._AUTO_STRATEGY_CACHE[key] == "dense"  # a narrow vocabulary
+        assert want == rows(task1_best_abstract(prep, memo_key="papers.json"))
+    finally:
+        ops._AUTO_STRATEGY_CACHE.pop(key, None)
+        spark.catalog.clearCache()
+    assert len(want) == len(PAPERS) and want["p5"] == (None, 0.0)

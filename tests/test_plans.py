@@ -96,11 +96,12 @@ def test_flagship_sparse_branch_drops_tf_cache(spark, sf_oracle, monkeypatch):
     # force the full auto probe to run (no memo; the fixture's narrow
     # vocabulary leaves the pre-probe undecided) AND pick sparse by
     # shrinking the broadcast-cells ceiling to zero for the call
+    from similarity_analysis_big_data_spark.operators import similarity as ops
     from similarity_analysis_big_data_spark.plans import similarity as S
 
     key = (spark.sparkContext.applicationId, sf_oracle)
     S._AUTO_STRATEGY_CACHE.pop(key, None)
-    monkeypatch.setattr(S, "DENSE_MAX_BROADCAST_CELLS", 0)
+    monkeypatch.setattr(ops, "DENSE_MAX_BROADCAST_CELLS", 0)
     try:
         df = title_best_abstract(spark, sf_oracle, strategy="auto")
         assert S._AUTO_STRATEGY_CACHE[key] == "sparse"

@@ -548,6 +548,63 @@ def test_words_equals_words_sql(spark, sf_smoke, degenerate_text_dir, sf):
         assert all(got[i] == [] for i in got if i % 10 in (2, 3))
 
 
+# (doc_id, term, tf, df) over an n_docs = 1 corpus: df = 0 rows are the
+# title left-join path, doc 2 is a one-term vector, and docs 1 and 3 carry
+# tied weights.
+_TFIDF_TWIN_ROWS = [
+    (1, "a", 1, 0),
+    (1, "b", 1, 0),
+    (2, "c", 3, 1),
+    (3, "d", 2, 1),
+    (3, "e", 2, 1),
+    (3, "f", 1, 0),
+]
+
+
+@pytest.mark.parametrize("n_docs", ("column", "literal"))
+def test_tfidf_weight_and_l2_equal_their_sql_twins(spark, n_docs):
+    """``tfidf_weight`` / ``tfidf_weight_sql`` and ``l2_normalize`` /
+    ``l2_normalize_sql`` give the same rows and dtypes on one frame, with
+    the corpus size as a cross-joined column (the registered queries) or
+    as a literal (the CLI and every memoized call)."""
+    import duckdb
+
+    from similarity_analysis_big_data_spark.functions.tfidf import (
+        l2_normalize_sql,
+        tfidf_weight,
+        tfidf_weight_sql,
+    )
+
+    from .oracle import compare
+
+    rows = [r + (1,) for r in _TFIDF_TWIN_ROWS]
+    schema = "doc_id long, term string, tf long, df long, n long"
+    n_spark, n_sql = (F.col("n"), "n") if n_docs == "column" else (1, "1")
+    weighted = spark.createDataFrame(rows, schema).select(
+        "doc_id", "term", tfidf_weight("tf", "df", n_spark).alias("w")
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE t ({schema.replace('long', 'BIGINT').replace('string', 'VARCHAR')})")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?, ?)", rows)
+    sql_weighted = f"SELECT doc_id, term, {tfidf_weight_sql(n_docs=n_sql)} AS w FROM t"
+    try:
+        ok, msg = compare(weighted, con.execute(sql_weighted).fetchdf())
+        assert ok, f"weight: {msg}"
+        normalized = l2_normalize(weighted, ["doc_id"], "w")
+        ok, msg = compare(
+            normalized,
+            con.execute(
+                f"SELECT doc_id, term, {l2_normalize_sql(['doc_id'])} AS w FROM ({sql_weighted})"
+            ).fetchdf(),
+        )
+        assert ok, f"l2: {msg}"
+    finally:
+        con.close()
+    got = {(r.doc_id, r.term): r.w for r in normalized.collect()}
+    assert got[(2, "c")] == 1.0  # the one-term vector
+    assert got[(1, "a")] == got[(1, "b")] and got[(3, "d")] == got[(3, "e")]  # ties
+
+
 @pytest.mark.parametrize("sf", _FIXTURE_SIZES)
 def test_documents_fixture_is_ascii(sf_smoke, sf):
     """The cross-engine precondition of ``words`` / ``words_sql``: (?U)\\w
