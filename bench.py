@@ -66,12 +66,6 @@ def jvm_gc_sec(spark) -> float:
     )
 
 
-def jvm_jit_sec(spark) -> float:
-    """Cumulative JIT compilation time of the session's JVM, in seconds."""
-    mx = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
-    return mx.getTotalCompilationTime() / 1000.0
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -99,7 +93,7 @@ def main() -> None:
     # mid-loop load and idle-reference triggers never fired; the pre-JVM
     # load trigger fired once (BENCH_r13.json) and its fresh-process re-run
     # moved the published total from 12.88 s to 12.85 s.
-    gc_before, jit_before = jvm_gc_sec(spark), jvm_jit_sec(spark)
+    gc_before = jvm_gc_sec(spark)
     timings: dict[str, float] = {}
     for name, fn in sorted(registry.headline_queries().items()):
         best = float("inf")
@@ -115,7 +109,6 @@ def main() -> None:
             best = min(best, time.perf_counter() - start)
         timings[name] = round(best, 3)
     gc_loop = jvm_gc_sec(spark) - gc_before
-    jit_loop = jvm_jit_sec(spark) - jit_before
 
     payload = {
         "metric": "headline_query_wall_time",
@@ -128,7 +121,6 @@ def main() -> None:
             "loadavg_1m": round(os.getloadavg()[0], 2),
             "rest": rest,
             "gc_loop_sec": round(gc_loop, 2),
-            "jit_loop_sec": round(jit_loop, 2),
         },
     }
 

@@ -99,7 +99,7 @@ def run_pipeline(
     n_docs = prep.count()
 
     # ---- Task 1: per-title best abstract -> accuracy + results + samples
-    matches = task1_best_abstract(prep, n_docs=n_docs, memo_key=arxiv_path)
+    matches = task1_best_abstract(prep, n_docs=n_docs)
     accuracy = retrieval_accuracy(matches, "title_id", "abstract_id", n_queries=n_docs)
     accuracy_line = accuracy.select(
         F.concat(

@@ -149,7 +149,7 @@ def all_pairs_cosine_exact(
     return dense
 
 
-def category_cosine_matrix(category_terms: DataFrame, round_to: int | None = None) -> DataFrame:
+def category_cosine_matrix(category_terms: DataFrame, round_to: int) -> DataFrame:
     """Task 2 (lab2.py:263-296): category x category cosine matrix, long form.
 
     In: (category, term) rows. Per-category term-frequency vectors (the
@@ -367,7 +367,7 @@ def dense_best_match(
 
 
 # Auto-strategy memo for best_abstract_per_title, keyed (applicationId,
-# caller's memo key — the flagship's sf_dir, the CLI's input path): the
+# caller's memo key — the flagship's sf_dir): the
 # verdict "sparse" (skip every probe action) or "dense" (skip the
 # pre-probe, take the strategy="dense" path) — nothing else. Plan
 # statistics, not data: the memo carries no corpus size (each call
@@ -425,7 +425,8 @@ def best_abstract_per_title(
     In: ``title_terms`` (title_id, term) and ``abstract_terms``
     (abstract_id, term) long rows, ``all_titles`` (title_id) — every
     title, whether or not it has terms — and ``n_docs`` as ``tfidf``
-    takes it. Out: (title_id, abstract_id, cosine), one row per title;
+    takes it; an aggregate that also carries the title count as ``nt``
+    spares the auto probe its own count of ``all_titles``. Out: (title_id, abstract_id, cosine), one row per title;
     a title sharing no term with any abstract gets (NULL, 0.0), the
     reference cartesian's zero row. Cosine rounds to ``COSINE_DECIMALS``
     before the arg-max, which tiebreaks on ascending abstract_id.
@@ -514,10 +515,12 @@ def best_abstract_per_title(
             n_docs = spark.range(1).select(F.lit(n_docs).alias("_n_docs"))
         stats, t_vec = n_docs.select("_n_docs"), title_vec(n_docs)
         if strategy == "auto":
+            sizes = n_docs
+            if "nt" not in sizes.columns:
+                sizes = sizes.crossJoin(all_titles.agg(F.count("*").alias("nt")))
             stats = (
                 df_.agg(F.count("*").alias("vocab"))
-                .crossJoin(n_docs)
-                .crossJoin(all_titles.agg(F.count("*").alias("nt")))
+                .crossJoin(sizes)
                 .withColumn(
                     "dense_ok",
                     (F.col("vocab") <= DENSE_MAX_VOCAB)

@@ -63,16 +63,11 @@ def _long_terms(prep: DataFrame, tokens_col: str, id_alias: str) -> DataFrame:
     return prep.select(F.col("id").alias(id_alias), F.explode(tokens_col).alias("term"))
 
 
-def task1_best_abstract(
-    prep: DataFrame,
-    n_docs: int | None = None,
-    strategy: str = "auto",
-    memo_key: str | None = None,
-) -> DataFrame:
+def task1_best_abstract(prep: DataFrame, n_docs: int | None = None) -> DataFrame:
     """Task 1 (lab2.py:150-251): ``best_abstract_per_title`` with every
-    paper as a title. ``n_docs`` is the corpus count if the caller has it
-    (A1, lab2.py:155: one count, reused as a literal); ``memo_key`` (the
-    CLI passes its input path) memoizes the ``auto`` strategy's verdict.
+    paper as a title, on the sparse strategy. ``n_docs`` is the corpus
+    count if the caller has it (A1, lab2.py:155: one count, reused as a
+    literal).
 
     Returns (title_id, abstract_id, cosine); titles with zero vocabulary
     overlap emit (title_id, NULL, 0.0) for cartesian row-count parity.
@@ -84,8 +79,7 @@ def task1_best_abstract(
         _long_terms(prep, "abstract_tokens", "abstract_id"),
         prep.select(F.col("id").alias("title_id")),
         n_docs,
-        strategy,
-        memo_key,
+        "sparse",
     )
 
 

@@ -229,7 +229,10 @@ def title_best_abstract(
         docs.filter(F.col("doc_id") % TITLE_SAMPLE_MOD == 0).select(
             F.col("doc_id").alias("title_id")
         ),
-        docs.agg(F.count("*").alias("_n_docs")),
+        docs.agg(
+            F.count("*").alias("_n_docs"),
+            F.count_if(F.col("doc_id") % TITLE_SAMPLE_MOD == 0).alias("nt"),
+        ),
         strategy,
         memo_key=sf_dir,
         sample_terms=docs.filter(F.col("doc_id") < 512).select(

@@ -81,13 +81,6 @@ def get_session(
         # the whole pre-touch once at JVM startup instead. This is the
         # mechanism behind the documented ">=8g heaps stall" bimodal
         # floor: larger -Xmx meant larger mid-run expansion steps.
-        #
-        # Measured negative (do not retry): C1-only JIT
-        # (-XX:TieredStopAtLevel=1). The driver JVM's JIT compiling Spark's
-        # own planner is a large share of a warm query's CPU, and C1-only
-        # cut bench.py's measured-loop JIT time (jit_loop_sec) from 99.4 to
-        # 18.7 s, but the headline total rose from 16.50 to 28.18 s (sf0.1,
-        # local[4] on 4 vCPUs, one run each): C1-compiled code runs slower.
         "spark.driver.extraJavaOptions": f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
         # AQE: runtime partition coalescing, skew-join splitting, dynamic
         # join-strategy switches — the scale levers SURVEY §4.2 lists.

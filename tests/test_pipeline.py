@@ -151,24 +151,37 @@ def test_task2_matrix_properties(prep):
 
 
 def test_task1_strategies_agree_on_string_ids(spark, prep):
-    """The CLI's Task 1 runs the flagship's operator: forced dense (the
-    blocked matmul, its string ids typed from the input schema), forced
-    sparse and auto — first call and memoized — give the same rows."""
+    """The CLI's Task 1 (sparse) and the Task 1 operator on the CLI's
+    inputs under forced dense (the blocked matmul, its string ids typed
+    from the input schema), forced sparse and auto — first call and
+    memoized — give the same rows."""
     from similarity_analysis_big_data_spark.operators import similarity as ops
+    from similarity_analysis_big_data_spark.plans.pipeline import _long_terms
 
     def rows(df):
         return {r["title_id"]: (r["abstract_id"], r["cosine"]) for r in df.collect()}
 
-    dense = task1_best_abstract(prep, strategy="dense")
+    def task1(strategy, memo_key=None):
+        return ops.best_abstract_per_title(
+            _long_terms(prep, "title_tokens", "title_id"),
+            _long_terms(prep, "abstract_tokens", "abstract_id"),
+            prep.select(prep["id"].alias("title_id")),
+            len(PAPERS),
+            strategy,
+            memo_key,
+        )
+
+    want = rows(task1_best_abstract(prep))
+    dense = task1("dense")
     plan = dense._jdf.queryExecution().optimizedPlan().toString()
     assert "MapInPandas" in plan  # the matmul ran, not the over-bound fallback
-    want = rows(dense)
-    assert want == rows(task1_best_abstract(prep, strategy="sparse"))
+    assert want == rows(dense)
+    assert want == rows(task1("sparse"))
     key = (spark.sparkContext.applicationId, "papers.json")
     try:
-        assert want == rows(task1_best_abstract(prep, memo_key="papers.json"))
+        assert want == rows(task1("auto", "papers.json"))
         assert ops._AUTO_STRATEGY_CACHE[key] == "dense"  # a narrow vocabulary
-        assert want == rows(task1_best_abstract(prep, memo_key="papers.json"))
+        assert want == rows(task1("auto", "papers.json"))
     finally:
         ops._AUTO_STRATEGY_CACHE.pop(key, None)
         spark.catalog.clearCache()
