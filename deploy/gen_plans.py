@@ -52,13 +52,13 @@ for _m in ("collect", "count", "first", "head", "toPandas", "localCheckpoint"):
 NOTES = {
     "title_best_abstract": (
         "first call: cheap 512-doc vocab pre-probe, ONE stats + title-matrix "
-        "collect that also decides the strategy (materializes the TF/DF "
-        "persists), final action; the verdict is memoized per (session, dir) "
+        "collect that also decides the strategy (materializes the lazy TF/DF "
+        "checkpoints), final action; the verdict is memoized per (session, dir) "
         "as 'sparse' or 'dense' only, so the repeat call measured here skips "
         "the pre-probe and is 2 actions — the strategy='dense' path's stats + "
         "title-matrix collect (its corpus count enters the final action's IDF "
         "as a literal) and the final action; a resolved-sparse corpus pays NO "
-        "probe actions and creates no persists. Floor table in SCALE.md."
+        "probe actions and creates no checkpoints. Floor table in SCALE.md."
     ),
     "near_dup_survivors": (
         "actions = token-set checkpoint inside near_dup_pairs (the sets feed "

@@ -15,9 +15,15 @@ when it printed none.
 
 For each end-to-end metric of BENCHMARK.json the summary prints each
 side's median, first and third quartile, how many pairs the change won,
-and whether a claimed gain holds: the change better in at least nine of
-ten pairs, and its median better than the parent's by more than the
-parent's interquartile range.
+whether a claimed gain holds (the change better in at least nine of ten
+pairs, and its median better than the parent's by more than the parent's
+interquartile range), and the no-regression verdict every change is held
+to, claim or not, with the metric's ``bound``:
+
+- regressed: the change's median is worse than the parent's by more than
+  ``bound`` times the parent's median;
+- unresolved: the parent's interquartile range exceeds ``bound`` times
+  its median, and not every change run beats every parent run.
 """
 
 from __future__ import annotations
@@ -39,12 +45,13 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
 
 
 def summarize(records: list[dict], end_to_end: list[dict]) -> dict:
-    """Per metric: each side's (q1, median, q3), pair wins and the claim rule.
+    """Per metric: each side's (q1, median, q3), pair wins, the claim rule
+    and the no-regression verdict (``regressed``, ``unresolved``).
 
     ``records`` are JSONL lines: ``side`` ("parent"/"change"), ``pair`` and
     ``result`` (perfbench's last output line, absent when the run failed).
-    ``end_to_end`` is BENCHMARK.json's list of ``{name, better}``. A pair
-    counts only when both of its runs produced the metric.
+    ``end_to_end`` is BENCHMARK.json's list of ``{name, better, bound}``. A
+    pair counts only when both of its runs produced the metric.
     """
     by_pair: dict[int, dict[str, dict]] = {}
     for rec in records:
@@ -52,7 +59,7 @@ def summarize(records: list[dict], end_to_end: list[dict]) -> dict:
             by_pair.setdefault(rec["pair"], {})[rec["side"]] = rec["result"]["metrics"]
     out = {}
     for metric in end_to_end:
-        name, lower = metric["name"], metric["better"] == "lower"
+        name, lower, bound = metric["name"], metric["better"] == "lower", metric["bound"]
         pairs = [
             (sides["parent"][name]["value"], sides["change"][name]["value"])
             for _, sides in sorted(by_pair.items())
@@ -63,12 +70,16 @@ def summarize(records: list[dict], end_to_end: list[dict]) -> dict:
         parent, change = quartiles([p for p, _ in pairs]), quartiles([c for _, c in pairs])
         wins = sum((c < p) if lower else (c > p) for p, c in pairs)
         gain = (parent[1] - change[1]) if lower else (change[1] - parent[1])
+        ps, cs = [p for p, _ in pairs], [c for _, c in pairs]
+        separated = max(cs) < min(ps) if lower else min(cs) > max(ps)
         out[name] = {
             "parent": parent,
             "change": change,
             "wins": wins,
             "pairs": len(pairs),
             "claim_holds": 10 * wins >= 9 * len(pairs) and gain > parent[2] - parent[0],
+            "regressed": -gain > bound * abs(parent[1]),
+            "unresolved": parent[2] - parent[0] > bound * abs(parent[1]) and not separated,
         }
     return out
 
@@ -117,10 +128,16 @@ def main() -> int:
     failed = sum(not r.get("result") or not r["result"]["correct"] for r in records)
     print(f"\n{args.workload}: {args.pairs} pairs, seeds {args.seed0}-{args.seed0 + args.pairs - 1}, "
           f"{failed} runs failed or incorrect")
-    for name, s in summarize(records, bench["end_to_end"]).items():
+    summary = summarize(records, bench["end_to_end"])
+    for name, s in summary.items():
         (p1, pm, p3), (c1, cm, c3) = s["parent"], s["change"]
         print(f"{name}: parent {pm:.3f} ({p1:.3f}-{p3:.3f})  change {cm:.3f} ({c1:.3f}-{c3:.3f})"
-              f"  wins {s['wins']}/{s['pairs']}  claim {'holds' if s['claim_holds'] else 'fails'}")
+              f"  wins {s['wins']}/{s['pairs']}  claim {'holds' if s['claim_holds'] else 'fails'}"
+              f"  regressed {'yes' if s['regressed'] else 'no'}"
+              f"  unresolved {'yes' if s['unresolved'] else 'no'}")
+    bad = {k: [n for n, s in summary.items() if s[k]] for k in ("regressed", "unresolved")}
+    print("verdict: " + ("; ".join(f"{k} on {', '.join(v)}" for k, v in bad.items() if v)
+                         or "no regression"))
     return 0
 
 

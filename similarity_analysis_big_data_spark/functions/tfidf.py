@@ -4,8 +4,7 @@ The reference builds ``{word: weight}`` Python dicts per document
 (``lab2.py:187-194``); the engine keeps everything long-format —
 one row per ``(doc, term)`` — so TF, DF, weighting and normalization are
 hash aggregates and window expressions that Catalyst codegen runs JVM-side
-and AQE can re-plan. Map-shaped vectors exist only at presentation
-(``as_map_vector``).
+and AQE can re-plan. No stage builds a map-shaped vector.
 
 Formula parity (SURVEY §7 known-hard): the reference uses the
 sklearn-style *smooth* formula, NOT MLlib's IDF (which is ln-based with
@@ -114,16 +113,3 @@ def l2_normalize_sql(doc_cols: list[str], weight: str = "w") -> str:
     """The DuckDB rendering of ``l2_normalize``: the normalized weight as a
     window expression over the raw weight column ``weight``."""
     return f"{weight} / sqrt(sum({weight} * {weight}) OVER (PARTITION BY {', '.join(doc_cols)}))"
-
-
-def as_map_vector(
-    weighted: DataFrame, doc_cols: list[str], term_col: str = "term", weight_col: str = "weight"
-) -> DataFrame:
-    """A4 presentation form: long rows -> map<term, weight> per document.
-
-    Only for final presentation/export — the similarity operators stay
-    long-format (SURVEY §2.4 A4 notes the OOM exposure of map-shaped rows).
-    """
-    return weighted.groupBy(*doc_cols).agg(
-        F.map_from_entries(F.collect_list(F.struct(term_col, weight_col))).alias("vector")
-    )

@@ -91,9 +91,11 @@ def minhash_signatures(
 def lsh_band_entries(signatures: DataFrame, id_col: str) -> DataFrame:
     """(id, mh0..mhK-1) -> long-format (id, band, key) bucket entries.
 
-    The probe-able LSH index relation: production materializes this
-    bucketed by (band, key) so incremental batches probe it with a
-    co-located join (see plans/dedup.incremental_near_dup_delta)."""
+    The probe-able LSH index relation that incremental batches probe by
+    (band, key) (see plans/dedup.incremental_near_dup_delta). The engine
+    stores no index; a deployment that keeps one between batches would
+    write it with ``bucketBy`` on (band, key) so the probe join is
+    co-located."""
     band_entries = []
     for b in range(LSH_BANDS):
         key = F.concat_ws(

@@ -2,13 +2,13 @@
 
 Images/audio/video are opaque ``binary`` payload columns plus typed
 metadata. A real decode step needs codec libraries (PIL/opencv) that the
-engine does not ship, so the feature and resize paths use a deterministic
-md5-keyed fake decode inside their workers — but every piece of Spark
+engine does not ship, so the feature path uses a deterministic
+md5-keyed fake decode inside its workers — but every piece of Spark
 plumbing around it is real and tested:
 
 - payload schema (``binary`` + metadata struct)
-- Arrow-batched ``mapInArrow`` (features) and ``mapInPandas`` (resize,
-  frames) with an explicit output schema
+- Arrow-batched ``mapInArrow`` (features) and ``mapInPandas`` (frames)
+  with an explicit output schema
 - batch-shape independence (results identical across partitionings)
 - deterministic fake features so downstream operators (ANN over extracted
   features) are exercised end to end.
@@ -100,46 +100,7 @@ def extract_features(payloads: DataFrame) -> DataFrame:
     return payloads.mapInArrow(gen, schema=FEATURES_SCHEMA)
 
 
-RESIZED_SCHEMA = "doc_id long, payload binary, width int, height int"
-
 FRAMES_SCHEMA = "doc_id long, frame_idx int, frame binary, n_frames int"
-
-
-def resize_images(payloads: DataFrame, width: int, height: int) -> DataFrame:
-    """Arrow-batched resize: 1 row in -> 1 row out, payload replaced by the
-    resized bytes + declared dimensions (typed metadata travels with the
-    binary column — readers never guess)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained fake resize (md5-keyed byte stream of exactly
-        # width*height bytes); see extract_features for the worker-import
-        # rationale
-        import hashlib as _hashlib
-
-        import pandas as _pd
-
-        def _fake_resize(raw: bytes) -> bytes:
-            out = bytearray()
-            counter = 0
-            while len(out) < width * height:
-                out += _hashlib.md5(raw + counter.to_bytes(4, "big")).digest()
-                counter += 1
-            return bytes(out[: width * height])
-
-        for batch in batches:
-            if len(batch):
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": batch["doc_id"],
-                        "payload": batch["payload"].map(
-                            lambda b: None if b is None else _fake_resize(bytes(b))
-                        ),
-                        "width": width,
-                        "height": height,
-                    }
-                )
-
-    return payloads.mapInPandas(gen, schema=RESIZED_SCHEMA)
 
 
 def sample_frames(payloads: DataFrame, frame_bytes: int = 16, every_n: int = 4) -> DataFrame:

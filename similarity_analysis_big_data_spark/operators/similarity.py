@@ -14,7 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.tfidf import doc_frequency, l2_normalize, term_frequency, tfidf
 from ..sources.readers import local_relation
@@ -382,7 +381,9 @@ def dense_best_match(
 _AUTO_STRATEGY_CACHE: dict[tuple[str, str], str] = {}
 _AUTO_STRATEGY_CACHE_MAX = 64  # memo keys per app; far above any real sweep
 
-# Probe/dense persist rule: ALWAYS persist. Calibration history, because
+# Probe/dense materialization rule: ALWAYS materialize (now a lazy
+# localCheckpoint; the timings below were taken with persist, which also
+# writes to the block store). Calibration history, because
 # this rule flipped twice as host artifacts were root-caused out of the
 # measurements: (r7-r11) "persist only above 16k docs" — calibrated while
 # THP huge-page compaction taxed the cache's serialized block writes;
@@ -433,9 +434,11 @@ def best_abstract_per_title(
 
     The abstract TF relation feeds the DF aggregate (whose broadcast the
     title path reuses) and the abstract weighting. The probe and dense
-    paths PERSIST it and DF (rule and history above); the sparse path
-    persists nothing, as its one streaming pair-join pass beats the
-    cache barrier (SCALE.md r7).
+    paths materialize it and DF with a lazy ``localCheckpoint`` (rule and
+    history above), which lives as long as the plans that read it and
+    never enters the session's cache, so no later call is served from
+    this one's data; the sparse path reads neither checkpoint, as its one
+    streaming pair-join pass beats the cache barrier (SCALE.md r7).
 
     ``strategy`` picks the pair-stage physical plan, AQE-style (measure,
     then choose):
@@ -481,20 +484,20 @@ def best_abstract_per_title(
             _auto_strategy_memo_put(key, "sparse")
 
     abstract_tf = term_frequency(abstract_terms, ["abstract_id"])
-    # The TF/DF persists pay only when a materialization is REREAD by a
-    # later pass: the stats+title collect, reread by the final action. The
-    # sparse path skips them so the pair join's build chain pipelines
-    # uncached (the r7 16x finding: 22.0 s fused vs 40.7 s through the
-    # cache barrier). DF is vocabulary-sized and feeds the probe's vocab
-    # count and both weightings.
-    if strategy != "sparse":
-        abstract_tf = abstract_tf.persist(StorageLevel.MEMORY_AND_DISK)
     df_ = doc_frequency(abstract_tf)
+    # The TF/DF checkpoints pay only when a materialization is REREAD by a
+    # later pass: the stats+title collect, reread by the final action. The
+    # sparse path reads the uncheckpointed chains so the pair join's build
+    # side pipelines (the r7 16x finding: 22.0 s fused vs 40.7 s through
+    # the cache barrier). DF is vocabulary-sized and feeds the probe's
+    # vocab count and both weightings.
+    tf_c, df_c = abstract_tf, df_
     if strategy != "sparse":
-        df_ = df_.persist(StorageLevel.MEMORY_AND_DISK)
+        tf_c = abstract_tf.localCheckpoint(eager=False)
+        df_c = doc_frequency(tf_c).localCheckpoint(eager=False)
     title_tf = term_frequency(title_terms, ["title_id"])
 
-    def title_vec(corpus_n: int | DataFrame) -> DataFrame:
+    def title_vec(corpus_n: int | DataFrame, df_: DataFrame) -> DataFrame:
         # J2: the left join keeps title terms with df=0 (idf = log10(n+1)+1)
         return l2_normalize(
             tfidf(title_tf, df_, corpus_n, ["title_id"], left=True), ["title_id"]
@@ -505,21 +508,20 @@ def best_abstract_per_title(
     if strategy != "sparse":
         # ONE driver action yields the stats row AND the full title matrix
         # (tagged union). On auto the stats row also carries the vocab
-        # count (vocabulary-sized agg over the persisted TF — this is also
-        # what materializes both persists) and the dense verdict, and the
-        # title rows are gated plan-side on that verdict — a sparse
-        # decision makes that branch empty, so it never pays for a title
-        # collect. Off auto the stats row is the count alone, and its two
-        # uses share one exchange.
+        # count (vocabulary-sized agg over the checkpointed DF) and the
+        # dense verdict, and the title rows are gated plan-side on that
+        # verdict — a sparse decision makes that branch empty, so it never
+        # pays for a title collect. Off auto the stats row is the count
+        # alone, and its two uses share one exchange.
         if not isinstance(n_docs, DataFrame):
             n_docs = spark.range(1).select(F.lit(n_docs).alias("_n_docs"))
-        stats, t_vec = n_docs.select("_n_docs"), title_vec(n_docs)
+        stats, t_vec = n_docs.select("_n_docs"), title_vec(n_docs, df_c)
         if strategy == "auto":
             sizes = n_docs
             if "nt" not in sizes.columns:
                 sizes = sizes.crossJoin(all_titles.agg(F.count("*").alias("nt")))
             stats = (
-                df_.agg(F.count("*").alias("vocab"))
+                df_c.agg(F.count("*").alias("vocab"))
                 .crossJoin(sizes)
                 .withColumn(
                     "dense_ok",
@@ -544,12 +546,10 @@ def best_abstract_per_title(
         corpus_n = stat_row["_n_docs"]
         t_rows = [r for r in rows if r["tag"] == "vec"]
 
-    abstract_vec = l2_normalize(
-        tfidf(abstract_tf, df_, corpus_n, ["abstract_id"]), ["abstract_id"]
-    )
     if strategy == "dense":
+        abstract_vec = l2_normalize(tfidf(tf_c, df_c, corpus_n, ["abstract_id"]), ["abstract_id"])
         top = dense_best_match(
-            title_vec(corpus_n), abstract_vec, "title_id", "abstract_id", t_rows=t_rows
+            title_vec(corpus_n, df_c), abstract_vec, "title_id", "abstract_id", t_rows=t_rows
         )
         # dense mode's precondition (n_titles * vocab <= broadcast cells)
         # bounds the match relation, so the null-fill join broadcasts
@@ -558,26 +558,9 @@ def best_abstract_per_title(
             F.col("abstract_id"),
             F.coalesce(F.col("cosine"), F.lit(0.0)).alias("cosine"),
         )
-    # Sparse branch: DROP the TF/DF persists before building the pair
-    # join. The cache only pays off when a LATER action rereads what
-    # the probe materialized — the dense path's collect does exactly
-    # that — but the sparse pair join is one giant streaming pass, and
-    # routing its build side through a TableCacheQueryStage barrier
-    # (serialized block write + read) instead of recomputing the
-    # corpus chain fused into the join stage measured 40.7 s vs
-    # 22.0 s at the 16x replica (SCALE.md r7 flagship sweep). After
-    # unpersist the planner stops substituting the cached relation
-    # and the whole chain pipelines into the join. UNCONDITIONAL even
-    # when the cheap pre-probe skipped creating the persists: the
-    # cache manager matches by logical plan, so a dense run earlier
-    # in the same session may have left these very relations cached,
-    # and the sparse contract is that its pair join never routes
-    # through a cache barrier.
-    abstract_tf.unpersist()
-    df_.unpersist()
     pairs = sparse_cosine_join(
-        title_vec(corpus_n),
-        abstract_vec,
+        title_vec(corpus_n, df_),
+        l2_normalize(tfidf(abstract_tf, df_, corpus_n, ["abstract_id"]), ["abstract_id"]),
         "title_id",
         "abstract_id",
         round_to=COSINE_DECIMALS,

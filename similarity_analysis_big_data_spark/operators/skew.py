@@ -1,14 +1,10 @@
 """Skew mitigation helpers (SURVEY §4.2 / scale notes).
 
-AQE's skew-join split handles most runtime skew; these helpers cover the
-cases AQE can't re-plan:
-
-- ``salted_aggregate``: two-phase aggregation for a hot-key groupBy —
-  phase 1 aggregates on (key, salt) spreading a hot key over N reducers,
-  phase 2 merges the partials. Correct for any algebraic aggregate
-  expressed as (partial_exprs, merge_exprs).
-- ``salted_join``: replicate the small side N ways and salt the big side
-  so one hot key fans across N tasks instead of one straggler.
+AQE's skew-join split handles runtime join skew; ``salted_aggregate``
+covers the hot-key groupBy AQE can't re-plan: phase 1 aggregates on
+(key, salt) spreading a hot key over N reducers, phase 2 merges the
+partials. Correct for any algebraic aggregate expressed as
+(partial_exprs, merge_exprs).
 """
 
 from __future__ import annotations
@@ -40,23 +36,3 @@ def salted_aggregate(
     salted = with_salt(df, n_salts)
     partial = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
     return partial.groupBy(*keys).agg(*merge_aggs)
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Equi-join where ``big`` has hot keys: salt the big side, explode the
-    small side across all salt values, join on (key, salt).
-
-    The small side grows n_salts×, the hot key's rows spread across
-    n_salts tasks. Prefer broadcast when small fits; this is for the
-    mid-size dimension that is too big to broadcast but joins a skewed fact.
-    """
-    big_salted = with_salt(big, n_salts)
-    small_exploded = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return big_salted.join(small_exploded, [key, "_salt"]).drop("_salt")

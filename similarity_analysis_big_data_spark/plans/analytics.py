@@ -1296,9 +1296,7 @@ def stream_twin_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: state is one entry per distinct key inside the watermark
     horizon; the readback aggregates ONLY key-determined columns (which
     physical duplicate survives is racy by design, the key set is not).
-    Production uses dropDuplicatesWithinWatermark (streaming/dedup.py)
-    so redelivery state evicts as the watermark advances; the plain
-    dropDuplicates here declares its watermark ON the hour-bucketed
+    The plain dropDuplicates here declares its watermark ON the hour-bucketed
     event-time column itself (see dedup_hourly_key_stream), so the
     watermarked column sits inside the dedup key and state evicts as
     the watermark passes each hour — bounded state, not just for the

@@ -1645,8 +1645,8 @@ def near_dup_best_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFra
     "artifact and today's batch is the only new work.",
 )
 def incremental_near_dup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: the base band-entry relation is the INDEX (production
-    materializes it bucketed by (band, key), so the probe join is
+    """Scale: the base band-entry relation is the INDEX (stored between
+    batches with ``bucketBy`` on (band, key), it makes the probe join
     co-located and the base corpus is never re-tokenized); all per-round
     work — signatures, probe, verify — is delta-sized plus the bounded
     collision fan-in. Derived in-query here so the oracle is

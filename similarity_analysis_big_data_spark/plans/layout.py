@@ -6,8 +6,9 @@ sort on one column makes ONE column's stats tight; interleaving the bits
 of two quantized key columns (Morton / Z-order curve) makes BOTH columns'
 stats tight at once, so predicates on either key — or both — skip most of
 a 100 TB table. This is the layout trick behind Delta/Iceberg OPTIMIZE
-ZORDER, expressed here as plain Catalyst bit arithmetic + a
-range-partitioned, sorted parquet write. No reference counterpart.
+ZORDER: the key is plain Catalyst bit arithmetic, and a parquet write
+range-partitioned and sorted on it lays the table out. No reference
+counterpart.
 """
 
 from __future__ import annotations
@@ -48,28 +49,6 @@ def zorder_key_sql(x: str, y: str, bits: int = Z_BITS) -> str:
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
-def write_zordered(
-    df: DataFrame, x_col: str, y_col: str, path: str, n_files: int = 8
-) -> None:
-    """Write ``df`` parquet, Z-order-clustered on (x_col, y_col).
-
-    ``repartitionByRange`` on the z-value splits the curve into contiguous
-    segments (one per output file) and ``sortWithinPartitions`` orders rows
-    along the curve inside each, so every file covers a small rectangle of
-    (x, y) space — min/max stats on BOTH columns stay tight and predicates
-    on either prune files. The z column itself is dropped before write; it
-    is layout, not data.
-    """
-    keyed = df.withColumn("_z", zorder_key(F.col(x_col), F.col(y_col)))
-    (
-        keyed.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 @register(
     "zorder_key_events",
     oracle=f"""
@@ -84,11 +63,10 @@ def write_zordered(
     "layout; the full key assignment is oracle-checked bit-for-bit.",
 )
 def zorder_key_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: the key is a narrow map (no shuffle here); the layout write
-    (write_zordered, tested in tests/test_sources.py) adds ONE range
-    shuffle at write time and repays it on every subsequent scan that
-    filters either dimension — same amortization argument as bucketing,
-    but for range predicates on two axes at once."""
+    """Scale: the key is a narrow map (no shuffle here); a layout write
+    range-partitioned and sorted on it adds ONE range shuffle at write
+    time and repays it on every subsequent scan that filters either
+    dimension."""
     ev = load_table(spark, sf_dir, "events")
     x = (F.col("user_id") % (1 << Z_BITS)).cast("integer")
     # floor (not cast) before quantizing: double->int casts truncate in

@@ -174,37 +174,6 @@ def read_papers_json(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-) -> DataFrame:
-    """CSV scan ([ext]): explicit schema (inference costs an extra full pass
-    and guesses types at 100 TB), PERMISSIVE mode with a ``_corrupt_record``
-    column so malformed lines quarantine instead of failing the job — the
-    same contract as the JSON scan."""
-    out_schema = schema
-    if "_corrupt_record" not in out_schema.fieldNames():
-        # build a new StructType — .add() mutates the caller's schema object
-        out_schema = T.StructType(
-            list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
-        )
-    return (
-        spark.read.schema(out_schema)
-        .option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(path)
-    )
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan ([ext]) — self-describing like parquet; pushdown/pruning
-    apply identically."""
-    return spark.read.orc(path)
-
-
 def read_stopwords(spark: SparkSession, path: str) -> list[str]:
     """Read a newline-delimited stopword list to a small driver-side list.
 
@@ -215,27 +184,3 @@ def read_stopwords(spark: SparkSession, path: str) -> list[str]:
     """
     rows = spark.read.text(path).collect()
     return [r.value for r in rows]
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    row_tag: str = "row",
-) -> DataFrame:
-    """XML scan ([ext]): explicit schema for the same reasons as the CSV
-    scan (inference costs a full extra pass and widens integer types), with
-    PERMISSIVE-mode quarantine of malformed rows."""
-    out_schema = schema
-    if "_corrupt_record" not in out_schema.fieldNames():
-        out_schema = T.StructType(
-            list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
-        )
-    return (
-        spark.read.schema(out_schema)
-        .format("xml")
-        .option("rowTag", row_tag)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .load(path)
-    )

@@ -40,48 +40,6 @@ def write_json(df: DataFrame, path: str, mode: str = "overwrite", single_file: b
     _maybe_coalesce(df, single_file).write.mode(mode).json(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: tuple[str, ...] = (),
-    single_file: bool = False,
-) -> None:
-    """ORC sink ([ext]) — the second columnar format; same pushdown/pruning
-    contract as parquet for warehouses standardized on ORC."""
-    writer = _maybe_coalesce(df, single_file).write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    num_buckets: int,
-    *bucket_cols: str,
-    sort: bool = True,
-    mode: str = "overwrite",
-    path: str | None = None,
-) -> None:
-    """Bucketed parquet table ([ext] — the co-located-join scale path).
-
-    Both sides of a recurring large⋈large join written with the same
-    ``bucketBy(n, key)`` (+ ``sortBy`` for merge-join readiness) join with
-    ZERO exchanges: the shuffle is paid once at write time and amortized
-    over every subsequent join/aggregate on the key — at 100 TB that is the
-    difference between one shuffle per query and none. Registered through
-    the session catalog (``saveAsTable``) because bucket metadata lives in
-    the catalog, not in the parquet files.
-    """
-    writer = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bucket_cols)
-    if sort:
-        writer = writer.sortBy(*bucket_cols)
-    if path is not None:
-        writer = writer.option("path", path)  # external table: data outside the warehouse
-    writer.saveAsTable(table)
-
-
 def write_text(df: DataFrame, path: str, mode: str = "overwrite", single_file: bool = True) -> None:
     """Text sink (S3) — replaces rdd.saveAsTextFile (lab2.py:307).
 
@@ -89,18 +47,3 @@ def write_text(df: DataFrame, path: str, mode: str = "overwrite", single_file: b
     because the reference used it only for a one-row accuracy tuple.
     """
     _maybe_coalesce(df, single_file).write.mode(mode).text(path)
-
-
-def write_xml(
-    df: DataFrame,
-    path: str,
-    row_tag: str = "row",
-    mode: str = "overwrite",
-    single_file: bool = False,
-) -> None:
-    """XML sink ([ext]) — Spark 4's built-in StAX XML source (the former
-    spark-xml package, upstreamed); the interchange format feeds/archives
-    still arrive in."""
-    _maybe_coalesce(df, single_file).write.mode(mode).format("xml").option(
-        "rowTag", row_tag
-    ).save(path)

@@ -1,38 +1,16 @@
 """Streaming deduplication (north-star dedup, streaming flavor).
 
-Two eviction contracts over a watermarked stream, both Spark's built-in
-stateful exact dedup:
-
-- ``dedup_hourly_key_stream``: ``dropDuplicates`` on an idempotency key
-  whose event-time bucket is the watermarked column, so each key's state
-  is evicted once the watermark passes its hour (``stream_twin_dedup``
-  and ``stream_twin_hourly_dedup`` run it);
-- ``dedup_event_stream_within_watermark``: ``dropDuplicatesWithinWatermark``
-  on a value digest, deduplicating only copies that arrive within the
-  watermark delay of each other, with state evicted as the watermark
-  advances even though no event-time column is in the key.
+``dedup_hourly_key_stream``: Spark's built-in stateful exact dedup
+(``dropDuplicates``) on an idempotency key whose event-time bucket is the
+watermarked column, so each key's state is evicted once the watermark
+passes its hour (``stream_twin_dedup`` and ``stream_twin_hourly_dedup``
+run it).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def dedup_event_stream_within_watermark(
-    events: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
-    """``dropDuplicatesWithinWatermark`` flavor: unlike ``dropDuplicates``
-    (which keys state on the exact dedup columns forever unless an event-time
-    column is part of the key), this guarantees dedup only for duplicates
-    arriving within the watermark delay of each other — and in exchange can
-    EVICT state as the watermark advances even though ``ts`` is not part of
-    the dedup key. That is the production shape for at-least-once sources
-    (kafka redeliveries land seconds apart, not hours)."""
-    keyed = events.withColumn(
-        "digest", F.md5(F.concat_ws("|", "user_id", "event_type", F.col("value").cast("string")))
-    )
-    return keyed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["digest"])
 
 
 def dedup_hourly_key_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:

@@ -5,10 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from similarity_analysis_big_data_spark.operators.skew import (
-    salted_aggregate,
-    salted_join,
-)
+from similarity_analysis_big_data_spark.operators.skew import salted_aggregate
 from similarity_analysis_big_data_spark.sources.readers import load_table
 from similarity_analysis_big_data_spark.streaming.events import read_event_stream
 from similarity_analysis_big_data_spark.streaming.stateful import running_user_totals
@@ -32,21 +29,6 @@ def test_salted_aggregate_equals_plain(spark, sf_smoke):
         r["event_type"]: (r["n"], round(r["s"], 6)) for r in salted.collect()
     }
     assert got == plain
-
-
-def test_salted_join_equals_plain(spark, sf_smoke):
-    orders = load_table(spark, sf_smoke, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_smoke, "customer").select("c_custkey", "c_mktsegment")
-    plain = orders.join(
-        cust, orders.o_custkey == cust.c_custkey
-    ).count()
-    salted = salted_join(
-        orders.withColumnRenamed("o_custkey", "k"),
-        cust.withColumnRenamed("c_custkey", "k"),
-        "k",
-        n_salts=8,
-    ).count()
-    assert salted == plain
 
 
 def test_stateful_running_totals_matches_batch(spark, sf_smoke):

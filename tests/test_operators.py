@@ -338,34 +338,18 @@ def test_no_unused_imports():
 
 # Package defs that nothing in the reachability guard's roots reaches, kept
 # on purpose. Keyed ``module.def`` (package-relative); each reason is the
-# COVERAGE.md row that lists the capability, or the reached function the
-# def is the test reference for.
+# COVERAGE.md row that lists the capability (``§<section> <first cell>``),
+# or the reached function the def is the test reference for.
 UNREACHED_ALLOWED = {
     "operators.mllib_scale.tfidf_vectors_mllib": "COVERAGE: §2.9 M3 [ext] MLlib scale path",
-    "operators.mllib_scale.minhash_approx_join": "COVERAGE: §2.9 M4 cosine similarity (approx)",
-    "operators.mllib_scale.random_projection_neighbors": "COVERAGE: §2.9 M4 cosine similarity (approx)",
-    "operators.multimodal.resize_images": "COVERAGE: Multimodal",
-    "sources.pydatasource.register_synthetic_docs": "COVERAGE: [ext] custom Python DataSource",
-    "sources.pydatasource.register_synthetic_events": "COVERAGE: [ext] custom Python STREAM DataSource",
-    "sources.pydatasource.register_jsonl_dir": "COVERAGE: [ext] custom Python DataSource WRITER",
-    "sources.pydatasource.vacuum_jsonl_dir": "COVERAGE: [ext] custom Python STREAM WRITER",
-    "sources.readers.read_csv": "COVERAGE: [ext] CSV scan",
-    "sources.readers.read_orc": "COVERAGE: [ext] ORC sink + scan",
-    "sources.readers.read_xml": "COVERAGE: [ext] XML sink + scan",
-    "sources.writers.write_orc": "COVERAGE: [ext] ORC sink + scan",
-    "sources.writers.write_xml": "COVERAGE: [ext] XML sink + scan",
-    "sources.writers.write_bucketed": "COVERAGE: [ext] bucketed table sink",
-    "sources.maintenance.compact_parquet_dir": "COVERAGE: [ext] table maintenance",
-    "operators.skew.salted_join": "COVERAGE: [ext] skewed join/agg",
-    "plans.layout.write_zordered": "COVERAGE: Layout",
-    "streaming.dedup.dedup_event_stream_within_watermark": "COVERAGE: Streaming (dropDuplicatesWithinWatermark)",
-    "streaming.sinks.start_idempotent_stream": "COVERAGE: Streaming (idempotent foreachBatch sink)",
-    "functions.tfidf.as_map_vector": "COVERAGE: A4 group-to-collection",
+    "operators.mllib_scale.minhash_approx_join": "COVERAGE: §2.9 M4 cosine similarity",
+    "operators.mllib_scale.random_projection_neighbors": "COVERAGE: §2.9 M4 cosine similarity",
     "functions.text.word_ngrams": "test reference for with_word_ngrams",
     "operators.dedup.simhash_pairs": "test reference for simhash_banded_pairs",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_COVERAGE = pathlib.Path(__file__).parent.parent / "COVERAGE.md"
 _IDENT = re.compile(r"[A-Za-z_]\w*")
 
 
@@ -471,10 +455,48 @@ def test_every_package_def_is_reached():
         name = key.rpartition(".")[2]
         assert key in defined, f"{key}: no longer defined"
         assert name not in without, f"{key}: reached without the allowlist"
-        assert reason.startswith("COVERAGE: ") or (
+        assert reason.removeprefix("COVERAGE: ") in _coverage_rows() or (
             reason.startswith("test reference for ") and reason.split()[-1] in without
         ), f"{key}: {reason!r}"
         assert name in test_refs, f"{key}: no test names it"
+
+
+def _coverage_rows() -> set[str]:
+    """Every COVERAGE.md table row as ``§<section> <first cell>`` (bare
+    ``<first cell>`` under a heading without a section number)."""
+    rows, section = set(), ""
+    for line in _COVERAGE.read_text().splitlines():
+        if line.startswith("## "):
+            section = line.split()[1] if line.split()[1].startswith("§") else ""
+        elif line.startswith("| "):
+            rows.add(f"{section} {line.split('|')[1].strip()}".strip())
+    return rows
+
+
+def test_coverage_cites_only_existing_code():
+    """Guard: every backticked ``<package dir>/<module>[.py|.<name>]`` in
+    COVERAGE.md names a package module that exists and, with ``.<name>``,
+    a top-level def, class or assignment in it, so a deletion that leaves
+    its COVERAGE claim behind fails here."""
+    root = pathlib.Path(pkg.__file__).parent
+    cite = re.compile(r"`((?:functions|operators|plans|sources|streaming)/\w+)(?:\.py|\.(\w+))?`")
+    missing = []
+    for lineno, line in enumerate(_COVERAGE.read_text().splitlines(), 1):
+        for module, name in cite.findall(line):
+            path = root / f"{module}.py"
+            if not path.exists():
+                missing.append(f"COVERAGE.md:{lineno} {module}")
+                continue
+            body = ast.parse(path.read_text()).body
+            names = {st.name for st in body if isinstance(st, _DEFS)} | {
+                t.id
+                for st in body if isinstance(st, (ast.Assign, ast.AnnAssign))
+                for t in (st.targets if isinstance(st, ast.Assign) else [st.target])
+                if isinstance(t, ast.Name)
+            }
+            if name and name not in names:
+                missing.append(f"COVERAGE.md:{lineno} {module}.{name}")
+    assert missing == [], "COVERAGE.md cites code that does not exist:\n" + "\n".join(missing)
 
 
 def test_rolling_fingerprint_deterministic(spark):
@@ -502,21 +524,6 @@ def test_cosine_zero_vector_is_null(spark):
     assert df.select(cosine_similarity("a", "b").alias("c")).collect()[0]["c"] is None
 
 
-def test_as_map_vector_one_map_per_doc(spark):
-    """A4 presentation form: one ``map<term, weight>`` per document whose
-    entries are exactly that document's long rows."""
-    from similarity_analysis_big_data_spark.functions.tfidf import as_map_vector
-
-    rows = [(1, "graph", 0.6), (1, "sampling", 0.8), (2, "neural", 1.0), (3, "graph", 0.5), (3, "quantum", 0.25)]
-    weighted = spark.createDataFrame(rows, "doc_id long, term string, weight double")
-    got = as_map_vector(weighted, ["doc_id"]).collect()
-    assert sorted(r["doc_id"] for r in got) == [1, 2, 3]
-    expected: dict[int, dict[str, float]] = {}
-    for doc_id, term, weight in rows:
-        expected.setdefault(doc_id, {})[term] = weight
-    assert {r["doc_id"]: dict(r["vector"]) for r in got} == expected
-
-
 def test_multimodal_features_deterministic_and_partition_invariant(spark, docs):
     payloads = attach_binary_payload(docs, "doc_id", "text")
     one = extract_features(payloads.coalesce(1)).orderBy("doc_id").collect()
@@ -529,20 +536,10 @@ def test_multimodal_features_deterministic_and_partition_invariant(spark, docs):
     assert all(0.0 <= x <= 1.0 for x in byid[1]["feature"])
 
 
-def test_multimodal_resize_and_frame_sampling(spark, docs):
-    from similarity_analysis_big_data_spark.operators.multimodal import (
-        resize_images,
-        sample_frames,
-    )
+def test_multimodal_frame_sampling(spark, docs):
+    from similarity_analysis_big_data_spark.operators.multimodal import sample_frames
 
     payloads = attach_binary_payload(docs, "doc_id", "text")
-
-    resized = resize_images(payloads, 8, 4).collect()
-    assert all(len(bytes(r["payload"])) == 8 * 4 for r in resized)
-    assert all((r["width"], r["height"]) == (8, 4) for r in resized)
-    # deterministic: identical payloads resize identically
-    byid = {r["doc_id"]: bytes(r["payload"]) for r in resized}
-    assert byid[1] == byid[2]
 
     # frame sampling expands rows: every 4th 16-byte chunk, frame_idx stamped
     one = sample_frames(payloads.coalesce(1)).orderBy("doc_id", "frame_idx").collect()
@@ -1266,11 +1263,10 @@ def test_perceptual_dhash_known_bitmaps_and_partition_invariance(spark):
 
 
 def test_multimodal_workers_null_payload_in_null_out(spark):
-    """A NULL payload gives a NULL feature row, a NULL resized payload, a
-    NULL phash and no frames; the non-NULL row beside it is unaffected."""
+    """A NULL payload gives a NULL feature row, a NULL phash and no frames;
+    the non-NULL row beside it is unaffected."""
     from similarity_analysis_big_data_spark.operators.multimodal import (
         perceptual_dhash,
-        resize_images,
         sample_frames,
     )
 
@@ -1280,8 +1276,6 @@ def test_multimodal_workers_null_payload_in_null_out(spark):
     feats = {r["doc_id"]: r for r in extract_features(df).collect()}
     assert (feats[0]["n_bytes"], feats[0]["header"], feats[0]["feature"]) == (None, None, None)
     assert feats[1]["n_bytes"] == 64
-    resized = {r["doc_id"]: r["payload"] for r in resize_images(df, 8, 4).collect()}
-    assert resized[0] is None and len(resized[1]) == 32
     assert {r["doc_id"]: r["phash"] for r in perceptual_dhash(df).collect()} == {0: None, 1: 0}
     assert {r["doc_id"] for r in sample_frames(df).collect()} == {1}
 

@@ -1,6 +1,8 @@
-"""deploy/perfbench_ab.py's summary: quartiles, pair wins and the claim rule
-(at least 9 of 10 pairs won, median gain larger than the parent's IQR).
-Spark-free: the records are built by hand."""
+"""deploy/perfbench_ab.py's summary: quartiles, pair wins, the claim rule
+(at least 9 of 10 pairs won, median gain larger than the parent's IQR) and
+the no-regression verdict (median worse by more than the bound; parent
+spread above the bound without a clean separation). Spark-free: the
+records are built by hand."""
 
 from __future__ import annotations
 
@@ -9,8 +11,8 @@ import pytest
 from deploy.perfbench_ab import quartiles, summarize
 
 E2E = [
-    {"name": "warm_cpu_s", "better": "lower"},
-    {"name": "peak_rss_mb", "better": "lower"},
+    {"name": "warm_cpu_s", "better": "lower", "bound": 0.25},
+    {"name": "peak_rss_mb", "better": "lower", "bound": 0.1},
 ]
 
 
@@ -61,3 +63,28 @@ def test_failed_runs_drop_their_pair():
     s = summarize(recs, E2E)["warm_cpu_s"]
     assert s["pairs"] == 2 and s["wins"] == 2
     assert "peak_rss_mb" not in summarize(recs, E2E)
+
+
+def test_regressed_when_the_median_is_worse_by_more_than_the_bound():
+    # parent median 2.0, bound 0.25: worse by 0.4 is inside, by 0.6 is out
+    inside = summarize(_records({"warm_cpu_s": [(2.0, 2.4)] * 10}), E2E)["warm_cpu_s"]
+    assert not inside["regressed"] and not inside["unresolved"]
+    out = summarize(_records({"warm_cpu_s": [(2.0, 2.6)] * 10}), E2E)["warm_cpu_s"]
+    assert out["regressed"]
+    # a better median never regresses; "higher is better" flips the sign
+    higher = [{"name": "ratio", "better": "higher", "bound": 0.1}]
+    assert not summarize(_records({"ratio": [(1.0, 1.5)] * 4}), higher)["ratio"]["regressed"]
+    assert summarize(_records({"ratio": [(1.0, 0.8)] * 4}), higher)["ratio"]["regressed"]
+
+
+def test_unresolved_when_the_parent_spread_exceeds_the_bound():
+    # parent IQR 1.0 on a median of 2.5 (0.4 > 0.25)
+    noisy = [2.0, 3.0] * 5
+    overlap = summarize(_records({"warm_cpu_s": [(p, 2.5) for p in noisy]}), E2E)["warm_cpu_s"]
+    assert overlap["unresolved"] and not overlap["regressed"]
+    # every change run beats every parent run: the noise cannot hide a loss
+    clean = summarize(_records({"warm_cpu_s": [(p, 1.5) for p in noisy]}), E2E)["warm_cpu_s"]
+    assert not clean["unresolved"]
+    # a tight parent is resolved whatever the change does
+    tight = summarize(_records({"warm_cpu_s": [(2.0, 1.0), (2.0, 3.0)] * 5}), E2E)["warm_cpu_s"]
+    assert not tight["unresolved"]

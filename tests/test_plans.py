@@ -107,9 +107,25 @@ def test_flagship_sparse_branch_drops_tf_cache(spark, sf_oracle, monkeypatch):
         assert S._AUTO_STRATEGY_CACHE[key] == "sparse"
         plan = _plan_of(spark, df)
         assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+        assert "ExistingRDD" not in plan  # nor through the probe's checkpoints
     finally:
         S._AUTO_STRATEGY_CACHE.pop(key, None)
         spark.catalog.clearCache()
+
+
+def test_flagship_dense_leaves_the_session_cache_empty(spark, sf_oracle):
+    """The probe/dense TF and DF materializations live as long as the plan
+    that reads them: two dense calls in one session cache nothing, so a
+    long-lived driver keeps no relation per input and a repeat call is
+    never served from an earlier call's data."""
+    from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    first = title_best_abstract(spark, sf_oracle, strategy="dense").collect()
+    second = title_best_abstract(spark, sf_oracle, strategy="dense").collect()
+    assert sorted(first) == sorted(second)
+    assert cache.isEmpty()
 
 
 def test_topn_uses_take_ordered(spark, sf_oracle):

@@ -963,43 +963,6 @@ def test_bucketed_rank_and_sums_match_windows_on_random_data(rows, n_buckets):
     assert g.exceptAll(e).count() == 0 and e.exceptAll(g).count() == 0
 
 
-@settings(max_examples=40, deadline=None)
-@given(
-    fields=st.lists(
-        st.tuples(
-            st.text(
-                alphabet="abcdefghijklmnopqrstuvwxyz_", min_size=1, max_size=8
-            ),
-            st.sampled_from(
-                [
-                    "string", "bigint", "int", "double", "float", "boolean",
-                    "binary", "date", "timestamp", "decimal(12,2)",
-                    "array<string>", "array<bigint>", "map<string,double>",
-                    "array<decimal(10,3)>", "map<bigint,array<string>>",
-                ]
-            ),
-        ),
-        min_size=1,
-        max_size=6,
-        unique_by=lambda t: t[0],
-    )
-)
-def test_flat_ddl_parser_roundtrips_simple_strings(fields):
-    """Property: the session-free legacy-manifest DDL parser re-parses any
-    flat schema's simpleString back to the identical StructType."""
-    from pyspark.sql.types import StructField, StructType
-
-    from similarity_analysis_big_data_spark.sources.pydatasource import (
-        _parse_flat_ddl,
-    )
-
-    ddl = ", ".join(f"{n} {t}" for n, t in fields)
-    parsed = _parse_flat_ddl(ddl)
-    assert parsed.simpleString() == f"struct<{','.join(f'{n}:{t}' for n, t in fields)}>"
-    assert isinstance(parsed, StructType)
-    assert all(isinstance(f, StructField) for f in parsed.fields)
-
-
 import re as _re
 
 sentence_strategy = st.lists(

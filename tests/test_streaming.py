@@ -111,33 +111,6 @@ def test_streaming_sliding_windows_match_batch(spark, sf_smoke):
     assert stream_rows == batch_rows
 
 
-def test_dedup_within_watermark_drops_redelivery(spark, sf_smoke):
-    """dropDuplicatesWithinWatermark keeps one row per digest for
-    duplicates inside the watermark horizon."""
-    from similarity_analysis_big_data_spark.sources.readers import load_table
-    from similarity_analysis_big_data_spark.streaming.dedup import (
-        dedup_event_stream_within_watermark,
-    )
-
-    stream = read_event_stream(spark, sf_smoke)
-    got = run_to_memory(
-        dedup_event_stream_within_watermark(stream), "stream_dedup_wm"
-    )
-    rows = got.collect()
-    n_distinct = (
-        load_table(spark, sf_smoke, "events")
-        .select(
-            F.md5(
-                F.concat_ws("|", "user_id", "event_type", F.col("value").cast("string"))
-            ).alias("digest")
-        )
-        .distinct()
-        .count()
-    )
-    assert len(rows) == n_distinct
-    assert len({r["digest"] for r in rows}) == n_distinct
-
-
 def test_stream_stream_interval_join_matches_batch(spark, sf_smoke):
     """Stream-stream inner join with watermarked, time-banded state must
     produce exactly the batch interval join's pairs."""
@@ -215,30 +188,6 @@ def test_checkpoint_recovery_exactly_once(spark, sf_smoke, tmp_path):
     got = spark.read.parquet(out_dir)
     assert got.count() == events.count()  # nothing lost
     assert got.select("event_id").distinct().count() == events.count()  # no dupes
-
-
-def test_idempotent_sink_replay_converges(spark, sf_smoke, tmp_path):
-    """Replaying an epoch (crash-between-write-and-commit) must overwrite
-    its own partition, not append: row count is unchanged after replay."""
-    from similarity_analysis_big_data_spark.sources.readers import load_table
-    from similarity_analysis_big_data_spark.streaming.sinks import (
-        start_idempotent_stream,
-        write_batch_idempotent,
-    )
-
-    out = str(tmp_path / "out")
-    stream = read_event_stream(spark, sf_smoke).select("event_id", "user_id", "value")
-    q = start_idempotent_stream(stream, out, str(tmp_path / "ckpt"))
-    q.awaitTermination()
-    n_events = load_table(spark, sf_smoke, "events").count()
-    assert spark.read.parquet(out).count() == n_events
-
-    # simulate the replay: rewrite epoch 0's batch out-of-band
-    batch0 = load_table(spark, sf_smoke, "events").select("event_id", "user_id", "value")
-    write_batch_idempotent(batch0, 0, out)
-    got = spark.read.parquet(out)
-    assert got.count() == n_events  # no duplication
-    assert got.select("event_id").distinct().count() == n_events
 
 
 def test_stream_stream_left_outer_join_emits_expired_unmatched(spark, sf_smoke):
