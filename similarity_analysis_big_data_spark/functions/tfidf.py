@@ -23,22 +23,22 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
-def term_frequency(terms: DataFrame, doc_cols: list[str], term_col: str = "term") -> DataFrame:
+def term_frequency(terms: DataFrame, doc_cols: list[str]) -> DataFrame:
     """A2 (lab2.py:163): rows of (doc, term) -> (doc, term, tf).
 
     Partial+final hash aggregation; the only shuffle is on the composite
     key, with map-side combine shrinking it to distinct (doc, term) pairs.
     """
-    return terms.groupBy(*doc_cols, term_col).agg(F.count("*").alias("tf"))
+    return terms.groupBy(*doc_cols, "term").agg(F.count("*").alias("tf"))
 
 
-def doc_frequency(tf: DataFrame, term_col: str = "term") -> DataFrame:
+def doc_frequency(tf: DataFrame) -> DataFrame:
     """A3 (lab2.py:167-170): (doc, term, tf) -> (term, df).
 
     Input is already distinct per (doc, term), so the reference's
     distinct()+reduceByKey triple-shuffle collapses to one count per term.
     """
-    return tf.groupBy(term_col).agg(F.count("*").alias("df"))
+    return tf.groupBy("term").agg(F.count("*").alias("df"))
 
 
 def tfidf_weight(
@@ -63,7 +63,6 @@ def tfidf(
     df_: DataFrame,
     n_docs: int | DataFrame,
     doc_cols: list[str],
-    term_col: str = "term",
     left: bool = False,
 ) -> DataFrame:
     """J1/J2 + M3 (lab2.py:173, 208-209, 187-189): attach df, compute weight.
@@ -82,7 +81,7 @@ def tfidf(
     Catalyst/AQE broadcasts it; no shuffle of the big tf side.
     """
     how = "left" if left else "inner"
-    joined = tf.join(F.broadcast(df_), term_col, how)
+    joined = tf.join(F.broadcast(df_), "term", how)
     if left:
         joined = joined.withColumn("df", F.coalesce("df", F.lit(0)))
     if isinstance(n_docs, DataFrame):
@@ -91,7 +90,7 @@ def tfidf(
     else:
         n = n_docs
     return joined.select(
-        *doc_cols, term_col, tfidf_weight("tf", "df", n).alias("weight")
+        *doc_cols, "term", tfidf_weight("tf", "df", n).alias("weight")
     )
 
 
@@ -109,7 +108,7 @@ def l2_normalize(
     return weighted.withColumn(weight_col, F.col(weight_col) / norm)
 
 
-def l2_normalize_sql(doc_cols: list[str], weight: str = "w") -> str:
+def l2_normalize_sql(doc_cols: list[str]) -> str:
     """The DuckDB rendering of ``l2_normalize``: the normalized weight as a
-    window expression over the raw weight column ``weight``."""
-    return f"{weight} / sqrt(sum({weight} * {weight}) OVER (PARTITION BY {', '.join(doc_cols)}))"
+    window expression over the raw weight column ``w``."""
+    return f"w / sqrt(sum(w * w) OVER (PARTITION BY {', '.join(doc_cols)}))"

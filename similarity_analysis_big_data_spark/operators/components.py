@@ -45,6 +45,10 @@ from ..sources.readers import local_relation
 # posture as operators/rank.py's offset relation.
 _DRIVER_FINISH_MAX_EDGES = 10_000
 
+# Propagation rounds before connected_components stops with a
+# RuntimeWarning (pointer jumping needs O(log diameter) rounds).
+MAX_ITERATIONS = 20
+
 
 def _driver_union_find(pairs) -> dict:
     """Min-root union-find over collected (a, b) edges; returns
@@ -71,9 +75,6 @@ def _driver_union_find(pairs) -> dict:
 
 def connected_components(
     pairs: DataFrame,
-    id_l: str = "id_l",
-    id_r: str = "id_r",
-    max_iterations: int = 20,
     iteration_shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """(id_l, id_r) undirected edges -> (id, component) with component =
@@ -98,7 +99,7 @@ def connected_components(
     # installed yet (ADVICE r3 — it was collapsing the flagship dedup
     # path's parallelism, not just the label-sized loop)
     pairs_mat = pairs.select(
-        F.col(id_l).alias("src"), F.col(id_r).alias("dst")
+        F.col("id_l").alias("src"), F.col("id_r").alias("dst")
     ).localCheckpoint(eager=True)
     # EDGE FINISH: ask for threshold+1 rows — getting <= threshold back
     # PROVES that is the whole edge set, and the union-find labels it with
@@ -121,7 +122,7 @@ def connected_components(
     if iteration_shuffle_partitions is not None:
         spark.conf.set(conf_key, str(iteration_shuffle_partitions))
     try:
-        return _connected_components_loop(pairs_mat, max_iterations)
+        return _connected_components_loop(pairs_mat)
     finally:
         spark.conf.set(conf_key, saved)
 
@@ -148,9 +149,7 @@ def _label_sum(labels: DataFrame):
     ).first()[0]
 
 
-def _connected_components_loop(
-    pairs_mat: DataFrame, max_iterations: int
-) -> DataFrame:
+def _connected_components_loop(pairs_mat: DataFrame) -> DataFrame:
     # LAZY checkpoints (r6): edges and labels each feed multiple
     # consumers, so they must materialize once — but eager=True would fire
     # one driver action apiece. eager=False materializes them inside the
@@ -221,7 +220,7 @@ def _connected_components_loop(
     # until convergence) — O(log diameter) rounds
     prev_sum = _label_sum(labels)
     converged = False
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
             .groupBy("src")
@@ -260,13 +259,13 @@ def _connected_components_loop(
         prev_sum = new_sum
     if not converged:
         # Exiting on the iteration cap with labels still moving means some
-        # component (diameter > max_iterations) is under-merged — dedup
+        # component (diameter > MAX_ITERATIONS) is under-merged — dedup
         # built on these labels would silently KEEP near-duplicates. Surface
         # it loudly instead of returning as if converged (ADVICE r1).
         warnings.warn(
             f"connected_components: labels still changing after "
-            f"{max_iterations} iterations; long-chain components are "
-            f"under-merged — raise max_iterations",
+            f"{MAX_ITERATIONS} iterations; long-chain components are "
+            f"under-merged — raise operators.components.MAX_ITERATIONS",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -277,8 +276,6 @@ def dedup_survivors(
     docs: DataFrame,
     dup_pairs: DataFrame,
     id_col: str,
-    id_l: str = "id_l",
-    id_r: str = "id_r",
     iteration_shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """The deduplicated relation: per near-dup component keep the smallest
@@ -289,8 +286,7 @@ def dedup_survivors(
     the docs relation streams through one join, never widens.
     """
     comp = connected_components(
-        dup_pairs, id_l, id_r,
-        iteration_shuffle_partitions=iteration_shuffle_partitions,
+        dup_pairs, iteration_shuffle_partitions=iteration_shuffle_partitions
     )
     losers = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)

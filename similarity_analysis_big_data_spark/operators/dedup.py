@@ -70,16 +70,14 @@ def canonical_fingerprint_sql(expr: str) -> str:
     return f"md5({array_join_sql(f'list_sort(list_distinct({expr}))', ' ')})"
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str, shingle_col: str = "shingle"
-) -> DataFrame:
+def minhash_signatures(shingles: DataFrame, id_col: str) -> DataFrame:
     """(id, shingle) long rows -> (id, mh0..mhK-1).
 
     One hash aggregate: per permutation, min over the doc's shingle hashes.
     The md5-derived shingle id is computed once and reused by all K
     permutations (cheap column math, K extra agg expressions — not K passes).
     """
-    h = (md5_long(shingle_col) % MERSENNE_P).alias("_h")
+    h = (md5_long("shingle") % MERSENNE_P).alias("_h")
     hashed = shingles.select(F.col(id_col), h)
     aggs = [
         F.min(minhash_expr("_h", i)).alias(f"mh{i}")
@@ -165,7 +163,6 @@ def _overlap_counts(
 def jaccard_pairs(
     shingles: DataFrame,
     id_col: str,
-    shingle_col: str = "shingle",
     candidates: DataFrame | None = None,
     assume_distinct: bool = False,
     threshold: tuple[int, int] | None = None,
@@ -203,7 +200,7 @@ def jaccard_pairs(
     output (277,695 pairs): the token-array payload shipped twice per
     pair outweighs the exploded shuffle (SCALE.md, r12 negative A/Bs).
     """
-    sets = shingles.select(F.col(id_col), F.col(shingle_col))
+    sets = shingles.select(F.col(id_col), F.col("shingle"))
     if not assume_distinct:
         sets = sets.distinct()
     sizes = sets.groupBy(id_col).agg(F.count("*").alias("set_size"))
@@ -214,7 +211,7 @@ def jaccard_pairs(
         lhs = sets.withColumnRenamed(id_col, "id_l")
         rhs = sets.withColumnRenamed(id_col, "id_r")
         inter = (
-            lhs.join(rhs, shingle_col)
+            lhs.join(rhs, "shingle")
             .filter(F.col("id_l") < F.col("id_r"))
             .groupBy("id_l", "id_r")
             .agg(F.count("*").alias("n_common"))
@@ -233,7 +230,7 @@ def jaccard_pairs(
             cand = cand.filter(
                 den * F.least("size_l", "size_r") >= num * F.greatest("size_l", "size_r")
             )
-        inter = _overlap_counts(cand, sets, id_col, shingle_col)
+        inter = _overlap_counts(cand, sets, id_col, "shingle")
     return inter.select(
         "id_l",
         "id_r",
@@ -254,9 +251,7 @@ SUBSTRING_CAP = 64
 SUBSTRING_MIN_SPAN = 12
 
 
-def near_dup_pairs(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def near_dup_pairs(docs: DataFrame) -> DataFrame:
     """Verified near-duplicate pairs: (id_l, id_r, jaccard) with exact
     token-set Jaccard >= NEAR_DUP_T, jaccard unrounded.
 
@@ -289,34 +284,32 @@ def near_dup_pairs(
     Callers that read the returned pairs more than once materialize
     them themselves (near_dup_cluster_stats)."""
     toksets = docs.select(
-        id_col, F.array_distinct(words(text_col)).alias("toks")
+        "doc_id", F.array_distinct(words("text")).alias("toks")
     ).localCheckpoint(eager=True)
-    shingles = toksets.select(id_col, F.explode("toks").alias("shingle"))
-    cand = lsh_candidate_pairs(minhash_signatures(shingles, id_col), id_col)
+    shingles = toksets.select("doc_id", F.explode("toks").alias("shingle"))
+    cand = lsh_candidate_pairs(minhash_signatures(shingles, "doc_id"), "doc_id")
     num, den = NEAR_DUP_T
     return jaccard_pairs(
-        shingles, id_col, candidates=cand, assume_distinct=True, threshold=NEAR_DUP_T
+        shingles, "doc_id", candidates=cand, assume_distinct=True, threshold=NEAR_DUP_T
     ).filter(F.col("jaccard") >= num / den)
 
 
-def simhash_signatures(
-    term_weights: DataFrame, id_col: str, term_col: str = "term", weight_col: str = "weight", bits: int = 32
-) -> DataFrame:
-    """(id, term, weight) -> (id, simhash) via weighted bit majority.
+def simhash_signatures(term_weights: DataFrame, id_col: str) -> DataFrame:
+    """(id, term, weight) -> (id, 32-bit simhash) via weighted bit majority.
 
-    Explodes each term into ``bits`` rows (bit index b contributes
+    Explodes each term into 32 rows (bit index b contributes
     +w / -w by bit b of the term hash), aggregates per (id, b), then folds
     the majority bits back into one int64. Two hash aggregates, all
     column math — the 32× row blowup is map-side only.
     """
     hashed = term_weights.select(
         F.col(id_col),
-        (md5_long(term_col)).alias("_h"),
-        F.col(weight_col).cast("double").alias("_w"),
+        (md5_long("term")).alias("_h"),
+        F.col("weight").cast("double").alias("_w"),
     )
     exploded = hashed.select(
         F.col(id_col),
-        F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit"),
+        F.explode(F.sequence(F.lit(0), F.lit(31))).alias("bit"),
         F.col("_h"),
         F.col("_w"),
     ).select(
@@ -413,8 +406,8 @@ def simhash_banded_pairs(
     )
 
 
-def _positioned_grams(toks: DataFrame, id_col: str, k: int) -> DataFrame:
-    """``(id_col, tokens)`` -> ``(id_col, pos, gram)``: every ``k``-token
+def _positioned_grams(toks: DataFrame, k: int) -> DataFrame:
+    """``(doc_id, tokens)`` -> ``(doc_id, pos, gram)``: every ``k``-token
     gram with its 0-based start position; docs shorter than ``k`` have
     none.
 
@@ -424,7 +417,7 @@ def _positioned_grams(toks: DataFrame, id_col: str, k: int) -> DataFrame:
     position-ordered, so posexplode yields identical (pos, gram) rows."""
     return with_word_ngrams(
         toks.filter(F.size("tokens") >= k), "tokens", k, "_g"
-    ).select(id_col, F.posexplode("_g").alias("pos", "gram"))
+    ).select("doc_id", F.posexplode("_g").alias("pos", "gram"))
 
 
 def _maximal_spans(pairs: DataFrame, k: int, min_span: int) -> DataFrame:
@@ -455,7 +448,6 @@ def _maximal_spans(pairs: DataFrame, k: int, min_span: int) -> DataFrame:
 
 def substring_span_pairs(
     toks: DataFrame,
-    id_col: str = "doc_id",
     k: int = SUBSTRING_K,
     cap: int = SUBSTRING_CAP,
     min_span: int = SUBSTRING_MIN_SPAN,
@@ -465,7 +457,7 @@ def substring_span_pairs(
     consecutive tokens shared by a doc pair becomes one maximal span row
     ``(id_l, id_r, start_l, start_r, span_tokens)``, id_l < id_r.
 
-    ``toks`` is ``(id_col, tokens array<string>)``. Positioned ``k``-grams
+    ``toks`` is ``(doc_id, tokens array<string>)``. Positioned ``k``-grams
     bucket by gram value in ONE wide shuffle (the suffix-array alternative:
     hash buckets need no global order); each bucket emits its ordered doc
     pairs JVM-side via higher-order transform/filter; ``_maximal_spans``
@@ -478,11 +470,11 @@ def substring_span_pairs(
     the gram shuffle is priced by matched-pair volume, never corpus size.
     """
     buckets = (
-        _positioned_grams(toks, id_col, k)
+        _positioned_grams(toks, k)
         .groupBy("gram")
         .agg(
             F.collect_list(
-                F.struct(F.col(id_col), F.col("pos").cast("long").alias("pos"))
+                F.struct(F.col("doc_id"), F.col("pos").cast("long").alias("pos"))
             ).alias("occs")
         )
         .filter(F.size("occs") <= cap)
@@ -490,19 +482,17 @@ def substring_span_pairs(
     pairs = buckets.select(
         F.explode(
             F.expr(
-                f"flatten(transform(occs, a -> "
-                f"transform(filter(occs, b -> b.{id_col} > a.{id_col}), "
-                f"b -> struct(a.{id_col} AS id_l, b.{id_col} AS id_r, "
-                f"a.pos AS pos_l, a.pos - b.pos AS diag))))"
+                "flatten(transform(occs, a -> "
+                "transform(filter(occs, b -> b.doc_id > a.doc_id), "
+                "b -> struct(a.doc_id AS id_l, b.doc_id AS id_r, "
+                "a.pos AS pos_l, a.pos - b.pos AS diag))))"
             )
         ).alias("p")
     ).select("p.*")
     return _maximal_spans(pairs, k, min_span)
 
 
-def substring_coverage(
-    toks: DataFrame, spans: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def substring_coverage(toks: DataFrame, spans: DataFrame) -> DataFrame:
     """Per-document duplicated-token coverage over the ``spans`` of
     ``substring_span_pairs(toks)``: union the span intervals each doc
     participates in (either side of every pair), merge overlapping
@@ -521,36 +511,36 @@ def substring_coverage(
     # note in SUBSTRING_COVERAGE_SQL)
     iv = (
         spans.select(
-            F.col("id_l").alias(id_col),
+            F.col("id_l").alias("doc_id"),
             F.col("start_l").alias("s"),
             (F.col("start_l") + F.col("span_tokens")).alias("e"),
         )
         .unionByName(
             spans.select(
-                F.col("id_r").alias(id_col),
+                F.col("id_r").alias("doc_id"),
                 F.col("start_r").alias("s"),
                 (F.col("start_r") + F.col("span_tokens")).alias("e"),
             )
         )
         .distinct()
     )
-    w = W.partitionBy(id_col).orderBy("s", "e")
+    w = W.partitionBy("doc_id").orderBy("s", "e")
     prev_end = F.max("e").over(w.rowsBetween(W.unboundedPreceding, -1))
     grp = iv.withColumn(
         "new_isl",
         F.when(prev_end.isNull() | (F.col("s") > prev_end), 1).otherwise(0),
     ).withColumn("g", F.sum("new_isl").over(w.rowsBetween(W.unboundedPreceding, 0)))
     cov = (
-        grp.groupBy(id_col, "g")
+        grp.groupBy("doc_id", "g")
         .agg((F.max("e") - F.min("s")).alias("seg"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("seg").alias("dup_tokens"))
     )
     lens = toks.select(
-        id_col, F.size("tokens").cast("long").alias("n_tokens")
+        "doc_id", F.size("tokens").cast("long").alias("n_tokens")
     ).filter(F.col("n_tokens") > 0)
-    return lens.join(cov, id_col, "left").select(
-        id_col,
+    return lens.join(cov, "doc_id", "left").select(
+        "doc_id",
         "n_tokens",
         F.coalesce("dup_tokens", F.lit(0).cast("long")).alias("dup_tokens"),
         F.round(
@@ -559,14 +549,12 @@ def substring_coverage(
     )
 
 
-def substring_dedup_rewrite(
-    toks: DataFrame, spans: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def substring_dedup_rewrite(toks: DataFrame, spans: DataFrame) -> DataFrame:
     """The removal half of exact-substring dedup (Lee et al. 2022) over
     the ``spans`` of ``substring_span_pairs(toks)``: drop every token
     position covered by a duplicated span on the doc's RIGHT side (id_r —
     the higher id loses; the id_l copy is the surviving first occurrence)
-    and reassemble the remaining tokens in order. Returns ``(id_col,
+    and reassemble the remaining tokens in order. Returns ``(doc_id,
     n_tokens, kept_tokens, text_dedup)`` for every doc with at least one
     token.
 
@@ -576,20 +564,20 @@ def substring_dedup_rewrite(
     token array (no explode of the corpus, no per-position join).
     """
     rem = spans.select(
-        F.col("id_r").alias(id_col),
+        F.col("id_r").alias("doc_id"),
         F.col("start_r").alias("s"),
         (F.col("start_r") + F.col("span_tokens")).alias("e"),
     ).distinct()
-    ivs = rem.groupBy(id_col).agg(F.collect_list(F.struct("s", "e")).alias("arr"))
+    ivs = rem.groupBy("doc_id").agg(F.collect_list(F.struct("s", "e")).alias("arr"))
     kept = F.expr(
         "filter(tokens, (tok, pi) -> arr IS NULL "
         "OR NOT exists(arr, iv -> pi >= iv.s AND pi < iv.e))"
     )
     return (
         toks.filter(F.size("tokens") > 0)
-        .join(ivs, id_col, "left")
+        .join(ivs, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.size("tokens").cast("long").alias("n_tokens"),
             F.size(kept).cast("long").alias("kept_tokens"),
             F.array_join(kept, " ").alias("text_dedup"),
@@ -600,7 +588,6 @@ def substring_dedup_rewrite(
 def substring_span_pairs_delta(
     base_toks: DataFrame,
     delta_toks: DataFrame,
-    id_col: str = "doc_id",
     k: int = SUBSTRING_K,
     cap: int = SUBSTRING_CAP,
     min_span: int = SUBSTRING_MIN_SPAN,
@@ -616,13 +603,13 @@ def substring_span_pairs_delta(
     hot-bucket lever as the batch operator — a boilerplate gram would
     fan every delta occurrence out by its full base posting list).
     """
-    bg = _positioned_grams(base_toks, id_col, k)
+    bg = _positioned_grams(base_toks, k)
     occ = bg.groupBy("gram").agg(F.count("*").alias("_occ"))
     bcap = bg.join(occ.filter(F.col("_occ") <= cap), "gram").drop("_occ")
-    dg = _positioned_grams(delta_toks, id_col, k)
+    dg = _positioned_grams(delta_toks, k)
     pairs = dg.alias("d").join(bcap.alias("b"), "gram").select(
-        F.col(f"d.{id_col}").alias("id_l"),
-        F.col(f"b.{id_col}").alias("id_r"),
+        F.col("d.doc_id").alias("id_l"),
+        F.col("b.doc_id").alias("id_r"),
         F.col("d.pos").cast("long").alias("pos_l"),
         (F.col("d.pos") - F.col("b.pos")).cast("long").alias("diag"),
     )

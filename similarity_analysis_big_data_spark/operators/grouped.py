@@ -26,24 +26,24 @@ def grouped_zscore(
     df: DataFrame,
     keys: Iterable[str],
     value_col: str,
-    out_col: str = "zscore",
 ) -> DataFrame:
-    """Per-group standardization: (x - mean(group)) / stddev_samp(group).
+    """Per-group standardization into column ``zscore``:
+    (x - mean(group)) / stddev_samp(group).
 
     Degenerate groups (size 1 or zero variance) emit 0.0 — the convention a
     feature pipeline wants (no NaN/null propagation into training data).
     """
     out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.DoubleType())]
+        list(df.schema.fields) + [T.StructField("zscore", T.DoubleType())]
     )
 
     def standardize(pdf: pd.DataFrame) -> pd.DataFrame:
         v = pdf[value_col].astype("float64")
         sd = v.std(ddof=1)  # sample stddev — matches SQL stddev_samp
         if pd.isna(sd) or sd == 0.0:
-            pdf[out_col] = 0.0
+            pdf["zscore"] = 0.0
         else:
-            pdf[out_col] = (v - v.mean()) / sd
+            pdf["zscore"] = (v - v.mean()) / sd
         return pdf
 
     return df.groupBy(*keys).applyInPandas(standardize, schema=out_schema)

@@ -231,7 +231,7 @@ AUDIO_SPEC_OFFSET = 1 << 21
 AUDIO_SPEC_SHIFT = 7
 
 
-def audio_spectral_frames(frames: DataFrame, frame_col: str = "frame") -> DataFrame:
+def audio_spectral_frames(frames: DataFrame) -> DataFrame:
     """PCM window -> integer DCT-II spectral window, Arrow-batched.
 
     Input rows carry a 64-byte frame: 32 big-endian offset-binary uint16
@@ -252,7 +252,7 @@ def audio_spectral_frames(frames: DataFrame, frame_col: str = "frame") -> DataFr
         for batch in batches:
             if not len(batch):
                 continue
-            raws = [bytes(p) for p in batch[frame_col]]
+            raws = [bytes(p) for p in batch["frame"]]
             for raw in raws:
                 if len(raw) != 2 * n:
                     raise ValueError(
@@ -268,7 +268,7 @@ def audio_spectral_frames(frames: DataFrame, frame_col: str = "frame") -> DataFr
             spec = ((pcm @ basis.T) + offset) >> shift  # S[i,k] exact ints
             out = spec.astype(">u2").tobytes()
             batch = batch.copy()
-            batch[frame_col] = [
+            batch["frame"] = [
                 out[i * 2 * n : (i + 1) * 2 * n] for i in range(len(raws))
             ]
             yield batch

@@ -34,9 +34,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
-def percentile_bounds(
-    df: DataFrame, key: str, n_buckets: int, accuracy: int = 10_000
-) -> list[float]:
+def percentile_bounds(df: DataFrame, key: str, n_buckets: int) -> list[float]:
     """Approximate percentile boundaries of ``key`` via the mergeable
     Greenwald-Khanna sketch (``approx_percentile``). Boundaries set only
     the bucket LOAD BALANCE — rank/running-sum values come from the
@@ -46,7 +44,7 @@ def percentile_bounds(
     approx-boundary runs). Unlike exact ``percentile``, whose final
     buffer is a per-distinct-value counts map merged on one reducer
     (O(|distinct|) driver-adjacent state on a high-cardinality double
-    key), the GK sketch is bounded by ``accuracy`` regardless of
+    key), the GK sketch is bounded by its accuracy (10,000) regardless of
     cardinality. Returns [] on an empty input — callers degrade to a
     single bucket."""
     qs = [i / n_buckets for i in range(1, n_buckets)]
@@ -55,7 +53,7 @@ def percentile_bounds(
     row = df.agg(
         F.expr(
             f"approx_percentile(cast({key} as double), "
-            f"array({', '.join(str(q) for q in qs)}), {accuracy})"
+            f"array({', '.join(str(q) for q in qs)}), 10000)"
         ).alias("bs")
     ).collect()[0]
     if row["bs"] is None:
@@ -185,7 +183,6 @@ def bucketed_running_sum(
     sum_name: str = "running_sum",
     partition_cols: tuple[str, ...] = (),
     n_buckets: int = 32,
-    bounds: list[float] | None = None,
 ) -> DataFrame:
     """Adds ``sum_name`` = the running sum of ``value`` under
     ``ORDER BY key, *tiebreaks`` within each ``partition_cols`` group
@@ -197,9 +194,7 @@ def bucketed_running_sum(
     subtotals aggregate in partition order, which for floats can differ
     from a sequential scan in the last ulp.
     """
-    if bounds is None:
-        bounds = percentile_bounds(df, key, n_buckets)
-    d = df.withColumn("_bkt", bucket_of(key, bounds))
+    d = df.withColumn("_bkt", bucket_of(key, percentile_bounds(df, key, n_buckets)))
 
     pcols = list(partition_cols)
     bsum = d.groupBy(*pcols, "_bkt").agg(F.sum(value).alias("_bs"))
@@ -226,7 +221,6 @@ def bucketed_running_max(
     max_name: str = "running_max",
     partition_cols: tuple[str, ...] = (),
     n_buckets: int = 32,
-    bounds: list[float] | None = None,
     bucket_col: Column | None = None,
 ) -> DataFrame:
     """Adds ``max_name`` = the running maximum of ``value`` under
@@ -249,9 +243,7 @@ def bucketed_running_max(
     if bucket_col is not None:
         d = df.withColumn("_bkt", bucket_col)
     else:
-        if bounds is None:
-            bounds = percentile_bounds(df, key, n_buckets)
-        d = df.withColumn("_bkt", bucket_of(key, bounds))
+        d = df.withColumn("_bkt", bucket_of(key, percentile_bounds(df, key, n_buckets)))
 
     pcols = list(partition_cols)
     bmax = d.groupBy(*pcols, "_bkt").agg(F.max(value).alias("_bm"))

@@ -35,14 +35,13 @@ def stable_dense_ids(
     df: DataFrame,
     coarse_key: str,
     tiebreak: str,
-    id_name: str = "new_id",
     n_buckets: int = 32,
 ) -> DataFrame:
     """Assign ids 0..n-1 following the total order (coarse_key, tiebreak).
 
     ``coarse_key`` may have duplicates (equal values always land in one
     bucket); ``tiebreak`` must make the order total. Output columns: the
-    input's plus ``id_name``.
+    input's plus ``new_id``.
     """
     import pandas as pd
 
@@ -76,7 +75,7 @@ def stable_dense_ids(
     out_cols = df.columns
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {id_name} long"
+    ) + ", new_id long"
 
     def assign(batches):
         chunks = list(batches)
@@ -87,8 +86,8 @@ def stable_dense_ids(
             return
         pdf = pdf.sort_values(["_pid", coarse_key, tiebreak], kind="mergesort")
         ranks = pdf.groupby("_pid").cumcount()
-        pdf[id_name] = pdf["_off"] + ranks
-        yield pdf[out_cols + [id_name]]
+        pdf["new_id"] = pdf["_off"] + ranks
+        yield pdf[out_cols + ["new_id"]]
 
     return (
         with_pid.join(F.broadcast(off), with_pid["_pid"] == off["_o_pid"])

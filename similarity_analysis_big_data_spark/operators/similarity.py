@@ -29,8 +29,6 @@ def sparse_cosine_join(
     right: DataFrame,
     left_id: str,
     right_id: str,
-    term_col: str = "term",
-    weight_col: str = "weight",
     round_to: int | None = None,
     spread_left: bool = False,
 ) -> DataFrame:
@@ -52,15 +50,15 @@ def sparse_cosine_join(
     single task. An explicit user repartition is exempt from AQE
     coalescing and keeps the explosion parallel.
     """
-    lhs = left.select(F.col(left_id), F.col(term_col), F.col(weight_col).alias("_w_l"))
+    lhs = left.select(F.col(left_id), "term", F.col("weight").alias("_w_l"))
     if spread_left:
         n = left.sparkSession.sparkContext.defaultParallelism
         lhs = lhs.repartition(n, F.col(left_id))
-    rhs = right.select(F.col(right_id), F.col(term_col), F.col(weight_col).alias("_w_r"))
+    rhs = right.select(F.col(right_id), "term", F.col("weight").alias("_w_r"))
     dot = F.sum(F.col("_w_l") * F.col("_w_r"))
     cosine = F.round(dot, round_to) if round_to is not None else dot
     return (
-        lhs.join(rhs, term_col)
+        lhs.join(rhs, "term")
         .groupBy(left_id, right_id)
         .agg(cosine.alias("cosine"))
     )
@@ -70,7 +68,6 @@ def best_match(
     pairs: DataFrame,
     query_id: str,
     match_id: str,
-    score_col: str = "cosine",
     all_queries: DataFrame | None = None,
 ) -> DataFrame:
     """A5/T1 (lab2.py:250-251): deterministic arg-max per query id.
@@ -82,7 +79,7 @@ def best_match(
     sparse join but present in the reference's cartesian — are restored
     with (NULL, 0.0), keeping row-count parity (SURVEY §7 zero-overlap).
     """
-    w = W.partitionBy(query_id).orderBy(F.desc(score_col), F.asc(match_id))
+    w = W.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(match_id))
     top = (
         pairs.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -92,31 +89,25 @@ def best_match(
         top = all_queries.join(top, query_id, "left").select(
             query_id,
             F.col(match_id),
-            F.coalesce(F.col(score_col), F.lit(0.0)).alias(score_col),
+            F.coalesce(F.col("cosine"), F.lit(0.0)).alias("cosine"),
         )
     return top
 
 
-def retrieval_accuracy(
-    matches: DataFrame, query_id: str, match_id: str, n_queries: int | None = None
-) -> DataFrame:
+def retrieval_accuracy(matches: DataFrame, query_id: str, match_id: str, n_queries: int) -> DataFrame:
     """A6 (lab2.py:253-260): fraction of queries whose best match is themselves.
 
-    One global aggregate; with ``n_queries`` the denominator is the full
-    corpus (reference semantics: titles with no match still count against
+    One global aggregate; the denominator ``n_queries`` is the full corpus
+    (reference semantics: titles with no match still count against
     accuracy via the cartesian's zero rows).
     """
     hit = F.when(F.col(query_id) == F.col(match_id), 1.0).otherwise(0.0)
-    if n_queries is None:
-        return matches.agg(F.avg(hit).alias("accuracy"))
     return matches.agg((F.sum(hit) / F.lit(float(n_queries))).alias("accuracy"))
 
 
 def all_pairs_cosine_exact(
     vectors: DataFrame,
     id_col: str,
-    term_col: str = "term",
-    weight_col: str = "weight",
     round_to: int | None = None,
 ) -> DataFrame:
     """J4 (lab2.py:291): self all-pairs cosine, sparse-join formulation.
@@ -130,7 +121,7 @@ def all_pairs_cosine_exact(
     left_v = vectors.withColumnRenamed(id_col, f"{id_col}_l")
     right_v = vectors.withColumnRenamed(id_col, f"{id_col}_r")
     pairs = sparse_cosine_join(
-        left_v, right_v, f"{id_col}_l", f"{id_col}_r", term_col, weight_col, round_to=None
+        left_v, right_v, f"{id_col}_l", f"{id_col}_r", round_to=None
     )
     ids = vectors.select(F.col(id_col)).distinct()
     dense = (
@@ -169,7 +160,6 @@ def pivot_matrix(
     dense_pairs: DataFrame,
     row_col: str,
     col_col: str,
-    value_col: str = "cosine",
     col_values: list[str] | None = None,
 ) -> DataFrame:
     """lab2.py:303: the category matrix pivot, Spark-native.
@@ -179,7 +169,7 @@ def pivot_matrix(
     extra distinct-values job (and keeps a stable column order).
     """
     p = dense_pairs.groupBy(row_col).pivot(col_col, col_values)
-    return p.agg(F.first(value_col))
+    return p.agg(F.first("cosine"))
 
 
 # Cost-based strategy bounds for dense_best_match (see docstring): the
@@ -207,7 +197,6 @@ def dense_best_match(
     abstract_vec: DataFrame,
     query_id: str,
     match_id: str,
-    round_to: int = COSINE_DECIMALS,
     t_rows: list | None = None,
 ) -> DataFrame:
     """Exact arg-max cosine via blocked dense matmul — the small-vocabulary
@@ -224,7 +213,7 @@ def dense_best_match(
     final tiny window merges the per-partition winners.
 
     Exactness contract (same as the sparse path): scores round to
-    ``round_to`` BEFORE comparison; ties break on ascending ``match_id``
+    ``COSINE_DECIMALS`` BEFORE comparison; ties break on ascending ``match_id``
     (np.argmax over id-sorted rows returns the first maximum); candidates
     sharing no term with a query have RAW dot exactly 0.0 and are masked
     out before the argmax (non-negative weights make dot == 0 equivalent
@@ -283,7 +272,7 @@ def dense_best_match(
             abstract_vec,
             query_id,
             match_id,
-            round_to=round_to,
+            round_to=COSINE_DECIMALS,
             spread_left=True,
         )
         return best_match(pairs, query_id, match_id)
@@ -332,7 +321,7 @@ def dense_best_match(
         for s in range(0, len(a_ids), block):
             Ab = A[s : s + block]
             R = Ab @ T.T  # raw dot products (block_rows, n_queries)
-            S = np.round(R, round_to)
+            S = np.round(R, COSINE_DECIMALS)
             # Sparse-path parity: a candidate is in play iff it SHARES a
             # term (raw dot > 0 under non-negative weights) — even when
             # the cosine ROUNDS to 0.0. Rounded 0 and true 0 collide in
@@ -577,7 +566,6 @@ def dense_topk_neighbors(
     id_col: str,
     vec_col: str,
     k: int,
-    round_to: int = 6,
     prefetched_queries: list | None = None,
 ) -> DataFrame:
     """Exact cosine top-k via blocked dense matmul — the bounded-query-set
@@ -589,7 +577,7 @@ def dense_topk_neighbors(
 
     The (|Q| x d) query matrix is broadcast; each corpus partition computes
     its score block with one BLAS matmul, keeps its local top-k per query
-    (rounded scores, ascending-id tiebreak), and a tiny window merges the
+    (scores rounded to 6 dp, ascending-id tiebreak), and a tiny window merges the
     per-partition winners — global top-k is always a subset of the union of
     partition top-ks. Self-pairs are excluded. A pair with a zero-norm side
     scores NULL and ranks after every finite score, ties by ascending id —
@@ -650,7 +638,7 @@ def dense_topk_neighbors(
             ids_b, C_b, cn_b = ids[s0 : s0 + block], C[s0 : s0 + block], cn[s0 : s0 + block]
             denom = cn_b[:, None] * qn[None, :]
             with np.errstate(divide="ignore", invalid="ignore"):
-                S = np.round((C_b @ Q.T) / denom, round_to)
+                S = np.round((C_b @ Q.T) / denom, 6)
             null = denom == 0.0
             S[null] = -np.inf  # zero-norm: NULL cosine, ranked after every score
             not_self = ids_b[:, None] != q_ids[None, :]

@@ -13,10 +13,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, n_salts: int, col_name: str = "_salt") -> DataFrame:
+def with_salt(df: DataFrame, n_salts: int) -> DataFrame:
     """Uniform random salt in [0, n_salts) — used only as a partitioning
     aid; never appears in results."""
-    return df.withColumn(col_name, (F.rand(seed=42) * n_salts).cast("int"))
+    return df.withColumn("_salt", (F.rand(seed=42) * n_salts).cast("int"))
 
 
 def salted_aggregate(
@@ -24,15 +24,14 @@ def salted_aggregate(
     keys: list[str],
     partial_aggs: list[Column],
     merge_aggs: list[Column],
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase hot-key aggregation.
 
-    ``partial_aggs`` aggregate within (keys, salt); ``merge_aggs`` combine
+    ``partial_aggs`` aggregate within (keys, salt), 16 salts per key; ``merge_aggs`` combine
     the partials per key. Example for a sum+count (mean):
         partial: [sum(x).alias("s"), count(*).alias("c")]
         merge:   [sum("s").alias("s"), sum("c").alias("c")]
     """
-    salted = with_salt(df, n_salts)
+    salted = with_salt(df, 16)
     partial = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
     return partial.groupBy(*keys).agg(*merge_aggs)

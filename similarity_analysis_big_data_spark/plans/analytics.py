@@ -1103,15 +1103,8 @@ def stream_twin_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_event_counts,
     )
 
-    stream = windowed_event_counts(
-        read_event_stream(spark, sf_dir),
-        window="1 hour",
-        watermark="2 hours",
-        slide="15 minutes",
-    )
-    # bounded state (|windows| x |event types| rows): 8 state partitions,
-    # not the batch-width 32 — see run_to_memory's sizing note
-    out = run_to_memory(stream, f"stream_twin_{uuid.uuid4().hex[:8]}", shuffle_partitions=8)
+    stream = windowed_event_counts(read_event_stream(spark, sf_dir))
+    out = run_to_memory(stream, f"stream_twin_{uuid.uuid4().hex[:8]}")
     return out.select(
         F.col("hour_bucket").alias("window_start"),
         "event_type",
@@ -1171,12 +1164,8 @@ def stream_twin_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_window_counts,
     )
 
-    stream = session_window_counts(
-        read_event_stream(spark, sf_dir), gap="30 minutes", watermark="2 hours"
-    )
-    out = run_to_memory(
-        stream, f"stream_twin_sess_{uuid.uuid4().hex[:8]}", shuffle_partitions=8
-    )
+    stream = session_window_counts(read_event_stream(spark, sf_dir))
+    out = run_to_memory(stream, f"stream_twin_sess_{uuid.uuid4().hex[:8]}")
     return out.select(
         "user_id",
         F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
@@ -1218,9 +1207,7 @@ def stream_twin_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_c = read_event_stream(spark, sf_dir)
     ev_p = read_event_stream(spark, sf_dir)
     stream = interval_join_stream(ev_c, ev_p, band_minutes=30, watermark="2 hours")
-    out = run_to_memory(
-        stream, f"stream_twin_ij_{uuid.uuid4().hex[:8]}", shuffle_partitions=8
-    )
+    out = run_to_memory(stream, f"stream_twin_ij_{uuid.uuid4().hex[:8]}")
     return out.select("click_id", "purchase_id", "user_id", "micros_to_purchase")
 
 
@@ -1254,7 +1241,6 @@ def stream_twin_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_to_memory(
         stream,
         f"stream_twin_state_{uuid.uuid4().hex[:8]}",
-        shuffle_partitions=8,
         output_mode="update",
     )
     return (
@@ -1310,7 +1296,6 @@ def stream_twin_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_to_memory(
         stream,
         f"stream_twin_dd_{uuid.uuid4().hex[:8]}",
-        shuffle_partitions=8,
         output_mode="append",
     )
     return out.groupBy("event_type").agg(
@@ -1356,7 +1341,6 @@ def stream_twin_hourly_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_to_memory(
         stream,
         f"stream_twin_hdd_{uuid.uuid4().hex[:8]}",
-        shuffle_partitions=8,
         output_mode="append",
     )
     return out.select(
@@ -1517,11 +1501,7 @@ def stream_twin_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     stream = enriched_event_stream(read_event_stream(spark, sf_dir), dim)
-    out = run_to_memory(
-        stream,
-        f"stream_twin_enrich_{uuid.uuid4().hex[:8]}",
-        shuffle_partitions=8,
-    )
+    out = run_to_memory(stream, f"stream_twin_enrich_{uuid.uuid4().hex[:8]}")
     return out.select(
         "event_id",
         "user_id",

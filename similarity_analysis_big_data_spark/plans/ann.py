@@ -148,7 +148,6 @@ def _exact_topk(
             "vec_id",
             "embedding",
             k,
-            round_to=6,
             prefetched_queries=prefetched,
         )
     return _topk(_scored(queries, corpus), k)
@@ -368,9 +367,9 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hyperplanes(dim: int = 64) -> list[list[float]]:
+def _hyperplanes() -> list[list[float]]:
     rng = np.random.default_rng(42)
-    return rng.standard_normal((N_PLANES, dim)).tolist()
+    return rng.standard_normal((N_PLANES, 64)).tolist()  # the embeddings' dimension
 
 
 def _hyperplane_bucket_sql() -> str:

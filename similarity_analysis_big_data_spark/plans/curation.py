@@ -285,7 +285,7 @@ def source_cap_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact-dedup survivors -> quality gate (length + uniqueness) -> "
     "eval-set decontamination -> stride chunking -> per-language "
     "token-budget batch packing. A user runs one query; the tokenized "
-    "corpus is persisted once and every stage branch reads the "
+    "corpus is materialized once and every stage branch reads the "
     "materialization instead of re-scanning the raw corpus.",
 )
 def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,27 +293,25 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup), broadcast eval windows (decontam), map-side chunk generation,
     one per-lang window (packing). The tokenized relation feeds THREE
     branches (dedup+gate, training windows, eval windows); without an
-    explicit persist Spark re-scans and re-tokenizes the corpus per branch
-    (DataFrame subtrees are not auto-shared), so it is persisted
-    MEMORY_AND_DISK — the same one-materialization-many-consumers posture
-    a production pipeline gets by staging tokens to a table."""
-    from pyspark.storagelevel import StorageLevel
-
+    explicit materialization Spark re-scans and re-tokenizes the corpus per
+    branch (DataFrame subtrees are not auto-shared), so it is
+    localCheckpoint(eager=True)-materialized — the same
+    one-materialization-many-consumers posture a production pipeline gets
+    by staging tokens to a table. Unlike a persist, the blocks are
+    released with the returned plan: nothing is left in the session cache
+    (the flagship's and near_dup_pairs' policy)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = (
-        docs.select("doc_id", "lang", words("text").alias("tokens"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Materialize the cache BEFORE the three branches consume it: inside a
-    # single action Spark schedules the branch stages concurrently, and
-    # each races to compute the same uncached partitions (benign
-    # "Block already exists" churn, duplicated tokenize work). One count
-    # fills the cache serially; the branches then read computed blocks.
-    # Persist re-confirmed post-allocator-fix (r12, interleaved A/B +
-    # fresh process): on/off 1.70/1.82 s at sf0.1, 7.87/8.51 s at 8x —
-    # the margin grows with data, as three tokenize recomputes cost more
-    # than one serialization the bigger the corpus gets.
-    toks.count()
+    # Materialize BEFORE the three branches consume it: inside a single
+    # action Spark schedules the branch stages concurrently, and each
+    # races to compute the same partitions (duplicated tokenize work). The
+    # eager checkpoint runs the tokenize once; the branches then read
+    # computed blocks. The materialization was re-confirmed
+    # post-allocator-fix (r12, interleaved A/B + fresh process, as a
+    # MEMORY_AND_DISK persist + count): on/off 1.70/1.82 s at sf0.1,
+    # 7.87/8.51 s at 8x — the margin grows with data, as three tokenize
+    # recomputes cost more than one serialization the bigger the corpus
+    # gets.
+    toks = docs.select("doc_id", "lang", words("text").alias("tokens")).localCheckpoint(eager=True)
 
     keep_w = W.partitionBy(F.md5(F.array_join("tokens", " ")))
     n = F.size("tokens")

@@ -1453,7 +1453,7 @@ def entity_name_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
 
     pairs = part_name_trigram_pairs(spark, sf_dir).select("id_l", "id_r")
-    comp = connected_components(pairs, "id_l", "id_r")
+    comp = connected_components(pairs)
     sizes = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (
         comp.join(F.broadcast(sizes), "component")
@@ -1513,7 +1513,7 @@ def near_dup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % SAMPLE_MOD == 0
     )
     dup = near_dup_pairs(docs).localCheckpoint(eager=True)
-    comp = connected_components(dup.select("id_l", "id_r"), "id_l", "id_r")
+    comp = connected_components(dup.select("id_l", "id_r"))
     labels = comp.select(F.col("id").alias("id_l"), F.col("component"))
     member_counts = comp.groupBy("component").agg(
         F.countDistinct("id").alias("cluster_size")
@@ -1577,7 +1577,7 @@ def near_dup_best_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("doc_id") % SAMPLE_MOD == 0
     )
     comp = connected_components(
-        near_dup_pairs(docs), "id_l", "id_r", iteration_shuffle_partitions=8
+        near_dup_pairs(docs), iteration_shuffle_partitions=8
     )
     quality = docs.select(
         F.col("doc_id").alias("id"),

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def render_heatmap(pivoted: DataFrame, out_path: str, title: str = "Cosine Similarity") -> str:
+def render_heatmap(pivoted: DataFrame, out_path: str) -> str:
     """Render a pivoted (row x column) similarity matrix to a PNG.
 
     Expects the output of operators.similarity.pivot_matrix: first column is
@@ -37,7 +37,7 @@ def render_heatmap(pivoted: DataFrame, out_path: str, title: str = "Cosine Simil
     im = ax.imshow(pdf.values, cmap="afmhot_r", vmin=0.0, vmax=1.0)
     ax.set_xticks(range(len(pdf.columns)), labels=pdf.columns, rotation=45, ha="right")
     ax.set_yticks(range(len(pdf.index)), labels=pdf.index)
-    ax.set_title(title, fontweight="bold")
+    ax.set_title("Categories: Cosine Similarity Matrix", fontweight="bold")
     fig.colorbar(im, ax=ax)
     fig.savefig(out_path, bbox_inches="tight")
     plt.close(fig)

@@ -22,14 +22,14 @@ from .registry import register
 Z_BITS = 8  # bits kept per dimension (16-bit z-value)
 
 
-def zorder_key(x: Column, y: Column, bits: int = Z_BITS) -> Column:
-    """Interleave the low ``bits`` of two non-negative ints: Morton code.
+def zorder_key(x: Column, y: Column) -> Column:
+    """Interleave the low ``Z_BITS`` of two non-negative ints: Morton code.
 
     Pure integer arithmetic — codegen'd JVM-side, no UDF: bit i of x lands
     at position 2i, bit i of y at 2i+1.
     """
     terms = []
-    for i in range(bits):
+    for i in range(Z_BITS):
         terms.append(F.shiftright(x, i).bitwiseAND(F.lit(1)) * F.lit(1 << (2 * i)))
         terms.append(
             F.shiftright(y, i).bitwiseAND(F.lit(1)) * F.lit(1 << (2 * i + 1))
@@ -40,11 +40,11 @@ def zorder_key(x: Column, y: Column, bits: int = Z_BITS) -> Column:
     return out.cast("long")
 
 
-def zorder_key_sql(x: str, y: str, bits: int = Z_BITS) -> str:
+def zorder_key_sql(x: str, y: str) -> str:
     """DuckDB rendering of :func:`zorder_key` for oracle construction."""
     terms = [
         f"(({x} >> {i}) & 1) * {1 << (2 * i)} + (({y} >> {i}) & 1) * {1 << (2 * i + 1)}"
-        for i in range(bits)
+        for i in range(Z_BITS)
     ]
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 

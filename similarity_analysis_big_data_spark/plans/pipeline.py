@@ -83,12 +83,12 @@ def task1_best_abstract(prep: DataFrame, n_docs: int | None = None) -> DataFrame
     )
 
 
-def task2_category_matrix(prep: DataFrame, round_to: int = COSINE_DECIMALS) -> DataFrame:
+def task2_category_matrix(prep: DataFrame) -> DataFrame:
     """Task 2 (lab2.py:263-296): ``category_cosine_matrix`` over each
     paper's (category, abstract token) rows."""
     return category_cosine_matrix(
         prep.select(
             F.col("categories").alias("category"), F.explode("abstract_tokens").alias("term")
         ),
-        round_to,
+        COSINE_DECIMALS,
     )

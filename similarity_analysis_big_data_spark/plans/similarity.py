@@ -328,7 +328,7 @@ def category_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def category_matrix_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense = category_similarity_matrix(spark, sf_dir)
-    return pivot_matrix(dense, "category_l", "category_r", "cosine", col_values=LANGS)
+    return pivot_matrix(dense, "category_l", "category_r", col_values=LANGS)
 
 
 @register(

@@ -292,7 +292,6 @@ def salted_heavy_hitter_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["term"],
         partial_aggs=[F.count("*").alias("c")],
         merge_aggs=[F.sum("c").alias("n_occurrences")],
-        n_salts=16,
     )
     return counts.filter(F.col("n_occurrences") >= 100)
 

@@ -1,5 +1,5 @@
 from .readers import load_table, load_tables, read_papers_json, read_stopwords
-from .writers import write_csv, write_json, write_parquet, write_text
+from .writers import write_csv, write_parquet, write_text
 
 __all__ = [
     "load_table",
@@ -7,7 +7,6 @@ __all__ = [
     "read_papers_json",
     "read_stopwords",
     "write_csv",
-    "write_json",
     "write_parquet",
     "write_text",
 ]

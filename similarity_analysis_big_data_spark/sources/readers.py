@@ -147,7 +147,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
+def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dict[str, DataFrame]:
     """Load several fixture tables as a dict of DataFrames."""
     return {name: load_table(spark, sf_dir, name) for name in names}
 

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dedup_hourly_key_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_hourly_key_stream(events: DataFrame) -> DataFrame:
     """Idempotency-key dedup: one event per (user_id, event_type, hour
     bucket) survives. The key is built from event-time, so a duplicate
     delivery (same user doing the same thing in the same hour) collapses;
@@ -25,7 +25,7 @@ def dedup_hourly_key_stream(events: DataFrame, watermark: str = "2 hours") -> Da
     WATERMARKED event-time column itself is in the key subset — a derived
     ``date_trunc('hour', ts)`` column carries no watermark metadata, so
     watermarking ``ts`` and keying on the bucket would grow state forever.
-    The watermark is therefore declared ON ``hour_bucket`` (a legal
+    The 2-hour watermark is therefore declared ON ``hour_bucket`` (a legal
     event-time column: truncation shifts each event's time down by <1h,
     which the delay absorbs), making the watermarked column part of the
     dedup key; Spark then drops each (user, type, hour) entry once the
@@ -33,7 +33,7 @@ def dedup_hourly_key_stream(events: DataFrame, watermark: str = "2 hours") -> Da
     deployment needs."""
     keyed = events.withColumn("hour_bucket", F.date_trunc("hour", F.col("ts")))
     return (
-        keyed.withWatermark("hour_bucket", watermark)
+        keyed.withWatermark("hour_bucket", "2 hours")
         .dropDuplicates(["user_id", "event_type", "hour_bucket"])
         .select("user_id", "event_type", "hour_bucket")
     )

@@ -1,6 +1,6 @@
 """Structured Streaming over the events table (SURVEY §7 step 6 [ext]).
 
-The batch queries ``hourly_event_rollup`` and ``sessionization_gap``
+The batch queries ``sliding_window_event_counts`` and ``sessionization_gap``
 (plans/) have streaming twins here: same logical aggregation, expressed as
 an unbounded plan with watermarked event-time state. Tests drive them with
 ``availableNow`` + a memory sink and assert batch/stream agreement — the
@@ -52,23 +52,15 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.timestamp_micros(epoch_micros("ts")))
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    slide: str | None = None,
-) -> DataFrame:
-    """Streaming twin of hourly_event_rollup: tumbling event-time windows
-    with a watermark bounding state. Append-mode safe: a window closes
-    (and emits exactly once) when the watermark passes its end.
-
-    ``slide`` turns it into the HOPPING form (overlapping windows, the
-    streaming twin of the batch ``sliding_window_event_counts``) — state
-    grows by the window/slide overlap factor, still watermark-bounded."""
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Streaming twin of the batch ``sliding_window_event_counts``: 1-hour
+    event-time windows hopping every 15 minutes, with a 2-hour watermark
+    bounding state. Append-mode safe: a window closes (and emits exactly
+    once) when the watermark passes its end; state grows by the
+    window/slide overlap factor (4), still watermark-bounded."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(win.alias("win"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("total_value"))
         .select(
             F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("hour_bucket"),
@@ -79,44 +71,47 @@ def windowed_event_counts(
     )
 
 
-def session_window_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
+def session_window_counts(events: DataFrame) -> DataFrame:
     """Streaming sessionization via session_window (the stateful twin of the
-    batch lag+cumsum sessionization_gap query)."""
+    batch lag+cumsum sessionization_gap query): a 30-minute gap closes a
+    session, under a 2-hour watermark."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select("user_id", F.col("win.start").alias("session_start"), "n_events")
     )
 
 
+# Every streaming twin's state is bounded (windows x keys, or keys within
+# the watermark), so all of them run 8 state partitions.
+STREAM_SHUFFLE_PARTITIONS = 8
+
+
 def run_to_memory(
     stream_df: DataFrame,
     name: str,
-    shuffle_partitions: int | None = None,
     output_mode: str | None = None,
 ) -> DataFrame:
     """Drive a streaming plan over all currently-available input and return
     the materialized result (test/bench harness; production uses a real
     sink with checkpointing).
 
-    ``shuffle_partitions`` sizes the streaming STATE partitioning (Spark
-    reads ``spark.sql.shuffle.partitions`` once at stream start and pins
-    it in the checkpoint): each state partition is an independent state
-    store whose open/commit cost is paid every micro-batch, so a
+    The streaming STATE runs on ``STREAM_SHUFFLE_PARTITIONS`` partitions
+    (Spark reads ``spark.sql.shuffle.partitions`` once at stream start and
+    pins it in the checkpoint): each state partition is an independent
+    state store whose open/commit cost is paid every micro-batch, so a
     production deployment sizes the count to state volume — up for a
     high-cardinality keyspace, down for a bounded one (a windowed rollup
-    holds |windows|x|keys| rows no matter how many partitions hold them).
-    In a real deployment this is per-streaming-job spark-submit conf; the
-    shared-session harness emulates that by setting and restoring the
-    session value around the (synchronous) availableNow drain."""
+    holds |windows|x|keys| rows no matter how many partitions hold them),
+    not the batch width. In a real deployment this is per-streaming-job
+    spark-submit conf; the shared-session harness emulates that by setting
+    and restoring the session value around the (synchronous) availableNow
+    drain."""
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
         query = (
             stream_df.writeStream.outputMode(
                 output_mode or ("complete" if _is_agg(stream_df) else "append")

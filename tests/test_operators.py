@@ -205,6 +205,21 @@ def test_only_local_relation_calls_create_dataframe():
     assert offenders == [], f"use sources.readers.local_relation: {offenders}"
 
 
+def test_package_caches_nothing():
+    """Guard: no ``.persist(`` or ``.cache()`` call in the package. A cached
+    relation stays in the session's CacheManager until someone unpersists
+    it, so a long-lived driver would keep one copy per input. Materialize
+    with ``localCheckpoint``: its blocks are released with the plan."""
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.func.attr in ("persist", "cache")
+    ]
+    assert offenders == [], f"use localCheckpoint: {offenders}"
+
+
 def _callee(call: ast.Call) -> str:
     f = call.func
     return f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
@@ -265,29 +280,56 @@ def test_tfidf_weight_and_l2_window_are_stated_once():
 
 def test_perfbench_engine_imports_resolve():
     """Guard: every engine name a ``perfbench/*.py`` file imports, at module
-    level or inside a function, still exists. The benchmark cannot be
-    edited alongside an engine refactor, so a renamed operator or constant
-    would otherwise break every benchmark run with no tier-1 test failing.
+    level or inside a function, still exists, and every call of an
+    imported engine callable (``name(...)`` or ``module.name(...)``) still
+    binds to its signature. The benchmark cannot be edited alongside an
+    engine refactor, so a renamed operator, constant or parameter would
+    otherwise break every benchmark run with no tier-1 test failing.
     Reads ``perfbench/`` only."""
     import importlib
+    import inspect
 
     bench = pathlib.Path(pkg.__file__).parent.parent / "perfbench"
-    missing, seen = [], 0
+    missing, unbound, seen, bound = [], [], 0, 0
     for path in sorted(bench.glob("*.py")):
-        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        engine = {}  # local name -> engine module or object
+        for node in ast.walk(tree):
             if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(pkg.__name__):
                 mod = importlib.import_module(node.module)
                 for alias in node.names:
                     seen += 1
                     if not hasattr(mod, alias.name):
                         missing.append(f"{path.name}:{node.lineno} {node.module}.{alias.name}")
+                    else:
+                        engine[alias.asname or alias.name] = getattr(mod, alias.name)
             elif isinstance(node, ast.Import):
                 for alias in node.names:
                     if alias.name.startswith(pkg.__name__):
                         seen += 1
                         importlib.import_module(alias.name)
-    assert seen, "no engine import found under perfbench/"
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name):
+                fn = engine.get(f.id)
+            elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name) and inspect.ismodule(engine.get(f.value.id)):
+                fn = getattr(engine[f.value.id], f.attr, None)
+            else:
+                continue
+            if not callable(fn) or any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            ):
+                continue
+            try:
+                inspect.signature(fn).bind(*node.args, **{k.arg: k.value for k in node.keywords})
+                bound += 1
+            except TypeError as exc:
+                unbound.append(f"{path.name}:{node.lineno} {ast.unparse(node.func)}: {exc}")
+    assert seen and bound, "no engine import or call found under perfbench/"
     assert missing == [], f"perfbench imports names the engine no longer has: {missing}"
+    assert unbound == [], "perfbench calls that no longer bind:\n" + "\n".join(unbound)
 
 
 def _unused_imports(path: pathlib.Path) -> list[tuple[int, str]]:
@@ -383,12 +425,30 @@ def _module_level(body: list[ast.stmt]):
             yield from _module_level(block)
 
 
+def _tool_paths() -> list[pathlib.Path]:
+    """The repo tools outside the package: ``bench.py``,
+    ``__spark_entry__.py``, ``deploy/`` and the non-test ``perfbench/``
+    files."""
+    repo = pathlib.Path(pkg.__file__).parent.parent
+    return [repo / "bench.py", repo / "__spark_entry__.py", *sorted((repo / "deploy").glob("*.py")),
+            *(p for p in sorted((repo / "perfbench").glob("*.py")) if not p.name.startswith("test_"))]
+
+
+def _reexport(path: pathlib.Path, st: ast.stmt) -> bool:
+    """A package ``__init__`` import or ``__all__`` assignment: it names a
+    def without running it, so it is no use of that def."""
+    return path.name == "__init__.py" and (
+        isinstance(st, (ast.Import, ast.ImportFrom))
+        or isinstance(st, ast.Assign) and any(getattr(t, "id", "") == "__all__" for t in st.targets)
+    )
+
+
 def _package_graph():
     """``(sites, edges, roots)``: ``sites`` maps each top-level def name to
     its ``(path, line)`` sites, ``edges`` to the def names its bodies use;
     ``roots`` holds the names reached before any def body is read
-    (registered queries, module-level code, session and CLI defs, and every
-    name the repo tools use)."""
+    (registered queries, module-level code other than re-exports, session
+    and CLI defs, and every name the repo tools use)."""
     root = pathlib.Path(pkg.__file__).parent
     nodes: dict[str, list[ast.AST]] = {}
     sites: dict[str, list[tuple[pathlib.Path, int]]] = {}
@@ -397,7 +457,8 @@ def _package_graph():
         rel = path.relative_to(root)
         for st in _module_level(ast.parse(path.read_text()).body):
             if not isinstance(st, _DEFS):
-                roots |= _names(st)
+                if not _reexport(path, st):
+                    roots |= _names(st)
                 continue
             nodes.setdefault(st.name, []).append(st)
             sites.setdefault(st.name, []).append((rel, st.lineno))
@@ -409,10 +470,7 @@ def _package_graph():
             )
             if registered or str(rel) in ("session.py", "__main__.py"):
                 roots.add(st.name)
-    repo = root.parent
-    tools = [repo / "bench.py", repo / "__spark_entry__.py", *(repo / "deploy").glob("*.py"),
-             *(p for p in (repo / "perfbench").glob("*.py") if not p.name.startswith("test_"))]
-    for path in tools:
+    for path in _tool_paths():
         roots |= _names(ast.parse(path.read_text()))
     edges = {name: set().union(*map(_names, defs)) & sites.keys() for name, defs in nodes.items()}
     return sites, edges, roots
@@ -430,7 +488,8 @@ def _reach(edges: dict[str, set[str]], roots: set[str]) -> set[str]:
 
 def test_every_package_def_is_reached():
     """Guard: every top-level package def is reached from a registered
-    query, module-level code, ``session.py``/``__main__.py``, a repo tool
+    query, module-level code (a package ``__init__``'s re-exports do not
+    count), ``session.py``/``__main__.py``, a repo tool
     (``bench.py``, ``__spark_entry__.py``, ``deploy/``, ``perfbench/``) or
     ``UNREACHED_ALLOWED``, through defs whose bodies name it. Matching is
     by bare name, so it errs towards "reached" and needs no import
@@ -459,6 +518,144 @@ def test_every_package_def_is_reached():
             reason.startswith("test reference for ") and reason.split()[-1] in without
         ), f"{key}: {reason!r}"
         assert name in test_refs, f"{key}: no test names it"
+
+
+# Defaulted parameters that non-test callers pass fewer than two distinct
+# values, kept settable on purpose. Keyed ``module.def.param``
+# (package-relative). A reason is the perfbench chain that passes it
+# (``perfbench/`` cannot change with the engine), a deployment setting, the
+# ROADMAP direction that decides it, or ``test: <file>::<test>`` naming the
+# test that sets another value.
+OPTION_ALLOWED = {
+    "operators.components.dedup_survivors.iteration_shuffle_partitions": "perfbench: chains.near_dup_survivors",
+    "__main__.main.argv": "deployment: the CLI's arguments",
+    "session.get_session.extra_conf": "deployment: the caller's Spark conf",
+    "session.get_local_session.app_name": "deployment: the Spark application name",
+    **{
+        f"operators.mllib_scale.{option}": "ROADMAP direction 3"
+        for option in (
+            "count_vectorize.out_col",
+            "count_vectorize.vocab_size",
+            "tfidf_vectors_mllib.out_col",
+            "minhash_approx_join.jaccard_threshold",
+            "minhash_approx_join.num_tables",
+            "minhash_approx_join.seed",
+            "random_projection_neighbors.bucket_length",
+            "random_projection_neighbors.max_distance",
+            "random_projection_neighbors.num_tables",
+            "random_projection_neighbors.seed",
+        )
+    },
+    "functions.tfidf.l2_normalize.weight_col": "test: test_properties.py::test_tfidf_weight_and_l2_equal_their_sql_twins",
+    **{
+        f"operators.dedup.substring_span_pairs.{p}": "test: test_substring.py::test_substring_spans_known_construction"
+        for p in ("k", "cap", "min_span")
+    },
+    **{
+        f"operators.dedup.{fn}.{p}": "test: test_substring.py::test_sql_twin_matches_operators"
+        for fn in ("substring_span_pairs_delta", "substring_spans_sql")
+        for p in ("k", "cap", "min_span")
+    },
+    "operators.dedup.ppjoin_pairs.threshold": "test: test_ppjoin.py::test_ppjoin_matches_bruteforce_random",
+    "operators.dedup.ppjoin_pairs.token_col": "test: test_ppjoin.py::test_ppjoin_matches_bruteforce_random",
+    **{
+        f"operators.rank.{fn}.n_buckets": "test: test_properties.py::test_bucketed_rank_and_sums_match_windows_on_random_data"
+        for fn in ("bucketed_row_number", "bucketed_running_sum", "bucketed_running_max")
+    },
+    "operators.rank.bucketed_running_sum.partition_cols": "test: test_operators.py::test_bucketed_running_sum_equals_window_running_sum",
+    "operators.rank.bucketed_running_sum.sum_name": "test: test_operators.py::test_bucketed_running_sum_equals_window_running_sum",
+    "operators.rank.bucketed_running_max.partition_cols": "test: test_operators.py::test_bucketed_running_max_equals_window_running_max",
+    "operators.rank.bucketed_running_max.max_name": "test: test_operators.py::test_bucketed_running_max_equals_window_running_max",
+    "operators.rank.bucketed_running_max.bucket_col": "test: test_operators.py::test_bucketed_running_max_equals_window_running_max",
+    "operators.reindex.stable_dense_ids.n_buckets": "test: test_properties.py::test_stable_dense_ids_random",
+    "operators.similarity.all_pairs_cosine_exact.round_to": "test: test_properties.py::test_sparse_join_equals_cartesian",
+    "operators.similarity.dense_best_match.t_rows": "test: test_operators.py::test_dense_best_match_zero_overlap_and_ties",
+    "plans.ann.ann_bruteforce_topk.strategy": "test: test_properties.py::test_ann_dense_equals_hof",
+    "plans.similarity.title_best_abstract.strategy": "test: test_plans.py::test_flagship_dense_strategy_materializes_no_pairs",
+    "plans.pipeline.task1_best_abstract.n_docs": "test: test_pipeline.py::test_task1_matches_reference_model",
+    "plans.pipeline.preprocess_papers.lemmatize_tokens": "test: test_pipeline.py::test_lemmatized_prep_gives_rules_lemmas",
+    "plans.pipeline.preprocess_papers.count_empty_tokens": "test: test_pipeline.py::test_count_empty_tokens_equals_python_split",
+    "sources.writers.write_parquet.partition_by": "test: test_sources.py::test_partitioned_parquet_sink",
+    **{
+        f"streaming.events.interval_join_stream.{p}": "test: test_streaming.py::test_stream_stream_left_outer_join_emits_expired_unmatched"
+        for p in ("band_minutes", "watermark", "how")
+    },
+}
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str, ast.expr]]:
+    """``(position, name, default)`` for each defaulted parameter of ``fn``;
+    a keyword-only parameter has no position."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    return [(first + i, p.arg, d) for i, (p, d) in enumerate(zip(pos[first:], a.defaults))] + [
+        (None, p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+
+
+def _passed(call: ast.Call, pos: int | None, name: str, default: ast.expr) -> str:
+    """The source text ``call`` passes for a parameter. Leaving it out
+    passes the default; a ``*args``/``**kwargs`` call passes a value no
+    other call shares."""
+    if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
+        return f"<unpacked at {id(call)}>"
+    value = next((k.value for k in call.keywords if k.arg == name), None)
+    if value is None and pos is not None and pos < len(call.args):
+        value = call.args[pos]
+    return ast.unparse(default if value is None else value)
+
+
+def _option_values() -> dict[str, tuple[str, set[str]]]:
+    """``module.def.param`` -> (``path:line def.param``, the distinct values
+    non-test callers pass) for every defaulted parameter of a top-level
+    package function. Callers are the package and the repo tools; calls
+    match by bare callee name, as the reachability guard's uses do."""
+    root = pathlib.Path(pkg.__file__).parent
+    defs: dict[str, list[tuple[pathlib.Path, ast.FunctionDef]]] = {}
+    for path in sorted(root.rglob("*.py")):
+        for st in _module_level(ast.parse(path.read_text()).body):
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(st.name, []).append((path.relative_to(root), st))
+    calls: dict[str, list[ast.Call]] = {}
+    for path in [*sorted(root.rglob("*.py")), *_tool_paths()]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and _callee(node) in defs:
+                calls.setdefault(_callee(node), []).append(node)
+    return {
+        ".".join(rel.with_suffix("").parts) + f".{name}.{param}": (
+            f"{rel}:{fn.lineno} {name}.{param}",
+            {_passed(call, pos, param, default) for call in calls.get(name, [])},
+        )
+        for name, at in defs.items()
+        for rel, fn in at
+        for pos, param, default in _defaulted(fn)
+    }
+
+
+def test_every_option_is_set():
+    """Guard: every defaulted parameter of a top-level package function is
+    passed at least two distinct values by non-test callers (leaving it
+    out passes its default), or is listed in ``OPTION_ALLOWED``. With one
+    value in use the parameter is a constant: write the value in place.
+    Values compare as source text, so the guard errs towards "set"."""
+    options = _option_values()
+    unset = sorted(site for key, (site, values) in options.items() if len(values) < 2 and key not in OPTION_ALLOWED)
+    assert unset == [], "options non-test callers set to one value:\n" + "\n".join(unset)
+
+    # every allowlist entry is still a defaulted parameter, still needs the
+    # allowlist, and a test entry names a test in a file that calls the def
+    tests = pathlib.Path(__file__).parent
+    for key, reason in OPTION_ALLOWED.items():
+        assert key in options, f"{key}: no longer a defaulted parameter"
+        assert len(options[key][1]) < 2, f"{key}: callers set it, drop the entry"
+        if reason.startswith("test: "):
+            file, _, test = reason.removeprefix("test: ").partition("::")
+            tree = ast.parse((tests / file).read_text())
+            assert test in {st.name for st in tree.body if isinstance(st, ast.FunctionDef)}, f"{key}: {reason!r}"
+            assert key.split(".")[-2] in _names(tree, strings=False), f"{key}: {file} never calls it"
+        else:
+            assert reason.split(":")[0] in ("perfbench", "deployment", "ROADMAP direction 3"), f"{key}: {reason!r}"
 
 
 def _coverage_rows() -> set[str]:

@@ -103,6 +103,49 @@ def test_preprocess_semantics(prep):
     assert rows["p6"].categories == "cs.ds math.co"
 
 
+def test_count_empty_tokens_equals_python_split(spark):
+    """F4's compat mode (lab2.py:159): ``tokenize(..., count_empty_tokens=True)``
+    is Python's ``re.split(r"[^\\w]+", s)``, leading and trailing empty
+    strings included, and ``preprocess_papers`` threads it through to the
+    token arrays."""
+    from similarity_analysis_big_data_spark.functions.text import tokenize
+
+    texts = [" graph, sampling. ", "naïve-bayes 2nd", "", "...", "plain"]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(texts)], "i int, s string")
+    got = {r["i"]: r["t"] for r in df.select("i", tokenize("s", count_empty_tokens=True).alias("t")).collect()}
+    assert got == {i: re.split(r"[^\w]+", s) for i, s in enumerate(texts)}
+
+    papers = spark.createDataFrame(
+        [("q1", " Graph: the Sampling! ", "plain text", "cs"), *PAPERS], ["id", "title", "abstract", "categories"]
+    )
+    titles = {r["id"]: r["title_tokens"] for r in preprocess_papers(papers, ["the"], count_empty_tokens=True).collect()}
+    assert titles["q1"] == ["", "graph", "sampling", ""]
+    assert titles == {
+        pid: [t for t in re.split(r"[^\w]+", re.sub(r"(\d|\W)+", " ", title.lower())) if t != "the"]
+        for pid, title, _, _ in [("q1", " Graph: the Sampling! ", "", ""), *PAPERS]
+    }
+
+
+def test_lemmatized_prep_gives_rules_lemmas(spark):
+    """M5 (lab2.py:121-138): ``lemmatize_tokens=True`` maps every token
+    through the lemmatizer backend; without NLTK that is the rules
+    backend. The stopword-only abstract lemmatizes to ``[]``, not
+    ``[""]``."""
+    import importlib.util
+
+    from similarity_analysis_big_data_spark.functions.lemmatize import _rule_lemma
+
+    if importlib.util.find_spec("nltk") is not None:
+        pytest.skip("NLTK is installed, so the WordNet backend runs instead of the rules one")
+    papers = spark.createDataFrame(PAPERS, ["id", "title", "abstract", "categories"])
+    rows = {r["id"]: r for r in preprocess_papers(papers, STOPWORDS, lemmatize_tokens=True).collect()}
+    for pid, title, abstract, _ in PAPERS:
+        assert rows[pid].title_tokens == [_rule_lemma(t) for t in _py_tokenize(title)], pid
+        assert rows[pid].abstract_tokens == [_rule_lemma(t) for t in _py_tokenize(abstract)], pid
+    assert rows["p5"].abstract_tokens == []
+    assert rows["p1"].title_tokens == ["graph", "sampl", "method"]
+
+
 def test_task1_matches_reference_model(spark, prep):
     model = _py_reference_model()
     got = {

@@ -113,17 +113,23 @@ def test_flagship_sparse_branch_drops_tf_cache(spark, sf_oracle, monkeypatch):
         spark.catalog.clearCache()
 
 
-def test_flagship_dense_leaves_the_session_cache_empty(spark, sf_oracle):
-    """The probe/dense TF and DF materializations live as long as the plan
-    that reads them: two dense calls in one session cache nothing, so a
-    long-lived driver keeps no relation per input and a repeat call is
-    never served from an earlier call's data."""
+@pytest.mark.parametrize("query", ["title_best_abstract", "corpus_curation_pipeline"])
+def test_flagship_dense_leaves_the_session_cache_empty(spark, sf_oracle, query):
+    """The flagship's probe/dense TF and DF and the curation pipeline's
+    tokens live as long as the plan that reads them: two calls in one
+    session cache nothing, so a long-lived driver keeps no relation per
+    input and a repeat call is never served from an earlier call's data."""
     from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
+
+    def run():
+        if query == "title_best_abstract":
+            return title_best_abstract(spark, sf_oracle, strategy="dense").collect()
+        return QUERIES[query].fn(spark, sf_oracle).collect()
 
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
-    first = title_best_abstract(spark, sf_oracle, strategy="dense").collect()
-    second = title_best_abstract(spark, sf_oracle, strategy="dense").collect()
+    first = run()
+    second = run()
     assert sorted(first) == sorted(second)
     assert cache.isEmpty()
 
@@ -336,11 +342,12 @@ def test_robust_stats_group_tables_broadcast(spark, sf_oracle):
 
 
 def test_curation_pipeline_single_corpus_scan(spark, sf_oracle):
-    """The tokenized relation is persisted: every stage branch reads the
-    materialization — exactly ONE parquet scan of the corpus."""
+    """The tokenized relation is checkpointed: the corpus scan ran once,
+    inside the eager checkpoint, and every stage branch reads the
+    checkpoint's RDD — the plan scans no file."""
     plan = _plan(spark, sf_oracle, "corpus_curation_pipeline")
-    assert plan.count("Location: InMemoryFileIndex") == 1
-    assert "InMemoryTableScan" in plan
+    assert plan.count("Location: InMemoryFileIndex") == 0
+    assert "Scan ExistingRDD" in plan
 
 
 def test_pagerank_rank_table_broadcasts(spark, sf_oracle):

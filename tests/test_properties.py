@@ -740,8 +740,7 @@ def test_dense_topk_boundary_ties_follow_contract(spark):
     )
     k = 5
     got = dense_topk_neighbors(
-        queries, corpus, "query_id", "query_vec", "vec_id", "embedding", k,
-        round_to=6,
+        queries, corpus, "query_id", "query_vec", "vec_id", "embedding", k
     ).collect()
 
     # numpy oracle: round-6 scores, exclude self, (desc score, asc id) top-k
@@ -792,15 +791,13 @@ def test_dense_topk_blocked_equals_one_shot(spark, monkeypatch):
 
     one_shot = rows(
         ops.dense_topk_neighbors(
-            queries, corpus, "query_id", "query_vec", "vec_id", "embedding", 4,
-            round_to=6,
+            queries, corpus, "query_id", "query_vec", "vec_id", "embedding", 4
         )
     )
     monkeypatch.setattr(ops, "DENSE_BLOCK_CELLS", 1)
     blocked = rows(
         ops.dense_topk_neighbors(
-            queries, corpus, "query_id", "query_vec", "vec_id", "embedding", 4,
-            round_to=6,
+            queries, corpus, "query_id", "query_vec", "vec_id", "embedding", 4
         )
     )
     assert blocked == one_shot

@@ -15,7 +15,6 @@ from similarity_analysis_big_data_spark.sources.readers import (
 )
 from similarity_analysis_big_data_spark.sources.writers import (
     write_csv,
-    write_json,
     write_parquet,
     write_text,
 )
@@ -65,17 +64,14 @@ def test_writers_roundtrip(spark, sf_smoke, tmp_path_factory):
     write_parquet(df, f"{out}/parquet")
     assert spark.read.parquet(f"{out}/parquet").count() == 5
 
-    write_csv(df, f"{out}/csv", single_file=True)
+    write_csv(df, f"{out}/csv")
     back = spark.read.option("header", True).csv(f"{out}/csv")
     assert back.count() == 5 and set(back.columns) == {"r_regionkey", "r_name"}
-
-    write_json(df, f"{out}/json")
-    assert spark.read.json(f"{out}/json").count() == 5
 
     write_text(df.select(F.concat_ws("|", "r_regionkey", "r_name").alias("value")), f"{out}/text")
     txt = spark.read.text(f"{out}/text")
     assert txt.count() == 5
-    # single_file default for text: exactly one part file (S3 contract)
+    # every sink writes exactly one part file (S3 contract)
     parts = [f for f in os.listdir(f"{out}/text") if f.startswith("part-")]
     assert len(parts) == 1
 

@@ -15,20 +15,6 @@ from similarity_analysis_big_data_spark.streaming.events import (
 _load_all()
 
 
-def test_streaming_hourly_matches_batch(spark, sf_smoke):
-    stream = read_event_stream(spark, sf_smoke)
-    got = run_to_memory(windowed_event_counts(stream), "stream_hourly")
-    stream_rows = {
-        (r["hour_bucket"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in got.collect()
-    }
-    batch_rows = {
-        (r["hour_bucket"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in QUERIES["hourly_event_rollup"].fn(spark, sf_smoke).collect()
-    }
-    assert stream_rows == batch_rows
-
-
 def test_streaming_sessionization_runs(spark, sf_smoke):
     stream = read_event_stream(spark, sf_smoke)
     got = run_to_memory(session_window_counts(stream), "stream_sessions")
@@ -59,7 +45,7 @@ def test_stream_static_enrichment_join(spark, sf_smoke):
 def test_foreachbatch_output_matches_batch_oracle(spark, sf_smoke):
     """VERDICT r1 #8: drive the streaming rollup through a foreachBatch sink
     and compare the emitted result against the DUCKDB oracle of the batch
-    twin (hourly_event_rollup) — stream, batch, and oracle all agree."""
+    twin (sliding_window_event_counts) — stream, batch, and oracle all agree."""
     from .oracle import duckdb_conn
 
     collected = []
@@ -83,11 +69,11 @@ def test_foreachbatch_output_matches_batch_oracle(spark, sf_smoke):
     }
     conn = duckdb_conn(sf_smoke)
     try:
-        oracle = conn.execute(QUERIES["hourly_event_rollup"].oracle).fetchdf()
+        oracle = conn.execute(QUERIES["sliding_window_event_counts"].oracle).fetchdf()
     finally:
         conn.close()
     oracle_rows = {
-        (r.hour_bucket, r.event_type): (r.n_events, round(r.total_value, 4))
+        (r.window_start, r.event_type): (r.n_events, round(r.total_value, 4))
         for r in oracle.itertuples()
     }
     assert stream_rows == oracle_rows
@@ -97,9 +83,7 @@ def test_streaming_sliding_windows_match_batch(spark, sf_smoke):
     """Hopping (1h window / 15min slide) streaming aggregation equals the
     batch sliding_window_event_counts query on the same fixture."""
     stream = read_event_stream(spark, sf_smoke)
-    got = run_to_memory(
-        windowed_event_counts(stream, slide="15 minutes"), "stream_sliding"
-    )
+    got = run_to_memory(windowed_event_counts(stream), "stream_sliding")
     stream_rows = {
         (r["hour_bucket"], r["event_type"]): (r["n_events"], r["total_value"])
         for r in got.collect()
