@@ -94,18 +94,17 @@ def tfidf(
     )
 
 
-def l2_normalize(
-    weighted: DataFrame, doc_cols: list[str], weight_col: str = "weight"
-) -> DataFrame:
-    """A8 (lab2.py:193-194): per-document L2 normalization as a window agg.
+def l2_normalize(weighted: DataFrame, doc_cols: list[str]) -> DataFrame:
+    """A8 (lab2.py:193-194): per-document L2 normalization of ``weight`` as
+    a window agg.
 
     A frame-less window aggregate — one shuffle on the doc key, no
     group materialization (the reference's groupByKey+dict holds whole
     vectors in Python memory; this form streams).
     """
     w = W.partitionBy(*doc_cols)
-    norm = F.sqrt(F.sum(F.pow(F.col(weight_col), 2)).over(w))
-    return weighted.withColumn(weight_col, F.col(weight_col) / norm)
+    norm = F.sqrt(F.sum(F.pow(F.col("weight"), 2)).over(w))
+    return weighted.withColumn("weight", F.col("weight") / norm)
 
 
 def l2_normalize_sql(doc_cols: list[str]) -> str:

@@ -244,8 +244,13 @@ def jaccard_pairs(
 # The near-dup cutoff as an exact rational: J >= 1/2 at every near-dup site.
 NEAR_DUP_T = (1, 2)
 
+# The PPJoin cutoff as an exact rational: J >= 1/2 (ppjoin_pairs and its
+# oracle in plans/dedup.py).
+PPJOIN_T = (1, 2)
+
 # Exact-substring dedup: gram length in tokens, the bucket cap on a gram's
-# occurrences, and the shortest duplicated span reported, in tokens.
+# occurrences, and the shortest duplicated span reported, in tokens. The
+# operators and their DuckDB twin read them at call time.
 SUBSTRING_K = 8
 SUBSTRING_CAP = 64
 SUBSTRING_MIN_SPAN = 12
@@ -446,29 +451,26 @@ def _maximal_spans(pairs: DataFrame, k: int, min_span: int) -> DataFrame:
     )
 
 
-def substring_span_pairs(
-    toks: DataFrame,
-    k: int = SUBSTRING_K,
-    cap: int = SUBSTRING_CAP,
-    min_span: int = SUBSTRING_MIN_SPAN,
-) -> DataFrame:
+def substring_span_pairs(toks: DataFrame) -> DataFrame:
     """Exact-substring dedup (Lee et al. 2022's substring dedup,
-    re-expressed hash-gram-first): every duplicated run of ``>= min_span``
-    consecutive tokens shared by a doc pair becomes one maximal span row
-    ``(id_l, id_r, start_l, start_r, span_tokens)``, id_l < id_r.
+    re-expressed hash-gram-first): every duplicated run of ``>=
+    SUBSTRING_MIN_SPAN`` consecutive tokens shared by a doc pair becomes
+    one maximal span row ``(id_l, id_r, start_l, start_r, span_tokens)``,
+    id_l < id_r.
 
-    ``toks`` is ``(doc_id, tokens array<string>)``. Positioned ``k``-grams
-    bucket by gram value in ONE wide shuffle (the suffix-array alternative:
-    hash buckets need no global order); each bucket emits its ordered doc
-    pairs JVM-side via higher-order transform/filter; ``_maximal_spans``
-    merges them into spans.
+    ``toks`` is ``(doc_id, tokens array<string>)``. Positioned
+    ``SUBSTRING_K``-grams bucket by gram value in ONE wide shuffle (the
+    suffix-array alternative: hash buckets need no global order); each
+    bucket emits its ordered doc pairs JVM-side via higher-order
+    transform/filter; ``_maximal_spans`` merges them into spans.
 
-    ``cap`` is the hot-bucket skew lever: a gram occurring n times would
-    emit O(n²) pairs on one reducer; buckets over ``cap`` occurrences are
+    ``SUBSTRING_CAP`` is the hot-bucket skew lever: a gram occurring n
+    times would emit O(n²) pairs on one reducer; buckets over the cap are
     dropped entirely, which only suppresses stopword-like grams whose
     spans the per-diagonal merge would fragment anyway. Every stage past
     the gram shuffle is priced by matched-pair volume, never corpus size.
     """
+    k = SUBSTRING_K
     buckets = (
         _positioned_grams(toks, k)
         .groupBy("gram")
@@ -477,7 +479,7 @@ def substring_span_pairs(
                 F.struct(F.col("doc_id"), F.col("pos").cast("long").alias("pos"))
             ).alias("occs")
         )
-        .filter(F.size("occs") <= cap)
+        .filter(F.size("occs") <= SUBSTRING_CAP)
     )
     pairs = buckets.select(
         F.explode(
@@ -489,7 +491,7 @@ def substring_span_pairs(
             )
         ).alias("p")
     ).select("p.*")
-    return _maximal_spans(pairs, k, min_span)
+    return _maximal_spans(pairs, k, SUBSTRING_MIN_SPAN)
 
 
 def substring_coverage(toks: DataFrame, spans: DataFrame) -> DataFrame:
@@ -585,27 +587,22 @@ def substring_dedup_rewrite(toks: DataFrame, spans: DataFrame) -> DataFrame:
     )
 
 
-def substring_span_pairs_delta(
-    base_toks: DataFrame,
-    delta_toks: DataFrame,
-    k: int = SUBSTRING_K,
-    cap: int = SUBSTRING_CAP,
-    min_span: int = SUBSTRING_MIN_SPAN,
-) -> DataFrame:
+def substring_span_pairs_delta(base_toks: DataFrame, delta_toks: DataFrame) -> DataFrame:
     """Incremental exact-substring dedup: spans shared between a DELTA
     batch and the BASE corpus only — the daily-crawl ingest shape, where
     cost is base-gram-index x delta, never base x base re-run.
 
     Returns ``(id_delta, id_base, start_delta, start_base, span_tokens)``.
     The base side is a positioned-gram relation a production deployment
-    materializes once (bucketed by gram) and PROBES per batch; ``cap``
-    drops base grams occurring more than ``cap`` times (the same
+    materializes once (bucketed by gram) and PROBES per batch;
+    ``SUBSTRING_CAP`` drops base grams occurring more often (the same
     hot-bucket lever as the batch operator — a boilerplate gram would
     fan every delta occurrence out by its full base posting list).
     """
+    k = SUBSTRING_K
     bg = _positioned_grams(base_toks, k)
     occ = bg.groupBy("gram").agg(F.count("*").alias("_occ"))
-    bcap = bg.join(occ.filter(F.col("_occ") <= cap), "gram").drop("_occ")
+    bcap = bg.join(occ.filter(F.col("_occ") <= SUBSTRING_CAP), "gram").drop("_occ")
     dg = _positioned_grams(delta_toks, k)
     pairs = dg.alias("d").join(bcap.alias("b"), "gram").select(
         F.col("d.doc_id").alias("id_l"),
@@ -613,7 +610,7 @@ def substring_span_pairs_delta(
         F.col("d.pos").cast("long").alias("pos_l"),
         (F.col("d.pos") - F.col("b.pos")).cast("long").alias("diag"),
     )
-    return _maximal_spans(pairs, k, min_span).select(
+    return _maximal_spans(pairs, k, SUBSTRING_MIN_SPAN).select(
         F.col("id_l").alias("id_delta"),
         F.col("id_r").alias("id_base"),
         F.col("start_l").alias("start_delta"),
@@ -622,12 +619,7 @@ def substring_span_pairs_delta(
     )
 
 
-def substring_spans_sql(
-    k: int = SUBSTRING_K,
-    cap: int = SUBSTRING_CAP,
-    min_span: int = SUBSTRING_MIN_SPAN,
-    delta: str | None = None,
-) -> str:
+def substring_spans_sql(delta: str | None = None) -> str:
     """The DuckDB twin of ``substring_span_pairs``: CTEs that continue a
     WITH chain defining ``toks (doc_id, tokens)`` and end in ``spans
     (id_l, id_r, start_l, start_r, span_tokens)``.
@@ -637,6 +629,7 @@ def substring_spans_sql(
     ``substring_span_pairs_delta``: the cap counts base grams only, id_l /
     start_l are the delta side, and the chain ends in ``delta_spans
     (id_delta, id_base, start_delta, start_base, span_tokens)``."""
+    k, cap, min_span = SUBSTRING_K, SUBSTRING_CAP, SUBSTRING_MIN_SPAN
     if delta is None:
         base, probe, ordered = "grams", "capped", " AND l.doc_id < r.doc_id"
     else:
@@ -765,20 +758,15 @@ SUBSTRING_REWRITE_SQL = """,
     """
 
 
-def ppjoin_pairs(
-    token_sets: DataFrame,
-    id_col: str,
-    token_col: str = "token",
-    threshold: tuple[int, int] = (1, 2),
-) -> DataFrame:
+def ppjoin_pairs(token_sets: DataFrame, id_col: str) -> DataFrame:
     """EXACT Jaccard-threshold self-join via prefix filtering (AllPairs /
     PPJoin family: Bayardo et al. WWW'07, Xiao et al. WWW'08).
 
     The deterministic complement to MinHash-LSH: zero false negatives at
     the cost of an exact-overlap verify, where LSH trades a tunable miss
-    rate for hash-sized signatures. Input is a distinct (id, token)
-    relation; output is every pair with Jaccard >= num/den, with the
-    integer intersection/size witnesses attached.
+    rate for hash-sized signatures. Input is a distinct (id, shingle)
+    relation; output is every pair with Jaccard >= ``PPJOIN_T`` (num/den),
+    with the integer intersection/size witnesses attached.
 
     Prefix-filter lemma: order each set by GLOBAL ascending document
     frequency (rarest first, ties by token). If J(x,y) >= t then
@@ -788,7 +776,7 @@ def ppjoin_pairs(
     buckets small (df=1 tokens match only their one other occurrence),
     which is what bounds the candidate fan-out.
 
-    All threshold arithmetic is integer-exact (``threshold`` is a
+    All threshold arithmetic is integer-exact (``PPJOIN_T`` is a
     rational num/den): prefix length uses ``(num·sz + den−1) div den``
     and the final filter is ``den·inter >= num·union`` — no float
     boundary wobble at J == t.
@@ -802,10 +790,8 @@ def ppjoin_pairs(
     ordering, so it only enters a prefix when a set is nearly all
     boilerplate — prefix buckets stay df-bounded by construction.
     """
-    num, den = threshold
-    sets = token_sets.select(
-        F.col(id_col).alias("_id"), F.col(token_col).alias("_tok")
-    )
+    num, den = PPJOIN_T
+    sets = token_sets.select(F.col(id_col).alias("_id"), F.col("shingle").alias("_tok"))
     dfreq = sets.groupBy("_tok").agg(F.count("*").alias("_df"))
     w_order = W.partitionBy("_id").orderBy("_df", "_tok")
     w_all = W.partitionBy("_id")

@@ -33,6 +33,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+# Percentile buckets per ranked relation: load balance only, never a value.
+RANK_BUCKETS = 32
+
 
 def percentile_bounds(df: DataFrame, key: str, n_buckets: int) -> list[float]:
     """Approximate percentile boundaries of ``key`` via the mergeable
@@ -97,7 +100,6 @@ def bucketed_row_number(
     rank_name: str = "rnk",
     n_name: str | None = None,
     partition_cols: tuple[str, ...] = (),
-    n_buckets: int = 32,
     bounds: list[float] | None = None,
 ) -> DataFrame:
     """Adds ``rank_name`` = the exact 1-based row_number under
@@ -110,7 +112,7 @@ def bucketed_row_number(
     total order within each group for a deterministic result.
     """
     if bounds is None:
-        bounds = percentile_bounds(df, key, n_buckets)
+        bounds = percentile_bounds(df, key, RANK_BUCKETS)
     d = df.withColumn("_bkt", bucket_of(key, bounds))
 
     pcols = list(partition_cols)
@@ -176,17 +178,10 @@ def ntile_from_rank(rank: Column, n: Column, k: int) -> Column:
 
 
 def bucketed_running_sum(
-    df: DataFrame,
-    key: str,
-    tiebreaks: list[str],
-    value: str,
-    sum_name: str = "running_sum",
-    partition_cols: tuple[str, ...] = (),
-    n_buckets: int = 32,
+    df: DataFrame, key: str, tiebreaks: list[str], value: str
 ) -> DataFrame:
-    """Adds ``sum_name`` = the running sum of ``value`` under
-    ``ORDER BY key, *tiebreaks`` within each ``partition_cols`` group
-    (global when empty) — the cumulative-total twin of
+    """Adds ``cum_units`` = the running sum of ``value`` under
+    ``ORDER BY key, *tiebreaks`` — the cumulative-total twin of
     ``bucketed_row_number``: per-bucket value sums cumulative-summed into
     offsets (windows over the bounded count relation), within-bucket
     running sums partitioned by bucket. Use an exact-sum type (decimal /
@@ -194,77 +189,57 @@ def bucketed_running_sum(
     subtotals aggregate in partition order, which for floats can differ
     from a sequential scan in the last ulp.
     """
-    d = df.withColumn("_bkt", bucket_of(key, percentile_bounds(df, key, n_buckets)))
+    d = df.withColumn("_bkt", bucket_of(key, percentile_bounds(df, key, RANK_BUCKETS)))
 
-    pcols = list(partition_cols)
-    bsum = d.groupBy(*pcols, "_bkt").agg(F.sum(value).alias("_bs"))
-    off = _exclusive_offsets(bsum, pcols, "_bs", "_voff", None)
+    bsum = d.groupBy("_bkt").agg(F.sum(value).alias("_bs"))
+    off = _exclusive_offsets(bsum, [], "_bs", "_voff", None)
     w_run = (
-        W.partitionBy(*pcols, "_bkt")
+        W.partitionBy("_bkt")
         .orderBy(key, *tiebreaks)
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     return (
-        _join_offsets(
-            d.withColumn("_rs", F.sum(value).over(w_run)), off, [*pcols, "_bkt"]
-        )
-        .withColumn(sum_name, F.col("_voff") + F.col("_rs"))
+        _join_offsets(d.withColumn("_rs", F.sum(value).over(w_run)), off, ["_bkt"])
+        .withColumn("cum_units", F.col("_voff") + F.col("_rs"))
         .drop("_bkt", "_rs", "_voff")
     )
 
 
 def bucketed_running_max(
-    df: DataFrame,
-    key: str,
-    tiebreaks: list[str],
-    value: str,
-    max_name: str = "running_max",
-    partition_cols: tuple[str, ...] = (),
-    n_buckets: int = 32,
-    bucket_col: Column | None = None,
+    df: DataFrame, key: str, tiebreaks: list[str], value: str, bucket_col: Column
 ) -> DataFrame:
-    """Adds ``max_name`` = the running maximum of ``value`` under
-    ``ORDER BY key, *tiebreaks`` within each ``partition_cols`` group
-    (global when empty) — the max twin of ``bucketed_running_sum``:
+    """Adds ``run_max`` = the running maximum of ``value`` under
+    ``ORDER BY key, *tiebreaks`` — the max twin of ``bucketed_running_sum``:
     per-bucket maxima become exclusive PREFIX maxima (a window over the
     bounded B-row subtotal relation), broadcast back, and
     greatest()-merged with the within-bucket running max. Exact for any
     orderable value type; max is order-insensitive so there is no
     float-ulp caveat here.
 
-    ``bucket_col`` (when given) replaces the boundary machinery outright:
-    any integer Column that is monotone non-decreasing in ``key`` within
-    each group (equal keys -> equal bucket) is a valid bucket id — e.g.
-    an equal-width grid computed from a broadcast-joined 1-row min/max
+    ``bucket_col`` is the bucket id: any integer Column that is monotone
+    non-decreasing in ``key`` (equal keys -> equal bucket) — e.g. an
+    equal-width grid computed from a broadcast-joined 1-row min/max
     aggregate, which makes the WHOLE operator a single Spark action
     (zero driver probes). Correctness never depends on where buckets
     land (rank-equality property test); only load balance does.
     """
-    if bucket_col is not None:
-        d = df.withColumn("_bkt", bucket_col)
-    else:
-        d = df.withColumn("_bkt", bucket_of(key, percentile_bounds(df, key, n_buckets)))
+    d = df.withColumn("_bkt", bucket_col)
 
-    pcols = list(partition_cols)
-    bmax = d.groupBy(*pcols, "_bkt").agg(F.max(value).alias("_bm"))
+    bmax = d.groupBy("_bkt").agg(F.max(value).alias("_bm"))
     # exclusive PREFIX maxima as a window over the bounded B-row subtotal
     # relation (max() skips NULLs, so an all-NULL bucket neither clobbers
     # nor breaks the carried prefix; the first bucket's prefix is NULL) —
     # JVM-side for the same one-action reason as _exclusive_offsets
-    w_pm = (
-        W.partitionBy(*pcols).orderBy("_bkt").rowsBetween(W.unboundedPreceding, -1)
-    )
+    w_pm = W.orderBy("_bkt").rowsBetween(W.unboundedPreceding, -1)
     off = bmax.withColumn("_pmax", F.max("_bm").over(w_pm)).drop("_bm")
 
     w_run = (
-        W.partitionBy(*pcols, "_bkt")
+        W.partitionBy("_bkt")
         .orderBy(key, *tiebreaks)
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     return (
-        _join_offsets(
-            d.withColumn("_rm", F.max(value).over(w_run)), off, [*pcols, "_bkt"]
-        )
-        .withColumn(max_name, F.greatest(F.col("_rm"), F.col("_pmax")))
+        _join_offsets(d.withColumn("_rm", F.max(value).over(w_run)), off, ["_bkt"])
+        .withColumn("run_max", F.greatest(F.col("_rm"), F.col("_pmax")))
         .drop("_bkt", "_rm", "_pmax")
     )

@@ -31,12 +31,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
-def stable_dense_ids(
-    df: DataFrame,
-    coarse_key: str,
-    tiebreak: str,
-    n_buckets: int = 32,
-) -> DataFrame:
+def stable_dense_ids(df: DataFrame, coarse_key: str, tiebreak: str) -> DataFrame:
     """Assign ids 0..n-1 following the total order (coarse_key, tiebreak).
 
     ``coarse_key`` may have duplicates (equal values always land in one
@@ -45,7 +40,7 @@ def stable_dense_ids(
     """
     import pandas as pd
 
-    from .rank import bucket_of, percentile_bounds
+    from .rank import RANK_BUCKETS, bucket_of, percentile_bounds
 
     # approx-percentile boundaries (GK sketch — r5, same rationale as
     # operators/rank.py): boundaries only set partition LOAD BALANCE; the
@@ -53,7 +48,7 @@ def stable_dense_ids(
     # so they are exact and deterministic for any boundary choice.
     # Returns [] on empty input — everything lands in bucket 0 and the
     # assignment degrades to a zero-row pass.
-    bounds = percentile_bounds(df, coarse_key, n_buckets)
+    bounds = percentile_bounds(df, coarse_key, RANK_BUCKETS)
 
     with_pid = df.withColumn("_pid", bucket_of(coarse_key, bounds))
     cnt = with_pid.groupBy("_pid").agg(F.count("*").alias("_n"))
@@ -92,7 +87,7 @@ def stable_dense_ids(
     return (
         with_pid.join(F.broadcast(off), with_pid["_pid"] == off["_o_pid"])
         .drop("_o_pid")
-        .repartition(n_buckets, "_pid")
+        .repartition(RANK_BUCKETS, "_pid")
         .sortWithinPartitions("_pid", coarse_key, tiebreak)
         .mapInPandas(assign, schema=schema)
     )

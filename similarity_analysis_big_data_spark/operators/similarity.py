@@ -105,11 +105,7 @@ def retrieval_accuracy(matches: DataFrame, query_id: str, match_id: str, n_queri
     return matches.agg((F.sum(hit) / F.lit(float(n_queries))).alias("accuracy"))
 
 
-def all_pairs_cosine_exact(
-    vectors: DataFrame,
-    id_col: str,
-    round_to: int | None = None,
-) -> DataFrame:
+def all_pairs_cosine_exact(vectors: DataFrame, id_col: str, round_to: int) -> DataFrame:
     """J4 (lab2.py:291): self all-pairs cosine, sparse-join formulation.
 
     For small id domains (the reference's category×category matrix) this is
@@ -134,9 +130,7 @@ def all_pairs_cosine_exact(
             F.coalesce("cosine", F.lit(0.0)).alias("cosine"),
         )
     )
-    if round_to is not None:
-        dense = dense.withColumn("cosine", F.round("cosine", round_to))
-    return dense
+    return dense.withColumn("cosine", F.round("cosine", round_to))
 
 
 def category_cosine_matrix(category_terms: DataFrame, round_to: int) -> DataFrame:
@@ -151,9 +145,7 @@ def category_cosine_matrix(category_terms: DataFrame, round_to: int) -> DataFram
     cat_tf = category_terms.groupBy("category", "term").agg(
         F.count("*").cast("double").alias("weight")
     )
-    return all_pairs_cosine_exact(
-        l2_normalize(cat_tf, ["category"]), "category", round_to=round_to
-    )
+    return all_pairs_cosine_exact(l2_normalize(cat_tf, ["category"]), "category", round_to)
 
 
 def pivot_matrix(
@@ -197,10 +189,12 @@ def dense_best_match(
     abstract_vec: DataFrame,
     query_id: str,
     match_id: str,
-    t_rows: list | None = None,
+    t_rows: list,
 ) -> DataFrame:
     """Exact arg-max cosine via blocked dense matmul — the small-vocabulary
     physical strategy for ``sparse_cosine_join`` + ``best_match``.
+    ``t_rows`` is ``title_vec`` collected (the caller's own stats+title
+    action already holds it).
 
     When the vocabulary is narrow (synthetic corpora, categorical token
     spaces), EVERY query/candidate pair shares terms, so the sparse join
@@ -251,20 +245,16 @@ def dense_best_match(
     import numpy as np
     import pandas as pd
 
-    if t_rows is None:
-        # bounded by the caller's strategy check; callers that already
-        # collected the matrix inside their own action pass t_rows
-        t_rows = title_vec.collect()
     terms = sorted({r["term"] for r in t_rows})
     # Guard on the ACTUAL collected matrix, not the caller's verdict: a
     # memoized verdict may be stale (the data under the same dir was
     # rewritten with a wider vocabulary, or the bounds changed across code
-    # versions), and a caller forcing strategy="dense" may never have
-    # probed at all. The fallback is exact — both formulations share the
-    # round-before-argmax / ascending-id contract and the shared-term
-    # candidate set — so an over-bound matrix degrades to the sparse join
-    # instead of silently over-broadcasting (the collect already happened;
-    # the broadcast is the part being protected).
+    # versions), and a memoized "dense" runs no probe at all. The fallback
+    # is exact — both formulations share the round-before-argmax /
+    # ascending-id contract and the shared-term candidate set — so an
+    # over-bound matrix degrades to the sparse join instead of silently
+    # over-broadcasting (the collect already happened; the broadcast is
+    # the part being protected).
     n_queries = len({r[query_id] for r in t_rows})
     if len(terms) > DENSE_MAX_VOCAB or n_queries * len(terms) > DENSE_MAX_BROADCAST_CELLS:
         pairs = sparse_cosine_join(

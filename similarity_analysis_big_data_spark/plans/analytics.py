@@ -963,9 +963,7 @@ def abc_revenue_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(units_expr).alias("units"))
         .withColumn("neg_units", -F.col("units"))
     )
-    cum = bucketed_running_sum(
-        rev, "neg_units", ["l_partkey"], "units", sum_name="cum_units"
-    )
+    cum = bucketed_running_sum(rev, "neg_units", ["l_partkey"], "units")
     tot = rev.agg(F.sum("units").alias("tot"))
     share = F.col("cum_units").cast("double") / F.col("tot").cast("double")
     return (
@@ -1044,10 +1042,7 @@ def event_lateness_watermark_profile(spark: SparkSession, sf_dir: str) -> DataFr
     grid_bkt = F.floor(
         (F.col("event_id") - F.col("_lo")).cast("double") / width
     ).cast("int")
-    seen = bucketed_running_max(
-        ev.crossJoin(F.broadcast(mm)), "event_id", [], "tsu",
-        max_name="run_max", bucket_col=grid_bkt,
-    )
+    seen = bucketed_running_max(ev.crossJoin(F.broadcast(mm)), "event_id", [], "tsu", grid_bkt)
     late = seen.select(
         "event_type", (F.col("run_max") - F.col("tsu")).alias("late_us")
     )
@@ -1104,13 +1099,7 @@ def stream_twin_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = windowed_event_counts(read_event_stream(spark, sf_dir))
-    out = run_to_memory(stream, f"stream_twin_{uuid.uuid4().hex[:8]}")
-    return out.select(
-        F.col("hour_bucket").alias("window_start"),
-        "event_type",
-        "n_events",
-        "total_value",
-    )
+    return run_to_memory(stream, f"stream_twin_{uuid.uuid4().hex[:8]}")
 
 
 @register(
@@ -1206,7 +1195,7 @@ def stream_twin_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev_c = read_event_stream(spark, sf_dir)
     ev_p = read_event_stream(spark, sf_dir)
-    stream = interval_join_stream(ev_c, ev_p, band_minutes=30, watermark="2 hours")
+    stream = interval_join_stream(ev_c, ev_p)
     out = run_to_memory(stream, f"stream_twin_ij_{uuid.uuid4().hex[:8]}")
     return out.select("click_id", "purchase_id", "user_id", "micros_to_purchase")
 

@@ -16,7 +16,7 @@ zero norm, self pairs excluded, ranked by (score desc, id asc) to k — is
 stated once, by the helpers every query body is built from:
 ``_gated_cosine`` (the cosine expression), ``_scored`` (broadcast queries
 x corpus, self pair dropped), ``_topk`` (the rank window and cut),
-``_exact_topk`` (the dense-or-fold strategy choice), ``_recall``
+``_exact_topk`` (the dense-or-fold scorer choice), ``_recall``
 (per-query recall@k), ``_ivf_assign``/``_ivf_probes`` (the sqrt-scaled
 and fixed IVF grids) and ``_pq_encode``/``_adc_topk`` (PQ encode and ADC
 rank).
@@ -113,33 +113,24 @@ def _topk(
     )
 
 
-def _exact_topk(
-    queries: DataFrame, corpus: DataFrame, k: int, strategy: str = "auto"
-) -> DataFrame:
+def _exact_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """Exact cosine top-k of ``(query_id, query_vec)`` over ``(vec_id,
     embedding)``: ``(query_id, neighbor_id, cosine, rnk)``.
 
-    - ``"hof"`` — ``_topk(_scored(...))``, the column-expression fold.
-      Works at any |Q|.
-    - ``"dense"`` — operators.similarity.dense_topk_neighbors: broadcast
-      (|Q| x d) matrix, one BLAS matmul per corpus partition, partition-
-      local top-k, tiny merge. Wins while |Q|·d stays broadcastable.
-    - ``"auto"`` — ONE bounded action collects up to the broadcast cap + 1
-      query rows; they ARE the dense strategy's broadcast payload (no
-      second collect), and a set that outgrows
-      ``DENSE_MAX_BROADCAST_CELLS`` falls back to the fold.
+    ONE bounded action collects up to the broadcast cap + 1 query rows.
+    A set within ``DENSE_MAX_BROADCAST_CELLS`` takes the dense scorer,
+    operators.similarity.dense_topk_neighbors, with those rows as its
+    broadcast payload (no second collect): broadcast (|Q| x d) matrix,
+    one BLAS matmul per corpus partition, partition-local top-k, tiny
+    merge. A larger set takes the fold, ``_topk(_scored(...))``, which
+    works at any |Q|.
 
-    Both strategies keep the same contract, so results are strategy-blind.
+    Both scorers keep the same contract, so results are scorer-blind.
     """
-    prefetched = None
-    if strategy == "auto":
-        cap = max(1, DENSE_MAX_BROADCAST_CELLS // 64)  # rows at d = 64
-        rows = queries.limit(cap + 1).collect()
-        d = len(rows[0]["query_vec"]) if rows else 0
-        if rows and len(rows) <= cap and len(rows) * d <= DENSE_MAX_BROADCAST_CELLS:
-            prefetched = rows
-        strategy = "hof" if prefetched is None else "dense"
-    if strategy == "dense":
+    cap = max(1, DENSE_MAX_BROADCAST_CELLS // 64)  # rows at d = 64
+    rows = queries.limit(cap + 1).collect()
+    d = len(rows[0]["query_vec"]) if rows else 0
+    if rows and len(rows) <= cap and len(rows) * d <= DENSE_MAX_BROADCAST_CELLS:
         return dense_topk_neighbors(
             queries,
             corpus,
@@ -148,7 +139,7 @@ def _exact_topk(
             "vec_id",
             "embedding",
             k,
-            prefetched_queries=prefetched,
+            prefetched_queries=rows,
         )
     return _topk(_scored(queries, corpus), k)
 
@@ -249,19 +240,17 @@ def _ivf_assign(emb: DataFrame, mod: int | None = None) -> DataFrame:
     doc="[ext] exact ANN baseline: brute-force cosine top-k per query "
     "(broadcast queries × corpus, double fold, deterministic rank).",
 )
-def ann_bruteforce_topk(
-    spark: SparkSession, sf_dir: str, strategy: str = "auto"
-) -> DataFrame:
+def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: the small query set broadcasts; the corpus never shuffles —
     each partition scores its vectors locally and window pruning keeps k
-    rows per query. O(|Q|·n·d) compute, zero O(n²). ``strategy`` picks
-    the scorer (``_exact_topk``: "hof", "dense" or "auto"), the same
-    adaptive pattern as title_best_abstract."""
+    rows per query. O(|Q|·n·d) compute, zero O(n²). ``_exact_topk``
+    picks the scorer (dense while |Q|·d broadcasts, else the fold), the
+    same adaptive pattern as title_best_abstract."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return _exact_topk(queries, emb, TOP_K, strategy)
+    return _exact_topk(queries, emb, TOP_K)
 
 
 @register(

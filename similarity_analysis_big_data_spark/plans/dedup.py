@@ -27,6 +27,7 @@ from ..functions.hashing import (
 from ..functions.text import SENTENCE_SPLIT_PATTERN, with_word_ngrams, words, words_sql
 from ..operators.dedup import (
     NEAR_DUP_T,
+    PPJOIN_T,
     SUBSTRING_CAP,
     SUBSTRING_COVERAGE_SQL,
     SUBSTRING_K,
@@ -445,7 +446,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PPJOIN_N = 5  # shingle width
-PPJOIN_T = (1, 2)  # Jaccard threshold as an exact rational
 
 
 @register(
@@ -594,7 +594,7 @@ def ppjoin_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode(F.array_distinct("_g")).alias("shingle"))
         .localCheckpoint(eager=True)
     )
-    pairs = ppjoin_pairs(grams, "doc_id", "shingle", threshold=PPJOIN_T)
+    pairs = ppjoin_pairs(grams, "doc_id")
     return pairs.select(
         "id_l",
         "id_r",

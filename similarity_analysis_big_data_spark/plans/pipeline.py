@@ -24,28 +24,30 @@ from ..operators.similarity import (
 )
 
 
-def preprocess_papers(
-    papers: DataFrame,
-    stopwords: list[str],
-    lemmatize_tokens: bool = False,
-    count_empty_tokens: bool = False,
-) -> DataFrame:
+# The reference-parity modes of ``preprocess_papers``, both off: lemmatize
+# the tokens (lab2.py's step 1, the only Python crossing), and keep the
+# empty strings Python's re.split leaves at a leading or trailing separator.
+LEMMATIZE_TOKENS = False
+COUNT_EMPTY_TOKENS = False
+
+
+def preprocess_papers(papers: DataFrame, stopwords: list[str]) -> DataFrame:
     """lab2.py:62-146 as one projection chain.
 
     Output: id, categories (cleaned, atomic), title_tokens, abstract_tokens.
-    Lemmatization (the only Python crossing, Arrow-vectorized) is opt-in —
-    the sklearn-TF-IDF math downstream is identical either way.
+    Lemmatization (Arrow-vectorized) runs under ``LEMMATIZE_TOKENS`` — the
+    sklearn-TF-IDF math downstream is identical either way.
     """
     out = papers.select(
         "id",
         clean_category("categories").alias("categories"),
-        tokenize(normalize_text("title"), count_empty_tokens).alias("title_tokens"),
-        tokenize(normalize_text("abstract"), count_empty_tokens).alias("abstract_tokens"),
+        tokenize(normalize_text("title"), COUNT_EMPTY_TOKENS).alias("title_tokens"),
+        tokenize(normalize_text("abstract"), COUNT_EMPTY_TOKENS).alias("abstract_tokens"),
     )
     out = out.withColumn(
         "title_tokens", remove_stopwords("title_tokens", stopwords)
     ).withColumn("abstract_tokens", remove_stopwords("abstract_tokens", stopwords))
-    if lemmatize_tokens:
+    if LEMMATIZE_TOKENS:
         # lemmatize returns a space-joined string (reference UDF contract);
         # re-tokenize for the long-format flow. An empty token array
         # lemmatizes to "" and split("") yields [""] — filter empties so no
@@ -63,17 +65,14 @@ def _long_terms(prep: DataFrame, tokens_col: str, id_alias: str) -> DataFrame:
     return prep.select(F.col("id").alias(id_alias), F.explode(tokens_col).alias("term"))
 
 
-def task1_best_abstract(prep: DataFrame, n_docs: int | None = None) -> DataFrame:
+def task1_best_abstract(prep: DataFrame, n_docs: int) -> DataFrame:
     """Task 1 (lab2.py:150-251): ``best_abstract_per_title`` with every
     paper as a title, on the sparse strategy. ``n_docs`` is the corpus
-    count if the caller has it (A1, lab2.py:155: one count, reused as a
-    literal).
+    count (A1, lab2.py:155: one count, reused as a literal).
 
     Returns (title_id, abstract_id, cosine); titles with zero vocabulary
     overlap emit (title_id, NULL, 0.0) for cartesian row-count parity.
     """
-    if n_docs is None:
-        n_docs = prep.count()
     return best_abstract_per_title(
         _long_terms(prep, "title_tokens", "title_id"),
         _long_terms(prep, "abstract_tokens", "abstract_id"),

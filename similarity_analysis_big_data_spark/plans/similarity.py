@@ -207,12 +207,11 @@ def doc_tfidf_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Task 1 flagship (lab2.py:150-251): per-title best-matching abstract via "
     "sparse cosine join + deterministic arg-max; zero-overlap titles emit (-1, 0.0).",
 )
-def title_best_abstract(
-    spark: SparkSession, sf_dir: str, strategy: str = "auto"
-) -> DataFrame:
+def title_best_abstract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Task 1 over the fixture: ``best_abstract_per_title`` (which see for
-    the strategies) with every TITLE_SAMPLE_MOD-th document as a title,
-    the memo keyed on ``sf_dir`` and no match rendered as -1.
+    the strategies) on ``auto`` with every TITLE_SAMPLE_MOD-th document as
+    a title, the memo keyed on ``sf_dir`` and no match rendered as -1. A
+    memoized verdict for ``sf_dir`` takes that strategy's path.
 
     The ``auto`` pre-probe sample (r10) is the documents with doc_id <
     512: any subset's distinct-term count bounds the vocabulary from
@@ -233,7 +232,6 @@ def title_best_abstract(
             F.count("*").alias("_n_docs"),
             F.count_if(F.col("doc_id") % TITLE_SAMPLE_MOD == 0).alias("nt"),
         ),
-        strategy,
         memo_key=sf_dir,
         sample_terms=docs.filter(F.col("doc_id") < 512).select(
             F.explode(words("text")).alias("term")

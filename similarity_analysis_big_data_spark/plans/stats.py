@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.timeutil import micros_between
 from ..operators.rank import (
+    RANK_BUCKETS,
     bucketed_row_number,
     ntile_from_rank,
     percentile_bounds,
@@ -292,7 +293,7 @@ def quantile_normalize_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    bounds = percentile_bounds(docs, "n_chars", 32)
+    bounds = percentile_bounds(docs, "n_chars", RANK_BUCKETS)
     g = bucketed_row_number(
         docs, "n_chars", ["doc_id"], rank_name="grnk", n_name="n_tot",
         bounds=bounds,

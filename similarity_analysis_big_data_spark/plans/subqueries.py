@@ -33,9 +33,9 @@ def _sql_query(name: str, sql: str, tables: tuple[str, ...], doc: str):
     """Register a query whose Spark side runs the oracle text verbatim."""
 
     @register(name, oracle=sql, doc=doc)
-    def _q(spark: SparkSession, sf_dir: str, _sql=sql, _tables=tables) -> DataFrame:
-        register_views(spark, sf_dir, _tables)
-        return spark.sql(_sql)
+    def _q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir, tables)
+        return spark.sql(sql)
 
     _q.__name__ = name
     return _q

@@ -12,12 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_parquet(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:
-    """Parquet sink (S4). ``partition_by`` enables partition pruning for readers."""
-    writer = df.coalesce(1).write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    """Parquet sink (S4) — the CLI's Task 1 results (lab2.py:313)."""
+    df.coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def write_csv(df: DataFrame, path: str) -> None:

@@ -63,7 +63,7 @@ def windowed_event_counts(events: DataFrame) -> DataFrame:
         .groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("total_value"))
         .select(
-            F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("hour_bucket"),
+            F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "event_type",
             "n_events",
             "total_value",
@@ -131,45 +131,32 @@ def _is_agg(df: DataFrame) -> bool:
     return "Aggregate" in df._jdf.queryExecution().logical().toString()
 
 
-def interval_join_stream(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    band_minutes: int = 30,
-    watermark: str = "2 hours",
-    how: str = "inner",
-) -> DataFrame:
-    """STREAM-STREAM inner join: every purchase within ``band_minutes`` after
-    a click by the same user — the streaming twin of the batch
+def interval_join_stream(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
+    """STREAM-STREAM inner join: every purchase within 30 minutes after a
+    click by the same user — the streaming twin of the batch
     ``interval_join_click_purchase`` query (plans/relational.py).
 
-    Both sides carry watermarks and the join condition carries an event-time
-    band, so Spark can bound each side's join state: a buffered click is
-    dropped once the purchase-side watermark passes click_ts + band (inner
-    joins additionally emit matches eagerly, without waiting for the
-    watermark). Without the time bound the state store would grow without
-    limit — the unbounded-state trap of naive stream joins.
-
-    ``how="left_outer"`` adds the unmatched-click rows: an outer result can
-    only be emitted once the watermark proves no matching purchase can
-    still arrive, so null rows trail the eager inner matches by the
-    watermark delay — clicks younger than (watermark + band) at end of
-    input remain in state and are never emitted. That cutoff is inherent
-    to watermarked outer joins, not an implementation quirk."""
+    Both sides carry 2-hour watermarks and the join condition carries an
+    event-time band, so Spark can bound each side's join state: a buffered
+    click is dropped once the purchase-side watermark passes click_ts +
+    band (inner joins additionally emit matches eagerly, without waiting
+    for the watermark). Without the time bound the state store would grow
+    without limit — the unbounded-state trap of naive stream joins."""
     c = (
         clicks.filter(F.col("event_type") == "click")
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "2 hours")
         .alias("c")
     )
     p = (
         purchases.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "2 hours")
         .alias("p")
     )
     cond = F.expr(
         "c.user_id = p.user_id AND p.ts > c.ts "
-        f"AND p.ts <= c.ts + interval {band_minutes} minutes"
+        "AND p.ts <= c.ts + interval 30 minutes"
     )
-    return c.join(p, cond, how).select(
+    return c.join(p, cond).select(
         F.col("c.event_id").alias("click_id"),
         F.col("p.event_id").alias("purchase_id"),
         F.col("c.user_id").alias("user_id"),

@@ -30,3 +30,25 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture
+def flagship_on(spark):
+    """``flagship_on(sf_dir, verdict)``: ``title_best_abstract`` with its
+    strategy memo for ``sf_dir`` seeded to ``"dense"`` or ``"sparse"``. A
+    memoized verdict takes exactly that strategy's path, as every repeat
+    call does in production; the memo entry is restored afterwards."""
+    from similarity_analysis_big_data_spark.plans import similarity as S
+
+    def run(sf_dir: str, verdict: str):
+        key = (spark.sparkContext.applicationId, sf_dir)
+        prior = S._AUTO_STRATEGY_CACHE.pop(key, None)
+        S._AUTO_STRATEGY_CACHE[key] = verdict
+        try:
+            return S.title_best_abstract(spark, sf_dir)
+        finally:
+            S._AUTO_STRATEGY_CACHE.pop(key, None)
+            if prior is not None:
+                S._AUTO_STRATEGY_CACHE[key] = prior
+
+    return run

@@ -31,6 +31,27 @@ def test_priority_names_registered_queries_once():
     assert list(names)[: len(registry.PRIORITY)] == list(registry.PRIORITY)
 
 
+def test_every_query_takes_exactly_spark_and_sf_dir():
+    """Every registered query is a ``registry.QueryFn``: it takes exactly
+    ``(spark, sf_dir)``, no defaults, so every caller of ``queries()``
+    runs it the same way and no query keeps a second mode behind an
+    option."""
+    import inspect
+
+    from similarity_analysis_big_data_spark.plans import registry
+
+    registry._load_all()
+    wrong = {}
+    for name, spec in registry.QUERIES.items():
+        params = inspect.signature(spec.fn).parameters.values()
+        if [(p.name, p.kind, p.default) for p in params] != [
+            (n, inspect.Parameter.POSITIONAL_OR_KEYWORD, inspect.Parameter.empty)
+            for n in ("spark", "sf_dir")
+        ]:
+            wrong[name] = str(inspect.signature(spec.fn))
+    assert wrong == {}
+
+
 def test_all_queries_execute_at_smoke_scale(spark, sf_smoke):
     for name, fn in e.queries().items():
         df = fn(spark, sf_smoke)

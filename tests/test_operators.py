@@ -523,9 +523,9 @@ def test_every_package_def_is_reached():
 # Defaulted parameters that non-test callers pass fewer than two distinct
 # values, kept settable on purpose. Keyed ``module.def.param``
 # (package-relative). A reason is the perfbench chain that passes it
-# (``perfbench/`` cannot change with the engine), a deployment setting, the
-# ROADMAP direction that decides it, or ``test: <file>::<test>`` naming the
-# test that sets another value.
+# (``perfbench/`` cannot change with the engine), a deployment setting, or
+# the ROADMAP direction that decides it. A value only a test sets is a
+# module constant the test monkeypatches, never an entry here.
 OPTION_ALLOWED = {
     "operators.components.dedup_survivors.iteration_shuffle_partitions": "perfbench: chains.near_dup_survivors",
     "__main__.main.argv": "deployment: the CLI's arguments",
@@ -545,40 +545,6 @@ OPTION_ALLOWED = {
             "random_projection_neighbors.num_tables",
             "random_projection_neighbors.seed",
         )
-    },
-    "functions.tfidf.l2_normalize.weight_col": "test: test_properties.py::test_tfidf_weight_and_l2_equal_their_sql_twins",
-    **{
-        f"operators.dedup.substring_span_pairs.{p}": "test: test_substring.py::test_substring_spans_known_construction"
-        for p in ("k", "cap", "min_span")
-    },
-    **{
-        f"operators.dedup.{fn}.{p}": "test: test_substring.py::test_sql_twin_matches_operators"
-        for fn in ("substring_span_pairs_delta", "substring_spans_sql")
-        for p in ("k", "cap", "min_span")
-    },
-    "operators.dedup.ppjoin_pairs.threshold": "test: test_ppjoin.py::test_ppjoin_matches_bruteforce_random",
-    "operators.dedup.ppjoin_pairs.token_col": "test: test_ppjoin.py::test_ppjoin_matches_bruteforce_random",
-    **{
-        f"operators.rank.{fn}.n_buckets": "test: test_properties.py::test_bucketed_rank_and_sums_match_windows_on_random_data"
-        for fn in ("bucketed_row_number", "bucketed_running_sum", "bucketed_running_max")
-    },
-    "operators.rank.bucketed_running_sum.partition_cols": "test: test_operators.py::test_bucketed_running_sum_equals_window_running_sum",
-    "operators.rank.bucketed_running_sum.sum_name": "test: test_operators.py::test_bucketed_running_sum_equals_window_running_sum",
-    "operators.rank.bucketed_running_max.partition_cols": "test: test_operators.py::test_bucketed_running_max_equals_window_running_max",
-    "operators.rank.bucketed_running_max.max_name": "test: test_operators.py::test_bucketed_running_max_equals_window_running_max",
-    "operators.rank.bucketed_running_max.bucket_col": "test: test_operators.py::test_bucketed_running_max_equals_window_running_max",
-    "operators.reindex.stable_dense_ids.n_buckets": "test: test_properties.py::test_stable_dense_ids_random",
-    "operators.similarity.all_pairs_cosine_exact.round_to": "test: test_properties.py::test_sparse_join_equals_cartesian",
-    "operators.similarity.dense_best_match.t_rows": "test: test_operators.py::test_dense_best_match_zero_overlap_and_ties",
-    "plans.ann.ann_bruteforce_topk.strategy": "test: test_properties.py::test_ann_dense_equals_hof",
-    "plans.similarity.title_best_abstract.strategy": "test: test_plans.py::test_flagship_dense_strategy_materializes_no_pairs",
-    "plans.pipeline.task1_best_abstract.n_docs": "test: test_pipeline.py::test_task1_matches_reference_model",
-    "plans.pipeline.preprocess_papers.lemmatize_tokens": "test: test_pipeline.py::test_lemmatized_prep_gives_rules_lemmas",
-    "plans.pipeline.preprocess_papers.count_empty_tokens": "test: test_pipeline.py::test_count_empty_tokens_equals_python_split",
-    "sources.writers.write_parquet.partition_by": "test: test_sources.py::test_partitioned_parquet_sink",
-    **{
-        f"streaming.events.interval_join_stream.{p}": "test: test_streaming.py::test_stream_stream_left_outer_join_emits_expired_unmatched"
-        for p in ("band_minutes", "watermark", "how")
     },
 }
 
@@ -644,18 +610,11 @@ def test_every_option_is_set():
     assert unset == [], "options non-test callers set to one value:\n" + "\n".join(unset)
 
     # every allowlist entry is still a defaulted parameter, still needs the
-    # allowlist, and a test entry names a test in a file that calls the def
-    tests = pathlib.Path(__file__).parent
+    # allowlist, and gives a reason other than a test
     for key, reason in OPTION_ALLOWED.items():
         assert key in options, f"{key}: no longer a defaulted parameter"
         assert len(options[key][1]) < 2, f"{key}: callers set it, drop the entry"
-        if reason.startswith("test: "):
-            file, _, test = reason.removeprefix("test: ").partition("::")
-            tree = ast.parse((tests / file).read_text())
-            assert test in {st.name for st in tree.body if isinstance(st, ast.FunctionDef)}, f"{key}: {reason!r}"
-            assert key.split(".")[-2] in _names(tree, strings=False), f"{key}: {file} never calls it"
-        else:
-            assert reason.split(":")[0] in ("perfbench", "deployment", "ROADMAP direction 3"), f"{key}: {reason!r}"
+        assert reason.startswith(("perfbench:", "deployment:", "ROADMAP direction 3")), f"{key}: {reason!r}"
 
 
 def _coverage_rows() -> set[str]:
@@ -814,7 +773,7 @@ def test_dense_best_match_zero_overlap_and_ties(spark):
         [(10, "x", 0.5), (11, "x", 0.5), (12, "y", 1.0)],
         "abstract_id long, term string, weight double",
     )
-    dense = dense_best_match(titles, abstracts, "title_id", "abstract_id").collect()
+    dense = dense_best_match(titles, abstracts, "title_id", "abstract_id", titles.collect()).collect()
     got = {r["title_id"]: (r["abstract_id"], r["cosine"]) for r in dense}
     assert set(got) == {1}  # t2 dropped (zero overlap)
     assert got[1] == (10, 0.5)  # tie between 10 and 11 -> smallest id
@@ -845,12 +804,12 @@ def test_dense_best_match_overbound_falls_back_to_sparse(spark, monkeypatch):
     )
     expected = {
         r["title_id"]: (r["abstract_id"], r["cosine"])
-        for r in ops.dense_best_match(titles, abstracts, "title_id", "abstract_id").collect()
+        for r in ops.dense_best_match(titles, abstracts, "title_id", "abstract_id", titles.collect()).collect()
     }
     monkeypatch.setattr(ops, "DENSE_MAX_VOCAB", 0)
     got = {
         r["title_id"]: (r["abstract_id"], r["cosine"])
-        for r in ops.dense_best_match(titles, abstracts, "title_id", "abstract_id").collect()
+        for r in ops.dense_best_match(titles, abstracts, "title_id", "abstract_id", titles.collect()).collect()
     }
     assert got == expected
 
@@ -878,9 +837,9 @@ def test_dense_best_match_blocked_equals_one_shot(spark, monkeypatch):
     def rows(df):
         return {r["title_id"]: (r["abstract_id"], r["cosine"]) for r in df.collect()}
 
-    one_shot = rows(ops.dense_best_match(titles, abstracts, "title_id", "abstract_id"))
+    one_shot = rows(ops.dense_best_match(titles, abstracts, "title_id", "abstract_id", titles.collect()))
     monkeypatch.setattr(ops, "DENSE_BLOCK_CELLS", 1)  # 1 cell -> 1-row blocks
-    blocked = rows(ops.dense_best_match(titles, abstracts, "title_id", "abstract_id"))
+    blocked = rows(ops.dense_best_match(titles, abstracts, "title_id", "abstract_id", titles.collect()))
     assert blocked == one_shot
     assert blocked[1] == (10, 0.5)  # cross-chunk tie -> smallest id
     assert blocked[2] == (14, 0.75)  # later chunk wins on strictly-greater
@@ -1232,60 +1191,46 @@ def test_ntile_from_rank_equals_window_ntile(spark, k):
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
 
-def test_bucketed_running_sum_equals_window_running_sum(spark):
+def _running(col):
+    """The global-window running ``col`` aggregate of the rank fixture."""
     from pyspark.sql import Window as W
 
+    return col.over(W.orderBy("k", "id").rowsBetween(W.unboundedPreceding, W.currentRow))
+
+
+def _k_bucket():
+    """A bucket id monotone in the rank fixture's key, as
+    bucketed_running_max takes."""
+    return F.floor(F.col("k") / 8)
+
+
+def test_bucketed_running_sum_equals_window_running_sum(spark):
     from similarity_analysis_big_data_spark.operators.rank import (
         bucketed_running_sum,
     )
 
-    cols = ["id", "grp", "k", "v", "rs"]
+    cols = ["id", "grp", "k", "v", "cum_units"]
     df = _rank_fixture(spark)
-    got = bucketed_running_sum(df, "k", ["id"], "v", sum_name="rs").select(cols)
-    exp = df.withColumn(
-        "rs",
-        F.sum("v").over(
-            W.orderBy("k", "id").rowsBetween(W.unboundedPreceding, W.currentRow)
-        ),
-    ).select(cols)
+    got = bucketed_running_sum(df, "k", ["id"], "v").select(cols)
+    exp = df.withColumn("cum_units", _running(F.sum("v"))).select(cols)
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
-    got_g = bucketed_running_sum(
-        df, "k", ["id"], "v", sum_name="rs", partition_cols=("grp",)
-    ).select(cols)
-    exp_g = df.withColumn(
-        "rs",
-        F.sum("v").over(
-            W.partitionBy("grp")
-            .orderBy("k", "id")
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        ),
-    ).select(cols)
-    assert got_g.exceptAll(exp_g).count() == 0
-    assert exp_g.exceptAll(got_g).count() == 0
 
 def test_bucketed_running_sum_double_values(spark):
     """ADVICE r4: double-typed value column — the offset seed must be a
     float zero or createDataFrame rejects it for DoubleType."""
-    from pyspark.sql import Window as W
-
     from similarity_analysis_big_data_spark.operators.rank import (
         bucketed_running_sum,
     )
 
     df = _rank_fixture(spark).withColumn("v", (F.col("v") + F.lit(0.25)).cast("double"))
-    cols = ["id", "grp", "k", "v", "rs"]
-    got = bucketed_running_sum(df, "k", ["id"], "v", sum_name="rs").select(cols)
-    exp = df.withColumn(
-        "rs",
-        F.sum("v").over(
-            W.orderBy("k", "id").rowsBetween(W.unboundedPreceding, W.currentRow)
-        ),
-    ).select(cols)
+    cols = ["id", "grp", "k", "v", "cum_units"]
+    got = bucketed_running_sum(df, "k", ["id"], "v").select(cols)
+    exp = df.withColumn("cum_units", _running(F.sum("v"))).select(cols)
     # float running sums: compare rounded (bucket subtotal order vs scan
     # order can differ in the last ulp — documented in the docstring)
-    g = got.withColumn("rs", F.round("rs", 6))
-    e = exp.withColumn("rs", F.round("rs", 6))
+    g = got.withColumn("cum_units", F.round("cum_units", 6))
+    e = exp.withColumn("cum_units", F.round("cum_units", 6))
     assert g.exceptAll(e).count() == 0 and e.exceptAll(g).count() == 0
 
 
@@ -1336,36 +1281,15 @@ def test_percentile_bounds_empty_input(spark):
 
 
 def test_bucketed_running_max_equals_window_running_max(spark):
-    from pyspark.sql import Window as W
-
     from similarity_analysis_big_data_spark.operators.rank import (
         bucketed_running_max,
     )
 
-    cols = ["id", "grp", "k", "v", "rm"]
+    cols = ["id", "grp", "k", "v", "run_max"]
     df = _rank_fixture(spark)
-    got = bucketed_running_max(df, "k", ["id"], "v", max_name="rm").select(cols)
-    exp = df.withColumn(
-        "rm",
-        F.max("v").over(
-            W.orderBy("k", "id").rowsBetween(W.unboundedPreceding, W.currentRow)
-        ),
-    ).select(cols)
+    got = bucketed_running_max(df, "k", ["id"], "v", _k_bucket()).select(cols)
+    exp = df.withColumn("run_max", _running(F.max("v"))).select(cols)
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
-
-    got_g = bucketed_running_max(
-        df, "k", ["id"], "v", max_name="rm", partition_cols=("grp",)
-    ).select(cols)
-    exp_g = df.withColumn(
-        "rm",
-        F.max("v").over(
-            W.partitionBy("grp")
-            .orderBy("k", "id")
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        ),
-    ).select(cols)
-    assert got_g.exceptAll(exp_g).count() == 0
-    assert exp_g.exceptAll(got_g).count() == 0
 
 
 def test_bucketed_rank_family_keeps_null_partition_groups(spark):
@@ -1376,34 +1300,16 @@ def test_bucketed_rank_family_keeps_null_partition_groups(spark):
 
     from similarity_analysis_big_data_spark.operators.rank import (
         bucketed_row_number,
-        bucketed_running_max,
-        bucketed_running_sum,
     )
 
     df = _rank_fixture(spark).withColumn(
         "grp", F.when(F.col("id") % 4 == 0, F.lit(None)).otherwise(F.col("grp"))
     )
-    n = df.count()
     cols = ["id", "grp", "k", "v", "out"]
-    w = (
-        W.partitionBy("grp")
-        .orderBy("k", "id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    for op, exp_col in [
-        (bucketed_running_max, F.max("v").over(w)),
-        (bucketed_running_sum, F.sum("v").over(w)),
-    ]:
-        got = op(df, "k", ["id"], "v", "out", partition_cols=("grp",)).select(cols)
-        assert got.count() == n  # NULL-group rows survive
-        exp = df.withColumn("out", exp_col).select(cols)
-        assert got.exceptAll(exp).count() == 0
-        assert exp.exceptAll(got).count() == 0
-
     got_rn = bucketed_row_number(
         df, "k", ["id"], rank_name="out", partition_cols=("grp",)
     ).select(cols)
-    assert got_rn.count() == n
+    assert got_rn.count() == df.count()  # NULL-group rows survive
     exp_rn = df.withColumn(
         "out", F.row_number().over(W.partitionBy("grp").orderBy("k", "id"))
     ).select(cols)
@@ -1414,8 +1320,6 @@ def test_bucketed_rank_family_keeps_null_partition_groups(spark):
 def test_bucketed_running_max_with_null_values(spark):
     """All-NULL buckets must not clobber or crash the carried prefix max
     (max aggregates NULL for them); matches the window form row-for-row."""
-    from pyspark.sql import Window as W
-
     from similarity_analysis_big_data_spark.operators.rank import (
         bucketed_running_max,
     )
@@ -1423,14 +1327,9 @@ def test_bucketed_running_max_with_null_values(spark):
     df = _rank_fixture(spark).withColumn(
         "v", F.when(F.col("k") % 3 == 0, F.col("v")).otherwise(F.lit(None))
     )
-    cols = ["id", "grp", "k", "v", "rm"]
-    got = bucketed_running_max(df, "k", ["id"], "v", max_name="rm").select(cols)
-    exp = df.withColumn(
-        "rm",
-        F.max("v").over(
-            W.orderBy("k", "id").rowsBetween(W.unboundedPreceding, W.currentRow)
-        ),
-    ).select(cols)
+    cols = ["id", "grp", "k", "v", "run_max"]
+    got = bucketed_running_max(df, "k", ["id"], "v", _k_bucket()).select(cols)
+    exp = df.withColumn("run_max", _running(F.max("v"))).select(cols)
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
 

@@ -15,6 +15,7 @@ import re
 import pytest
 
 from similarity_analysis_big_data_spark.operators.similarity import retrieval_accuracy
+from similarity_analysis_big_data_spark.plans import pipeline
 from similarity_analysis_big_data_spark.plans.pipeline import (
     preprocess_papers,
     task1_best_abstract,
@@ -103,11 +104,11 @@ def test_preprocess_semantics(prep):
     assert rows["p6"].categories == "cs.ds math.co"
 
 
-def test_count_empty_tokens_equals_python_split(spark):
+def test_count_empty_tokens_equals_python_split(spark, monkeypatch):
     """F4's compat mode (lab2.py:159): ``tokenize(..., count_empty_tokens=True)``
     is Python's ``re.split(r"[^\\w]+", s)``, leading and trailing empty
     strings included, and ``preprocess_papers`` threads it through to the
-    token arrays."""
+    token arrays under ``COUNT_EMPTY_TOKENS``."""
     from similarity_analysis_big_data_spark.functions.text import tokenize
 
     texts = [" graph, sampling. ", "naïve-bayes 2nd", "", "...", "plain"]
@@ -118,7 +119,8 @@ def test_count_empty_tokens_equals_python_split(spark):
     papers = spark.createDataFrame(
         [("q1", " Graph: the Sampling! ", "plain text", "cs"), *PAPERS], ["id", "title", "abstract", "categories"]
     )
-    titles = {r["id"]: r["title_tokens"] for r in preprocess_papers(papers, ["the"], count_empty_tokens=True).collect()}
+    monkeypatch.setattr(pipeline, "COUNT_EMPTY_TOKENS", True)
+    titles = {r["id"]: r["title_tokens"] for r in preprocess_papers(papers, ["the"]).collect()}
     assert titles["q1"] == ["", "graph", "sampling", ""]
     assert titles == {
         pid: [t for t in re.split(r"[^\w]+", re.sub(r"(\d|\W)+", " ", title.lower())) if t != "the"]
@@ -126,8 +128,8 @@ def test_count_empty_tokens_equals_python_split(spark):
     }
 
 
-def test_lemmatized_prep_gives_rules_lemmas(spark):
-    """M5 (lab2.py:121-138): ``lemmatize_tokens=True`` maps every token
+def test_lemmatized_prep_gives_rules_lemmas(spark, monkeypatch):
+    """M5 (lab2.py:121-138): ``LEMMATIZE_TOKENS`` maps every token
     through the lemmatizer backend; without NLTK that is the rules
     backend. The stopword-only abstract lemmatizes to ``[]``, not
     ``[""]``."""
@@ -138,7 +140,8 @@ def test_lemmatized_prep_gives_rules_lemmas(spark):
     if importlib.util.find_spec("nltk") is not None:
         pytest.skip("NLTK is installed, so the WordNet backend runs instead of the rules one")
     papers = spark.createDataFrame(PAPERS, ["id", "title", "abstract", "categories"])
-    rows = {r["id"]: r for r in preprocess_papers(papers, STOPWORDS, lemmatize_tokens=True).collect()}
+    monkeypatch.setattr(pipeline, "LEMMATIZE_TOKENS", True)
+    rows = {r["id"]: r for r in preprocess_papers(papers, STOPWORDS).collect()}
     for pid, title, abstract, _ in PAPERS:
         assert rows[pid].title_tokens == [_rule_lemma(t) for t in _py_tokenize(title)], pid
         assert rows[pid].abstract_tokens == [_rule_lemma(t) for t in _py_tokenize(abstract)], pid
@@ -150,7 +153,7 @@ def test_task1_matches_reference_model(spark, prep):
     model = _py_reference_model()
     got = {
         r["title_id"]: (r["abstract_id"], r["cosine"])
-        for r in task1_best_abstract(prep).collect()
+        for r in task1_best_abstract(prep, len(PAPERS)).collect()
     }
     assert set(got) == {p[0] for p in PAPERS}  # every title appears (cartesian parity)
     for tid, expected in model.items():
@@ -163,7 +166,7 @@ def test_task1_matches_reference_model(spark, prep):
 
 
 def test_task1_zero_overlap_title_emits_null_match(prep):
-    got = {r["title_id"]: r for r in task1_best_abstract(prep).collect()}
+    got = {r["title_id"]: r for r in task1_best_abstract(prep, len(PAPERS)).collect()}
     # p5's title shares no vocabulary with any abstract -> (NULL, 0.0)
     assert got["p5"].abstract_id is None
     assert got["p5"].cosine == 0.0
@@ -214,7 +217,7 @@ def test_task1_strategies_agree_on_string_ids(spark, prep):
             memo_key,
         )
 
-    want = rows(task1_best_abstract(prep))
+    want = rows(task1_best_abstract(prep, len(PAPERS)))
     dense = task1("dense")
     plan = dense._jdf.queryExecution().optimizedPlan().toString()
     assert "MapInPandas" in plan  # the matmul ran, not the over-bound fallback

@@ -60,14 +60,12 @@ def _plan_of(spark, df) -> str:
     )
 
 
-def test_flagship_pair_stage_does_not_shuffle(spark, sf_oracle):
+def test_flagship_pair_stage_does_not_shuffle(spark, sf_oracle, flagship_on):
     """SPARSE strategy (the 100 TB default): the pair join output must
     aggregate without an Exchange — the groupBy(title_id, abstract_id)
     reuses the title window's hash partitioning, and the DF side
     broadcasts."""
-    from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
-
-    plan = _plan_of(spark, title_best_abstract(spark, sf_oracle, strategy="sparse"))
+    plan = _plan_of(spark, flagship_on(sf_oracle, "sparse"))
     lines = plan.splitlines()
     # locate the pair aggregation (keys title_id + abstract_id)
     agg_idx = [
@@ -103,7 +101,7 @@ def test_flagship_sparse_branch_drops_tf_cache(spark, sf_oracle, monkeypatch):
     S._AUTO_STRATEGY_CACHE.pop(key, None)
     monkeypatch.setattr(ops, "DENSE_MAX_BROADCAST_CELLS", 0)
     try:
-        df = title_best_abstract(spark, sf_oracle, strategy="auto")
+        df = title_best_abstract(spark, sf_oracle)
         assert S._AUTO_STRATEGY_CACHE[key] == "sparse"
         plan = _plan_of(spark, df)
         assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
@@ -114,16 +112,15 @@ def test_flagship_sparse_branch_drops_tf_cache(spark, sf_oracle, monkeypatch):
 
 
 @pytest.mark.parametrize("query", ["title_best_abstract", "corpus_curation_pipeline"])
-def test_flagship_dense_leaves_the_session_cache_empty(spark, sf_oracle, query):
+def test_flagship_dense_leaves_the_session_cache_empty(spark, sf_oracle, flagship_on, query):
     """The flagship's probe/dense TF and DF and the curation pipeline's
     tokens live as long as the plan that reads them: two calls in one
     session cache nothing, so a long-lived driver keeps no relation per
     input and a repeat call is never served from an earlier call's data."""
-    from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
 
     def run():
         if query == "title_best_abstract":
-            return title_best_abstract(spark, sf_oracle, strategy="dense").collect()
+            return flagship_on(sf_oracle, "dense").collect()
         return QUERIES[query].fn(spark, sf_oracle).collect()
 
     cache = spark._jsparkSession.sharedState().cacheManager()
@@ -357,20 +354,18 @@ def test_pagerank_rank_table_broadcasts(spark, sf_oracle):
     assert plan.count("BroadcastHashJoin") >= 3
 
 
-def test_flagship_dense_strategy_materializes_no_pairs(spark, sf_oracle):
+def test_flagship_dense_strategy_materializes_no_pairs(spark, sf_oracle, flagship_on):
     """DENSE strategy: the pair stage is a broadcast matmul inside
     mapInPandas — no title⋈abstract join operator exists in the plan, and
     the fixture's 31-term vocabulary makes auto pick it."""
-    from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
-
-    plan = _plan_of(spark, title_best_abstract(spark, sf_oracle, strategy="dense"))
+    plan = _plan_of(spark, flagship_on(sf_oracle, "dense"))
     assert "MapInPandas" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
     # the merge of partition-local winners is the only window
     assert "WindowGroupLimit" in plan
 
 
-def test_flagship_dense_matmul_input_is_key_partitioned(spark, sf_oracle):
+def test_flagship_dense_matmul_input_is_key_partitioned(spark, sf_oracle, flagship_on):
     """The block matmul's input must be hash-partitioned on the blocking
     key (every candidate's terms co-located) — whether that comes from
     dense_best_match's own repartition or a collapsed-away upstream
@@ -381,9 +376,7 @@ def test_flagship_dense_matmul_input_is_key_partitioned(spark, sf_oracle):
     hashpartitioning on the id, and nothing between them re-shuffles on
     a different key (which would split a candidate's terms across
     blocks and corrupt the partition-local argmax)."""
-    from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
-
-    df = title_best_abstract(spark, sf_oracle, strategy="dense")
+    df = flagship_on(sf_oracle, "dense")
     plan = df._jdf.queryExecution().executedPlan().toString()
     lines = plan.splitlines()
     idx = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
@@ -426,29 +419,27 @@ def test_flagship_memo_is_a_bare_verdict(spark, sf_oracle, monkeypatch):
         assert len(collects) == 2  # plus the final action
         monkeypatch.undo()
 
-        sparse = rows(S.title_best_abstract(spark, sf_oracle, strategy="sparse"))
-        assert sparse == baseline
+        S._AUTO_STRATEGY_CACHE[key] = "sparse"
+        assert rows(S.title_best_abstract(spark, sf_oracle)) == baseline
+        assert S._AUTO_STRATEGY_CACHE[key] == "sparse"  # no probe re-decided it
+
         monkeypatch.setattr(ops, "DENSE_MAX_VOCAB", 0)  # the operator's guard trips
         S._AUTO_STRATEGY_CACHE[key] = "dense"
         stale_dense = S.title_best_abstract(spark, sf_oracle)
         assert "MapInPandas" not in _plan_of(spark, stale_dense)  # fell back to the join
-        assert rows(stale_dense) == sparse
-        monkeypatch.undo()
-
-        S._AUTO_STRATEGY_CACHE[key] = "sparse"
-        assert rows(S.title_best_abstract(spark, sf_oracle)) == baseline
-        assert S._AUTO_STRATEGY_CACHE[key] == "sparse"  # no probe re-decided it
+        assert rows(stale_dense) == baseline
     finally:
         S._AUTO_STRATEGY_CACHE.pop(key, None)
         spark.catalog.clearCache()
 
 
 def test_ann_dense_strategy_is_map_side(spark, sf_oracle):
-    """Dense ANN scoring: corpus stays map-side (MapInPandas over the scan),
-    no pair join operator; merge is the only window."""
+    """Dense ANN scoring, which the fixture's small query set takes:
+    corpus stays map-side (MapInPandas over the scan), no pair join
+    operator; merge is the only window."""
     from similarity_analysis_big_data_spark.plans.ann import ann_bruteforce_topk
 
-    plan = _plan_of(spark, ann_bruteforce_topk(spark, sf_oracle, strategy="dense"))
+    plan = _plan_of(spark, ann_bruteforce_topk(spark, sf_oracle))
     assert "MapInPandas" in plan
     assert "Join" not in plan  # no join operator of any kind
 

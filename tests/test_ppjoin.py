@@ -11,8 +11,9 @@ from __future__ import annotations
 import random
 from itertools import combinations
 
+import pytest
 
-from similarity_analysis_big_data_spark.operators.dedup import ppjoin_pairs
+from similarity_analysis_big_data_spark.operators import dedup
 
 
 def _brute(sets: dict[int, set[str]], num: int, den: int):
@@ -27,8 +28,10 @@ def _brute(sets: dict[int, set[str]], num: int, den: int):
 
 def _spark_result(spark, sets: dict[int, set[str]], num: int, den: int):
     rows = [(i, t) for i, ts in sets.items() for t in ts]
-    df = spark.createDataFrame(rows, "id bigint, token string")
-    got = ppjoin_pairs(df, "id", "token", threshold=(num, den)).collect()
+    df = spark.createDataFrame(rows, "id bigint, shingle string")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "PPJOIN_T", (num, den))
+        got = dedup.ppjoin_pairs(df, "id").collect()
     return {
         (r.id_l, r.id_r): (r.n_common, r.size_l, r.size_r) for r in got
     }

@@ -20,6 +20,7 @@ from similarity_analysis_big_data_spark.functions.text import words_sql
 from similarity_analysis_big_data_spark.functions.tfidf import l2_normalize
 from similarity_analysis_big_data_spark.operators.dedup import SUBSTRING_CAP, SUBSTRING_K
 from similarity_analysis_big_data_spark.operators.similarity import (
+    COSINE_DECIMALS,
     all_pairs_cosine_exact,
     sparse_cosine_join,
 )
@@ -76,7 +77,7 @@ def test_sparse_join_equals_cartesian(docs):
     expected = _python_cosines(docs)
     got = {
         (r["id_l"], r["id_r"]): r["cosine"]
-        for r in all_pairs_cosine_exact(vectors, "id").collect()
+        for r in all_pairs_cosine_exact(vectors, "id", COSINE_DECIMALS).collect()
     }
     assert set(got) == set(expected)  # dense output incl. zero-overlap pairs
     for pair, cos in expected.items():
@@ -283,15 +284,13 @@ def test_mad_outliers_are_extreme(spark):
         assert abs(r["robust_z"]) > 2.0
 
 
-def test_flagship_dense_equals_sparse(spark):
+def test_flagship_dense_equals_sparse(flagship_on):
     """The dense broadcast-matmul strategy is EXTENSIONALLY equal to the
     sparse-join strategy (same round-before-argmax, same tiebreak, same
     zero-overlap restoration) on the fixture."""
-    from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
-
     sf = "/root/testdata/sf0.001"
-    dense = {tuple(r) for r in title_best_abstract(spark, sf, strategy="dense").collect()}
-    sparse = {tuple(r) for r in title_best_abstract(spark, sf, strategy="sparse").collect()}
+    dense = {tuple(r) for r in flagship_on(sf, "dense").collect()}
+    sparse = {tuple(r) for r in flagship_on(sf, "sparse").collect()}
     assert dense == sparse and dense
 
 
@@ -310,10 +309,10 @@ _FLAGSHIP_DEGENERATE = {
 
 
 @pytest.mark.parametrize("case", sorted(_FLAGSHIP_DEGENERATE))
-def test_flagship_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case):
+def test_flagship_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, flagship_on, case):
     """Degenerate input returns the oracle's edge result under every
-    strategy — auto on its first (probing) and its memoized call, forced
-    dense, forced sparse — and does not crash."""
+    strategy — auto on its first (probing) and its memoized call, then a
+    memo seeded dense and one seeded sparse — and does not crash."""
     import duckdb
 
     from similarity_analysis_big_data_spark.plans import similarity as S
@@ -336,14 +335,17 @@ def test_flagship_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case
 
     key = (spark.sparkContext.applicationId, sf)
     try:
-        for strategy in ("auto", "auto", "dense", "sparse"):
-            ok, msg = compare(S.title_best_abstract(spark, sf, strategy=strategy), want)
-            assert ok, f"{case}/{strategy}: {msg}"
-        # the first auto call left a verdict, so the second one used it
-        assert S._AUTO_STRATEGY_CACHE[key] in ("sparse", "dense")
+        for call in ("auto", "memoized"):
+            ok, msg = compare(S.title_best_abstract(spark, sf), want)
+            assert ok, f"{case}/{call}: {msg}"
+            # the first call left a verdict, so the second one used it
+            assert S._AUTO_STRATEGY_CACHE[key] in ("sparse", "dense")
     finally:
         S._AUTO_STRATEGY_CACHE.pop(key, None)
         spark.catalog.clearCache()
+    for verdict in ("dense", "sparse"):
+        ok, msg = compare(flagship_on(sf, verdict), want)
+        assert ok, f"{case}/{verdict}: {msg}"
 
 
 # Degenerate corpora for the near-dup chain, with near_dup_survivors'
@@ -581,26 +583,28 @@ def test_tfidf_weight_and_l2_equal_their_sql_twins(spark, n_docs):
     schema = "doc_id long, term string, tf long, df long, n long"
     n_spark, n_sql = (F.col("n"), "n") if n_docs == "column" else (1, "1")
     weighted = spark.createDataFrame(rows, schema).select(
-        "doc_id", "term", tfidf_weight("tf", "df", n_spark).alias("w")
+        "doc_id", "term", tfidf_weight("tf", "df", n_spark).alias("weight")
     )
     con = duckdb.connect()
     con.execute(f"CREATE TABLE t ({schema.replace('long', 'BIGINT').replace('string', 'VARCHAR')})")
     con.executemany("INSERT INTO t VALUES (?, ?, ?, ?, ?)", rows)
     sql_weighted = f"SELECT doc_id, term, {tfidf_weight_sql(n_docs=n_sql)} AS w FROM t"
     try:
-        ok, msg = compare(weighted, con.execute(sql_weighted).fetchdf())
+        ok, msg = compare(
+            weighted, con.execute(f"SELECT doc_id, term, w AS weight FROM ({sql_weighted})").fetchdf()
+        )
         assert ok, f"weight: {msg}"
-        normalized = l2_normalize(weighted, ["doc_id"], "w")
+        normalized = l2_normalize(weighted, ["doc_id"])
         ok, msg = compare(
             normalized,
             con.execute(
-                f"SELECT doc_id, term, {l2_normalize_sql(['doc_id'])} AS w FROM ({sql_weighted})"
+                f"SELECT doc_id, term, {l2_normalize_sql(['doc_id'])} AS weight FROM ({sql_weighted})"
             ).fetchdf(),
         )
         assert ok, f"l2: {msg}"
     finally:
         con.close()
-    got = {(r.doc_id, r.term): r.w for r in normalized.collect()}
+    got = {(r.doc_id, r.term): r.weight for r in normalized.collect()}
     assert got[(2, "c")] == 1.0  # the one-term vector
     assert got[(1, "a")] == got[(1, "b")] and got[(3, "d")] == got[(3, "e")]  # ties
 
@@ -620,14 +624,27 @@ def test_documents_fixture_is_ascii(sf_smoke, sf):
     assert n == 0
 
 
+def _ann_on_fold(spark, sf: str):
+    """ann_bruteforce_topk with the dense scorer's broadcast bound at 0,
+    so ``_exact_topk`` takes the column-expression fold."""
+    from similarity_analysis_big_data_spark.plans import ann
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ann, "DENSE_MAX_BROADCAST_CELLS", 0)
+        df = ann.ann_bruteforce_topk(spark, sf)
+    assert "MapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
+    return df
+
+
 def test_ann_dense_equals_hof(spark):
-    """dense_topk_neighbors (BLAS blocked matmul) is extensionally equal to
-    the column-expression fold formulation, ranks included."""
+    """dense_topk_neighbors (BLAS blocked matmul, the fixture's default
+    scorer) is extensionally equal to the column-expression fold
+    formulation, ranks included."""
     from similarity_analysis_big_data_spark.plans.ann import ann_bruteforce_topk
 
     sf = "/root/testdata/sf0.001"
-    dense = {tuple(r) for r in ann_bruteforce_topk(spark, sf, strategy="dense").collect()}
-    hof = {tuple(r) for r in ann_bruteforce_topk(spark, sf, strategy="hof").collect()}
+    dense = {tuple(r) for r in ann_bruteforce_topk(spark, sf).collect()}
+    hof = {tuple(r) for r in _ann_on_fold(spark, sf).collect()}
     assert dense == hof and dense
 
 
@@ -660,8 +677,8 @@ def test_ann_zero_norm_vectors_match_oracle_under_both_strategies(
     assert list(zero_q.sort_values("rnk")["neighbor_id"]) == [1, 2, 3, 4, 5]
     assert zero_q["cosine"].isna().all()
 
-    dense = ann_bruteforce_topk(spark, sf, strategy="dense")
-    hof = ann_bruteforce_topk(spark, sf, strategy="hof")
+    dense = ann_bruteforce_topk(spark, sf)
+    hof = _ann_on_fold(spark, sf)
     assert sorted(map(tuple, dense.collect()), key=repr) == sorted(
         map(tuple, hof.collect()), key=repr
     )
@@ -815,11 +832,14 @@ def test_dense_topk_blocked_equals_one_shot(spark, monkeypatch):
 def test_stable_dense_ids_random(rows):
     """Random (rid, coarse-key) relations: ids are exactly the dense rank
     of the (key, rid) total order — duplicates, skew, tiny buckets."""
+    from similarity_analysis_big_data_spark.operators import rank
     from similarity_analysis_big_data_spark.operators.reindex import stable_dense_ids
 
     spark = _SPARK["s"]
     df = spark.createDataFrame(rows, "rid long, k long").repartition(5)
-    got = {r["rid"]: r["new_id"] for r in stable_dense_ids(df, "k", "rid", n_buckets=7).collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(rank, "RANK_BUCKETS", 7)
+        got = {r["rid"]: r["new_id"] for r in stable_dense_ids(df, "k", "rid").collect()}
     want = {rid: i for i, (rid, _k) in enumerate(sorted(rows, key=lambda t: (t[1], t[0])))}
     assert got == want
 
@@ -924,22 +944,20 @@ def test_bpe_pair_counts_match_reference(spark):
             st.integers(min_value=-50, max_value=50),  # order key (dups ok)
             st.integers(min_value=0, max_value=9),  # value
         ),
-        min_size=1,
+        min_size=0,
         max_size=60,
     ),
     n_buckets=st.sampled_from([1, 2, 5, 32]),
+    n_cells=st.sampled_from([1, 3, 32]),
 )
-def test_bucketed_rank_and_sums_match_windows_on_random_data(rows, n_buckets):
-    """Property: for ANY key distribution (ties, negatives, constant keys)
-    and ANY bucket count, the bucketed rank / running sum / running max
-    agree row-for-row with the global-window forms."""
+def test_bucketed_rank_and_sums_match_windows_on_random_data(rows, n_buckets, n_cells):
+    """Property: for ANY key distribution (ties, negatives, constant keys,
+    no rows), ANY percentile bucket count and ANY equal-width grid, the
+    bucketed rank / running sum / running max agree row-for-row with the
+    global-window forms."""
     from pyspark.sql import Window as W
 
-    from similarity_analysis_big_data_spark.operators.rank import (
-        bucketed_row_number,
-        bucketed_running_max,
-        bucketed_running_sum,
-    )
+    from similarity_analysis_big_data_spark.operators import rank
 
     spark = _SPARK["s"]
     df = spark.createDataFrame(
@@ -949,13 +967,20 @@ def test_bucketed_rank_and_sums_match_windows_on_random_data(rows, n_buckets):
     run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     exp = (
         df.withColumn("r", F.row_number().over(w))
-        .withColumn("rs", F.sum("v").over(run))
-        .withColumn("rm", F.max("v").over(run))
+        .withColumn("cum_units", F.sum("v").over(run))
+        .withColumn("run_max", F.max("v").over(run))
     )
-    got = bucketed_row_number(df, "k", ["id"], rank_name="r", n_buckets=n_buckets)
-    got = bucketed_running_sum(got, "k", ["id"], "v", sum_name="rs", n_buckets=n_buckets)
-    got = bucketed_running_max(got, "k", ["id"], "v", max_name="rm", n_buckets=n_buckets)
-    cols = ["id", "k", "v", "r", "rs", "rm"]
+    # the equal-width grid of bucketed_running_max's one caller
+    # (event_lateness_watermark_profile): n_cells cells over [min k, max k]
+    mm = df.agg(F.min("k").alias("_lo"), F.max("k").alias("_hi"))
+    width = (F.col("_hi") - F.col("_lo") + 1).cast("double") / n_cells
+    grid = F.floor((F.col("k") - F.col("_lo")).cast("double") / width).cast("int")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(rank, "RANK_BUCKETS", n_buckets)
+        got = rank.bucketed_row_number(df, "k", ["id"], rank_name="r")
+        got = rank.bucketed_running_sum(got, "k", ["id"], "v")
+    got = rank.bucketed_running_max(got.crossJoin(F.broadcast(mm)), "k", ["id"], "v", grid)
+    cols = ["id", "k", "v", "r", "cum_units", "run_max"]
     g, e = got.select(cols), exp.select(cols)
     assert g.exceptAll(e).count() == 0 and e.exceptAll(g).count() == 0
 

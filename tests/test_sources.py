@@ -76,17 +76,6 @@ def test_writers_roundtrip(spark, sf_smoke, tmp_path_factory):
     assert len(parts) == 1
 
 
-def test_partitioned_parquet_sink(spark, sf_smoke, tmp_path_factory):
-    out = tmp_path_factory.mktemp("psink")
-    docs = load_table(spark, sf_smoke, "documents")
-    write_parquet(docs, f"{out}/by_lang", partition_by=("lang",))
-    # partition pruning surface: directory per lang
-    langs = {d for d in os.listdir(f"{out}/by_lang") if d.startswith("lang=")}
-    assert langs == {"lang=de", "lang=en", "lang=es", "lang=fr", "lang=zh"}
-    back = spark.read.parquet(f"{out}/by_lang").filter(F.col("lang") == "en")
-    assert back.count() == docs.filter(F.col("lang") == "en").count()
-
-
 def test_load_table_events_portable_without_session_conf(spark, sf_smoke, tmp_path):
     """The driver's harness builds its own SparkSession WITHOUT our factory's
     conf; load_table must read the TIMESTAMP(NANOS) events fixture the

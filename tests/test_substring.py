@@ -18,6 +18,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from similarity_analysis_big_data_spark.operators import dedup
 from similarity_analysis_big_data_spark.operators.dedup import (
     SUBSTRING_COVERAGE_SQL,
     SUBSTRING_REWRITE_SQL,
@@ -48,6 +49,18 @@ def _capture_spark(spark):
     yield
 
 
+def _set_grams(monkeypatch, k: int, cap: int, min_span: int) -> None:
+    """The substring constants the operators and the DuckDB twin read."""
+    monkeypatch.setattr(dedup, "SUBSTRING_K", k)
+    monkeypatch.setattr(dedup, "SUBSTRING_CAP", cap)
+    monkeypatch.setattr(dedup, "SUBSTRING_MIN_SPAN", min_span)
+
+
+@pytest.fixture
+def small_grams(monkeypatch):
+    _set_grams(monkeypatch, K, CAP, MIN_SPAN)
+
+
 def _toks_df(docs: list[list[str]]):
     spark = _SPARK["s"]
     return spark.createDataFrame(
@@ -57,7 +70,7 @@ def _toks_df(docs: list[list[str]]):
 
 
 def _spans(docs: list[list[str]]):
-    return substring_span_pairs(_toks_df(docs), k=K, cap=CAP, min_span=MIN_SPAN)
+    return substring_span_pairs(_toks_df(docs))
 
 
 def _ref_spans(docs: list[list[str]], k: int, cap: int, min_span: int):
@@ -115,7 +128,7 @@ def _ref_coverage(docs: list[list[str]], spans, k: int):
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(docs_strategy)
-def test_substring_spans_match_reference(docs):
+def test_substring_spans_match_reference(small_grams, docs):
     got = {
         (r["id_l"], r["id_r"], r["start_l"], r["start_r"], r["span_tokens"])
         for r in _spans(docs).collect()
@@ -125,7 +138,7 @@ def test_substring_spans_match_reference(docs):
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(docs_strategy)
-def test_substring_coverage_matches_reference(docs):
+def test_substring_coverage_matches_reference(small_grams, docs):
     rows = substring_coverage(_toks_df(docs), _spans(docs)).collect()
     got = {r["doc_id"]: (r["n_tokens"], r["dup_tokens"]) for r in rows}
     ref = _ref_coverage(docs, _ref_spans(docs, K, CAP, MIN_SPAN), K)
@@ -150,7 +163,7 @@ def _ref_rewrite(docs: list[list[str]], spans):
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(docs_strategy)
-def test_substring_rewrite_matches_reference(docs):
+def test_substring_rewrite_matches_reference(small_grams, docs):
     rows = substring_dedup_rewrite(_toks_df(docs), _spans(docs)).collect()
     got = {r["doc_id"]: (r["n_tokens"], r["kept_tokens"], r["text_dedup"]) for r in rows}
     assert got == _ref_rewrite(docs, _ref_spans(docs, K, CAP, MIN_SPAN))
@@ -158,19 +171,17 @@ def test_substring_rewrite_matches_reference(docs):
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(docs_strategy)
-def test_substring_delta_consistent_with_full(docs):
+def test_substring_delta_consistent_with_full(small_grams, monkeypatch, docs):
     """Uncapped, the delta operator's spans are exactly the full run's
     cross-partition spans reoriented delta->base (the cap differs by
     design: delta caps base-gram occurrences only, so compare with a cap
     no gram can hit)."""
     spark = _SPARK["s"]
-    big = 10_000
+    monkeypatch.setattr(dedup, "SUBSTRING_CAP", 10_000)
     delta_ids = {i for i in range(len(docs)) if i % 2 == 1}
     full = {
         (r["id_l"], r["id_r"], r["start_l"], r["start_r"], r["span_tokens"])
-        for r in substring_span_pairs(
-            _toks_df(docs), k=K, cap=big, min_span=MIN_SPAN
-        ).collect()
+        for r in _spans(docs).collect()
     }
     expected = set()
     for dl, dr, sl, sr, n in full:
@@ -189,21 +200,19 @@ def test_substring_delta_consistent_with_full(docs):
     )
     got = {
         (r["id_delta"], r["id_base"], r["start_delta"], r["start_base"], r["span_tokens"])
-        for r in substring_span_pairs_delta(
-            base_df, delta_df, k=K, cap=big, min_span=MIN_SPAN
-        ).collect()
+        for r in substring_span_pairs_delta(base_df, delta_df).collect()
     }
     assert got == expected
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(docs_strategy)
-def test_sql_twin_matches_operators(docs):
+def test_sql_twin_matches_operators(small_grams, docs):
     """The DuckDB twin rendered at (K, CAP, MIN_SPAN) gives the operators'
     rows, row for row, for spans, coverage, rewrite and delta, reading the
     tokens back from a ``documents`` text column as the registered oracles
-    do: a constant that either side hard-codes instead of taking from its
-    parameters fails here."""
+    do: a constant that either side hard-codes instead of reading the
+    module's fails here."""
     delta = "doc_id % 2 = 1"
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
@@ -211,7 +220,7 @@ def test_sql_twin_matches_operators(docs):
         "INSERT INTO documents VALUES (?, ?)",
         [(i, " ".join(toks)) for i, toks in enumerate(docs)],
     )
-    spans_sql = _SQL_TOKS + substring_spans_sql(K, CAP, MIN_SPAN)
+    spans_sql = _SQL_TOKS + substring_spans_sql()
     toks, spans = _toks_df(docs), _spans(docs)
     cases = {
         "spans": (spans, spans_sql + "SELECT * FROM spans"),
@@ -224,15 +233,9 @@ def test_sql_twin_matches_operators(docs):
             spans_sql + SUBSTRING_REWRITE_SQL + "SELECT * FROM rewrite",
         ),
         "delta": (
-            substring_span_pairs_delta(
-                toks.filter(~F.expr(delta)),
-                toks.filter(F.expr(delta)),
-                k=K,
-                cap=CAP,
-                min_span=MIN_SPAN,
-            ),
+            substring_span_pairs_delta(toks.filter(~F.expr(delta)), toks.filter(F.expr(delta))),
             _SQL_TOKS
-            + substring_spans_sql(K, CAP, MIN_SPAN, delta=delta)
+            + substring_spans_sql(delta=delta)
             + "SELECT * FROM delta_spans",
         ),
     }
@@ -244,7 +247,7 @@ def test_sql_twin_matches_operators(docs):
         con.close()
 
 
-def test_substring_spans_known_construction(spark):
+def test_substring_spans_known_construction(spark, monkeypatch):
     """Deterministic golden: two docs sharing one 5-token run embedded at
     different offsets, plus an unrelated doc — exactly one span, with the
     right offsets on both sides."""
@@ -254,7 +257,8 @@ def test_substring_spans_known_construction(spark):
         shared + ["s", "t", "u"],             # span starts at 0
         ["m", "n", "o", "m", "n", "o", "m"],  # no overlap with the others
     ]
-    got = substring_span_pairs(_toks_df(docs), k=3, cap=8, min_span=5).collect()
+    _set_grams(monkeypatch, k=3, cap=8, min_span=5)
+    got = substring_span_pairs(_toks_df(docs)).collect()
     assert [
         (r["id_l"], r["id_r"], r["start_l"], r["start_r"], r["span_tokens"])
         for r in got
