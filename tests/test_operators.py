@@ -379,13 +379,9 @@ def test_no_unused_imports():
 
 
 # Package defs that nothing in the reachability guard's roots reaches, kept
-# on purpose. Keyed ``module.def`` (package-relative); each reason is the
-# COVERAGE.md row that lists the capability (``§<section> <first cell>``),
-# or the reached function the def is the test reference for.
+# on purpose. Keyed ``module.def`` (package-relative); each reason names
+# the reached function the def is the test reference for.
 UNREACHED_ALLOWED = {
-    "operators.mllib_scale.tfidf_vectors_mllib": "COVERAGE: §2.9 M3 [ext] MLlib scale path",
-    "operators.mllib_scale.minhash_approx_join": "COVERAGE: §2.9 M4 cosine similarity",
-    "operators.mllib_scale.random_projection_neighbors": "COVERAGE: §2.9 M4 cosine similarity",
     "functions.text.word_ngrams": "test reference for with_word_ngrams",
     "operators.dedup.simhash_pairs": "test reference for simhash_banded_pairs",
 }
@@ -494,17 +490,17 @@ def test_every_package_def_is_reached():
     ``UNREACHED_ALLOWED``, through defs whose bodies name it. Matching is
     by bare name, so it errs towards "reached" and needs no import
     resolution. A def only tests call is a second implementation of a
-    capability, or code no query runs: delete it, or cite its COVERAGE row."""
+    capability, or code no query runs: delete it."""
     sites, edges, roots = _package_graph()
     allowed = {key.rpartition(".")[2] for key in UNREACHED_ALLOWED}
     reached = _reach(edges, roots | allowed)
     unreached = sorted(
         f"{rel}:{line} {name}" for name, at in sites.items() if name not in reached for rel, line in at
     )
-    assert unreached == [], "defs no query, tool or COVERAGE row reaches:\n" + "\n".join(unreached)
+    assert unreached == [], "defs no query or tool reaches:\n" + "\n".join(unreached)
 
     # every allowlist entry is still defined, still needs the allowlist,
-    # cites a COVERAGE row or a reached function, and is named by a test
+    # is the test reference for a reached function, and is named by a test
     defined = {".".join(rel.with_suffix("").parts) + "." + name for name, at in sites.items() for rel, _ in at}
     without = _reach(edges, roots)
     test_refs = set().union(*(
@@ -514,38 +510,21 @@ def test_every_package_def_is_reached():
         name = key.rpartition(".")[2]
         assert key in defined, f"{key}: no longer defined"
         assert name not in without, f"{key}: reached without the allowlist"
-        assert reason.removeprefix("COVERAGE: ") in _coverage_rows() or (
-            reason.startswith("test reference for ") and reason.split()[-1] in without
-        ), f"{key}: {reason!r}"
+        assert reason.startswith("test reference for ") and reason.split()[-1] in without, f"{key}: {reason!r}"
         assert name in test_refs, f"{key}: no test names it"
 
 
 # Defaulted parameters that non-test callers pass fewer than two distinct
 # values, kept settable on purpose. Keyed ``module.def.param``
 # (package-relative). A reason is the perfbench chain that passes it
-# (``perfbench/`` cannot change with the engine), a deployment setting, or
-# the ROADMAP direction that decides it. A value only a test sets is a
-# module constant the test monkeypatches, never an entry here.
+# (``perfbench/`` cannot change with the engine) or a deployment setting.
+# A value only a test sets is a module constant the test monkeypatches,
+# never an entry here.
 OPTION_ALLOWED = {
     "operators.components.dedup_survivors.iteration_shuffle_partitions": "perfbench: chains.near_dup_survivors",
     "__main__.main.argv": "deployment: the CLI's arguments",
     "session.get_session.extra_conf": "deployment: the caller's Spark conf",
     "session.get_local_session.app_name": "deployment: the Spark application name",
-    **{
-        f"operators.mllib_scale.{option}": "ROADMAP direction 3"
-        for option in (
-            "count_vectorize.out_col",
-            "count_vectorize.vocab_size",
-            "tfidf_vectors_mllib.out_col",
-            "minhash_approx_join.jaccard_threshold",
-            "minhash_approx_join.num_tables",
-            "minhash_approx_join.seed",
-            "random_projection_neighbors.bucket_length",
-            "random_projection_neighbors.max_distance",
-            "random_projection_neighbors.num_tables",
-            "random_projection_neighbors.seed",
-        )
-    },
 }
 
 
@@ -614,19 +593,7 @@ def test_every_option_is_set():
     for key, reason in OPTION_ALLOWED.items():
         assert key in options, f"{key}: no longer a defaulted parameter"
         assert len(options[key][1]) < 2, f"{key}: callers set it, drop the entry"
-        assert reason.startswith(("perfbench:", "deployment:", "ROADMAP direction 3")), f"{key}: {reason!r}"
-
-
-def _coverage_rows() -> set[str]:
-    """Every COVERAGE.md table row as ``§<section> <first cell>`` (bare
-    ``<first cell>`` under a heading without a section number)."""
-    rows, section = set(), ""
-    for line in _COVERAGE.read_text().splitlines():
-        if line.startswith("## "):
-            section = line.split()[1] if line.split()[1].startswith("§") else ""
-        elif line.startswith("| "):
-            rows.add(f"{section} {line.split('|')[1].strip()}".strip())
-    return rows
+        assert reason.startswith(("perfbench:", "deployment:")), f"{key}: {reason!r}"
 
 
 def test_coverage_cites_only_existing_code():

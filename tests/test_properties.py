@@ -402,6 +402,46 @@ def test_near_dup_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case
         spark.catalog.clearCache()
 
 
+# Degenerate embeddings tables for the ann family: the lowest vec_id alone,
+# and every row carrying the lowest vec_id's embedding (all cosines 1).
+_ANN_DEGENERATE = {
+    "one_vector": "SELECT * FROM emb ORDER BY vec_id LIMIT 1",
+    "all_duplicate": (
+        "SELECT * REPLACE ((SELECT embedding FROM emb ORDER BY vec_id LIMIT 1) AS embedding) FROM emb"
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ANN_DEGENERATE))
+def test_ann_degenerate_inputs_match_oracle(spark, sf_smoke, tmp_path, case):
+    """Every oracle-checked query in plans/ann.py gives its oracle's result
+    on a one-vector table and on a table of one repeated vector: the
+    empty and one-row query samples, the single IVF cell and the all-tied
+    rankings."""
+    import duckdb
+
+    from similarity_analysis_big_data_spark.plans import ann as A
+    from similarity_analysis_big_data_spark.plans.registry import QUERIES
+
+    from .oracle import compare
+
+    sf = str(tmp_path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW emb AS SELECT * FROM '{sf_smoke}/embeddings.parquet'")
+    con.execute(f"COPY ({_ANN_DEGENERATE[case]}) TO '{sf}/embeddings.parquet' (FORMAT PARQUET)")
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'")
+    names = sorted(n for n, q in QUERIES.items() if q.fn.__module__ == A.__name__ and q.oracle)
+    wants = {n: con.execute(QUERIES[n].oracle).fetchdf() for n in names}
+    con.close()
+
+    failed = []
+    for name in names:
+        ok, msg = compare(QUERIES[name].fn(spark, sf), wants[name])
+        if not ok:
+            failed.append(f"{name}: {msg}")
+    assert failed == [], f"{case}:\n" + "\n".join(failed)
+
+
 # Degenerate corpora for the exact-substring family, with
 # exact_substring_spans' expected row count: no documents, one document,
 # every document cut below SUBSTRING_K tokens, and the first document's
